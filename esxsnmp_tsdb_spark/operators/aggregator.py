@@ -36,9 +36,9 @@ from esxsnmp_tsdb_spark.sources import load_obs, register_views
 
 
 def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed loader (VERDICT r11 item 3): flat events-derived obs by
-    # default (identical call chain to pre-r12); the bucketed bkt_obs
-    # layout when sources.ROUTE_BUCKETED_CONF is opted in.
+    # Routed loader: flat events-derived obs by default (what the
+    # driver's vanilla session and its DuckDB oracle read); the bucketed
+    # bkt_obs layout when sources.ROUTE_BUCKETED_CONF is opted in.
     return load_obs(spark, sf_dir)
 
 
@@ -94,7 +94,8 @@ def ts_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "path",
         "tse",
-        F.round(F.col("delta").cast("double") / F.col("dt"), 6).alias("rate"),
+        F.round(F.try_divide(F.col("delta").cast("double"), F.col("dt")), 6)
+        .alias("rate"),
     )
 
 

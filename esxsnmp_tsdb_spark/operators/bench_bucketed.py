@@ -1,4 +1,4 @@
-"""Bucketed-vs-flat bench variants (VERDICT r6 item 6 / r7 item 2).
+"""Bucketed-vs-flat bench variants.
 
 `cluster.OBS_TABLE_DDL` claims the §2.1/§2.2 window/consolidation family
 plans with ZERO exchanges on the bucketed obs layout.  `bench.py` proves
@@ -38,7 +38,8 @@ def _rate(obs: DataFrame) -> DataFrame:
     return d.select(
         "path",
         "tse",
-        F.round(F.col("delta").cast("double") / F.col("dt"), 6).alias("rate"),
+        F.round(F.try_divide(F.col("delta").cast("double"), F.col("dt")), 6)
+        .alias("rate"),
     )
 
 

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import math
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions.vector import cosine
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources.catalog import _table_stamp, session_memo
 
 N_BANDS = 4  # one-minhash-per-band LSH
 SHINGLE_K = 3
@@ -343,7 +343,8 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     tiers and the crossover are recorded in the probe docstring and
     docs/ROUND12_NOTES.md.
 
-    Memory discipline (ADVICE r11): the edge lineage is computed exactly
+    Memory discipline (at most one |E|-sized copy lives through the
+    loop): the edge lineage is computed exactly
     ONCE (the eager ``localCheckpoint`` below), and the self-loop rows
     live in a separate |V|-sized checkpoint unioned LAZILY onto it — so
     the small tier holds exactly ONE |E|-sized copy (r11's layout built
@@ -356,12 +357,12 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     materializes the same rows AQE-sized (2 partitions at sf0.1).  In
     the big tier the repartitioned cache is built FROM the checkpoint
     and the checkpoint reference is dropped immediately after — its
-    blocks are freed by the ContextCleaner on GC (the ADVICE-sanctioned
-    shape; transiently two copies, steady-state one).  The cache is
+    blocks are freed by the ContextCleaner on GC (transiently two
+    copies, steady-state one).  The cache is
     released in a ``finally`` so a failed round cannot leak persisted
     partitions into the long-lived session that serves every op.
 
-    Round shape (r12, VERDICT item 2 — measured A/B in
+    Round shape (one action per round — measured A/B in
     docs/ROUND12_NOTES.md): each round is ONE join + ONE groupBy + the
     pointer-jump self-join, materialized by a single action.  Three
     folds against the r11 shape:
@@ -390,11 +391,11 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     the number of rounds the loop ran, and whether it actually reached
     the fixed point (``changed == 0``).  The flag exists because
     ``rounds == max_rounds`` is ambiguous — converged-on-the-last-round
-    and truncated look identical (ADVICE r10) — and a truncated run
+    and truncated look identical — and a truncated run
     returns WRONG component labels; callers must check it, not the
     round count."""
-    # ADVICE r12: max_rounds <= 0 would skip the loop entirely and
-    # return labels=None — crash the caller here, not downstream.
+    # max_rounds <= 0 would skip the loop entirely and return
+    # labels=None — crash the caller here, not downstream.
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     # Compute the edge lineage once into a transient cache, pick the
@@ -454,11 +455,11 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     converged = False
     labels = None
     spark = edges.sparkSession
-    # Conf save/restore around the loop only.  ADVICE r5's caveat about
-    # mutating session-global confs concerns concurrently SUBMITTED
-    # queries; the loop runs synchronously inside op construction, and
-    # the confs are restored (finally) before the op returns or any
-    # async cache write is launched.
+    # Conf save/restore around the loop only.  The confs are
+    # session-global, so this assumes a single submitter: the loop runs
+    # synchronously inside op construction and restores the confs
+    # (finally, also when a round raises) before the op returns, and no
+    # other query may plan on this session meanwhile.
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -520,7 +521,7 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
             # aggregate materializes the checkpoint), but the NULL tally
             # rides along so the precondition violation fails LOUD in
             # round 1 instead of burning max_rounds of cluster work
-            # first (ADVICE r12).
+            # first.
             changed, null_old = l2.agg(
                 F.count(
                     F.when(
@@ -542,11 +543,10 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
                 break
     finally:
         # Restore session confs FIRST (anything planned after the loop —
-        # the caller's window, the async cache write — must see the
-        # session posture, not the loop's), then release the cached edge
-        # partitions even if a round failed (ADVICE r11: a mid-loop
-        # exception must not leak persisted edges into the long-lived
-        # session).
+        # the caller's window — must see the session posture, not the
+        # loop's), then release the cached edge partitions even if a
+        # round failed: a mid-loop exception must not leak persisted
+        # edges into the long-lived session.
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if edges_cached is not None:
@@ -554,175 +554,49 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     return labels, rounds, converged
 
 
-# Bump when anything upstream of the cached (doc_id, component) frame
-# changes semantics: shingling, banding, the pair join, or the CC loop's
-# label definition.  A stale version refuses the cache, same double-guard
-# discipline as sources.catalog's bkt_obs stamp.
-_CC_CACHE_VERSION = 1
-
-# In-flight component-cache writes (data_dir -> thread).  The CC op
-# submits its |V|-row cache write from a driver thread so it overlaps the
-# caller's final action (guide §2.6); everyone who touches the cache dir
-# first joins the pending writer via `_cc_write_barrier`, so reads and
-# successive rewrites stay strictly serialized.
-_CC_WRITE_LOCK = threading.Lock()
-_CC_PENDING_WRITES: dict[str, threading.Thread] = {}
-_CC_ATEXIT_REGISTERED = False
-
-
-def _cc_write_barrier(data_dir: str) -> None:
-    """Wait for any in-flight cache write targeting ``data_dir``."""
-    with _CC_WRITE_LOCK:
-        t = _CC_PENDING_WRITES.pop(data_dir, None)
-    if t is not None:
-        t.join()
-
-
-def _cc_join_all_writes() -> None:
-    """atexit hook: drain in-flight cache writes before the session
-    workdir's own atexit rmtree tears the directory down under them."""
-    with _CC_WRITE_LOCK:
-        threads = list(_CC_PENDING_WRITES.values())
-        _CC_PENDING_WRITES.clear()
-    for t in threads:
-        t.join()
-
-
-def _cc_corpus_stamp(sf_dir: str) -> str:
-    """Fingerprint of the corpus the cached components were computed
-    from: fixture identity (path), bytes, and mtime.  Any regeneration
-    of documents.parquet — even same-size — flips the mtime and refuses
-    the cache."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return (
-        f"v{_CC_CACHE_VERSION}:{os.path.abspath(sf_dir)}:"
-        f"{st.st_size}:{st.st_mtime_ns}"
-    )
-
-
-def _cc_paths(sf_dir: str) -> tuple[str, str, str]:
-    """Single source of truth for the cache layout: ``(root, stamp_path,
-    data_dir)``.  Writer, reader, and the cache tests all derive the
-    location from here so a key-mangling change cannot silently split
-    them onto different directories."""
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-
-    root = op_dir(
-        "cc_components__" + sf_dir.strip("/").replace("/", "_"), fresh=False
-    )
-    return root, os.path.join(root, "_stamp"), os.path.join(root, "components")
-
-
-def _cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cc_components(spark: SparkSession, sf_dir: str, refresh: bool) -> DataFrame:
     """The converged ``(doc_id, component)`` frame for ``sf_dir``'s
-    MinHash near-dup graph, computed fresh and persisted as the
-    session-scoped component cache (VERDICT r12 item 3).
+    MinHash near-dup graph, memoized per session under
+    ``("cc_components", abspath(sf_dir))`` and stamped with the
+    ``documents`` fixture stamp.
 
-    One bench/driver session runs BOTH CC-family ops; before this cache
-    the second op re-paid pair generation AND the propagation loop
-    (~8.9s combined at sf0.1, the two slowest headline entries).  The
-    converged labels are a pure function of the corpus — component id =
-    min doc_id, independent of layout, partitioning, and round count —
-    so persisting them is semantics-free.  Hermeticity per the driver
-    contract:
+    The labels are a pure function of the corpus (component id = min
+    doc_id, independent of layout, partitioning and round count), and
+    the frame the loop returns is already checkpoint-backed, so reusing
+    it within the session is semantics-free.  ``refresh=True`` (the CC
+    op) always computes and overwrites the entry, so the op's repeats
+    time the real operator; ``refresh=False`` (the derived impact
+    report) serves the entry when the stamp still matches.  The stamp is
+    taken BEFORE the compute: a corpus regenerated mid-compute must not
+    get its new stamp attached to labels of the old bytes."""
 
-    * **Keyed and stamped.**  The cache directory is keyed by sf_dir
-      and guarded by `_cc_corpus_stamp` (corpus bytes + mtime + code
-      version) — a regenerated fixture or a semantics bump refuses the
-      cache and recomputes.  Same double-guard shape as the bkt_obs
-      routing stamp.
-    * **Session-scoped.**  Lives under `_workdirs.session_root()`
-      (removed at interpreter exit) — the driver's correctness run, a
-      pytest session, and a bench run each build their own.
-    * **Writer always computes.**  `dedup_connected_components` never
-      READS the cache — every invocation recomputes end-to-end and
-      refreshes it, so its benched repeats time the real operator.
-      Only the derived report (`dedup_cluster_size_stats`) serves from
-      it, which is the production shape: nobody reruns component
-      propagation to print the histogram of an already-computed
-      clustering.
-
-    At 100 TB this is the ingest-persisted-artifact pattern the indexed
-    dedup ops already use: the component assignment is materialized once
-    per corpus snapshot and every downstream consumer (keep-one filter,
-    impact report, cluster browser) reads it."""
-    _, stamp_path, data_dir = _cc_paths(sf_dir)
-    # Serialize against a previous invocation's in-flight cache write —
-    # two concurrent writers on one dir would corrupt the parquet.
-    _cc_write_barrier(data_dir)
-    # Fingerprint the corpus BEFORE the (multi-second, much longer at
-    # scale) compute: a corpus regenerated mid-compute must not get its
-    # NEW mtime stamped onto labels computed from the OLD bytes — the
-    # reader would then serve stale components as fresh.
-    stamp = _cc_corpus_stamp(sf_dir)
-    pairs = _minhash_pairs(spark, sf_dir)
-    # No checkpoint here: the helper persists the edges repartitioned on
-    # the join key (one materialization either way, better layout).
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-    labels, rounds, converged = min_label_components(edges)
-    if not converged:
-        # Truncated labels are silently WRONG (two docs in one real
-        # component can carry different labels) — refuse to serve them.
-        raise RuntimeError(
-            f"connected-components did not converge in {rounds} rounds; "
-            "raise max_rounds (pointer jumping makes rounds ~ log2(graph "
-            "diameter), so hitting this means a pathological candidate "
-            "graph, not normal data)"
+    def compute() -> DataFrame:
+        pairs = _minhash_pairs(spark, sf_dir)
+        # No checkpoint here: the helper lays the edges out itself.
+        edges = pairs.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        ).union(pairs.select(F.col("doc_b"), F.col("doc_a")))
+        labels, rounds, converged = min_label_components(edges)
+        if not converged:
+            # Truncated labels are silently WRONG (two docs in one real
+            # component can carry different labels) — refuse to serve them.
+            raise RuntimeError(
+                f"connected-components did not converge in {rounds} "
+                "rounds; raise max_rounds (pointer jumping makes rounds "
+                "~ log2(graph diameter), so hitting this means a "
+                "pathological candidate graph, not normal data)"
+            )
+        return labels.select(
+            F.col("doc").alias("doc_id"), F.col("label").alias("component")
         )
-    comp = labels.select(
-        F.col("doc").alias("doc_id"), F.col("label").alias("component")
+
+    return session_memo(
+        spark,
+        ("cc_components", os.path.abspath(sf_dir)),
+        _table_stamp(sf_dir, "documents"),
+        compute,
+        refresh=refresh,
     )
-    # |V|-row write (tiny next to the loop), OVERLAPPED with the caller's
-    # final action (r14, VERDICT r13 item 1c): the dedicated write job +
-    # read-back resolution sat inside the timed op (~0.3 s of pure
-    # scheduling at fixture scale).  The labels frame is already
-    # checkpoint-materialized by the loop's last convergence action, so
-    # the cache write is submitted from a driver thread (guide §2.6 —
-    # concurrent jobs back-fill idle cores) while the op's caller runs
-    # its own action over the SAME checkpoint blocks, and the op returns
-    # the checkpoint-backed frame directly instead of re-reading the
-    # parquet it just wrote.  Readers serialize on `_cc_write_barrier`
-    # before touching the cache, so the stamp protocol is unchanged:
-    # invalidate-then-write (previous stamp removed BEFORE the overwrite,
-    # new stamp AFTER the data) — a crash mid-rewrite leaves an unstamped
-    # (refused) cache.
-    def _write_cache() -> None:
-        if os.path.exists(stamp_path):
-            os.remove(stamp_path)
-        comp.write.mode("overwrite").parquet(data_dir)
-        with open(stamp_path, "w") as f:
-            f.write(stamp)
-
-    global _CC_ATEXIT_REGISTERED
-    t = threading.Thread(
-        target=_write_cache, name="cc-cache-write", daemon=True
-    )
-    with _CC_WRITE_LOCK:
-        if not _CC_ATEXIT_REGISTERED:
-            # Registered here (after _cc_paths → session_root above) so
-            # atexit's LIFO order runs this join BEFORE the session
-            # workdir rmtree that session_root registered earlier.
-            import atexit
-
-            atexit.register(_cc_join_all_writes)
-            _CC_ATEXIT_REGISTERED = True
-        _CC_PENDING_WRITES[data_dir] = t
-        t.start()
-    return comp
-
-
-def _cc_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve `_cc_components` from the session cache when the stamp is
-    fresh; recompute (and re-stamp) otherwise."""
-    _, stamp_path, data_dir = _cc_paths(sf_dir)
-    _cc_write_barrier(data_dir)
-    if os.path.exists(stamp_path) and os.path.exists(data_dir):
-        with open(stamp_path) as f:
-            if f.read() == _cc_corpus_stamp(sf_dir):
-                return spark.read.parquet(data_dir)
-    return _cc_components(spark, sf_dir)
 
 
 @op(
@@ -757,12 +631,11 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate graph over a shared-vocabulary corpus has long chains.
     Oracle twin: DuckDB recursive CTE transitive closure.
 
-    Cache discipline (VERDICT r12 item 3): this op ALWAYS computes —
-    pair generation + the full propagation loop — and refreshes the
-    session component cache as a by-product; only the derived impact
-    report (`dedup_cluster_size_stats`) serves from that cache.  See
-    `_cc_components` for the hermeticity argument."""
-    comp = _cc_components(spark, sf_dir)
+    This op ALWAYS computes — pair generation + the full propagation
+    loop — and refreshes the session's memoized labels as a by-product;
+    only the derived impact report (`dedup_cluster_size_stats`) serves
+    from them (see `_cc_components`)."""
+    comp = _cc_components(spark, sf_dir, refresh=True)
     w = Window.partitionBy("component")
     return comp.withColumn("csize", F.count(F.lit(1)).over(w))
 
@@ -1020,8 +893,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a checkpoint (asserted in tests/test_plans.py)."""
     # EAGER checkpoints (r14): r13 flipped these lazy off an interleaved
     # A/B that claimed 4.48 s → 3.84 s, but every committed full-bench
-    # record since read SLOWER than pre-change (4.88-5.21 vs 4.52 —
-    # VERDICT r13 item 1b), and the re-A/B at final r14 HEAD (min-of-4
+    # record since read SLOWER than pre-change (4.88-5.21 vs 4.52),
+    # and the re-A/B at final r14 HEAD (min-of-4
     # interleaved, one session) read eager 4.17 vs lazy 4.41.  The lazy
     # claim never reproduced; reverted.
     docs2 = _docs_with_near_copies(_t(spark, sf_dir)["documents"])
@@ -1115,15 +988,14 @@ def dedup_cluster_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the number a data owner asks for before approving a dedup
     run.
 
-    Rides the session component cache (`_cc_components_cached`, VERDICT
-    r12 item 3): when `dedup_connected_components` already ran this
-    session over the same corpus snapshot, the report is two bounded
-    aggregates over the persisted (doc_id, component) frame — the
-    production shape; nobody re-runs label propagation to print the
-    histogram of a clustering they just computed.  Cold (stats first,
-    or stale stamp) it computes end-to-end and leaves the cache warm
-    for the CC op's OWN derived consumers."""
-    comp = _cc_components_cached(spark, sf_dir)
+    Rides the session's memoized labels (`_cc_components`): when
+    `dedup_connected_components` already ran this session over the same
+    corpus snapshot, the report is two bounded aggregates over the
+    checkpointed (doc_id, component) frame — nobody re-runs label
+    propagation to print the histogram of a clustering they just
+    computed.  Cold (stats first, or stale stamp) it computes end to
+    end and memoizes the labels."""
+    comp = _cc_components(spark, sf_dir, refresh=False)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
     return sizes.groupBy("csize").agg(
         F.count(F.lit(1)).alias("n_clusters"),

@@ -14,7 +14,7 @@ hash buckets first; label-blocked kNN never materializes the corpus².
 
 from __future__ import annotations
 
-import weakref
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,14 +23,11 @@ from esxsnmp_tsdb_spark.functions.topk import ranked_topk
 from esxsnmp_tsdb_spark.functions.vector import cosine, dot, norm
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources.catalog import _table_stamp, session_memo
 
 QUERY_VEC_ID = 0
 TOP_K = 10
 N_PLANES = 6
-
-# (session -> {abspath(sf_dir): (file_stamp, embedding_width)}) — see
-# `_emb_dim`; same scoping/stamp discipline as sources.catalog's memo.
-_DIM_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 # Deterministic integer "hyperplane" weight for (dim i [0-based], plane j):
 # LCG fold, centered.  Valid Spark SQL and DuckDB.
@@ -136,79 +133,61 @@ def _plane_weight(i: int, j: int) -> float:
 
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """Embedding width of ``sf_dir``'s fixture — one ``first()`` probe,
-    memoized per (session, file stamp) like the catalog's plan memo, so
-    repeated query construction never re-runs the probe and a
-    regenerated fixture refuses the stale width."""
-    import os
+    memoized per (session, fixture stamp) so repeated query construction
+    never re-runs the probe and a regenerated fixture refuses the stale
+    width."""
 
-    from esxsnmp_tsdb_spark.sources.catalog import _table_stamp
+    def probe() -> int:
+        row = (
+            register_views(spark, sf_dir)["embeddings"]
+            .select(F.size("embedding"))
+            .first()
+        )
+        return row[0] if row else 0
 
-    key = os.path.abspath(sf_dir)
-    stamp = _table_stamp(sf_dir, "embeddings")
-    try:
-        per = _DIM_CACHE.setdefault(spark, {})
-    except TypeError:  # un-weakref-able session shim: skip memoization
-        per = {}
-    hit = per.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    row = (
-        register_views(spark, sf_dir)["embeddings"]
-        .select(F.size("embedding"))
-        .first()
+    return session_memo(
+        spark,
+        ("emb_dim", os.path.abspath(sf_dir)),
+        _table_stamp(sf_dir, "embeddings"),
+        probe,
     )
-    d = row[0] if row else 0
-    per[key] = (stamp, d)
-    return d
 
 
-def _lsh_bucket_expr(d: int | None = None):
+def _lsh_bucket_expr(d: int):
     """Random-hyperplane LSH bucket id as a pure Catalyst expression
     (the Spark twin of the oracle's list_sum/list_transform).
 
-    With ``d`` (the corpus' fixed embedding width, from `_emb_dim`) the
+    ``d`` is the corpus' fixed embedding width (from `_emb_dim`): the
     per-plane weights are emitted as LITERAL double arrays and each
-    plane's dot is a ``zip_with`` fold — the interpreted per-element LCG
-    arithmetic (constant per (i, j), but re-evaluated per row × plane ×
-    dim) constant-folds away (r14, VERDICT r13 item 5; A/B at sf0.1:
-    bucketing the corpus 0.33 s → 0.19 s, values bit-identical — same
-    multiply, same left-to-right fold order).  Without ``d`` the legacy
-    dynamic-width fold is used (same values at any width)."""
-    if d is not None:
-        acc = F.lit(0).cast("bigint")
-        for j in range(N_PLANES):
-            wj = F.lit([_plane_weight(i, j) for i in range(d)])
-            dot_j = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), wj, lambda x, w: x.cast("double") * w
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
+    plane's dot is a ``zip_with`` fold, so the per-element LCG
+    arithmetic constant-folds away (A/B at sf0.1: bucketing the corpus
+    0.33 s → 0.19 s, values bit-identical — same multiply, same
+    left-to-right fold order).  A row whose width is not ``d`` raises:
+    ``zip_with`` would null-pad it into bucket 0, while the oracle
+    buckets it by its real width."""
+    # The width check seeds the accumulator: once per row, not per plane.
+    acc = F.when(
+        F.size("embedding") != d,
+        F.raise_error(
+            F.concat(
+                F.lit(f"LSH bucketing expects embeddings of width {d}, got "),
+                F.size("embedding").cast("string"),
             )
-            acc = acc + F.when(
-                dot_j > 0, F.lit(2**j).cast("bigint")
-            ).otherwise(F.lit(0).cast("bigint"))
-        return acc
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(N_PLANES - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, j: acc
-        + F.when(
-            F.aggregate(
-                F.sequence(F.lit(1), F.size("embedding")),
-                F.lit(0.0),
-                lambda a, i: a
-                + F.element_at("embedding", i).cast("double")
-                * (
-                    (F.lit(1103515245).cast("bigint") * ((i - 1) * 8 + j) + 12345)
-                    % 65536
-                    - 32768
-                ).cast("double"),
-            )
-            > 0,
-            F.pow(F.lit(2.0), j.cast("double")).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint")),
-    )
+        ),
+    ).otherwise(F.lit(0).cast("bigint"))
+    for j in range(N_PLANES):
+        wj = F.lit([_plane_weight(i, j) for i in range(d)])
+        dot_j = F.aggregate(
+            F.zip_with(
+                F.col("embedding"), wj, lambda x, w: x.cast("double") * w
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        acc = acc + F.when(
+            dot_j > 0, F.lit(2**j).cast("bigint")
+        ).otherwise(F.lit(0).cast("bigint"))
+    return acc
 
 
 def _lsh_query(spark: SparkSession, sf_dir: str, probe_cond) -> DataFrame:

@@ -6,7 +6,8 @@ is simply the set of parquet tables plus Spark temp views, so every operator
 can be written either with the DataFrame API or as ``spark.sql`` text over
 registered view names.
 
-Scale posture: each fixture table is one parquet file locally; the 100 TB
+Scale posture: each fixture table is one parquet file locally (a
+Spark-written directory table is read and stamped the same way); the 100 TB
 layout for the observation table is ``partitionBy(date(slot))`` + bucket by
 ``hash(path)`` (SURVEY.md §4).  ``register_views`` is idempotent and cheap —
 it re-registers when ``sf_dir`` changes so queries() callables can be invoked
@@ -16,6 +17,7 @@ against any scale factor.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +61,7 @@ _VIEW_TAG = "spark.esxsnmp_tsdb.viewSfDir"
 # rebuilds and to refuse cross-fixture routing.
 BKT_OBS_TAG = "spark.esxsnmp_tsdb.bktObsSfDir"
 
-# Opt-in bucketed-obs routing (VERDICT r11 item 3).  Default OFF: the
+# Opt-in bucketed-obs routing.  Default OFF: the
 # driver's vanilla session must see the flat-parquet path (its oracle
 # runs DuckDB over the same events.parquet, and its session has no
 # bkt_obs table).  When "true" AND a bkt_obs table built from THIS
@@ -105,63 +107,94 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
-# Per-session memo of constructed fixture DataFrames, keyed by
-# (abspath(sf_dir), table) and guarded by the file's (size, mtime_ns)
-# stamp.  This caches PLANS (lazy metadata: resolved schema + file
-# listing), never data — every execution still scans the parquet bytes.
-# Motivation (OPTIMIZATION_r13, guide §7.3 "the driver should do almost
-# no data work"): `spark.read.parquet` resolves the footer/schema through
-# py4j on every call, and `register_views` makes 10 such calls; measured
-# ~0.2-0.5 s of pure driver-side re-resolution *inside the timed region
-# of every benched query*.  The stamp refuses a regenerated fixture
-# (tests rebuild synthetic dirs in place), and the WeakKeyDictionary
-# scopes entries to the owning session, so a new/driver session never
-# sees another session's plans.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# Per-session memo: (session -> {key: (stamp, value)}).  It holds lazy
+# plans and small driver-side results (fixture DataFrames, the embedding
+# width, the converged CC labels), never table data of its own.  Keys are
+# tuples naming the entry and its abspath(sf_dir); stamps are
+# `_table_stamp` results taken BEFORE the value is computed, so a fixture
+# rewritten mid-compute is refused on the next lookup, never stamped onto
+# results of the old bytes.  Weak session keys scope entries to the
+# owning session, so a new/driver session never sees another session's
+# values.
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-def _table_stamp(sf_dir: str, name: str) -> tuple[int, int]:
-    # (size, mtime_ns) of the fixture FILE.  ADVICE r13: this guard
-    # assumes single-file fixtures (the driver contract's layout); a
-    # directory-style table rewritten in place with identical entry names
-    # could keep the directory stat unchanged and serve a stale listing —
-    # if the fixture layout ever becomes a directory, stat the newest
-    # part file here instead.
-    st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-    return (st.st_size, st.st_mtime_ns)
+def session_memo(spark: SparkSession, key: tuple, stamp, compute, refresh=False):
+    """``compute()``, memoized per (session, key) and guarded by
+    ``stamp``: a hit is served only when its stamp equals ``stamp``.
+    ``refresh=True`` always computes and overwrites the entry."""
+    try:
+        if spark not in _MEMO and _MEMO:
+            # Memoized DataFrames hold strong refs back to their session,
+            # so weak keys alone never expire (value -> session -> key
+            # cycle rooted at this module-level dict).  A NEW session
+            # clears the prior sessions' entries instead, bounding the
+            # memo to the active session (sessions are used one at a
+            # time here; interleaved use would only recompute, never
+            # misserve).
+            _MEMO.clear()
+        entries = _MEMO.setdefault(spark, {})
+    except TypeError:  # un-weakref-able session shim: skip memoization
+        entries = {}
+    hit = entries.get(key)
+    if not refresh and hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = compute()
+    entries[key] = (stamp, value)
+    return value
+
+
+def _table_stamp(sf_dir: str, name: str) -> tuple[int, int, int]:
+    """``(total bytes, newest mtime_ns, file count)`` of ``<name>.parquet``.
+
+    A single-file table is stamped from the one ``stat`` (count 1).  A
+    directory table (as Spark writes one) is stamped over its part files
+    — everything Spark would read, i.e. not ``_``/``.``-prefixed — so
+    rewriting any part file in place changes the stamp even when the
+    directory entry itself keeps its mtime."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, 1)
+    size = newest = count = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.startswith(("_", ".")):
+                continue
+            fst = os.stat(os.path.join(root, f))
+            size += fst.st_size
+            newest = max(newest, fst.st_mtime_ns)
+            count += 1
+    return (size, newest, count)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<name>.parquet`` as a DataFrame, with TIMESTAMP(NANOS) columns
+    rebuilt as timestamps.  The constructed plan is memoized per session
+    and fixture stamp: ``spark.read.parquet`` resolves the footer and
+    file listing through py4j on every call, and ``register_views``
+    makes ten such calls per query.  Only plans are memoized; every
+    execution still scans the parquet bytes."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     tune(spark)
-    key = (os.path.abspath(sf_dir), name)
-    stamp = _table_stamp(sf_dir, name)
-    try:
-        if spark not in _TABLE_CACHE and _TABLE_CACHE:
-            # ADVICE r13: the cached DataFrames hold strong refs back to
-            # their session, so weak keys alone never expire (value →
-            # session → key cycle rooted at this module-level dict).
-            # Evict on session turnover instead: a NEW session clears
-            # prior sessions' plans, bounding the memo to the active
-            # session (sessions are used one at a time here — bench,
-            # tests, the driver; interleaved multi-session use would
-            # only re-resolve, never misserve).
-            _TABLE_CACHE.clear()
-        per_session = _TABLE_CACHE.setdefault(spark, {})
-    except TypeError:  # un-weakref-able session shim: skip memoization
-        per_session = {}
-    hit = per_session.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in TS_COLS.get(name, ()):
-        if col in df.columns and dict(df.dtypes)[col] == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    per_session[key] = (stamp, df)
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in TS_COLS.get(name, ()):
+            if col in df.columns and dict(df.dtypes)[col] == "bigint":
+                df = df.withColumn(
+                    col, F.timestamp_micros(F.expr(f"{col} div 1000"))
+                )
+        return df
+
+    return session_memo(
+        spark,
+        ("table", os.path.abspath(sf_dir), name),
+        _table_stamp(sf_dir, name),
+        read,
+    )
 
 
 def load_events_range(

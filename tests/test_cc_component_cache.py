@@ -1,16 +1,16 @@
-"""Pin the CC-family session component cache (VERDICT r12 item 3).
+"""Pin the CC family's per-session label memo.
 
 `dedup_connected_components` and `dedup_cluster_size_stats` share one
-converged (doc_id, component) frame per (session, corpus snapshot):
-the CC op always computes and refreshes the cache; the impact report
-serves from it when the corpus stamp is fresh.  Measured at sf0.1:
-combined headline 8.9s -> 4.75s (-47%).  These tests pin the three
-contracts the speedup must never buy away:
+converged (doc_id, component) frame per (session, corpus stamp), held in
+`sources.catalog.session_memo` under ``("cc_components", abspath(sf_dir))``:
+the CC op always computes and overwrites the entry; the impact report
+serves it when the `documents` stamp still matches.  These tests pin the
+three contracts the reuse must never buy away:
 
 1. value parity with a fresh-computed run, in BOTH op orders;
-2. the stamp refuses a stale/foreign cache (recompute + re-stamp);
-3. the CC op NEVER reads the cache — a poisoned cache with a valid
-   stamp must not leak into its output (benched repeats stay honest).
+2. a stale stamp is refused (recompute + re-stamp);
+3. the CC op NEVER reads the memo — a bogus frame under a valid stamp
+   must not leak into its output (its repeats time the real operator).
 """
 
 from __future__ import annotations
@@ -18,76 +18,86 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from esxsnmp_tsdb_spark.operators import dedup as D
+from esxsnmp_tsdb_spark.sources import catalog
 from tests.conftest import SF_ORACLE as SF
 
 
-def _cache_root(sf: str) -> str:
-    # Derive the location from the library's own single source of truth
-    # so a key-mangling change cannot silently split the tests onto a
-    # different directory than the writer/reader pair.
-    root, _, _ = D._cc_paths(sf)
-    return root
+def _key(sf: str) -> tuple:
+    return ("cc_components", os.path.abspath(sf))
 
 
-def _settle(sf: str) -> None:
-    # The CC op writes the cache from a driver thread (r14) — drain it
-    # before poking the cache dir so these tests stay deterministic.
-    _, _, data_dir = D._cc_paths(sf)
-    D._cc_write_barrier(data_dir)
+def _entry(spark, sf: str):
+    """The memo's ``(stamp, frame)`` for ``sf``, or None."""
+    return catalog._MEMO.get(spark, {}).get(_key(sf))
 
 
-def _clear(sf: str) -> None:
-    _settle(sf)
-    shutil.rmtree(_cache_root(sf), ignore_errors=True)
+def _forget(spark, sf: str) -> None:
+    catalog._MEMO.get(spark, {}).pop(_key(sf), None)
+
+
+def _plant(spark, sf: str, stamp) -> None:
+    bogus = spark.createDataFrame(
+        [(999999, 999999)], "doc_id bigint, component bigint"
+    )
+    # Written into the memo directly, not through session_memo, so the
+    # plant does not depend on the code under test.
+    catalog._MEMO[spark][_key(sf)] = (stamp, bogus)
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@pytest.fixture
+def corpus(tmp_path):
+    """A private copy of the fixture, so stamps can be bumped freely."""
+    dst = str(tmp_path / "sf")
+    shutil.copytree(SF, dst)
+    return dst
+
+
 def test_parity_both_orders(spark):
-    _clear(SF)
+    _forget(spark, SF)
     cc_first = _rows(D.dedup_connected_components(spark, SF))
     stats_warm = _rows(D.dedup_cluster_size_stats(spark, SF))
-    _clear(SF)
+    _forget(spark, SF)
     stats_cold = _rows(D.dedup_cluster_size_stats(spark, SF))
+    assert _entry(spark, SF) is not None, "cold report must memoize labels"
     cc_second = _rows(D.dedup_connected_components(spark, SF))
     assert stats_warm == stats_cold, "warm report diverges from cold"
-    assert cc_first == cc_second, "CC output depends on cache state"
+    assert cc_first == cc_second, "CC output depends on memo state"
 
 
-def test_stale_stamp_refused(spark):
-    _clear(SF)
-    D.dedup_connected_components(spark, SF).count()
-    _settle(SF)
-    stamp = os.path.join(_cache_root(SF), "_stamp")
-    with open(stamp, "w") as f:
-        f.write("v0:someone-elses-corpus:1:1")
-    want = _rows(D.dedup_cluster_size_stats(spark, SF))  # must recompute
-    with open(stamp) as f:
-        assert f.read() == D._cc_corpus_stamp(SF), "recompute must re-stamp"
-    _clear(SF)
-    assert want == _rows(D.dedup_cluster_size_stats(spark, SF))
+def test_stale_stamp_refused(spark, corpus):
+    want = _rows(D.dedup_cluster_size_stats(spark, corpus))
+    stamp = catalog._table_stamp(corpus, "documents")
+    assert _entry(spark, corpus)[0] == stamp
+    _plant(spark, corpus, stamp)
+    # Sensitivity: under its valid stamp the bogus frame IS served ...
+    assert _rows(D.dedup_cluster_size_stats(spark, corpus)) == [(1, 1, 1, 0)]
+    # ... and a bumped documents.parquet mtime refuses it.
+    path = os.path.join(corpus, "documents.parquet")
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert _rows(D.dedup_cluster_size_stats(spark, corpus)) == want
+    new_stamp = catalog._table_stamp(corpus, "documents")
+    assert new_stamp != stamp
+    assert _entry(spark, corpus)[0] == new_stamp, "recompute must re-stamp"
 
 
-def test_cc_op_never_reads_cache(spark):
-    """Poison the cached data under a VALID stamp: the CC op must return
-    correct labels (it always recomputes — its benched repeats time the
-    real operator) and must overwrite the poison, which the report then
-    serves."""
-    _clear(SF)
-    good = _rows(D.dedup_connected_components(spark, SF))
-    _settle(SF)
-    data_dir = os.path.join(_cache_root(SF), "components")
-    poison = spark.createDataFrame(
-        [(999999, 999999)], "doc_id bigint, component bigint"
-    )
-    poison.write.mode("overwrite").parquet(data_dir)
-    again = _rows(D.dedup_connected_components(spark, SF))
-    assert again == good, "CC op served the poisoned cache"
-    served = _rows(D.dedup_cluster_size_stats(spark, SF))
-    _clear(SF)
-    assert served == _rows(D.dedup_cluster_size_stats(spark, SF)), (
-        "CC op did not refresh the poisoned cache"
+def test_cc_op_never_reads_cache(spark, corpus):
+    """Plant a bogus frame under a VALID stamp: the CC op must return
+    correct labels (it always recomputes) and must overwrite the bogus
+    entry, which the report then serves."""
+    good = _rows(D.dedup_connected_components(spark, corpus))
+    _plant(spark, corpus, catalog._table_stamp(corpus, "documents"))
+    again = _rows(D.dedup_connected_components(spark, corpus))
+    assert again == good, "CC op served the memoized frame"
+    served = _rows(D.dedup_cluster_size_stats(spark, corpus))
+    _forget(spark, corpus)
+    assert served == _rows(D.dedup_cluster_size_stats(spark, corpus)), (
+        "CC op did not overwrite the bogus entry"
     )

@@ -99,7 +99,7 @@ def test_random_graphs_match_union_find(spark):
 def test_truncation_is_flagged_not_silent(spark):
     """A max_rounds too small to converge must come back converged=False
     (rounds == max_rounds alone cannot distinguish truncated from
-    converged-on-the-last-round — ADVICE r10), and
+    converged-on-the-last-round), and
     dedup_connected_components refuses to serve truncated labels."""
     edges = _bidirectional(spark, [(i, i + 1) for i in range(64)])
     labels, rounds, converged = min_label_components(edges, max_rounds=2)
@@ -133,7 +133,7 @@ def test_big_graph_tier_matches_plain_tier(spark, monkeypatch):
 
 
 def test_adversarial_long_path_plus_hot_star_envelope(spark):
-    """VERDICT r10 item 7: the mixed worst case — one long path (depth)
+    """The mixed worst case — one long path (depth)
     welded to a hot star (skew) at 10× the fixture candidate-pair volume
     (~1.3k bidirectional edges vs the ~60-pair LSH fixture graph).  The
     envelope pinned: rounds stay O(log d) (the star cannot slow the
@@ -156,22 +156,26 @@ def test_adversarial_long_path_plus_hot_star_envelope(spark):
 
 
 def test_directed_only_input_fails_loud(spark):
-    """Precondition guard (r12 review finding, tightened per ADVICE
-    r12): the helper's contract is a BIDIRECTIONAL edge list.  A
-    directed-only input leaves dst-only nodes without a self-loop
-    (old=NULL); the round-1 NULL tally must raise immediately — never
-    converge quietly over wrong labels, and never burn max_rounds of
-    cluster work before reporting the violation."""
+    """Precondition guard: the helper's contract is a BIDIRECTIONAL
+    edge list.  A directed-only input leaves dst-only nodes without a
+    self-loop (old=NULL); the round-1 NULL tally must raise immediately
+    — never converge quietly over wrong labels, and never burn
+    max_rounds of cluster work before reporting the violation.  The
+    loop sets AQE and the shuffle width session-wide, so the raise must
+    also leave both confs as they were before the call."""
     edges = spark.createDataFrame(
         [(5, 2), (7, 2)], "src bigint, dst bigint"  # no reverse rows
     ).localCheckpoint(eager=True)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
     with pytest.raises(ValueError, match="BIDIRECTIONAL"):
         min_label_components(edges, max_rounds=4)
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_nonpositive_max_rounds_rejected(spark):
-    """ADVICE r12: max_rounds <= 0 used to skip the loop and return
-    labels=None, crashing callers downstream — must raise here."""
+    """max_rounds <= 0 used to skip the loop and return labels=None,
+    crashing callers downstream — must raise here."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 1)], "src bigint, dst bigint"
     ).localCheckpoint(eager=True)
