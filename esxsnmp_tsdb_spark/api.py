@@ -25,6 +25,11 @@ discoverability wrapper, not a second engine:
 - ``get`` / ``get_last`` are the `ts_point_lookup` / `ts_last_known`
   semantics against the var's own step.
 
+Driver-side rows (an insert batch, the empty frame of an empty window)
+become DataFrames through ``session.local_frame``: an Arrow local
+relation the JVM scans in place, never a Python list that Spark would
+parallelize into slices served by Python workers.
+
 Scale note: the façade's per-var parquet directory mirrors the reference's
 per-var chunk files 1:1 (compat path, small var counts).  Bulk analytics
 stay on the engine's long-table layout (sources/catalog.py); nothing in
@@ -39,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.functions.tsdb import ROW_HIDDEN, ROW_VALID, slot_of
+from esxsnmp_tsdb_spark.session import local_frame
 
 METADATA_FILE = "TSDB_METADATA"
 AGG_DIR = "TSDB_AGGREGATES"
@@ -435,7 +441,14 @@ class TSDBVar(_Node):
         reference's one-persister-per-var rule, enforced instead of
         assumed.  Each call locks its own freshly opened fd, so the
         blocking ``flock`` serializes threads within one process as well
-        as separate processes."""
+        as separate processes.
+
+        Transport: the batch reaches the JVM as one typed Arrow table
+        (``session.local_frame``) and is written by one single-task job.
+        As a Python list it would start one Python worker per
+        ``defaultParallelism`` slice inside that job, a fixed cost that
+        dominated small batches.  A flag outside ``int`` range or a
+        non-numeric value raises before any part file is written."""
         if self.is_aggregate:
             raise ValueError(
                 "aggregate vars are maintained by update_all_aggregates, "
@@ -461,7 +474,8 @@ class TSDBVar(_Node):
             # a strictly later counter).
             self.metadata = _read_metadata(self.fs_path)
             seq0 = int(self.metadata["LAST_SEQ"])
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 [
                     (t, fl, v, seq0 + 1 + i)
                     for i, (t, v, fl) in enumerate(norm)
@@ -506,7 +520,7 @@ class TSDBVar(_Node):
         schema = _AGG_SCHEMA if self.is_aggregate else _ROW_SCHEMA
         self._heal()
         if not os.path.isdir(self._data):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(self._data)
 
     def _lww(self, df: DataFrame) -> DataFrame:
@@ -541,8 +555,8 @@ class TSDBVar(_Node):
             return self._select_agg(begin, end, flags)
         step = self.step
         if end <= begin:  # empty or inverted window
-            return self.spark.createDataFrame(
-                [], "tse long, flags int, value double, slot long"
+            return local_frame(
+                self.spark, [], "tse long, flags int, value double, slot long"
             )
         lo, hi = _slot(begin, step), _slot(end - 1, step)
         # Slot-complete filtering: last-write-wins must see EVERY row of
@@ -586,7 +600,7 @@ class TSDBVar(_Node):
         as invalid rows, same mask semantics as raw select."""
         step = self.step
         if end <= begin:
-            return self.spark.createDataFrame([], _AGG_SCHEMA)
+            return local_frame(self.spark, [], _AGG_SCHEMA)
         lo, hi = _slot(begin, step), _slot(end - 1, step)
         present = self._rows().filter(
             (F.col("slot") >= lo) & (F.col("slot") <= hi)
@@ -647,8 +661,8 @@ class TSDBVar(_Node):
         if cf not in TIMERANGE_CFS:
             raise ValueError(f"unknown consolidation function {cf!r}")
         if end <= begin:  # empty request stays empty, like select's
-            return self.spark.createDataFrame(
-                [], "path string, slot long, value double, n long"
+            return local_frame(
+                self.spark, [], "path string, slot long, value double, n long"
             )
 
         ladder = {}

@@ -155,6 +155,9 @@ def counter_rate(
     rate is decimal division (scale ≥ 6), never a float64 cast.
     Property-tested digit-exact against Python Decimal on staged 2⁶⁴
     wraps (tests/test_properties.py).
+
+    Two samples in the same second (dt = 0) rate NULL on both paths
+    (``try_divide``; plain division raises DIVIDE_BY_ZERO under ANSI).
     """
     if modulus > 2**63 - 1:
         obs = obs.withColumn(
@@ -162,7 +165,7 @@ def counter_rate(
         )
     d = deltas(obs, counter_col)
     corrected = wrap_correct(F.col("delta"), modulus)
-    rate = corrected / F.col("dt")
+    rate = F.try_divide(corrected, F.col("dt"))
     if heartbeat is not None:
         rate = heartbeat_invalidate(rate, F.col("dt"), heartbeat)
         corrected = heartbeat_invalidate(corrected, F.col("dt"), heartbeat)

@@ -26,6 +26,7 @@ from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import BUCKET, OBS_CTE, T_JAN10, T_JAN20
 from esxsnmp_tsdb_spark.functions.exact import half_up_div_signed
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 STL_HALF = 12  # centered trend MA: 11 preceding + current + 12 following
@@ -446,8 +447,10 @@ def ts_alert_rules_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("event_type", F.split("path", "/").getItem(1))
     )
-    rules = spark.createDataFrame(
-        list(ALERT_RULES), "rule_id int, event_type string, kind string, thresh double"
+    rules = local_frame(
+        spark,
+        list(ALERT_RULES),
+        "rule_id int, event_type string, kind string, thresh double",
     )
     j = s.join(F.broadcast(rules), "event_type")
     breach = (

@@ -39,6 +39,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN11,
 )
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 # Provisioned per-second capacity per event class (the broadcast dim a
@@ -62,7 +63,7 @@ def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cap10_df(spark: SparkSession):
     return F.broadcast(
-        spark.createDataFrame(sorted(CAP10.items()), ["etype", "cap10"])
+        local_frame(spark, sorted(CAP10.items()), "etype string, cap10 bigint")
     )
 
 

@@ -28,6 +28,7 @@ from esxsnmp_tsdb_spark.operators.dedup import (
     _shingled,
 )
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 SWEEP_BANDS = 8  # signatures carry 8 bands; configs take prefixes
@@ -133,7 +134,7 @@ def minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("a.band").alias("min_band"))
     )
     nd = _t(spark, sf_dir)["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
-    cfg = spark.createDataFrame([(c,) for c in BAND_CONFIGS], "n_bands int")
+    cfg = local_frame(spark, [(c,) for c in BAND_CONFIGS], "n_bands int")
     caught = F.col("min_band") < F.col("n_bands")
     true_pair = F.col("doc_b") == F.col("doc_a") + 100000
     n_cand = F.count(F.when(caught, 1))

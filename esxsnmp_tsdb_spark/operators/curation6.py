@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.session import fan_out
+from esxsnmp_tsdb_spark.session import fan_out, local_frame
 from esxsnmp_tsdb_spark.operators.text import STOPWORDS
 from esxsnmp_tsdb_spark.sources import register_views
 
@@ -171,7 +171,7 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.size(F.split("text", " ")).alias("n_words")
     )
     block = F.broadcast(
-        spark.createDataFrame([(w,) for w in BLOCKLIST], ["tok"])
+        local_frame(spark, [(w,) for w in BLOCKLIST], "tok string")
     )
     hits = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))

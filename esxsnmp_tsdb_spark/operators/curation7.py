@@ -26,6 +26,7 @@ from esxsnmp_tsdb_spark.operators.curation import _hex16
 from esxsnmp_tsdb_spark.operators.similarity import DOT_SQL, QUERY_VEC_ID
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 # Per-language keep thresholds out of 65536 (the _hex16 range): the classic
@@ -84,8 +85,8 @@ def sample_importance_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure expression so the sampled shard writes in the same pass.
     target vs achieved ppm lands the sampling-error report in the same
     row, both as exact integers."""
-    thr = spark.createDataFrame(
-        sorted(LANG_KEEP_THR.items()), ["lang", "thr"]
+    thr = local_frame(
+        spark, sorted(LANG_KEEP_THR.items()), "lang string, thr bigint"
     )
     d = (
         _t(spark, sf_dir)["documents"]

@@ -41,6 +41,7 @@ from esxsnmp_tsdb_spark.operators.dedup import (
 from esxsnmp_tsdb_spark.operators.similarity import DOT_SQL, _dbl
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 SEM_TAU = 0.6  # same near-dup threshold dedup_embedding_cosine proves
@@ -777,8 +778,8 @@ def dataset_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the target table is a broadcast literal; output is |languages|
     rows."""
     docs = _t(spark, sf_dir)["documents"]
-    tgt = spark.createDataFrame(
-        sorted(MIX_TARGET_PPM.items()), "lang string, target_ppm int"
+    tgt = local_frame(
+        spark, sorted(MIX_TARGET_PPM.items()), "lang string, target_ppm int"
     )
     have = docs.groupBy("lang").agg(
         F.sum(F.size(F.split("text", " "))).cast("bigint").alias("n_tokens")

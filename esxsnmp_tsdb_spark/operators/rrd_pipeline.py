@@ -44,6 +44,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     SYNTH_WRAP,
 )
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 
@@ -333,8 +334,8 @@ def stream_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         if epoch_id > 0 and os.path.isdir(prev_path):
             prev = spark.read.parquet(prev_path)
         else:
-            prev = spark.createDataFrame(
-                [], "path string, p_tse long, p_eid long, p_counter long"
+            prev = local_frame(
+                spark, [], "path string, p_tse long, p_eid long, p_counter long"
             )
         # Stage 1, incremental: counter = carry + in-batch running sum.
         w = (

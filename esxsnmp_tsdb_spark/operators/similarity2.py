@@ -40,6 +40,7 @@ from esxsnmp_tsdb_spark.operators.similarity import (
     sim_search_topk,
 )
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.sources import register_views
 
 PQ_M = 8  # subspaces (64-dim fixture → 8 dims each)
@@ -270,7 +271,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)), F.count("hit"))
         .first()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(TOP_K, n_ann, hits, round(hits / TOP_K, 6))],
         "k int, n_ann bigint, hits bigint, recall double",
     )
@@ -688,7 +690,8 @@ def ann_recall_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)), F.count("hit"))
         .first()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(TOP_K, n_ann, hits, round(hits / TOP_K, 6))],
         "k int, n_ann bigint, hits bigint, recall double",
     )

@@ -26,6 +26,7 @@ from esxsnmp_tsdb_spark.operators.analytics5 import (
 from esxsnmp_tsdb_spark.operators.analytics5 import CAP10 as _CAP10
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.streaming import events_stream, run_to_memory
 
 TOPK_WINDOW_SEC = 6 * 3600
@@ -470,7 +471,7 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             existing = s.read.parquet(store).join(
                 F.broadcast(
-                    s.createDataFrame(touched, "day date, bkt bigint")
+                    local_frame(s, touched, "day date, bkt bigint")
                 ),
                 ["day", "bkt"],
                 "leftsemi",
@@ -556,8 +557,8 @@ def stream_utilization_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle recomputes the same windows from the fixture; equality
     proves stream/batch convergence."""
     ev = events_stream(spark, sf_dir)
-    caps = spark.createDataFrame(
-        sorted(_CAP10.items()), ["event_type", "cap10"]
+    caps = local_frame(
+        spark, sorted(_CAP10.items()), "event_type string, cap10 bigint"
     )
     joined = ev.join(F.broadcast(caps), "event_type")
     agg = joined.groupBy(

@@ -1,12 +1,14 @@
 """SparkSession factory + runtime tuning.
 
-Two entry points:
+Entry points:
 
 - :func:`get_session` — build a tuned local session (tests, bench).
 - :func:`tune` — apply the runtime-settable subset of the tuning to a
   session we did NOT create (the driver passes its own ``spark`` into
   ``__spark_entry__.queries()`` callables; we cannot rebuild it, but
   shuffle partitions / AQE / timezone / Arrow are all runtime-settable).
+- :func:`local_frame` — the package's one way to turn driver-side rows
+  into a DataFrame (an Arrow local relation).
 
 Scale notes (100 TB design, SURVEY.md §4): these configs are the local[*]
 projection of the cluster posture — AQE for runtime re-planning (skew joins,
@@ -20,7 +22,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Runtime-settable confs applied to ANY session the engine touches.
 RUNTIME_CONF: dict[str, str] = {
@@ -90,6 +95,33 @@ def fan_out(df, *cols, width: int = 1):
     """
     n = width * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    shipped to the JVM as one typed Arrow table.
+
+    A Python list given to ``spark.createDataFrame`` is parallelized into
+    ``defaultParallelism`` slices behind a Python re-serialize step, so
+    every action over it starts one Python worker per slice — a fixed
+    cost that dominates small literals and single-batch writes.  An Arrow
+    table below ``spark.sql.execution.arrow.localRelationThreshold``
+    plans as a ``LocalTableScan`` instead: one partition, no Python
+    worker, and collecting an empty one runs no job.
+
+    The table is built column by column from the Python values, not via
+    pandas, so NaN stays NaN (pandas' Arrow route reads it as NULL) and
+    ``None`` is NULL.  A value its column type cannot hold (an int out of
+    ``int`` range, a string in a numeric column) raises here, on the
+    driver, before any job runs.  A naive ``datetime`` is read as UTC
+    (the list path read it in the host's zone)."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def cluster_profile(**kwargs):

@@ -22,6 +22,7 @@ import pytest
 
 from esxsnmp_tsdb_spark.operators import dedup as D
 from esxsnmp_tsdb_spark.sources import catalog
+from esxsnmp_tsdb_spark.session import local_frame
 from tests.conftest import SF_ORACLE as SF
 
 
@@ -39,8 +40,8 @@ def _forget(spark, sf: str) -> None:
 
 
 def _plant(spark, sf: str, stamp) -> None:
-    bogus = spark.createDataFrame(
-        [(999999, 999999)], "doc_id bigint, component bigint"
+    bogus = local_frame(
+        spark, [(999999, 999999)], "doc_id bigint, component bigint"
     )
     # Written into the memo directly, not through session_memo, so the
     # plant does not depend on the code under test.

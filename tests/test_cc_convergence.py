@@ -14,10 +14,12 @@ from __future__ import annotations
 import pytest
 
 from esxsnmp_tsdb_spark.operators.dedup import min_label_components
+from esxsnmp_tsdb_spark.session import local_frame
 
 
 def _bidirectional(spark, pairs):
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(int(a), int(b)) for a, b in pairs] + [(int(b), int(a)) for a, b in pairs],
         "src bigint, dst bigint",
     )
@@ -163,8 +165,8 @@ def test_directed_only_input_fails_loud(spark):
     max_rounds of cluster work before reporting the violation.  The
     loop sets AQE and the shuffle width session-wide, so the raise must
     also leave both confs as they were before the call."""
-    edges = spark.createDataFrame(
-        [(5, 2), (7, 2)], "src bigint, dst bigint"  # no reverse rows
+    edges = local_frame(
+        spark, [(5, 2), (7, 2)], "src bigint, dst bigint"  # no reverse rows
     ).localCheckpoint(eager=True)
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     before = {k: spark.conf.get(k) for k in keys}
@@ -176,8 +178,8 @@ def test_directed_only_input_fails_loud(spark):
 def test_nonpositive_max_rounds_rejected(spark):
     """max_rounds <= 0 used to skip the loop and return labels=None,
     crashing callers downstream — must raise here."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1)], "src bigint, dst bigint"
+    edges = local_frame(
+        spark, [(1, 2), (2, 1)], "src bigint, dst bigint"
     ).localCheckpoint(eager=True)
     with pytest.raises(ValueError, match="max_rounds"):
         min_label_components(edges, max_rounds=0)

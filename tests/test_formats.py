@@ -9,6 +9,7 @@ import tempfile
 import pytest
 
 from esxsnmp_tsdb_spark.sources import formats
+from esxsnmp_tsdb_spark.session import local_frame
 
 
 @pytest.fixture(scope="module")
@@ -16,8 +17,8 @@ def obs(spark):
     rows = [
         ("a/click", 1704067200 + i * 300, float(i % 7), 1, i) for i in range(200)
     ]
-    return spark.createDataFrame(
-        rows, "path string, tse long, value double, flags int, event_id long"
+    return local_frame(
+        spark, rows, "path string, tse long, value double, flags int, event_id long"
     )
 
 

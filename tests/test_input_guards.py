@@ -22,6 +22,7 @@ import pytest
 from esxsnmp_tsdb_spark import registry
 from esxsnmp_tsdb_spark.operators.similarity import LSH_BUCKET_SQL, _lsh_bucket_expr
 from esxsnmp_tsdb_spark.sources import catalog
+from esxsnmp_tsdb_spark.session import local_frame
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import duck_connection, run_op
 
@@ -69,7 +70,8 @@ def test_ts_rate_same_second_samples_match_oracle(spark, tmp_path):
 
 
 def _embeddings(spark, rows):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, e) for i, e in enumerate(rows)], "vec_id bigint, embedding array<float>"
     )
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.sources import compaction
 from esxsnmp_tsdb_spark.sources.ladder import build_ladder, pick_level, timerange
+from esxsnmp_tsdb_spark.session import local_frame
 
 OBS_SCHEMA = "path string, tse long, value double, flags int, event_id long"
 
@@ -26,7 +27,7 @@ def obs(spark):
         ("b", t, float((t * 13) % 71), 1, 10_000 + i)
         for i, t in enumerate(range(50, 200_000, 211))
     ]
-    return spark.createDataFrame(rows, OBS_SCHEMA)
+    return local_frame(spark, rows, OBS_SCHEMA)
 
 
 def test_ladder_cascade_lossless(spark, obs):

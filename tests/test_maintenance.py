@@ -17,6 +17,7 @@ from esxsnmp_tsdb_spark.streaming.maintenance import (
     batch_partials,
     read_level,
 )
+from esxsnmp_tsdb_spark.session import local_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,8 +52,8 @@ def test_streaming_maintenance_equals_batch(spark):
 
 def test_merge_partials_is_algebraic(spark):
     rows = [("s", t, float(t % 13), 1, i) for i, t in enumerate(range(0, 5000, 37))]
-    df = spark.createDataFrame(
-        rows, "path string, tse long, value double, flags int, event_id long"
+    df = local_frame(
+        spark, rows, "path string, tse long, value double, flags int, event_id long"
     )
     half1 = batch_partials(df.filter(F.col("event_id") % 2 == 0), 300)
     half2 = batch_partials(df.filter(F.col("event_id") % 2 == 1), 300)
@@ -95,7 +96,7 @@ def test_expire_late_arrival_backfill_converges(spark):
         for i, t in enumerate(range(0, 3 * day, 300))
     ]
     schema = "path string, tse long, value double, flags int, event_id long"
-    obs = spark.createDataFrame(rows, schema)
+    obs = local_frame(spark, rows, schema)
     on_time = obs.filter(F.col("event_id") % 7 != 0)
     late = obs.filter(F.col("event_id") % 7 == 0)
 

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.functions import tsdb
+from esxsnmp_tsdb_spark.session import local_frame
 
 WRAP = 1000
 
@@ -36,8 +37,8 @@ def test_wrap_correction_recovers_increments(spark, incs):
     for i, inc in enumerate(incs, start=1):
         total += inc
         rows.append(("s", i * 300, total % WRAP, i))
-    df = spark.createDataFrame(
-        rows, "path string, tse long, counter long, event_id long"
+    df = local_frame(
+        spark, rows, "path string, tse long, counter long, event_id long"
     )
     out = tsdb.counter_rate(df, "counter", modulus=WRAP)
     got = [
@@ -63,7 +64,8 @@ def test_spine_density(spark, begin, n_slots, step):
     # path, however sparse the observations.
     begin = begin * step  # slot-aligned begin, like the reference
     end = begin + n_slots * step
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("s", begin + 1, 1.0, 1, 0)],
         "path string, tse long, value double, flags int, event_id long",
     )
@@ -80,8 +82,8 @@ def test_spine_density(spark, begin, n_slots, step):
 @PROP
 def test_slot_dedup_idempotent_and_unique(spark, ts_list):
     rows = [("s", t, float(i), 1, i) for i, t in enumerate(ts_list)]
-    df = spark.createDataFrame(
-        rows, "path string, tse long, value double, flags int, event_id long"
+    df = local_frame(
+        spark, rows, "path string, tse long, value double, flags int, event_id long"
     )
     once = tsdb.slot_dedup(df, 300)
     twice = tsdb.slot_dedup(once.drop("slot"), 300)
@@ -142,7 +144,7 @@ def test_counter64_rate_digit_exact(spark, case, gap_to_wrap):
             StructField("event_id", LongType()),
         ]
     )
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     out = sorted(
         tsdb.counter_rate(df, "counter", modulus=C64).collect(),
         key=lambda r: r.tse,
@@ -194,7 +196,8 @@ _toklist = lambda lo, hi: st.lists(_tok, min_size=lo, max_size=hi)  # noqa: E731
 
 
 def _docs_df(spark, docs):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
         "doc_id long, text string",
     )
@@ -291,7 +294,7 @@ def test_budget_prefix_matches_reference(spark, toks, budget):
     )
 
     rows = [(i, part, tok) for i, (tok, part) in enumerate(toks)]
-    df = spark.createDataFrame(rows, "doc_id long, part string, tok long")
+    df = local_frame(spark, rows, "doc_id long, part string, tok long")
     out = (
         df.select("doc_id", "part", "tok", budget_hash_col().alias("h"))
         .withColumn("cum", F.sum("tok").over(budget_cum_window("part")))

@@ -14,10 +14,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.operators.curation4 import COS_TAUS, _sweep_counts
+from esxsnmp_tsdb_spark.session import local_frame
 
 
 def _old_shape(spark, pairs):
-    taus = spark.createDataFrame([(t,) for t in COS_TAUS], "tau double")
+    taus = local_frame(spark, [(t,) for t in COS_TAUS], "tau double")
     hit = F.col("cos_r") >= F.col("tau")
     return (
         pairs.crossJoin(F.broadcast(taus))
@@ -34,7 +35,8 @@ def _sorted_rows(df):
 
 
 def test_matches_old_shape_on_mixed_stream(spark):
-    pairs = spark.createDataFrame(
+    pairs = local_frame(
+        spark,
         [
             (1, 0.40),   # above every tau
             (1, 0.10),   # below every tau
@@ -52,13 +54,13 @@ def test_matches_old_shape_on_mixed_stream(spark):
 
 
 def test_empty_pairs_yield_zero_rows(spark):
-    pairs = spark.createDataFrame([], "va bigint, cos_r double")
+    pairs = local_frame(spark, [], "va bigint, cos_r double")
     assert _sweep_counts(pairs).count() == 0
     assert _old_shape(spark, pairs).count() == 0
 
 
 def test_schema_matches_old_shape(spark):
-    pairs = spark.createDataFrame([(1, 0.3)], "va bigint, cos_r double")
+    pairs = local_frame(spark, [(1, 0.3)], "va bigint, cos_r double")
     new = _sweep_counts(pairs)
     old = _old_shape(spark, pairs)
     assert dict(new.dtypes) == dict(old.dtypes)

@@ -14,17 +14,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esxsnmp_tsdb_spark.functions import tsdb
+from esxsnmp_tsdb_spark.session import local_frame
 
 OBS_SCHEMA = "path string, tse long, value double, flags int, event_id long"
 
 
 def obs_df(spark, rows):
-    return spark.createDataFrame(rows, OBS_SCHEMA)
+    return local_frame(spark, rows, OBS_SCHEMA)
 
 
 def test_counter32_wrap(spark):
     # 2³²-10 → 5 across one step: true delta is 15, not -4294967291.
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("s", 0, 2**32 - 10, 0), ("s", 300, 5, 1)],
         "path string, tse long, counter long, event_id long",
     )
@@ -38,7 +40,8 @@ def test_counter64_wrap_needs_decimal(spark):
     # Counter64 wrap math overflows doubles (2⁶⁴ ≈ 1.8e19 > 2⁵³ precision);
     # DecimalType(38,0) carries it exactly (SURVEY.md §7 hard parts).
     big = 2**64 - 3
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("s", 0, Decimal(big), 0), ("s", 300, Decimal(7), 1)],
         T.StructType(
             [
@@ -57,9 +60,33 @@ def test_counter64_wrap_needs_decimal(spark):
     assert int(row.wd) == 10  # (7 - (2^64-3)) + 2^64
 
 
+@pytest.mark.parametrize("modulus", [tsdb.COUNTER32_MAX, tsdb.COUNTER64_MAX])
+def test_counter_rate_same_second_is_null(spark, modulus):
+    # Two samples in one second (dt = 0) rate NULL instead of raising
+    # DIVIDE_BY_ZERO, on the long path and on the decimal(38,0) Counter64
+    # path, and the rate keeps the type plain division gives it.
+    df = local_frame(
+        spark,
+        [("s", 0, 5, 0), ("s", 0, 9, 1), ("s", 300, 12, 2)],
+        "path string, tse long, counter long, event_id long",
+    )
+    out = tsdb.counter_rate(df, "counter", modulus=modulus)
+    rows = {r.event_id: r for r in out.collect()}
+    assert rows[1].dt == 0 and int(rows[1].wrapped_delta) == 4
+    assert rows[1].rate is None
+    assert float(rows[2].rate) == pytest.approx(3 / 300)
+
+    if modulus > 2**63 - 1:
+        df = df.withColumn("counter", F.col("counter").cast("decimal(38,0)"))
+    corrected = tsdb.wrap_correct(F.col("delta"), modulus)
+    plain = tsdb.deltas(df, "counter").select((corrected / F.col("dt")).alias("r"))
+    assert out.schema["rate"].dataType == plain.schema["r"].dataType
+
+
 def test_heartbeat_boundary(spark):
     # gap == heartbeat stays valid; gap > heartbeat invalidates.
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("s", 0, 0.0, 0), ("s", 900, 90.0, 1), ("s", 1801, 180.0, 2)],
         "path string, tse long, counter double, event_id long",
     )
@@ -188,8 +215,8 @@ def test_downsample_hot_path_salting_identical_and_two_phase(spark):
             + [("cold", t) for t in range(0, 40_000, 400)]
         )
     ]
-    obs = spark.createDataFrame(
-        rows, "path string, tse long, value double, flags int, event_id long"
+    obs = local_frame(
+        spark, rows, "path string, tse long, value double, flags int, event_id long"
     )
     plain = tsdb.downsample(obs, 3600)
     salted = tsdb.downsample(obs, 3600, hot_paths=("hot",))
