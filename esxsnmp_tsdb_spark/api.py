@@ -31,9 +31,19 @@ relation the JVM scans in place, never a Python list that Spark would
 parallelize into slices served by Python workers.
 
 Scale note: the façade's per-var parquet directory mirrors the reference's
-per-var chunk files 1:1 (compat path, small var counts).  Bulk analytics
-stay on the engine's long-table layout (sources/catalog.py); nothing in
-the operator registry depends on this module.
+per-var chunk files 1:1 (compat path, small var counts).  A var holds one
+series (a year at a 30 s step is about a million rows), so it is read as
+ONE partition (``_rows`` coalesces the scan to 1).  A single partition
+satisfies every distribution a façade plan asks for — the LWW window, the
+ladder's group-bys, the spine join, ``orderBy`` and top-1 — so no plan
+adds an Exchange and every read is one job of one task, instead of
+shuffles sized for a distributed table.  On a 4-core host with a
+year-sized var (1.05M rows, 12 files or compacted to 1) the one-task
+plans were as fast or faster than the shuffled ones for ``select``, raw
+``timerange``, ``update_all_aggregates`` and ``compact``; ``get_last``
+on the 12-file var was about 0.15 s slower.  Bulk and multi-series
+analytics stay on the engine's long-table layout (sources/catalog.py);
+nothing in the operator registry depends on this module.
 """
 
 from __future__ import annotations
@@ -383,7 +393,9 @@ class TSDBVar(_Node):
         changes, and ladder compaction).  The LWW-resolved valid rows
         are localCheckpointed once, so the per-level writes re-run only
         the cheap cascade aggregations — not the raw scan + LWW window
-        per level."""
+        per level.  The checkpointed scan reports no partitioning, so it
+        is coalesced back to the var's one partition: one checkpoint job,
+        then one single-task job per level, with no Exchange."""
         from esxsnmp_tsdb_spark.sources.compaction import recover_swap
         from esxsnmp_tsdb_spark.sources.ladder import build_ladder
 
@@ -406,6 +418,7 @@ class TSDBVar(_Node):
                     F.lit(0).cast("long").alias("event_id"),
                 )
                 .localCheckpoint(eager=True)
+                .coalesce(1)
             )
             ladder = build_ladder(obs, levels=steps)
             for name, step in zip(names, steps):
@@ -521,7 +534,23 @@ class TSDBVar(_Node):
         self._heal()
         if not os.path.isdir(self._data):
             return local_frame(self.spark, [], schema)
-        return self.spark.read.schema(schema).parquet(self._data)
+        return self.spark.read.schema(schema).parquet(self._data).coalesce(1)
+
+    def _spine_join(self, lo: int, hi: int, present: DataFrame) -> DataFrame:
+        """Every slot in ``[lo, hi]`` left-joined to the stored ``present``
+        rows on ``slot``.  The spine is one range slice and ``present`` is
+        one partition, so a shuffled hash join needs no Exchange — left to
+        size-based planning, ``present`` would be broadcast."""
+        spine = self.spark.range(0, 1, 1, 1).select(
+            F.explode(
+                F.sequence(
+                    F.lit(lo).cast("long"),
+                    F.lit(hi).cast("long"),
+                    F.lit(self.step).cast("long"),
+                )
+            ).alias("slot")
+        )
+        return spine.join(present.hint("shuffle_hash"), "slot", "left")
 
     def _lww(self, df: DataFrame) -> DataFrame:
         """Last-write-wins per slot: later ingest_seq, then later tse."""
@@ -572,23 +601,11 @@ class TSDBVar(_Node):
                 (F.col("tse") > lo - step) & (F.col("tse") < hi + step)
             )
         ).filter((F.col("slot") >= lo) & (F.col("slot") <= hi))
-        spine = self.spark.range(1).select(
-            F.explode(
-                F.sequence(
-                    F.lit(lo).cast("long"),
-                    F.lit(hi).cast("long"),
-                    F.lit(step).cast("long"),
-                )
-            ).alias("slot")
-        )
-        out = (
-            spine.join(present, "slot", "left")
-            .select(
-                F.coalesce("tse", "slot").alias("tse"),
-                F.coalesce("flags", F.lit(0)).alias("flags"),
-                "value",
-                "slot",
-            )
+        out = self._spine_join(lo, hi, present).select(
+            F.coalesce("tse", "slot").alias("tse"),
+            F.coalesce("flags", F.lit(0)).alias("flags"),
+            "value",
+            "slot",
         )
         if flags is not None:
             out = out.filter(_flag_mask(flags))
@@ -605,16 +622,7 @@ class TSDBVar(_Node):
         present = self._rows().filter(
             (F.col("slot") >= lo) & (F.col("slot") <= hi)
         )
-        spine = self.spark.range(1).select(
-            F.explode(
-                F.sequence(
-                    F.lit(lo).cast("long"),
-                    F.lit(hi).cast("long"),
-                    F.lit(step).cast("long"),
-                )
-            ).alias("slot")
-        )
-        out = spine.join(present, "slot", "left").select(
+        out = self._spine_join(lo, hi, present).select(
             "slot",
             F.coalesce("flags", F.lit(0)).alias("flags"),
             "average",
@@ -637,8 +645,9 @@ class TSDBVar(_Node):
         raw slot select; otherwise route to the coarsest stored aggregate
         level that divides ``step`` (`sources/ladder.pick_level`), slice
         whole covered slots, and re-consolidate if the request is coarser
-        than stored — exactly `sources/ladder.timerange`, fed from this
-        var's maintained ``TSDB_AGGREGATES`` levels.
+        than stored — exactly `sources/ladder.timerange` (its
+        ``serve_level`` tail once routed), fed from this var's
+        maintained ``TSDB_AGGREGATES`` levels.
 
         The var's own rows always participate as the ladder's raw level
         (each LWW slot is a 1-sample consolidation), so a request at or
@@ -648,12 +657,17 @@ class TSDBVar(_Node):
         later ``update_all_aggregates``) are excluded from routing rather
         than silently answering empty.  ``begin``/``end`` are aligned
         outward to whole requested-step buckets, the same slot-overlap
-        convention ``select`` uses."""
+        convention ``select`` uses.
+
+        The level is picked from the built levels' steps before any
+        DataFrame is built, and only that level is read — one job with
+        no Exchange, as every read of the var's single partition."""
         if step is None:
             return self.select(begin, end)
         from esxsnmp_tsdb_spark.sources.ladder import (
             TIMERANGE_CFS,
-            timerange as _timerange,
+            pick_level,
+            serve_level,
         )
 
         # Validate cf even when the window is empty: a bad cf is a
@@ -665,43 +679,36 @@ class TSDBVar(_Node):
                 self.spark, [], "path string, slot long, value double, n long"
             )
 
-        ladder = {}
+        # Route before building: only the routed level becomes a
+        # DataFrame.  The raw level wins the tie when a stored level has
+        # the var's own step, so a row inserted after the last ladder
+        # rebuild is still served.
+        built = {}
         for name in self.list_aggregates():
             agg = self.get_aggregate(name)
             # committed part-files, not bare isdir: a killed overwrite
             # leaves an existing-but-empty dir, and a crashed compaction
             # leaves the data in ._old (healed by _data_files) — neither
             # should route as "built" / "never built" wrongly
-            if not agg._data_files():
-                continue  # configured but never built — don't route to it
-            ladder[agg.step] = (
-                agg._rows()
-                .filter(F.col("flags").bitwiseAND(F.lit(ROW_VALID)) != 0)
-                .select(
-                    F.lit(self.path).alias("path"),
-                    "slot", "average", "total", "vmin", "vmax", "last", "n",
-                )
-            )
-        # Raw level: every LWW valid row is a 1-sample consolidation at
-        # the var's own step.
-        v = F.col("value")
-        ladder[self.step] = (
-            self._lww(self._rows())
-            .filter(F.col("flags").bitwiseAND(F.lit(ROW_VALID)) != 0)
-            .select(
-                F.lit(self.path).alias("path"),
-                "slot",
-                v.alias("average"),
-                v.alias("total"),
-                v.alias("vmin"),
-                v.alias("vmax"),
-                v.alias("last"),
-                F.lit(1).cast("long").alias("n"),
-            )
-        )
+            if agg._data_files():
+                built[agg.step] = agg
+        stored = pick_level(tuple(sorted({*built, self.step})), step)
+        if stored == self.step:
+            # Raw level: every LWW valid row is a 1-sample consolidation
+            # at the var's own step.
+            v = F.col("value")
+            rows = self._lww(self._rows())
+            cols = [v.alias(c) for c in ("average", "total", "vmin", "vmax", "last")]
+            cols.append(F.lit(1).cast("long").alias("n"))
+        else:
+            rows = built[stored]._rows()
+            cols = ["average", "total", "vmin", "vmax", "last", "n"]
+        level = rows.filter(
+            F.col("flags").bitwiseAND(F.lit(ROW_VALID)) != 0
+        ).select(F.lit(self.path).alias("path"), "slot", *cols)
         lo = _slot(begin, step)
         hi_excl = _slot(end - 1, step) + step
-        return _timerange(ladder, lo, hi_excl, step, cf)
+        return serve_level(level, stored, lo, hi_excl, step, cf)
 
     def get(self, tse: int):
         """The row in the slot containing ``tse`` († TSDBVar.get)."""

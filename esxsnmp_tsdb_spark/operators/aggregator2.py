@@ -178,11 +178,11 @@ def ts_ladder_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = _obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11)
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         batch_partials(obs, BUCKET)
         .repartition("day")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day")
         .parquet(out)
     )

@@ -266,7 +266,6 @@ def storage_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in stored.filter(subject).select("day_p").distinct().collect()
     ]
     assert touched, "fixture subject wrote no rows — erasure untestable"
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         stored.filter(F.col("day_p").isin(touched))
         .filter(~subject)
@@ -274,6 +273,7 @@ def storage_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (the stream_cdc_apply self-read-overwrite discipline)
         .localCheckpoint(eager=True)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day_p")
         .parquet(store)
     )

@@ -272,7 +272,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply_batch(bdf, epoch_id):
         s = bdf.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         w = Window.partitionBy("path", "slot").orderBy(
             F.col("tse").desc(), F.col("event_id").desc()
         )
@@ -302,6 +301,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             merged.repartition("day")
             .write.mode("overwrite" if os.path.exists(store) else "append")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
             .parquet(store)
         )
@@ -453,7 +453,6 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply_batch(bdf, epoch_id):
         s = bdf.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         w = Window.partitionBy("path", "slot").orderBy(
             F.col("tse").desc(), F.col("event_id").desc()
         )
@@ -488,6 +487,7 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             merged.repartition("day", "bkt")
             .write.mode("overwrite" if os.path.exists(store) else "append")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day", "bkt")
             .parquet(store)
         )

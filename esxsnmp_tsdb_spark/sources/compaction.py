@@ -107,6 +107,10 @@ def compact_flat(
     column (including ``ingest_seq``) rides along, so last-write-wins
     replay picks identical winners before and after.
 
+    The rewrite coalesces the input splits into at most ``n_files``
+    writing tasks, so it is one job with no shuffle; a store under ~1.5
+    target files (every façade var in practice) is written by one task.
+
     Crash recovery runs on entry via :func:`recover_swap`; callers that
     read or append the directory must call it (under the same store
     lock) before touching a path whose compaction may have died, or a
@@ -135,7 +139,7 @@ def compact_flat(
     reader = spark.read.schema(schema) if schema else spark.read
     (
         reader.parquet(path)
-        .repartition(n_files)
+        .coalesce(n_files)
         .sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
         .parquet(tmp)
@@ -154,12 +158,12 @@ def compact(
     """Rewrite each day partition into ~target-sized files.
 
     Local/simple implementation: read, re-sort, overwrite with dynamic
-    partition overwrite so untouched days are untouched.  On a cluster the
+    partition overwrite (a per-write option, so the session's mode is
+    left as it was) so untouched days are untouched.  On a cluster the
     same job runs per-day with ``replaceWhere``-style predicates so
     compaction and ingest never conflict (the reference's single-writer-
     per-var rule, kept per-partition).
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df = spark.read.parquet(path)
     total_bytes = sum(
         os.path.getsize(os.path.join(root, f))
@@ -173,6 +177,7 @@ def compact(
         df.repartition(files_per_day, "day")
         .sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day")
         .parquet(path)
     )

@@ -129,7 +129,22 @@ def timerange(
     if cf not in TIMERANGE_CFS:
         raise ValueError(f"unknown consolidation function {cf!r}")
     stored = pick_level(tuple(sorted(ladder)), step)
-    df = ladder[stored].filter((F.col("slot") >= begin) & (F.col("slot") < end))
+    return serve_level(ladder[stored], stored, begin, end, step, cf)
+
+
+def serve_level(
+    level: DataFrame,
+    stored: int,
+    begin: int,
+    end: int,
+    step: int,
+    cf: str = "average",
+) -> DataFrame:
+    """The tail of :func:`timerange` once a level is routed: slice
+    ``level`` (stored at step ``stored``) to ``[begin, end)`` and
+    re-consolidate to ``step`` if coarser, returning ``cf``'s column as
+    ``value``.  For callers that pick the level themselves."""
+    df = level.filter((F.col("slot") >= begin) & (F.col("slot") < end))
     if stored == step:
         out = df
     else:

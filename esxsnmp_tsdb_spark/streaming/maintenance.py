@@ -74,7 +74,6 @@ def upsert_level(
     inc = batch_partials(batch_obs, step)
     if retention_cutoff is not None:
         inc = inc.filter(F.col("day") >= F.lit(retention_cutoff).cast("date"))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if os.path.exists(level_path):
         days = [r.day for r in inc.select("day").distinct().collect()]
         existing = spark.read.parquet(level_path).filter(F.col("day").isin(days))
@@ -84,6 +83,7 @@ def upsert_level(
     (
         merged.repartition("day")
         .write.mode("overwrite" if os.path.exists(level_path) else "append")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day")
         .parquet(level_path)
     )

@@ -18,3 +18,22 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_session("tests")
     yield s
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(group, action)``: the jobs ``action()`` submits, read
+    from the status tracker under its own job group once the listener
+    bus has delivered every event."""
+    sc = spark.sparkContext
+
+    def count(group: str, action) -> int:
+        sc.setJobGroup(group, group, False)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

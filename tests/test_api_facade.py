@@ -421,6 +421,21 @@ def test_timerange_skips_unbuilt_level(spark, db):
     assert len(got) == 1 and got[0].value == 12.0 and got[0].n == 12
 
 
+def test_timerange_raw_wins_tie_with_same_step_level(spark, db):
+    """A stored level with the var's own step ties with the raw level;
+    raw serves the request, so a row inserted after the last ladder
+    rebuild is in the answer instead of the stale level's."""
+    var = db.add_set("tie").add_var("v30", step=30)
+    var.insert_batch([(0, 1.0), (30, 2.0)])
+    var.add_aggregate("+30s")
+    var.update_all_aggregates()
+    var.insert(60, 3.0)  # newer than the built +30s level
+    got = {r.slot: r.value for r in var.timerange(0, 90, step=30).collect()}
+    assert got == {0: 1.0, 30: 2.0, 60: 3.0}
+    stored = var.get_aggregate("+30s").select(0, 90, flags=ROW_VALID)
+    assert [r.slot for r in stored.collect()] == [0, 30]
+
+
 def test_compact_recovers_interrupted_swap(spark, db):
     """Crash-window recovery: if compaction died between its two renames
     (data dir gone, ._old intact), reads heal the swap instead of seeing

@@ -86,7 +86,15 @@ def test_write_obs_and_compact(spark, obs):
         n_before = spark.read.parquet(path).count()
         counts_before = compaction.partition_file_counts(spark, path)
         assert max(counts_before.values()) >= 2
+        # A partition the data does not reach is left as it is: the
+        # overwrite is dynamic per write, and the session mode unchanged.
+        keep = os.path.join(path, "day=1969-12-30", "_keep")
+        os.makedirs(os.path.dirname(keep))
+        open(keep, "w").close()
+        mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         compaction.compact(spark, path, target_file_bytes=1 << 30)
+        assert os.path.exists(keep)
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
         after = spark.read.parquet(path)
         assert after.count() == n_before  # lossless rewrite
         counts_after = compaction.partition_file_counts(spark, path)

@@ -74,19 +74,6 @@ def test_local_frame_plans_as_local_table_scan(spark):
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
-def _jobs(spark, group: str, action) -> int:
-    """Jobs ``action()`` submits, read from the status tracker under its
-    own job group once the listener bus has delivered every event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group, False)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture()
 def var(spark, tmp_path):
     db = TSDB.create(spark, str(tmp_path / "tsdb"))
@@ -95,7 +82,7 @@ def var(spark, tmp_path):
     return v
 
 
-def test_empty_windows_submit_no_jobs(spark, var):
+def test_empty_windows_submit_no_jobs(count_jobs, var):
     var.insert(300, 1.0)
     agg = var.get_aggregate("1h")  # configured, never built: no data dir
     empties = {
@@ -105,12 +92,12 @@ def test_empty_windows_submit_no_jobs(spark, var):
         "timerange": lambda: var.timerange(900, 900, step=3600).collect(),
     }
     for name, action in empties.items():
-        assert _jobs(spark, f"local-frames-empty-{name}", action) == 0, name
+        assert count_jobs(f"local-frames-empty-{name}", action) == 0, name
 
 
-def test_insert_batch_runs_one_job(spark, var):
+def test_insert_batch_runs_one_job(count_jobs, var):
     batch = [(300, 1.0, ROW_VALID), (600, 2.0, ROW_VALID)]
-    jobs = _jobs(spark, "local-frames-insert", lambda: var.insert_batch(batch))
+    jobs = count_jobs("local-frames-insert", lambda: var.insert_batch(batch))
     assert jobs == 1
     assert var.file_count() == 1
 

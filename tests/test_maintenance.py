@@ -3,6 +3,8 @@ converge to exactly the batch-built ladder (SURVEY.md §3.2)."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 import pytest
@@ -125,3 +127,33 @@ def test_expire_late_arrival_backfill_converges(spark):
         assert got[k].vmin == want[k].vmin
         assert got[k].vmax == want[k].vmax
         assert got[k].n == want[k].n
+
+
+def test_ladder_backfill_replaces_only_its_days(spark, monkeypatch):
+    """``ts_ladder_backfill`` rewrites the day partition it repairs and no
+    other, through a per-write overwrite option: the session's
+    ``partitionOverwriteMode`` is left as it was."""
+    from esxsnmp_tsdb_spark.operators import _workdirs
+    from esxsnmp_tsdb_spark.operators._shared import BUCKET
+    from esxsnmp_tsdb_spark.operators.aggregator2 import ts_ladder_backfill
+
+    op_dir = _workdirs.op_dir
+    # keep the level between the two calls, as a stored ladder is kept
+    monkeypatch.setattr(
+        _workdirs, "op_dir", lambda name, fresh=True: op_dir(name, fresh=False)
+    )
+    out = os.path.join(op_dir("ladder_backfill"), f"level={BUCKET}")
+    n = ts_ladder_backfill(spark, SF).count()
+    (touched,) = [d for d in os.listdir(out) if d.startswith("day=")]
+    untouched = os.path.join(out, "day=2000-01-01")
+    shutil.copytree(os.path.join(out, touched), untouched)
+    kept = sorted(os.listdir(untouched))
+    before = sorted(os.listdir(os.path.join(out, touched)))
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(conf)
+
+    back = ts_ladder_backfill(spark, SF)
+    assert sorted(os.listdir(untouched)) == kept
+    assert sorted(os.listdir(os.path.join(out, touched))) != before
+    assert back.count() == 2 * n  # the repaired day plus the kept copy
+    assert spark.conf.get(conf) == mode
