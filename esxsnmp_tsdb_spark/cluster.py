@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from esxsnmp_tsdb_spark.session import tune
+
 
 def cluster_profile(
     total_cores: int = 8000,
@@ -107,7 +109,12 @@ def apply(spark: SparkSession, **profile_kwargs) -> list[str]:
     spark-defaults / submit args; those raise ``CANNOT_MODIFY_CONFIG``
     and are skipped — none are correctness-critical — but the skips are
     RETURNED (and logged) so a typoed or static key is visible to the
-    caller instead of silently not taking effect."""
+    caller instead of silently not taking effect.
+
+    The session is ``session.tune``-d first, so the profile lands on top
+    of the local posture: on a session the engine did not build, the
+    first catalog load finds it tuned and keeps the profile's values."""
+    tune(spark)
     skipped: list[str] = []
     for k, v in cluster_profile(**profile_kwargs).items():
         try:

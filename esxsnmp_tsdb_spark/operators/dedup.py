@@ -324,24 +324,23 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20):
     algorithms), and ``localCheckpoint`` truncates lineage so plans
     don't grow exponentially.
 
-    Edge layout (r11, measured, TWO-TIER): the edge set is STATIC
+    Edge layout (measured, TWO-TIER): the edge set is STATIC
     across rounds and it is the big side of the per-round join.  Above
     ``_EDGE_REPARTITION_THRESHOLD`` edges it is persisted
     pre-``repartition``-ed on the join key — InMemoryRelation preserves
     hash partitioning, so every round's sort-merge join exchanges only
     the (small, changing) label side.  ``localCheckpoint`` cannot do
     this: under AQE its LogicalRDD reports ``UnknownPartitioning`` and
-    the edge exchange re-runs every round.  Probed on a synthetic
-    chain+star graph (re-run r12 against THIS code via
-    scripts/cc_layout_probe.py): full-helper wall 0.64x at 20M edges
-    (66s saved over 7 rounds), identical labels and round counts — at
-    100 TB this is the difference between shuffling the candidate graph
-    once and O(log d) times.  BELOW the threshold the plain checkpoint
-    layout stays: the loop there is stage-scheduling-bound and the
-    setup shuffle never amortizes (sf0.1 fixture graph, 0.35M edges,
-    min-of-3 interleaved: small tier 2.25s vs big tier 2.34s) — both
-    tiers and the crossover are recorded in the probe docstring and
-    docs/ROUND12_NOTES.md.
+    the edge exchange re-runs every round.  Measured through this
+    helper on a synthetic chain+star graph: full-helper wall 0.64x at
+    20M edges (66s saved over 7 rounds), identical labels and round
+    counts — at 100 TB this is the difference between shuffling the
+    candidate graph once and O(log d) times.  BELOW the threshold the
+    plain checkpoint layout stays: the loop there is stage-scheduling-
+    bound and the setup shuffle never amortizes (sf0.1 fixture graph,
+    0.35M edges, min-of-3 interleaved: small tier 2.25s vs big tier
+    2.34s) — both tiers and the crossover are recorded in
+    docs/CLUSTER.md ("CC big-graph tier").
 
     Memory discipline (at most one |E|-sized copy lives through the
     loop): the edge lineage is computed exactly

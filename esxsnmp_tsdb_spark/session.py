@@ -7,6 +7,8 @@ Entry points:
   session we did NOT create (the driver passes its own ``spark`` into
   ``__spark_entry__.queries()`` callables; we cannot rebuild it, but
   shuffle partitions / AQE / timezone / Arrow are all runtime-settable).
+  Once per session; later calls are no-ops, so a conf the caller sets
+  after it stays set.
 - :func:`local_frame` — the package's one way to turn driver-side rows
   into a DataFrame (an Arrow local relation).
 
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-# Runtime-settable confs applied to ANY session the engine touches.
+# Runtime-settable confs applied once to every session the engine touches.
 RUNTIME_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -51,17 +53,31 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+# The ``session_memo`` key that marks a session as tuned.
+TUNED = ("tuned",)
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine tuning to an externally-built session."""
-    for k, v in RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Non-settable at runtime on this build — keep going; none of
-            # these are correctness-critical except the timezone, which is
-            # always runtime-settable.
-            pass
-    return spark
+    """Apply ``RUNTIME_CONF`` to ``spark``, once per session; later calls
+    are no-ops.  The first call records the session in
+    ``sources.catalog.session_memo``, so a conf set after it — by a
+    caller, a test or ``cluster.apply`` — is never undone by a later
+    load.  That memo holds one session at a time: a session used again
+    after another one was touched is tuned once more."""
+    from esxsnmp_tsdb_spark.sources.catalog import session_memo
+
+    def apply() -> SparkSession:
+        for k, v in RUNTIME_CONF.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                # Non-settable at runtime on this build — keep going; none
+                # of these are correctness-critical except the timezone,
+                # which is always runtime-settable.
+                pass
+        return spark
+
+    return session_memo(spark, TUNED, None, apply)
 
 
 def fan_out(df, *cols, width: int = 1):
@@ -136,9 +152,9 @@ def cluster_profile(**kwargs):
 
 def _default_driver_mem() -> str:
     """Default driver heap: 28g on big hosts, clamped to ~25% of physical
-    RAM on smaller ones (ADVICE r13: a fixed 28g default exceeds physical
-    memory on small hosts and risks a host-level OOM).  Env-overridable
-    via SPARK_GRAFT_DRIVER_MEM either way."""
+    RAM on smaller ones, so the default heap never outgrows physical
+    memory (a fixed 28g on a small host risks a host-level OOM).
+    Env-overridable via SPARK_GRAFT_DRIVER_MEM either way."""
     try:
         phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
         quarter_g = max(1, int(phys / 4 / (1 << 30)))
@@ -154,11 +170,11 @@ def get_session(app_name: str = "esxsnmp_tsdb_spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # 28g (was 16g; still env-overridable): a long bench/sweep session
-        # accumulates localCheckpoint blocks across hundreds of ops, and at
-        # 16g the heap hit ~5 s stop-the-world full GCs mid-measurement —
-        # measured r13 (OPTIMIZATION_r13.md): after 160 sweep ops the two
-        # largest ops read bimodal 4.5↔10.9 s at 16g, steady 4.0-5.8 s at
-        # 28g.  The sandbox has 128 GiB; on a cluster, sizing comes from
+        # accumulates localCheckpoint blocks across hundreds of ops, and
+        # the heap must hold them without stop-the-world full GCs landing
+        # mid-measurement — at 16g, after 160 sweep ops, the two largest
+        # ops read bimodal 4.5↔10.9 s, steady 4.0-5.8 s at 28g (on a
+        # 128 GiB host).  On a cluster, sizing comes from
         # cluster_profile(), not this local default.
         .config(
             "spark.driver.memory",

@@ -23,7 +23,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.session import tune
+from esxsnmp_tsdb_spark.session import TUNED, tune
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -96,7 +96,7 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed op in tests/test_bucketed_routing.py."""
     from esxsnmp_tsdb_spark.functions import tsdb
 
-    tune(spark)
+    tune_on_first_use(spark)
     if (spark.conf.get(ROUTE_BUCKETED_CONF, "false") or "").lower() == "true":
         try:
             built_for = spark.conf.get(BKT_OBS_TAG)
@@ -115,7 +115,7 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rewritten mid-compute is refused on the next lookup, never stamped onto
 # results of the old bytes.  Weak session keys scope entries to the
 # owning session, so a new/driver session never sees another session's
-# values.
+# values.  The entry under ``session.TUNED`` marks a tuned session.
 _MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
@@ -131,7 +131,7 @@ def session_memo(spark: SparkSession, key: tuple, stamp, compute, refresh=False)
             # clears the prior sessions' entries instead, bounding the
             # memo to the active session (sessions are used one at a
             # time here; interleaved use would only recompute, never
-            # misserve).
+            # misserve — a returning session is tuned once more).
             _MEMO.clear()
         entries = _MEMO.setdefault(spark, {})
     except TypeError:  # un-weakref-able session shim: skip memoization
@@ -142,6 +142,13 @@ def session_memo(spark: SparkSession, key: tuple, stamp, compute, refresh=False)
     value = compute()
     entries[key] = (stamp, value)
     return value
+
+
+def tune_on_first_use(spark: SparkSession) -> None:
+    """``session.tune`` a session at its first load — the driver's own
+    session reaches the engine untuned — and skip the call for a tuned
+    one, whose confs stay as its caller set them."""
+    session_memo(spark, TUNED, None, lambda: tune(spark))
 
 
 def _table_stamp(sf_dir: str, name: str) -> tuple[int, int, int]:
@@ -178,7 +185,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     execution still scans the parquet bytes."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    tune(spark)
+    tune_on_first_use(spark)
 
     def read() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -211,7 +218,7 @@ def load_events_range(
     scan shows ``PushedFilters: [GreaterThanOrEqual(ts,…), LessThan(ts,…)]``
     — min/max row-group skipping, the 100 TB analog of the reference's
     YYYYMMDD chunk mapper working *within* a day file."""
-    tune(spark)
+    tune_on_first_use(spark)
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.filter(
@@ -231,12 +238,11 @@ def load_events_range(
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Tune the session and register every fixture table as a temp view.
+    """Register every fixture table as a temp view.
 
     Returns the name → DataFrame mapping.  Re-registration is skipped when
     the session's views already point at ``sf_dir``.
     """
-    tune(spark)
     dfs = {name: load_table(spark, sf_dir, name) for name in TABLES}
     try:
         current = spark.conf.get(_VIEW_TAG)

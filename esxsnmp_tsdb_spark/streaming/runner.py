@@ -20,21 +20,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from esxsnmp_tsdb_spark.session import tune
+from esxsnmp_tsdb_spark.sources.catalog import (
+    _table_stamp,
+    session_memo,
+    tune_on_first_use,
+)
 
 _SINK_IDS = itertools.count()
 
-# The streaming file source needs an explicit schema; take it from a batch
-# read of the same file so the stream always matches the fixture's actual
-# physical types (TIMESTAMP(NANOS)-as-long under the legacy flag in older
-# fixture generations, native timestamp[us] in current ones).
-_RAW_SCHEMA_CACHE: dict[str, T.StructType] = {}
 
-
-def _raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    if path not in _RAW_SCHEMA_CACHE:
-        _RAW_SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return _RAW_SCHEMA_CACHE[path]
+def _raw_schema(spark: SparkSession, sf_dir: str, table: str) -> T.StructType:
+    """The streaming file source needs an explicit schema; take it from a
+    batch read of the same file so the stream always matches the fixture's
+    actual physical types (TIMESTAMP(NANOS)-as-long under the legacy flag
+    in older fixture generations, native timestamp[us] in current ones).
+    Memoized per session and stamped with the file, so a fixture rewritten
+    in place is read again."""
+    return session_memo(
+        spark,
+        ("raw_schema", os.path.abspath(sf_dir), table),
+        _table_stamp(sf_dir, table),
+        lambda: spark.read.parquet(f"{sf_dir}/{table}.parquet").schema,
+    )
 
 
 def _stream_dir(sf_dir: str, table: str) -> str:
@@ -52,9 +59,9 @@ def _stream_dir(sf_dir: str, table: str) -> str:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` as a micro-batched stream with a proper timestamp column —
     the streaming twin of ``sources.catalog.load_table('events')``."""
-    tune(spark)
+    tune_on_first_use(spark)
     raw = (
-        spark.readStream.schema(_raw_schema(spark, f"{sf_dir}/events.parquet"))
+        spark.readStream.schema(_raw_schema(spark, sf_dir, "events"))
         .option("maxFilesPerTrigger", 1)
         .parquet(_stream_dir(sf_dir, "events"))
     )

@@ -25,8 +25,7 @@ and compares EXACT canonical value hashes (columns sorted by name, rows
 sorted by total string order, floats via ``float.hex`` — no tolerance:
 the driver's value hash is exact, so any flip here is a real attestation
 hazard).  Ops are invoked through the registry exactly as the driver
-invokes them; layout is injected by patching ``session.RUNTIME_CONF``
-because the catalog re-tunes the session on every table load.
+invokes them; each layout is set on the live session.
 
 Output: ``docs/DETERMINISM_latest.json`` by default — pass
 ``--out docs/DETERMINISM_r{N}.json`` to archive a round's record (the
@@ -52,45 +51,10 @@ sys.path.insert(0, ROOT)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 OUT = os.path.join(ROOT, "docs", "DETERMINISM_latest.json")
 
-# Layouts: A = the engine's own runtime config, snapshotted from
-# session.RUNTIME_CONF at startup (NOT hardcoded — RUNTIME_CONF derives
-# shuffle width from SPARK_GRAFT_CPUS, so a literal "32" would silently
-# diverge from the layout the driver and bench actually see whenever that
-# env var is set; ADVICE r10).  B = skewed small-split / narrow-reduce
-# layout with runtime coalescing disabled.
-_LAYOUT_KEYS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.files.maxPartitionBytes",
-    "spark.sql.files.openCostInBytes",
-    "spark.sql.adaptive.coalescePartitions.enabled",
-)
-_PASS_A_DEFAULTS = {
-    "spark.sql.files.maxPartitionBytes": "4m",
-    "spark.sql.files.openCostInBytes": "1m",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-}
-
-
-def _snapshot_pass_a(runtime_conf: dict[str, str]) -> dict[str, str]:
-    """Pass A = the four layout keys as the live session would run them.
-
-    Every key in ``_LAYOUT_KEYS`` MUST resolve: silently dropping one
-    would make pass A inherit pass B's value for that axis after the
-    first flip (B-vs-B false 'layout-invariant') and leave it poisoned
-    in the shared RUNTIME_CONF after the final restore."""
-    snap = {}
-    for k in _LAYOUT_KEYS:
-        v = runtime_conf.get(k, _PASS_A_DEFAULTS.get(k))
-        if v is None:
-            raise SystemExit(
-                f"layout key {k!r} missing from session.RUNTIME_CONF and "
-                "_PASS_A_DEFAULTS — pass A would be under-specified; add "
-                "a default for it before running the audit"
-            )
-        snap[k] = v
-    return snap
-
-
+# Layouts: A = the tuned session's own values of PASS_B's keys, read from
+# the live session at startup, so pass A is the layout the driver and bench
+# see (its shuffle width follows SPARK_GRAFT_CPUS).  B = skewed
+# small-split / narrow-reduce layout with runtime coalescing disabled.
 PASS_B = {
     "spark.sql.shuffle.partitions": "5",
     "spark.sql.files.maxPartitionBytes": "256k",
@@ -149,7 +113,7 @@ def main() -> int:
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
-    from esxsnmp_tsdb_spark import registry, session
+    from esxsnmp_tsdb_spark import registry
     from esxsnmp_tsdb_spark.session import get_session
 
     registry.load_all()
@@ -161,14 +125,11 @@ def main() -> int:
         return 2
 
     spark = get_session()
-    # Snapshot BEFORE any layout injection: this is both pass A and the
-    # state the shared RUNTIME_CONF dict is restored to at the end.
-    PASS_A = _snapshot_pass_a(session.RUNTIME_CONF)
+    # Read BEFORE any layout is set: this is both pass A and the state the
+    # session is restored to at the end.
+    PASS_A = {k: spark.conf.get(k) for k in PASS_B}
 
     def apply(layout: dict[str, str]) -> None:
-        # Patch RUNTIME_CONF so catalog.tune() re-applies OUR layout, then
-        # set it immediately for the current query.
-        session.RUNTIME_CONF.update(layout)
         for k, v in layout.items():
             spark.conf.set(k, v)
 
@@ -195,9 +156,7 @@ def main() -> int:
         flag = "ok" if rec["match"] else "FLIP" if not rec["err"] else "ERR"
         print(f"[{i + 1}/{len(keys)}] {key}: {flag}", flush=True)
 
-    apply(PASS_A)  # restore the startup snapshot — RUNTIME_CONF and the
-    # live session leave exactly as they arrived (no injected layout keys
-    # survive: pass B touches only keys the snapshot also carries)
+    apply(PASS_A)  # the session leaves with the layout it arrived with
     flips = sorted(k for k, r in results.items() if not r["match"] and not r["err"])
     errs = sorted(k for k, r in results.items() if r["err"])
     out = {

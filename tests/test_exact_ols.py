@@ -1,9 +1,9 @@
-"""Round-10 rewrites: the last two regr_*-on-doubles fits moved to exact
-integer power sums (VERDICT r9 item 1).  These tests pin the property
-the rewrite buys — the results are invariant under partition layout
-(engine-order double summation was one partition-order change away from
-a last-digit flip) — and sanity-check the fits against an independent
-float OLS."""
+"""`ts_linear_trend` and `term_zipf_slope` fit with exact integer power
+sums instead of regr_* over doubles, so a fit must not depend on
+partition layout (engine-order double summation is one partition-order
+change away from a last-digit flip of an exact value hash).  These tests
+pin that layout invariance and sanity-check the fits against an
+independent float OLS."""
 
 from __future__ import annotations
 
@@ -23,24 +23,13 @@ def _rows(df, key_cols):
 
 
 def _with_shuffle_partitions(spark, n, fn):
-    """Run ``fn`` with the shuffle-partition count REALLY set to ``n``.
-
-    Setting the session conf alone is not enough: every op re-applies
-    ``session.RUNTIME_CONF`` through ``catalog.tune()`` when it loads its
-    tables, which would silently restore the default 32 before the query
-    executes (making a "1 vs 32" comparison a vacuous "32 vs 32").  So the
-    RUNTIME_CONF entry is patched for the duration too — the same
-    injection ``scripts/determinism_audit.py`` uses."""
-    from esxsnmp_tsdb_spark import session
-
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_rc = session.RUNTIME_CONF["spark.sql.shuffle.partitions"]
     try:
-        session.RUNTIME_CONF["spark.sql.shuffle.partitions"] = str(n)
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        return fn()
+        out = fn()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+        return out
     finally:
-        session.RUNTIME_CONF["spark.sql.shuffle.partitions"] = old_rc
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 

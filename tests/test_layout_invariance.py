@@ -9,11 +9,6 @@ rotating cross-section of the ops most exposed to the hazard class
 (double-valued aggregates: rates, z-scores, percentiles, log-ratios,
 vector folds) so a future edit that reintroduces engine-order float
 summation fails CI, not a driver attestation round.
-
-The layout really has to change mid-test: every op re-applies
-``session.RUNTIME_CONF`` via ``catalog.tune()`` when loading its tables,
-so both the session conf AND the RUNTIME_CONF entries are patched (the
-determinism_audit injection).
 """
 
 from __future__ import annotations
@@ -23,7 +18,7 @@ from contextlib import contextmanager
 
 import pytest
 
-from esxsnmp_tsdb_spark import registry, session
+from esxsnmp_tsdb_spark import registry
 from tests.conftest import SF_SMOKE
 
 registry.load_all()
@@ -55,23 +50,13 @@ LAYOUT_B = {
 
 @contextmanager
 def _layout(spark, overrides: dict[str, str]):
-    saved = {k: session.RUNTIME_CONF[k] for k in overrides if k in session.RUNTIME_CONF}
-    saved_conf = {}
-    for k in overrides:
-        try:
-            saved_conf[k] = spark.conf.get(k)
-        except Exception:
-            pass
+    saved = {k: spark.conf.get(k) for k in overrides}
     try:
         for k, v in overrides.items():
-            if k in session.RUNTIME_CONF:
-                session.RUNTIME_CONF[k] = v
             spark.conf.set(k, v)
         yield
     finally:
         for k, v in saved.items():
-            session.RUNTIME_CONF[k] = v
-        for k, v in saved_conf.items():
             spark.conf.set(k, v)
 
 
@@ -99,5 +84,7 @@ def test_layout_invariant(spark, key):
     base = _canonical(fn(spark, SF_SMOKE))
     with _layout(spark, LAYOUT_B):
         alt = _canonical(fn(spark, SF_SMOKE))
+        # the op's own loads left layout B in effect
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
     assert base == alt, f"{key}: values depend on partition layout"
     assert base, f"{key}: empty result at {SF_SMOKE}"
