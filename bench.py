@@ -80,6 +80,17 @@ HEADLINE = [
     "dedup_semantic_indexed_sqrtn",      # §2.5 sqrt(N)-cell index probe
 ]
 
+# The §2.1/§2.2 window family `sources.load_obs` routes onto the bucketed
+# obs layout: the ops the bucketed_vs_flat block below re-times routed,
+# and that `scripts/shuffle_audit.py --bucketed` audits routed.
+BUCKETED_KEYS = (
+    "ts_slot_dedup",
+    "ts_rate",
+    "ts_downsample_avg",
+    "ts_agg_cascade",
+    "ts_bin_split",
+)
+
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
@@ -166,9 +177,8 @@ def main() -> None:
     # guard: queries with history are still guarded, brand-new queries are
     # simply outside the comparison until their first record lands.
     # One pass over the BENCH_r*.json history extracts BOTH per-query
-    # flat bests (this guard) and bucketed-variant bests (the bucketed
-    # re-pin below) — ADVICE r9: the bucketed section used to re-glob
-    # and re-parse the same files a second time.
+    # flat bests (this guard) and bucketed bests (the routed re-pin
+    # below), so the history files are globbed and parsed once.
     hist_q: dict[str, float] = {}
     bkt_hist: dict[str, float] = {}
     if bench_set is HEADLINE:
@@ -236,106 +246,90 @@ def main() -> None:
                 )
             spark.sparkContext._jvm.System.gc()
 
-    # Bucketed-vs-flat side-by-side (VERDICT r6 item 6 / r7 item 2): the
-    # §2.1/§2.2 window family re-timed over the OBS_TABLE_DDL bucketed
-    # layout (storage2.bucketed_obs_table), next to the flat numbers just
-    # measured.  Quantifies the exchange savings the 4096-bucket claim in
-    # docs/CLUSTER.md rests on; value-parity of the variants is pinned in
-    # tests/test_bench_bucketed.py.  Headline mode only (the full sweep
-    # already runs long); SPARK_GRAFT_BENCH_BUCKETED=0 opts out.
+    # Bucketed-vs-flat side-by-side: the registered BUCKETED_KEYS ops
+    # re-timed with `sources.load_obs` routed onto the OBS_TABLE_DDL
+    # bucketed layout (storage2.bucketed_obs_table), next to the flat
+    # numbers just measured — the exchange savings the 4096-bucket claim
+    # in docs/CLUSTER.md rests on, measured on the production query, not
+    # a copy of it.  One routed measurement per op fills both the
+    # `routed_*` and the `bucketed_*` fields; flat-vs-routed value parity
+    # is pinned in tests/test_bucketed_routing.py.  Headline mode only
+    # (the full sweep already runs long); SPARK_GRAFT_BENCH_BUCKETED=0
+    # opts out.
     bucketed: dict[str, dict] | None = None
     if bench_set is HEADLINE and os.environ.get(
         "SPARK_GRAFT_BENCH_BUCKETED", "1"
     ) == "1":
-        from esxsnmp_tsdb_spark.operators.bench_bucketed import (
-            OBS_PARAMETRIC,
-            bucketed_obs,
-            bucketed_variant,
-        )
+        from esxsnmp_tsdb_spark.operators.storage2 import bucketed_obs_table
         from esxsnmp_tsdb_spark.plans import plan_str
+        from esxsnmp_tsdb_spark.sources import ROUTE_BUCKETED_CONF
 
-        t0 = time.perf_counter()
-        bucketed_obs(spark, sf_dir)  # one-time layout build, timed apart
-        build_s = round(time.perf_counter() - t0, 3)
-        bucketed = {"_layout_build_s": build_s}
-        for key in OBS_PARAMETRIC:
-            flat_ex = plan_str(queries[key](spark, sf_dir), "simple").count(
+        flat_ex = {
+            key: plan_str(queries[key](spark, sf_dir), "simple").count(
                 "Exchange"
             )
-            bdf = bucketed_variant(spark, sf_dir, key)
-            bkt_ex = plan_str(bdf, "simple").count("Exchange")
-            best = float("inf")
+            for key in BUCKETED_KEYS
+        }
+        t0 = time.perf_counter()
+        bucketed_obs_table(spark, sf_dir)  # one-time layout build, timed apart
+        bucketed = {"_layout_build_s": round(time.perf_counter() - t0, 3)}
+
+        def time_routed(key: str, best: float) -> float:
             for _ in range(repeats):
                 t0 = time.perf_counter()
-                materialize(bucketed_variant(spark, sf_dir, key))
-                best = min(best, time.perf_counter() - t0)
-            bucketed[key] = {
-                "flat_s": per_query.get(key),
-                "bucketed_s": round(best, 3),
-                "flat_exchanges": flat_ex,
-                "bucketed_exchanges": bkt_ex,
-            }
-            # Routed path (VERDICT r11 item 3): the REGISTERED op itself
-            # over the bucketed layout via sources.load_obs' opt-in conf
-            # — proves the production query takes the bucketed plan, not
-            # just the hand-built mirror variant.  `routed_reads_bkt` is
-            # asserted from the plan text; parity of values is pinned in
-            # tests/test_bucketed_routing.py.
-            from esxsnmp_tsdb_spark.sources import ROUTE_BUCKETED_CONF
-
-            spark.conf.set(ROUTE_BUCKETED_CONF, "true")
-            try:
-                rdf = queries[key](spark, sf_dir)
-                rplan = plan_str(rdf, "simple")
-                # ADVICE r12: if routing preconditions silently failed
-                # (stamp mismatch / bkt_obs missing), load_obs falls back
-                # to the flat path — don't record flat-path times under
-                # the routed_s label.
-                routed_reads_bkt = "bkt_obs" in rplan
-                best_r = float("inf")
-                if routed_reads_bkt:
-                    for _ in range(repeats):
-                        t0 = time.perf_counter()
-                        materialize(queries[key](spark, sf_dir))
-                        best_r = min(best_r, time.perf_counter() - t0)
-            finally:
-                spark.conf.set(ROUTE_BUCKETED_CONF, "false")
-            bucketed[key]["routed_s"] = (
-                round(best_r, 3) if routed_reads_bkt else None
-            )
-            bucketed[key]["routed_exchanges"] = (
-                rplan.count("Exchange") if routed_reads_bkt else None
-            )
-            bucketed[key]["routed_reads_bkt"] = routed_reads_bkt
+                materialize(queries[key](spark, sf_dir))
+                best = min(best, round(time.perf_counter() - t0, 3))
             spark.sparkContext._jvm.System.gc()
+            return best
 
-        # Bucketed-side re-pin (ADVICE r8): the flat numbers above get up
-        # to 3 steal-guarded passes plus a per-op re-pin, while the
-        # bucketed side was a lone unguarded min-of-`repeats` — on a
-        # noisy host the comparison sampled asymmetrically and a stolen
-        # bucketed pass was recorded with no retry.  Same discipline as
-        # the flat re-pin: each key's bucketed best was seeded from every
-        # prior BENCH record at this sf (bkt_hist, loaded in the single
-        # history pass above); re-time suspects >1.5x it, min-fold,
-        # bounded.
-        for _ in range(max_passes):
-            suspects = [
-                k
-                for k in OBS_PARAMETRIC
-                if k in bkt_hist
-                and bucketed[k]["bucketed_s"] > 1.5 * bkt_hist[k]
-            ]
-            if not suspects:
-                break
-            for key in suspects:
-                for _r in range(repeats):
-                    t0 = time.perf_counter()
-                    materialize(bucketed_variant(spark, sf_dir, key))
-                    bucketed[key]["bucketed_s"] = min(
-                        bucketed[key]["bucketed_s"],
-                        round(time.perf_counter() - t0, 3),
-                    )
-                spark.sparkContext._jvm.System.gc()
+        prior_route = spark.conf.get(ROUTE_BUCKETED_CONF, None)
+        spark.conf.set(ROUTE_BUCKETED_CONF, "true")
+        try:
+            for key in BUCKETED_KEYS:
+                rplan = plan_str(queries[key](spark, sf_dir), "simple")
+                # A routed time is recorded only from a plan that reads
+                # bkt_obs: if a routing precondition silently failed
+                # (stamp mismatch, table missing), load_obs serves flat
+                # obs, and a flat time must not carry the routed label.
+                reads_bkt = "bkt_obs" in rplan
+                best = time_routed(key, float("inf")) if reads_bkt else None
+                ex = rplan.count("Exchange") if reads_bkt else None
+                bucketed[key] = {
+                    "flat_s": per_query.get(key),
+                    "bucketed_s": best,
+                    "flat_exchanges": flat_ex[key],
+                    "bucketed_exchanges": ex,
+                    "routed_s": best,
+                    "routed_exchanges": ex,
+                    "routed_reads_bkt": reads_bkt,
+                }
+
+            # Routed-side re-pin: the flat numbers above get up to
+            # `max_passes` steal-guarded passes plus a per-op re-pin, so
+            # the routed side gets the same discipline — a stolen routed
+            # pass is retried, not recorded.  Each key's best is seeded
+            # from every prior BENCH record at this sf (bkt_hist, loaded
+            # in the single history pass above); re-time suspects >1.5x
+            # it, min-fold, bounded.
+            for _ in range(max_passes):
+                suspects = [
+                    k
+                    for k in BUCKETED_KEYS
+                    if k in bkt_hist
+                    and bucketed[k]["routed_s"] is not None
+                    and bucketed[k]["routed_s"] > 1.5 * bkt_hist[k]
+                ]
+                if not suspects:
+                    break
+                for key in suspects:
+                    best = time_routed(key, bucketed[key]["routed_s"])
+                    bucketed[key]["routed_s"] = best
+                    bucketed[key]["bucketed_s"] = best
+        finally:
+            if prior_route is None:
+                spark.conf.unset(ROUTE_BUCKETED_CONF)
+            else:
+                spark.conf.set(ROUTE_BUCKETED_CONF, prior_route)
 
     steal_t1 = read_steal_s()
     steal_cpu_s = (
@@ -358,8 +352,9 @@ def main() -> None:
             # Host CPU steal during the timed region (seconds, whole
             # host): the noise context for this record's numbers.
             "steal_cpu_s": steal_cpu_s,
-            # Window family over the OBS_TABLE_DDL bucketed layout vs the
-            # flat-parquet headline numbers (None in full-sweep mode).
+            # Window family routed onto the OBS_TABLE_DDL bucketed layout
+            # vs the flat-parquet headline numbers (None in full-sweep
+            # mode).
             "bucketed_vs_flat": bucketed,
             # Full-sweep op order seed (None for headline runs): the
             # sweep shuffles op order with this seed so host steal can't

@@ -17,7 +17,8 @@ Three layers:
 - :data:`OBS_TABLE_DDL` / :data:`LADDER_STORE_LAYOUT` — the storage-side
   half of the contract: the bucketed observation table and the
   aggregate-ladder store layout that make the §2.1/§2.2 window family
-  zero-exchange (`storage2.bucketed_obs_table`, `ts_bin_split_bucketed`)
+  zero-exchange (locally: `storage2.bucketed_obs_table`, which
+  `sources.load_obs` serves to the registered ops when routing is on)
   and ingest probes partition-pruned (`dedup2`/`similarity2` indexed ops).
 """
 
@@ -129,11 +130,14 @@ def apply(spark: SparkSession, **profile_kwargs) -> list[str]:
 # The storage-side half of the 100 TB contract.  The observation table is
 # bucketed by series and sorted by (series, time) so the whole §2.1/§2.2
 # window family — counter deltas, wrap correction, downsampling, the
-# composed RRD ladder — plans with ZERO exchanges (`ts_bin_split_bucketed`
-# storage2.py:367 is the attested proof at local scale): every window
+# composed RRD ladder — plans with ZERO exchanges: every window
 # partitionBy(path).orderBy(tse) and every groupBy(path, …) consumes the
-# bucket layout directly.  Day partitioning gives the time-range scans
-# (ts_range_scan shape) partition pruning before row-group skipping.
+# bucket layout directly.  At local scale `sources.load_obs` routes the
+# registered ops onto `storage2.bucketed_obs_table`, and bench.py's
+# bucketed_vs_flat block records their exchange counts (an explicit
+# `fan_out`, as in `ts_bin_split`, keeps its own exchange).  Day
+# partitioning gives the time-range scans (ts_range_scan shape) partition
+# pruning before row-group skipping.
 def obs_table_ddl(n_buckets: int = 4096, name: str = "obs") -> str:
     """The observation-table DDL, parameterized so tests can EXECUTE it
     (8 buckets at fixture scale) while the documented deployment value

@@ -32,14 +32,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import load_obs, register_views
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed loader: flat events-derived obs by default (what the
-    # driver's vanilla session and its DuckDB oracle read); the bucketed
-    # bkt_obs layout when sources.ROUTE_BUCKETED_CONF is opted in.
-    return load_obs(spark, sf_dir)
+from esxsnmp_tsdb_spark.sources import load_obs
 
 
 def _counter(obs: DataFrame) -> DataFrame:
@@ -69,7 +62,7 @@ WINDOW w AS (PARTITION BY path ORDER BY tse, event_id)
 )
 def ts_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-reading difference per series (Aggregator.update †)."""
-    d = tsdb.deltas(_obs(spark, sf_dir))
+    d = tsdb.deltas(load_obs(spark, sf_dir))
     return d.select("path", "tse", F.round("delta", 6).alias("delta"), "dt")
 
 
@@ -89,7 +82,7 @@ def ts_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL on each series' first row (no previous sample) and where dt=0.
     """
-    cnt = _counter(_obs(spark, sf_dir))
+    cnt = _counter(load_obs(spark, sf_dir))
     d = tsdb.deltas(cnt, "counter")
     return d.select(
         "path",
@@ -123,7 +116,7 @@ def ts_counter_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     at test scale; 2³²/2⁶⁴ (Decimal) behavior is unit-tested in
     ``tests/test_tsdb_functions.py``.
     """
-    cnt = _counter(_obs(spark, sf_dir)).withColumn(
+    cnt = _counter(load_obs(spark, sf_dir)).withColumn(
         "counter", F.col("counter") % SYNTH_WRAP
     )
     d = tsdb.deltas(cnt, "counter")
@@ -175,7 +168,7 @@ def ts_counter_wrap64(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral."""
     dec = "decimal(38,0)"
     wrap64 = F.lit(WRAP64).cast(dec)
-    cnt = _counter(_obs(spark, sf_dir))
+    cnt = _counter(load_obs(spark, sf_dir))
     c64 = cnt.select(
         "path",
         "tse",
@@ -216,7 +209,7 @@ def ts_heartbeat_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap > HEARTBEAT ⇒ rate NULL — never interpolate across an outage
     (Aggregator.update heartbeat check †).  Gap == heartbeat stays valid.
     """
-    cnt = _counter(_obs(spark, sf_dir))
+    cnt = _counter(load_obs(spark, sf_dir))
     d = tsdb.counter_rate(cnt, "counter", modulus=SYNTH_WRAP, heartbeat=HEARTBEAT)
     return d.select("path", "tse", "dt", F.round("rate", 6).alias("rate"))
 
@@ -236,7 +229,7 @@ def ts_downsample_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flagship query (``__spark_entry__.entry``).  Partial aggregation is
     map-side; at 100 TB the group-by shuffles once on (path, slot).
     """
-    ds = tsdb.downsample(_obs(spark, sf_dir), BUCKET)
+    ds = tsdb.downsample(load_obs(spark, sf_dir), BUCKET)
     return ds.select("path", "slot", F.round("average", 6).alias("average"), "n")
 
 
@@ -251,7 +244,7 @@ FROM obs GROUP BY 1, 2
 )
 def ts_downsample_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`min`/`max` consolidation functions per bucket (Aggregator †)."""
-    ds = tsdb.downsample(_obs(spark, sf_dir), BUCKET)
+    ds = tsdb.downsample(load_obs(spark, sf_dir), BUCKET)
     return ds.select("path", "slot", "vmin", "vmax", "n")
 
 
@@ -269,7 +262,7 @@ SELECT path, slot, value AS last FROM (
 )
 def ts_downsample_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`last` consolidation function: latest reading per bucket (Aggregator †)."""
-    ds = tsdb.downsample(_obs(spark, sf_dir), BUCKET)
+    ds = tsdb.downsample(load_obs(spark, sf_dir), BUCKET)
     return ds.select("path", "slot", F.col("last"))
 
 
@@ -298,7 +291,7 @@ def ts_downsample_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     code lifted to DecimalType(38,0) consolidates a real 2⁶⁴ counter
     digit-exactly (property-tested in tests/test_properties.py).
     """
-    cnt = _counter(_obs(spark, sf_dir)).withColumn(
+    cnt = _counter(load_obs(spark, sf_dir)).withColumn(
         "counter", F.col("counter") % SYNTH_WRAP
     )
     return tsdb.delta_consolidate(cnt, "counter", SYNTH_WRAP, BUCKET).select(
@@ -350,7 +343,7 @@ def ts_bin_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from esxsnmp_tsdb_spark.session import fan_out
 
-    cnt = _counter(fan_out(_obs(spark, sf_dir), "path", width=4))
+    cnt = _counter(fan_out(load_obs(spark, sf_dir), "path", width=4))
     d = tsdb.deltas(cnt, "counter").withColumn(
         "delta", F.col("delta").cast("double")
     )
@@ -380,7 +373,7 @@ def ts_agg_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``TSDBVar.update_all_aggregates`` †): 5m (sum,count,min,max) → 1h.
     Weighted mean = sum(sums)/sum(counts) keeps cascade(fine) ≡ direct.
     """
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     fine = (
         obs.withColumn("slot", tsdb.slot_of(F.col("tse"), FINE))
         .groupBy("path", "slot")
@@ -420,7 +413,7 @@ def ts_ladder_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the ladder is lossless for the weighted-average cascade."""
     from esxsnmp_tsdb_spark.sources.ladder import build_ladder, timerange
 
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     ladder = build_ladder(obs, levels=(300, 3600, 86400))
     routed = timerange(ladder, T_JAN10, T_JAN20, step=7200, cf="average")
     return routed.select(
@@ -442,7 +435,7 @@ FROM obs GROUP BY 1, 2
 def ts_valid_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fraction of valid rows per bucket — the data-quality signal the
     reference exposes alongside aggregates (Aggregator †)."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     return (
         obs.groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
         .agg(
@@ -479,7 +472,7 @@ def ts_downsample_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     width / sample interval rows), so the exact sort-based percentile
     costs the same one shuffle as every other consolidation — at 100 TB
     the approx sketch (`approx_percentiles`) is the knob, not a rewrite."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     return (
         obs.groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
         .agg(
@@ -525,7 +518,7 @@ def ts_rate_invalid_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One shuffle on path for the lag window; the 5-row roll-up and its
     share denominator ride a broadcast 1-row total (one data pass)."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     w = Window.partitionBy("path").orderBy("tse", "event_id")
     lagged = obs.select(
         "tse",

@@ -29,16 +29,9 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN11,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import load_obs, register_views
+from esxsnmp_tsdb_spark.sources import load_obs
 
 RESET_SLACK = SYNTH_WRAP // 2  # drop worse than this = reset, not wrap
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed loader (VERDICT r11 item 3): flat events-derived obs by
-    # default (identical call chain to pre-r12); the bucketed bkt_obs
-    # layout when sources.ROUTE_BUCKETED_CONF is opted in.
-    return load_obs(spark, sf_dir)
 
 
 @op(
@@ -77,7 +70,7 @@ def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pointer evaluation over the already-path-partitioned spine, no
     per-gap self-join.  Slots before a series' first observation stay
     NULL — LOCF has nothing to carry, and both engines agree."""
-    spine = tsdb.time_spine(_obs(spark, sf_dir), T_JAN10, T_JAN11, BUCKET)
+    spine = tsdb.time_spine(load_obs(spark, sf_dir), T_JAN10, T_JAN11, BUCKET)
     w = (
         Window.partitionBy("path")
         .orderBy("slot")
@@ -128,7 +121,7 @@ def ts_counter_reset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; one shuffle on path."""
     from esxsnmp_tsdb_spark.operators.aggregator import _counter
 
-    cnt = _counter(_obs(spark, sf_dir)).withColumn(
+    cnt = _counter(load_obs(spark, sf_dir)).withColumn(
         "cw",
         F.when(F.col("event_id") % 97 == 0, F.lit(0)).otherwise(
             F.col("counter") % SYNTH_WRAP
@@ -175,7 +168,7 @@ def ts_ladder_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from esxsnmp_tsdb_spark.streaming.maintenance import batch_partials
 
     out = os.path.join(op_dir("ladder_backfill"), f"level={BUCKET}")
-    obs = _obs(spark, sf_dir).filter(
+    obs = load_obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11)
     )
     (
@@ -268,7 +261,7 @@ w64 AS (
 
 def _c64_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
-    cnt = _counter(_obs(spark, sf_dir))
+    cnt = _counter(load_obs(spark, sf_dir))
     return cnt.select(
         "path",
         "tse",
@@ -368,7 +361,7 @@ def ts_rate_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds the partial-aggregated group-by directly."""
     from esxsnmp_tsdb_spark.operators.aggregator import _counter
 
-    cnt = _counter(_obs(spark, sf_dir))
+    cnt = _counter(load_obs(spark, sf_dir))
     d = tsdb.deltas(cnt, "counter").withColumn(
         "rate",
         F.col("delta").cast("double") / F.nullif(F.col("dt"), F.lit(0)),
@@ -417,7 +410,7 @@ def ts_aggregate_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically.  One shuffle on (path, slot) with map-side partials;
     at 100 TB this halves the scan count of a dashboard that wants the
     full aggregate row vs issuing per-field queries."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     k = obs.select(
         "path",
         (F.col("tse") - F.col("tse") % BUCKET).alias("slot"),
@@ -475,7 +468,7 @@ def ts_wrap_eta(spark: SparkSession, sf_dir: str) -> DataFrame:
     series; the plan is scan → one shuffle on path → 4-way min/max_by."""
     from esxsnmp_tsdb_spark.operators.aggregator import _counter
 
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     k = _counter(obs).select(
         "path",
         "tse",

@@ -35,37 +35,16 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN11,
 )
 from esxsnmp_tsdb_spark.functions.exact import half_up_div_signed
+from esxsnmp_tsdb_spark.operators.aggregator import _counter
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import (
     load_events_range,
     load_obs,
-    register_views,
 )
 
 TOP_N = 10
 Z_WIN = 12  # rolling samples for the anomaly baseline
 Z_THRESH = 3.0
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed loader (VERDICT r11 item 3): flat events-derived obs by
-    # default (identical call chain to pre-r12); the bucketed bkt_obs
-    # layout when sources.ROUTE_BUCKETED_CONF is opted in.
-    return load_obs(spark, sf_dir)
-
-
-def _counter(obs: DataFrame) -> DataFrame:
-    w = (
-        Window.partitionBy("path")
-        .orderBy("tse", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return obs.select(
-        "path",
-        "tse",
-        "event_id",
-        F.sum(F.floor(F.col("value") * 100).cast("bigint")).over(w).alias("counter"),
-    )
 
 
 @op(
@@ -95,7 +74,7 @@ def ts_top_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, a partial-aggregated sum, then a TakeOrderedAndProject top-k
     (per-partition heaps, no global window) — the ladder's delta level
     serves this without touching raw at 100 TB."""
-    cnt = _counter(_obs(spark, sf_dir)).withColumn(
+    cnt = _counter(load_obs(spark, sf_dir)).withColumn(
         "counter", F.col("counter") % SYNTH_WRAP
     )
     d = tsdb.deltas(cnt, "counter")
@@ -141,7 +120,7 @@ def ts_billing_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical); per-series slot counts stay small (288/day), so the
     exact sort-based percentile is safe even at 100 TB — the heavy lift
     happened in the slot aggregation."""
-    cnt = _counter(_obs(spark, sf_dir)).withColumn(
+    cnt = _counter(load_obs(spark, sf_dir)).withColumn(
         "counter", F.col("counter") % SYNTH_WRAP
     )
     d = tsdb.deltas(cnt, "counter")
@@ -211,7 +190,7 @@ def ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark twin of the oracle's IGNORE NULLS windows: `last`/`first` with
     ignorenulls=True over the same frames.  The spine join broadcasts the
     slot sequence; both windows ride the single shuffle on path."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     paths = obs.select("path").distinct()
     slots = paths.select(
         "path",
@@ -317,7 +296,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     The in/out decision compares the ROUNDED z on both sides — the only
     way a float boundary can't flip the row set between engines.  One
     window shuffle on path; map-only after."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     w = (
         Window.partitionBy("path")
         .orderBy("tse", "event_id")
@@ -367,7 +346,7 @@ def ts_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically with no calendar/timezone functions involved.  One
     group-by shuffle; 48 output rows per series regardless of input
     size — the profile table broadcasts for the live-diff join."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     dow = (F.floor(F.col("tse") / 86400) + 4) % 7
     return (
         obs.groupBy(
@@ -410,7 +389,7 @@ def ts_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on `path` (lag window + group-by share the partitioning);
     gaps are BIGINT second deltas with (tse, event_id) ordering so both
     engines difference the identical sequence."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     w = Window.partitionBy("path").orderBy("tse", "event_id")
     gaps = obs.select(
         "path", (F.col("tse") - F.lag("tse").over(w)).alias("gap")
@@ -448,7 +427,7 @@ def ts_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (peers share one frame, hence one result).  One shuffle
     on path; the frame advances with two pointers over the sorted
     partition — O(n), no per-row rescan."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     w = (
         Window.partitionBy("path")
         .orderBy("tse")
@@ -528,7 +507,7 @@ def ts_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     den=0 (constant time axis) → NULL fit; deny=0 (constant series) → NULL
     r².  One partial-aggregated shuffle on path; the six sums combine
     map-side exactly like sum/count at 100 TB."""
-    obs = _obs(spark, sf_dir)
+    obs = load_obs(spark, sf_dir)
     pts = obs.select(
         "path",
         F.expr("CAST(round(value * 100) AS BIGINT)").alias("vm"),

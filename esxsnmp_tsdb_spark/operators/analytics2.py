@@ -42,14 +42,10 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 WMA_K = 6  # linear-WMA window: six 1h slots
 MOVERS_N = 20
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 # Shared slot-series base: per (path, 1h slot) rounded average over the
@@ -65,7 +61,7 @@ _SLOT_CTE = f"""slotavg AS (
 
 def _slot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20))
         .groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
         .agg(F.round(F.avg("value"), 6).alias("x"))
@@ -166,7 +162,7 @@ def ts_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (path, slot) shuffle: the two window sorts and the hash aggregate
     all share one exchange.  Raw values pass through untouched (no
     arithmetic), so no rounding is needed for cross-engine equality."""
-    obs = _obs(spark, sf_dir).filter(
+    obs = flat_obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11)
     )
     slot = tsdb.slot_of(F.col("tse"), BUCKET).alias("slot")
@@ -226,7 +222,7 @@ def ts_missing_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANTI join; islands group by the classic ``slot/step − row_number``
     invariant, which is constant exactly within a consecutive run.  One
     path-keyed shuffle end to end."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     observed = (
         obs.filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11))
         .select("path", tsdb.slot_of(F.col("tse"), STEP).alias("slot"))
@@ -295,7 +291,7 @@ def ts_series_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, unlike corr()'s engine-specific accumulation), on
     slot averages rounded BEFORE the sums."""
     s = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20))
         .groupBy(
             F.split("path", "/").getItem(1).alias("et"),
@@ -349,7 +345,7 @@ def ts_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek(), whose week-start conventions disagree; one hash
     aggregate on a 3-part low-cardinality key, fully map-side
     combinable."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     return obs.groupBy(
         F.split("path", "/").getItem(1).alias("et"),
         ((F.floor(F.col("tse") / 86400) + 4) % 7).cast("bigint").alias("dow"),
@@ -400,7 +396,7 @@ def ts_percent_change_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     change with (path, day) tiebreaks, so both engines pick the same 20
     rows."""
     daily = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .groupBy(
             "path", F.floor(F.col("tse") / 86400).cast("bigint").alias("day_num")
         )

@@ -30,16 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import (
-    BUCKET,
     HEARTBEAT,
     OBS_CTE,
     T_JAN10,
     T_JAN20,
 )
+from esxsnmp_tsdb_spark.operators.analytics2 import _SLOT_CTE, _slot_series
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 EWMA_K = 12  # EWMA truncation: last 12 consolidated 1h slots
 BURST_FACTOR = 1.5  # burst = slot exceeds 1.5x trailing mean
@@ -47,29 +46,6 @@ BURST_MIN_TRAIL = 6  # need >= 6 trailing slots before judging
 STEP_FRAME = 3  # step detection: 3 slots before vs 3 slots after
 STEP_THRESHOLD = 35.0  # |after-mean - before-mean| >= this (tuned non-empty)
 SLA_TARGET = 0.5  # uptime ratio below this = breach (fixture-tuned)
-
-# Shared slot-series base (twin of analytics2's): per (path, 1h slot)
-# rounded average over the Jan-10..Jan-20 window.
-_SLOT_CTE = f"""slotavg AS (
-  SELECT path, tse - tse % {BUCKET} AS slot,
-         round(avg(value), 6) AS x
-  FROM obs WHERE tse >= {T_JAN10} AND tse < {T_JAN20}
-  GROUP BY 1, 2
-)"""
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
-
-
-def _slot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _obs(spark, sf_dir)
-        .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20))
-        .groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
-        .agg(F.round(F.avg("value"), 6).alias("x"))
-    )
-
 
 @op(
     "ts_ewma",
@@ -219,7 +195,7 @@ def ts_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no second exchange thanks to the shared `path` key)."""
     window_len = T_JAN20 - T_JAN10
     v = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter(
             (F.col("flags") == 1)
             & (F.col("tse") >= T_JAN10)

@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import BUCKET, OBS_CTE, T_JAN10, T_JAN20
 from esxsnmp_tsdb_spark.functions.exact import half_up_div_signed
+from esxsnmp_tsdb_spark.operators.analytics2 import _SLOT_CTE, _slot_series
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.session import local_frame
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 STL_HALF = 12  # centered trend MA: 11 preceding + current + 12 following
 MAD_K = 1.4826  # normal-consistency constant for MAD→σ
@@ -35,28 +36,6 @@ MAD_CUT = 3.0  # |x-med| > 3σ̂ = anomaly
 CAP_THRESH = 120.0  # capacity forecast: slot-average "full" line
 CAP_ETA_MAX = 999999  # ETA cap (hours) so near-zero slopes stay finite
 T_JAN19 = T_JAN20 - 86400  # holdout day for the seasonal-naive forecast
-
-# 1h slot averages over Jan-10..Jan-20, rounded at 6 — the shared base.
-_SLOT_CTE = f"""slotavg AS (
-  SELECT path, tse - tse % {BUCKET} AS slot,
-         round(avg(value), 6) AS x
-  FROM obs WHERE tse >= {T_JAN10} AND tse < {T_JAN20}
-  GROUP BY 1, 2
-)"""
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
-
-
-def _slot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _obs(spark, sf_dir)
-        .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20))
-        .groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
-        .agg(F.round(F.avg("value"), 6).alias("x"))
-    )
-
 
 @op(
     "ts_stl_decompose",
@@ -363,7 +342,7 @@ def ts_rollup_multi_granularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding and the grouping-id level tag are normalized identically on
     both engines so the level rows hash the same."""
     base = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20))
         .select(
             F.to_date(
@@ -436,7 +415,7 @@ def ts_alert_rules_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     slots; thresholds compare against chain-rounded slot averages, so
     breach decisions are identical cross-engine.  At 100 TB the rule
     join rides the ladder's (path, slot) layout and adds no shuffle."""
-    obs = _obs(spark, sf_dir).filter(
+    obs = flat_obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20)
     )
     s = (
@@ -586,7 +565,7 @@ def ts_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDF-without-sorting-the-corpus shape as `doc_length_histogram`, here
     with a natural partition key instead of the bounded_running
     single-partition guard."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     b = obs.select(
         F.split("path", "/").getItem(1).alias("event_type"),
         F.floor(F.col("value") / VALUE_BIN).cast("bigint").alias("bucket"),

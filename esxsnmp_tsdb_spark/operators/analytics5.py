@@ -40,7 +40,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
 )
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.session import local_frame
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 # Provisioned per-second capacity per event class (the broadcast dim a
 # real deployment keeps per interface speed: 1G/10G/100G ports).
@@ -55,10 +55,6 @@ CAPACITY = {
 # touches a float capacity (see module docstring).
 CAP10 = {k: int(round(v * 10)) for k, v in CAPACITY.items()}
 _CAP10_VALUES = ", ".join(f"('{k}', {v})" for k, v in sorted(CAP10.items()))
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 def _cap10_df(spark: SparkSession):
@@ -116,7 +112,7 @@ def ts_utilization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same key, and the 5-row capacity dim broadcasts."""
     from esxsnmp_tsdb_spark.operators.aggregator import _counter
 
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     d = tsdb.deltas(_counter(obs), "counter").select(
         "path",
         F.element_at(F.split("path", "/"), 2).alias("etype"),
@@ -183,7 +179,7 @@ def ts_compare_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-prunable, and the join keys are the aggregation keys, so
     the shuffle produced by the group-by is reused by the join.  At
     100 TB this is two day-partition reads regardless of history depth."""
-    obs = _obs(spark, sf_dir).where(
+    obs = flat_obs(spark, sf_dir).where(
         (F.col("tse") >= T_JAN10 - 86400) & (F.col("tse") < T_JAN11)
     )
     slots = obs.groupBy(
@@ -258,7 +254,7 @@ def ts_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤|series|·|slots| output, not of raw obs)."""
     from esxsnmp_tsdb_spark.operators.aggregator import _counter
 
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     d = tsdb.deltas(_counter(obs), "counter")
     r = (
         d.where(

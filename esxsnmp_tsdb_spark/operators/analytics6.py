@@ -20,19 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 HOURS_PER_DAY = 24
 BAD_CENTS = 20_000  # sample counts against the error budget above this
 ALLOW_PPM = 10_000  # SLO allowance: 1% of samples may be bad
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 @op(
@@ -59,7 +54,7 @@ def ts_availability_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole op is two hash aggregates on keys bounded by
     catalog × calendar.  Availability is exact integer micro-units via
     half-up division — no float ratio to drift cross-engine."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     pres = (
         obs.filter(F.col("flags") == 1)
         .select(
@@ -109,7 +104,7 @@ def ts_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One scan, one hash aggregate; both ratios are half-up exact-integer
     micro-units, so a budget boundary can never flip on float rounding."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     c = obs.select(
         F.split("path", "/").getItem(1).alias("event_type"),
         F.expr("tse div 86400").alias("day"),
@@ -181,7 +176,7 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag pairing is an equi-join of the (event_type, hour) aggregate with
     itself on hour+1 — the aggregate is catalog × calendar sized, so the
     join input is already tiny at any corpus scale."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     h = (
         obs.select(
             F.split("path", "/").getItem(1).alias("event_type"),
@@ -251,7 +246,7 @@ def ts_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (class, day) key; per-group rows are a day of one class's samples, so
     the exact sort-based percentile holds to arbitrary corpus scale the
     same way the consolidation ladder does."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     return (
         obs.select(
             F.split("path", "/").getItem(1).alias("event_type"),

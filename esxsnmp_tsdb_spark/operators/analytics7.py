@@ -25,17 +25,13 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN11,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 T_JAN12 = T_JAN11 + 86400
 CONTRIB_TOP = 3
 
 FLAP_THRESH = 60.0  # slot-average breach line
 FLAP_MIN = 4  # state changes before a series counts as flapping
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 @op(
@@ -84,7 +80,7 @@ def ts_topk_change_contributors(
     over the per-series AGGREGATE (bounded by the catalog) and the rank
     partitions by class — both windows are catalog-sized.  All traffic
     is exact integer cents end to end."""
-    obs = _obs(spark, sf_dir).filter(
+    obs = flat_obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN12)
     )
     cents = F.floor(F.col("value") * 100).cast("bigint")
@@ -176,7 +172,7 @@ def ts_alert_flap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state-change count is a sum over slot-to-slot XORs inside the
     per-path partition.  Breach compares the chain-rounded slot average,
     so the flap count is bit-stable cross-engine."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     s = obs.groupBy(
         "path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot")
     ).agg(F.round(F.avg("value"), 6).alias("x"))

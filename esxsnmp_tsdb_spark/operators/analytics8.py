@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import (
     HEARTBEAT,
     OBS_CTE,
@@ -34,7 +33,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
 )
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 # Seasonal anomaly: score each valid reading against the mean/std of its
 # CLASS's (weekday/weekend, hour-of-day) bucket over the whole fixture.
@@ -49,10 +48,6 @@ SEASONAL_Z = 2.0
 MAINT_TOD_LO = 7200
 MAINT_TOD_HI = 14400
 SLA_PPM_TARGET = 995_000  # 99.5 %
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 # Integer epoch day-of-week (1970-01-01 was a Thursday): 0 = Sunday.
@@ -107,7 +102,7 @@ def ts_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once and the scoring join adds no exchange."""
     dow = (F.floor(F.col("tse") / 86400) + 4) % 7
     keyed = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter(F.col("flags") == 1)
         .select(
             F.element_at(F.split("path", "/"), 2).alias("class"),
@@ -195,7 +190,7 @@ def ts_sla_maintenance_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_maint) that cross-joins back as a broadcast; the per-path side is
     a single distinct-aggregate shuffle on `path`.  At 100 TB the whole
     op costs one exchange of (path, slot) pairs, not paths×slots rows."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     slot = F.col("slot")
     is_maint = (
         (((F.floor(slot / 86400)) + 4) % 7 == 0)
@@ -299,7 +294,7 @@ def ts_mtbf_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines can't diverge.  One hash exchange on `path`: the lag window
     and the rollup share the same partitioning."""
     v = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter(F.col("flags") == 1)
         .select("path", "tse")
     )
@@ -396,7 +391,7 @@ def ts_period_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned out ×{PERIOD_MAX_LAG} lags the join input stays tiny at any
     corpus scale; the argmax window partitions by class (bounded) —
     the raw obs are touched once, in the first aggregate."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     h = (
         obs.select(
             F.split("path", "/").getItem(1).alias("event_type"),
@@ -465,14 +460,17 @@ def ts_period_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Composition constants come from the proven pieces in analytics4 — the
-# composed detector must agree with its parts by construction.
+# The slot-series base (analytics2) and the composition constants
+# (analytics4) come from the proven pieces — the composed detector must
+# agree with its parts by construction.
+from esxsnmp_tsdb_spark.operators.analytics2 import (  # noqa: E402
+    _SLOT_CTE,
+    _slot_series,
+)
 from esxsnmp_tsdb_spark.operators.analytics4 import (  # noqa: E402
     MAD_CUT,
     MAD_K,
     STL_HALF,
-    _SLOT_CTE,
-    _slot_series,
 )
 
 
@@ -636,7 +634,7 @@ def ts_lead_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded before the argmax.  Scale: the hourly class aggregate is
     catalog×calendar sized, the pair×lag fan-out is classes²·13 over
     that tiny table, and raw obs are touched exactly once."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     h = (
         obs.select(
             F.split("path", "/").getItem(1).alias("class"),
@@ -760,7 +758,7 @@ def ts_incident_merge_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep — class cardinality is the catalog's class set, and each
     class's interval list is incident-sized, not corpus-sized."""
     v = (
-        _obs(spark, sf_dir)
+        flat_obs(spark, sf_dir)
         .filter(F.col("flags") == 1)
         .select("path", "tse")
     )

@@ -21,27 +21,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.functions.topk import bounded_running
+from esxsnmp_tsdb_spark.operators.dedup import _hex16
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 HIST_BIN = 100  # chars per histogram bucket
 
 
-# 16-bit integer from the first 4 hex chars of md5(x); same expression text
-# evaluates identically in Spark SQL and DuckDB (see dedup.py).
-def _hex16(expr: str) -> str:
-    nib = "(instr('0123456789abcdef', substr(md5({e}), {i}, 1)) - 1)"
-    parts = [nib.format(e=expr, i=i) for i in (1, 2, 3, 4)]
-    return (
-        f"({parts[0]} * 4096 + {parts[1]} * 256 + {parts[2]} * 16 + {parts[3]})"
-    )
-
-
 _DOC_HASH = _hex16("CAST(doc_id AS STRING)")
-
-
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
 
 
 @op(
@@ -69,7 +56,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     can be written with ``partitionBy('split')`` in the same pass.  The
     denominator for `share` is the sum over the (≤3-row) per-split
     aggregate broadcast back — ONE corpus scan, no driver-side count."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     bucket = F.expr(_DOC_HASH) % 10
     assigned = docs.select(
         "n_chars",
@@ -110,7 +97,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision is per-row hash-mod, so each language's sample ratio
     concentrates to 1/5 independent of skew — no shuffle, no sort, and
     (unlike ``df.sample``) the same rows every run on every engine."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     picked = (F.expr(_DOC_HASH) % 5 == 0).cast("int")
     return (
         docs.select("lang", picked.alias("picked"))
@@ -152,7 +139,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelist).  Expressed as conditional aggregation, not four scans —
     at 100 TB this is a single map + one tiny reduce, and the per-stage
     counts are the funnel report every data team asks for."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     clean = (
         F.length(F.regexp_replace("text", "[^a-z ]", "")).cast("double")
         / F.length("text")
@@ -206,7 +193,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression; the histogram is one tiny aggregate.  The cumulative
     window runs over #buckets rows (hundreds), not #docs — the classic
     trick for computing a CDF without sorting the corpus."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     b = docs.select(
         F.floor(F.col("n_chars") / float(HIST_BIN)).cast("bigint").alias("bucket")
     )
@@ -243,7 +230,7 @@ def topk_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation step that picks exemplars per domain).  Per-group window on
     the source partitioning — one shuffle by source, heaps per group; no
     global sort.  Quality = the same formula as `text_quality_score`."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     n_tok = F.size(F.split("text", " ")).cast("double")
     clean = (
         F.length(F.regexp_replace("text", "[^a-z ]", "")).cast("double")
@@ -292,7 +279,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     round() because Spark rounds half-up and DuckDB half-even — floor is
     the same everywhere.  Output is scalar per vector (scale + checksum +
     range) so the oracle compares no float arrays."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     xd = F.transform("embedding", lambda x: x.cast("double"))
     maxabs = F.array_max(F.transform(xd, F.abs))
     qv = F.transform(
@@ -360,7 +347,7 @@ def pipeline_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan, the dedup window and the final aggregate are the only
     shuffles, and every stage reuses an operator family that is also
     tested standalone (funnel, dedup_exact, split, token_count)."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     clean = (
         F.length(F.regexp_replace("text", "[^a-z ]", "")).cast("double")
         / F.length("text")
@@ -438,7 +425,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the oracle's generate_series guard."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs = fan_out(_t(spark, sf_dir)["documents"])
+    docs = fan_out(register_views(spark, sf_dir)["documents"])
     tcol = F.split("text", " ")
     sh = docs.filter(F.size(tcol) >= DECON_K).select(
         "doc_id",

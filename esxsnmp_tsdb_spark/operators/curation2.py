@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.operators.curation import _hex16
+from esxsnmp_tsdb_spark.operators.dedup import _hex16
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
@@ -28,10 +28,6 @@ CHUNK_STRIDE = 4  # chunk stride (50% overlap)
 
 _DOC_HASH = _hex16("CAST(doc_id AS STRING)")
 _DOC_HASH_DUCK = _hex16("CAST(doc_id AS VARCHAR)")
-
-
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
 
 
 @op(
@@ -62,7 +58,7 @@ def domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot partition — the mitigation is the same two-level trick as
     ``salted_aggregate``, but the honest default is the plain window
     because ranks can't be salted without a second pass."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     w = Window.partitionBy("source").orderBy(F.expr(_DOC_HASH), "doc_id")
     kept = (F.row_number().over(w) <= QUOTA).cast("int")
     return (
@@ -107,7 +103,7 @@ def seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); block ids are integer division so both engines agree
     exactly.  Straddle test: a doc spanning [cum−tok, cum−1] crosses a
     boundary iff its start block < end block."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     toks = docs.select(
         "source",
         "doc_id",
@@ -161,7 +157,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending ``sequence`` would throw); the count partial-aggregates
     map-side and the top-25 is TakeOrdered with a lexical tiebreak so
     equal counts rank identically on both engines."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tk = F.split("text", " ")
     # zip_with over two shifted slices instead of transform(sequence) +
     # per-index element_at (r13, guide §1.2 per-task work): the dynamic-
@@ -225,7 +221,7 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride-4 index sequence.  This is the scalable stand-in for the
     reference-class suffix-array pass, which cannot be expressed as a
     dataflow without a global sort."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tk = F.split("text", " ")
     starts = F.when(
         F.size(tk) >= CHUNK_K,
@@ -295,7 +291,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on label + a broadcast join, no window.  The z-score is
     rounded before the >2σ compare on both engines so partial-aggregation
     summation order can't flip membership."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     vnorm = F.sqrt(
         F.aggregate(
             F.col("embedding"),
@@ -386,7 +382,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     each iteration is one join + one keyed reduce over (edges ⋈ ranks),
     the standard distributed-PageRank dataflow — the driver only unrolls
     the loop, it never touches data."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tk = F.split("text", " ")
     starts = F.when(
         F.size(tk) >= CHUNK_K,

@@ -42,10 +42,6 @@ EVAL_MOD = 11  # doc_id % EVAL_MOD == 0 -> held-out eval set (~9%)
 KM_DIM = 64  # embedding dimensionality (fixtures: FLOAT[64])
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "decontamination_overlap",
     oracle=f"""
@@ -85,7 +81,7 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup — no corpus shuffle at all before the per-doc rollup.  This
     is the contamination check run before every training run; at 100 TB
     the eval-gram set is still MBs and the plan shape is unchanged."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tk = F.split("text", " ")
     starts = F.when(
         F.size(tk) >= DECON_K,
@@ -149,7 +145,7 @@ def cross_source_dedup_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The survivor choice is a row_number over (hash) — partitioned
     window, one exchange in which only 32-byte hashes, the priority
     int, and doc ids travel; document text never shuffles."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     prio = F.substring("source", 4, 10).cast("int")
     w = Window.partitionBy(F.md5("text")).orderBy(prio, "doc_id")
     ranked = docs.select(
@@ -209,7 +205,7 @@ def kmeans_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side.  Iterating = looping this op; each step is the same two
     aggregates (the driver-loop + localCheckpoint pattern doc_pagerank
     already uses)."""
-    emb = _t(spark, sf_dir)["embeddings"]
+    emb = register_views(spark, sf_dir)["embeddings"]
     vd = emb.select(
         "vec_id",
         "label",

@@ -36,10 +36,6 @@ BAND_CONFIGS = (1, 2, 4, 8)
 COS_TAUS = (0.15, 0.20, 0.25, 0.30, 0.35)
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "minhash_band_sensitivity",
     oracle=f"""
@@ -98,7 +94,7 @@ def minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``md5(shingle)`` exactly like ``dedup._minhash_sigs``, so the
     n_bands=4 sweep row counts the very candidate set
     ``dedup_near_minhash`` emits."""
-    docs2 = _docs_with_near_copies(_t(spark, sf_dir)["documents"])
+    docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     sh = _shingled(docs2)
     hashed = sh.select(
         "doc_id",
@@ -133,7 +129,9 @@ def minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.min("a.band").alias("min_band"))
     )
-    nd = _t(spark, sf_dir)["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
+    nd = register_views(spark, sf_dir)["documents"].agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
     cfg = local_frame(spark, [(c,) for c in BAND_CONFIGS], "n_bands int")
     caught = F.col("min_band") < F.col("n_bands")
     true_pair = F.col("doc_b") == F.col("doc_a") + 100000
@@ -198,7 +196,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     global roll-up — n_pairs(τ) = Σ per-va hits, n_left_docs(τ) =
     #{va: max(cos) ≥ τ}, which is exactly the old distinct count.  The
     pair stream is scanned once and never multiplied."""
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id",
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),

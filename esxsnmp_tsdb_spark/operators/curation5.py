@@ -30,10 +30,6 @@ from esxsnmp_tsdb_spark.sources import register_views
 NOVELTY_K = 5  # shingle width for novelty
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "text_ngram_novelty",
     oracle=f"""
@@ -65,7 +61,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-touch trick replaces 'join each doc against all earlier docs'
     (quadratic in corpus size) with a single min() aggregate, which is
     why this stays one pass at 100 TB."""
-    docs = fan_out(_t(spark, sf_dir)["documents"].select("doc_id", "text"))
+    docs = fan_out(register_views(spark, sf_dir)["documents"].select("doc_id", "text"))
     toks = F.split(F.col("text"), " ")
     sh = docs.select(
         "doc_id",
@@ -130,7 +126,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     `doc_pagerank`); the normalize runs on the 64-row result.  The
     pre-normalization sums round at 6 on both sides, so the division
     consumes identical doubles."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     scored = e.select(
         F.aggregate(
             F.col("embedding"), F.lit(0.0), lambda a, x: a + x.cast("double")
@@ -226,7 +222,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source window as the quota op.  At 100 TB the hash order also
     de-correlates the kept prefix from crawl order — the budget takes a
     uniform slice of the domain, not its first day."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     toks = docs.select(
         "source",
         "doc_id",

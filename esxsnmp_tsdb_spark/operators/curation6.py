@@ -54,10 +54,6 @@ _SQL_STOP = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 _SQL_BLOCK = "(" + ", ".join(f"'{w}'" for w in BLOCKLIST) + ")"
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 # Shared metric CTE: one pass computes every per-doc quality feature.
 _METRICS_CTE = f"""m AS (
   SELECT doc_id, source,
@@ -105,7 +101,9 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split once, reused); the histogram is a (source, verdict) hash
     aggregate with map-side combine.  Nothing shuffles but the ~100
     result groups, which is why the same plan holds at 100 TB."""
-    docs = fan_out(_t(spark, sf_dir)["documents"].select("doc_id", "source", "text"))
+    docs = fan_out(
+        register_views(spark, sf_dir)["documents"].select("doc_id", "source", "text")
+    )
     toks = F.split(F.col("text"), " ")
     m = docs.select(
         "source",
@@ -166,7 +164,9 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     where an IN-literal would blow the codegen constant pool.  Docs with
     zero hits re-enter via a left join against the doc spine, so the
     per-source denominators count every document."""
-    docs = fan_out(_t(spark, sf_dir)["documents"].select("doc_id", "source", "text"))
+    docs = fan_out(
+        register_views(spark, sf_dir)["documents"].select("doc_id", "source", "text")
+    )
     spine = docs.select(
         "doc_id", "source", F.size(F.split("text", " ")).alias("n_words")
     )
@@ -227,7 +227,7 @@ def source_divergence_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integers and summation order can't flip the 6-dp hash.
     The global distribution (vocab-sized) broadcasts; the only shuffle
     of corpus-proportional data is the (source, token) count."""
-    docs = fan_out(_t(spark, sf_dir)["documents"].select("source", "text"))
+    docs = fan_out(register_views(spark, sf_dir)["documents"].select("source", "text"))
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("t"))
     st = tok.groupBy("source", "t").agg(F.count(F.lit(1)).alias("c_st"))
     s = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
@@ -282,7 +282,7 @@ def corpus_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross join (NOT a single-partition window — plan-audit
     invariant), and the rank window partitions by lang, so no stage ever
     concentrates on one task."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     t = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
@@ -337,7 +337,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode + a d-group map-side-combined aggregate — each task
     contributes d partial moment triples no matter how many vectors it
     scans (the same allreduce shape as `embedding_pca_power_iteration`)."""
-    e = fan_out(_t(spark, sf_dir)["embeddings"])
+    e = fan_out(register_views(spark, sf_dir)["embeddings"])
     q = e.select(F.posexplode("embedding").alias("pos", "comp")).select(
         (F.col("pos") + 1).cast("bigint").alias("dim"),
         F.round(F.col("comp").cast("double") * 1e6).cast("bigint").alias("qv"),
@@ -391,7 +391,7 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     10⁴–10⁵ entries at any corpus size, so the membership test never
     shuffles the token stream on the term key.  OOV counts are exact
     integers; one (source) hash aggregate emits the report."""
-    docs = fan_out(_t(spark, sf_dir)["documents"].select("source", "text"))
+    docs = fan_out(register_views(spark, sf_dir)["documents"].select("source", "text"))
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
     vocab = (
         tok.where(F.col("source") == VOCAB_SOURCE)
@@ -445,7 +445,7 @@ def doc_sliding_context_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one hash aggregate and never explodes the corpus (the
     materializing twin would explode ranges exactly like `ts_bin_split`
     and is deliberately NOT run for a sizing report)."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     n_tok = F.size(F.split("text", " ")).cast("bigint")
     n_chunks = F.when(n_tok <= CTX_W, F.lit(1)).otherwise(
         1 + F.floor((n_tok - CTX_W + CTX_S - 1) / CTX_S)

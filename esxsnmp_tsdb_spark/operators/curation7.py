@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.functions.topk import ranked_topk
 from esxsnmp_tsdb_spark.functions.vector import cosine
-from esxsnmp_tsdb_spark.operators.curation import _hex16
+from esxsnmp_tsdb_spark.operators.dedup import _hex16
 from esxsnmp_tsdb_spark.operators.similarity import DOT_SQL, QUERY_VEC_ID
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
@@ -48,10 +48,6 @@ HYBRID_TERMS = ("spark", "merge", "window")  # same demo query as BM25
 HYBRID_K1 = 1.2
 HYBRID_B = 0.75
 HYBRID_TOP = 10
-
-
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
 
 
 @op(
@@ -89,7 +85,7 @@ def sample_importance_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sorted(LANG_KEEP_THR.items()), "lang string, thr bigint"
     )
     d = (
-        _t(spark, sf_dir)["documents"]
+        register_views(spark, sf_dir)["documents"]
         .join(F.broadcast(thr), "lang")
         .select(
             "lang",
@@ -142,7 +138,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, not |docs| — and a<b keeps each unordered pair once, so the
     candidate space is bands × source-pairs exactly like the LSH
     blockers, never doc².  Pair multiplicity k_a·k_b is exact int."""
-    d = _t(spark, sf_dir)["documents"].select(
+    d = register_views(spark, sf_dir)["documents"].select(
         "source",
         F.md5(
             F.concat_ws(" ", F.slice(F.split("text", " "), 1, PREFIX_K))
@@ -236,8 +232,8 @@ def rag_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail is TakeOrdered on the ROUNDED fused score with a doc_id
     tiebreak.  Ranking on the rounded value keeps ulp-level summation
     differences from flipping ranks cross-engine."""
-    docs = _t(spark, sf_dir)["documents"]
-    emb = _t(spark, sf_dir)["embeddings"]
+    docs = register_views(spark, sf_dir)["documents"]
+    emb = register_views(spark, sf_dir)["embeddings"]
     dl = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl")
     )
@@ -325,7 +321,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one (lang-keyed, ≤|langs| groups) aggregate; the doc
     counts join on the same tiny key.  Fertility is half-up integer ppm;
     chars_per_bpe divides two exact int sums."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     toks = docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     per = toks.groupBy("lang").agg(
         F.count(F.lit(1)).alias("ws_tokens"),

@@ -52,10 +52,6 @@ WINNOW_W = 4  # hashes per winnowing window
 WINNOW_MIN_SHARED = 3  # report pairs sharing at least this many prints
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 _COS_AB = (
     f"{DOT_SQL.format(d='a.d', a='a.embedding', b='b.embedding')} / "
     f"(sqrt({DOT_SQL.format(d='a.d', a='a.embedding', b='a.embedding')}) * "
@@ -251,7 +247,7 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = _emb_with_near_copies(
-        _t(spark, sf_dir)["embeddings"]
+        register_views(spark, sf_dir)["embeddings"]
     ).select(
         "vec_id", "embedding", norm(_dbl(F.col("embedding"))).alias("nrm")
     )
@@ -386,7 +382,7 @@ def doc_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from esxsnmp_tsdb_spark.session import fan_out
 
     docs2 = fan_out(
-        _docs_with_near_copies(_t(spark, sf_dir)["documents"])
+        _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     )
     fps = winnow_fingerprints(docs2)
     sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
@@ -524,7 +520,7 @@ def chunk_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs2 = fan_out(_docs_with_near_copies(_t(spark, sf_dir)["documents"]))
+    docs2 = fan_out(_docs_with_near_copies(register_views(spark, sf_dir)["documents"]))
     return (
         cdc_chunk_table(docs2)
         .groupBy("sig")
@@ -580,7 +576,7 @@ def bpe_merge_pair_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from esxsnmp_tsdb_spark.functions.topk import ranked_topk
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs = fan_out(_t(spark, sf_dir)["documents"])
+    docs = fan_out(register_views(spark, sf_dir)["documents"])
     toks = docs.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), " ")).alias("p0", "tok"),
@@ -629,7 +625,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuple — counts shuffle, documents don't; the report is
     classes-sized.  The fix loop (generalize the bucket, re-screen) is
     re-running this op with a coarser KANON_LEN_BUCKET."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     return (
         docs.groupBy(
             "lang",
@@ -681,7 +677,7 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-anchor top-k is a window partitioned by anchor (never global).
     At 100 TB the cell assignment is the ingest-persisted partition key
     and mining runs cell-by-cell, embarrassingly parallel."""
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id",
         "label",
         "embedding",
@@ -777,7 +773,7 @@ def dataset_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop silently.  Scale: one aggregate per language over the corpus;
     the target table is a broadcast literal; output is |languages|
     rows."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tgt = local_frame(
         spark, sorted(MIX_TARGET_PPM.items()), "lang string, target_ppm int"
     )
@@ -856,7 +852,7 @@ def doc_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     every IVF op pays at ingest — at 100 TB this screen is a free
     by-product of cell assignment (the argmax is already computed; the
     outlier bit is one comparison on it)."""
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id", "embedding", norm(_dbl(F.col("embedding"))).alias("nrm")
     )
     return (

@@ -45,10 +45,6 @@ def _hex16(expr: str) -> str:
     )
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 # --- duplicated corpus (documents ∪ manufactured copies), both dialects ---
 
 DUP_CTE = """docs2 AS (
@@ -174,7 +170,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized content hash: hash-groupBy, keep the
     lowest doc_id.  One shuffle on the hash; at 100 TB the hash (32 bytes)
     shuffles, never the document bodies."""
-    docs2 = _docs_with_exact_copies(_t(spark, sf_dir)["documents"])
+    docs2 = _docs_with_exact_copies(register_views(spark, sf_dir)["documents"])
     return (
         docs2.select(
             "doc_id", F.md5(F.lower(F.trim(F.col("text")))).alias("content_hash")
@@ -240,7 +236,7 @@ def _minhash_sigs(
     The signature narrows from a 32-char string to a bigint, shrinking
     both the shuffle and the band-bucket join keys."""
     if sh is None:
-        docs2 = _docs_with_near_copies(_t(spark, sf_dir)["documents"])
+        docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
         sh = _shingled(docs2)
     hashed = sh.select("doc_id", F.md5("shingle").alias("h"))
     band_min = [
@@ -668,7 +664,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same way as MinHash buckets."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs = fan_out(_t(spark, sf_dir)["documents"])
+    docs = fan_out(register_views(spark, sf_dir)["documents"])
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
     )
@@ -735,7 +731,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate volume tracks actual duplication — the same tuning call a
     production pipeline makes (w-shingling, w≈5-10).  Near-twins still
     score ≈(n-w)/n ≫ 0.5."""
-    docs2 = _docs_with_near_copies(_t(spark, sf_dir)["documents"])
+    docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     sh = _shingled(docs2, JACCARD_K)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
@@ -813,7 +809,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bytes of the float source) but |V| rows, while the saved transforms
     # scale with |pairs|.  Values are bit-identical: float→double is
     # exact, same fold, same order.
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id",
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -896,7 +892,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the re-A/B at final r14 HEAD (min-of-4
     # interleaved, one session) read eager 4.17 vs lazy 4.41.  The lazy
     # claim never reproduced; reverted.
-    docs2 = _docs_with_near_copies(_t(spark, sf_dir)["documents"])
+    docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     sh = _shingled(docs2).localCheckpoint()
     sigs = _minhash_sigs(spark, sf_dir, sh=sh).localCheckpoint()
     pairs = _pairs_from_sigs(sigs)

@@ -53,10 +53,6 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 # The manufactured "arriving batch", as a reusable CTE — the SAME
 # drop-last-token mutation as `dedup.NEAR_CTE`'s second arm (SQL twin of
 # `dedup._near_batch`, single-sourced there).
@@ -80,7 +76,7 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_built")
     sig_dir = os.path.join(root, "sigs")
     if not os.path.exists(marker):
-        corpus = _t(spark, sf_dir)["documents"].select("doc_id", "text")
+        corpus = register_views(spark, sf_dir)["documents"].select("doc_id", "text")
         sigs = _minhash_sigs(spark, sf_dir, sh=_shingled(corpus))
         # (16 band dirs × writer tasks is a healthy file count at every
         # scale — unlike the per-cell members write below, which needs the
@@ -141,7 +137,11 @@ def minhash_index_hits(
     size).  The default (False) keeps the planner's choice, which is
     right for the oracle's corpus-sized batch shape."""
     root = build_minhash_index(spark, sf_dir)
-    src = batch_docs if batch_docs is not None else _t(spark, sf_dir)["documents"]
+    src = (
+        batch_docs
+        if batch_docs is not None
+        else register_views(spark, sf_dir)["documents"]
+    )
     batch = _near_batch(src)
     bat_sigs = _minhash_sigs(spark, sf_dir, sh=_shingled(batch)).select(
         F.col("doc_id").alias("new_id"), "band", "sig"
@@ -190,7 +190,7 @@ def dedup_minhash_indexed_smallbatch(spark: SparkSession, sf_dir: str) -> DataFr
     batch-fixed scaling probe (docs/SCALING_r08.json `batch_fixed`
     minhash: 10× corpus → 0.95× probe wall, exchanges 6=6) is this op's
     shape held at two corpus scales."""
-    docs = _t(spark, sf_dir)["documents"].select("doc_id", "text")
+    docs = register_views(spark, sf_dir)["documents"].select("doc_id", "text")
     small = docs.filter(F.col("doc_id") % BATCH_Q_MOD == 3)
     return minhash_index_hits(
         spark, sf_dir, batch_docs=small, broadcast_batch=True
@@ -223,7 +223,7 @@ def build_semantic_cell_index(
     )
     marker = os.path.join(root, "_built")
     if not os.path.exists(marker):
-        e = _t(spark, sf_dir)["embeddings"].select(
+        e = register_views(spark, sf_dir)["embeddings"].select(
             "vec_id", "embedding", norm(_dbl(F.col("embedding"))).alias("nrm")
         )
         _cell_seeds(e, seed_mod or CELL_SEED_MOD).write.mode(
@@ -315,7 +315,11 @@ def semantic_index_hits(
     prune the cell-partitioned members scan to the touched cells.
     ``seed_mod`` forwards to `build_semantic_cell_index` (√N sizing)."""
     root = build_semantic_cell_index(spark, sf_dir, seed_mod=seed_mod)
-    e = batch_emb if batch_emb is not None else _t(spark, sf_dir)["embeddings"]
+    e = (
+        batch_emb
+        if batch_emb is not None
+        else register_views(spark, sf_dir)["embeddings"]
+    )
     batch = _emb_near_batch(e).withColumn("nrm", norm(_dbl(F.col("embedding"))))
     cent = spark.read.parquet(os.path.join(root, "centroids"))
     bassigned = _assign_to(batch, cent).select(
@@ -373,7 +377,7 @@ def sqrtn_stride(spark: SparkSession, sf_dir: str) -> int:
         d, _, s = cached.rpartition("=")
         if d == sf_dir:
             return int(s)
-    n = _t(spark, sf_dir)["embeddings"].count()
+    n = register_views(spark, sf_dir)["embeddings"].count()
     stride = max(1, math.ceil(math.sqrt(n)))
     spark.conf.set(tag, f"{sf_dir}={stride}")
     return stride
@@ -489,7 +493,7 @@ def stream_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits_dir = os.path.join(out, "hits")
     appended_dir = os.path.join(out, "appended")
 
-    batch = _near_batch(_t(spark, sf_dir)["documents"])
+    batch = _near_batch(register_views(spark, sf_dir)["documents"])
     # delivery order is load-bearing (later batches probe earlier ones'
     # appended signatures) — the shared stager pins increasing mtimes
     _stage_ordered_slices(

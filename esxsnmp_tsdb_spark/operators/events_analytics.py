@@ -54,10 +54,6 @@ u3 AS (
 )"""
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 def _ev(t) -> DataFrame:
     return t["events"].select(
         "user_id",
@@ -94,7 +90,7 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses that partitioning, and the 3-row unpivot is driver-trivial.
     The oracle computes the identical chain as grouped self-joins."""
     w = Window.partitionBy("user_id")
-    ev = _ev(_t(spark, sf_dir))
+    ev = _ev(register_views(spark, sf_dir))
     stepped = (
         ev.withColumn(
             "t_view",
@@ -173,7 +169,7 @@ def retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort, offset) roll-up is shuffle 2 — both partial-aggregated
     map-side.  Day arithmetic is integer epoch-days, so both engines
     bucket identically regardless of timestamp precision."""
-    ev = _t(spark, sf_dir)["events"].select(
+    ev = register_views(spark, sf_dir)["events"].select(
         "user_id",
         F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
     )
@@ -215,7 +211,7 @@ def event_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     within partitions only; the transition matrix is ≤ |event_type|² rows
     so the top-20 is a TakeOrdered over a tiny aggregate.  Ordering ties
     (tse, event_id) are engine-stable by construction."""
-    ev = _ev(_t(spark, sf_dir))
+    ev = _ev(register_views(spark, sf_dir))
     w = Window.partitionBy("user_id").orderBy("tse", "event_id")
     seq = ev.withColumn("prev_type", F.lag("event_type").over(w))
     return (
@@ -261,7 +257,7 @@ def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap shuffles: min(day) per (type, user), then a per-type running
     sum over at most |days| rows.  Integer math end to end, so no float
     discipline is even needed."""
-    ev = _t(spark, sf_dir)["events"].select(
+    ev = register_views(spark, sf_dir)["events"].select(
         "event_type",
         "user_id",
         F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),

@@ -20,7 +20,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import load_events_range, register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, load_events_range, register_views
 
 
 @op(
@@ -50,7 +50,7 @@ def ingest_batch_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-group skipping and a small-file compaction pass (see
     ``sources.compaction``).
     """
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     target = op_dir("append")  # cleared on next call / at process exit
     (
         obs.withColumn("day", F.to_date(F.timestamp_seconds(F.col("tse"))))

@@ -28,7 +28,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, register_views
 from esxsnmp_tsdb_spark.sources.catalog import load_events_range
 
 TOMBSTONE_MOD = 17  # every 17th event in the change window is a delete
@@ -198,7 +198,7 @@ def ingest_late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT seconds, so the per-series aggregate is exact-integer and
     hash-stable.  The final group-by reuses the window's partitioning —
     no second exchange (same plan shape as `ts_utilization_report`)."""
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     w = (
         Window.partitionBy("path")
         .orderBy("event_id")
@@ -252,7 +252,7 @@ def api_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-aggregated group-by per series, rolled up to
     classes on the same shuffle's output — per-series maxima are the
     only state, and the report is catalog-sized."""
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     per_series = (
         obs.select(
             F.element_at(F.split("path", "/"), 2).alias("class"),
@@ -306,7 +306,7 @@ def ts_poll_interval_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps are integer seconds off one lag window that shares its
     exchange with the rollup.  At 100 TB swap percentile for
     percentile_approx per the house note on relational.percentiles."""
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     w = Window.partitionBy("path").orderBy("tse", "event_id")
     g = obs.withColumn("gap", F.col("tse") - F.lag("tse").over(w)).filter(
         F.col("gap").isNotNull()

@@ -21,14 +21,10 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return register_views(spark, sf_dir)
-
-
 @op("scan_parquet", oracle="SELECT r_regionkey, r_name FROM region")
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full table scan — the vectorized parquet read path."""
-    return _t(spark, sf_dir)["region"].select("r_regionkey", "r_name")
+    return register_views(spark, sf_dir)["region"].select("r_regionkey", "r_name")
 
 
 @op(
@@ -43,7 +39,7 @@ def projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """σ/π with pushdown: the filter and the 4-column projection both reach
     the parquet scan (verify via ``plans.explain``: PushedFilters +
     ReadSchema show exactly these columns)."""
-    li = _t(spark, sf_dir)["lineitem"]
+    li = register_views(spark, sf_dir)["lineitem"]
     return li.filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
@@ -60,7 +56,7 @@ def hash_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join; AQE picks broadcast vs shuffled-hash vs SMJ by
     runtime stats.  At 100 TB orders⋈customer shuffles on custkey unless
     customer fits the broadcast threshold."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["orders"]
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"), "inner")
@@ -79,7 +75,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 def broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast of the dimension side — no shuffle of the 100 TB
     fact table; `part` ships to every executor once."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["lineitem"]
         .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
@@ -105,7 +101,7 @@ def sort_merge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-large join forced to sort-merge (`hint('merge')`) — the
     spill-safe strategy for two 100 TB-scale inputs; with bucketed storage
     on orderkey both shuffles disappear."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["lineitem"]
         .join(t["orders"].hint("merge"), F.col("l_orderkey") == F.col("o_orderkey"))
@@ -124,7 +120,7 @@ FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 )
 def outer_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join — customers without orders survive with NULLs."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["customer"]
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left")
@@ -143,7 +139,7 @@ FROM s FULL JOIN c ON s.nk = c.nk
 )
 def outer_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of per-nation supplier vs customer counts."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     s = t["supplier"].groupBy(F.col("s_nationkey").alias("nk_s")).agg(
         F.count(F.lit(1)).alias("n_supp")
     )
@@ -165,7 +161,7 @@ WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS) — no row multiplication, build side only
     needs the key column."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["customer"]
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_semi")
@@ -195,7 +191,7 @@ def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orders scan BEFORE the join (PushedFilters on o_orderdate), so
     the anti-join's build side shrinks to the recent slice — 2.2 MB
     broadcast, zero shuffles at sf0.1."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     recent = t["orders"].filter(F.col("o_orderdate") >= "1998-05-01")
     return (
         t["customer"]
@@ -213,7 +209,7 @@ SELECT r_name, n_name FROM region CROSS JOIN nation
 def cross_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product of two small dims (the only safe cross-join shape;
     Spark requires it to be explicit)."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return t["region"].crossJoin(t["nation"]).select("r_name", "n_name")
 
 
@@ -237,7 +233,7 @@ def range_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate as a post-filter — at 100 TB you additionally bucket both
     sides by a coarse time bucket so the range filter prunes pairs early
     (classic interval-bucketing range join)."""
-    e = _t(spark, sf_dir)["events"].select(
+    e = register_views(spark, sf_dir)["events"].select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("tse")
     )
     a = e.alias("a")
@@ -294,7 +290,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``last_value(ignorenulls)`` — ONE shuffle on user_id and no join
     explosion, which is why this formulation survives 100 TB where the
     inequality-join + row_number version does not."""
-    e = _t(spark, sf_dir)["events"].select(
+    e = register_views(spark, sf_dir)["events"].select(
         "event_id",
         "user_id",
         "event_type",
@@ -350,7 +346,9 @@ GROUP BY l_returnflag, l_linestatus
 def hash_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: wide multi-aggregate group-by — partial aggregation
     map-side, final on a 6-group shuffle (nearly free at any scale)."""
-    li = _t(spark, sf_dir)["lineitem"].filter(F.col("l_shipdate") < "1998-09-03")
+    li = register_views(spark, sf_dir)["lineitem"].filter(
+        F.col("l_shipdate") < "1998-09-03"
+    )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -375,7 +373,7 @@ def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) — Catalyst expands to a two-phase aggregate (distinct
     shuffle then count), skew-safe under AQE."""
     return (
-        _t(spark, sf_dir)["events"]
+        register_views(spark, sf_dir)["events"]
         .groupBy("event_type")
         .agg(
             F.countDistinct("user_id").alias("n_users"),
@@ -391,7 +389,7 @@ def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     THE distinct-count op — fixed memory per group vs the exact version's
     distinct shuffle."""
     return (
-        _t(spark, sf_dir)["events"]
+        register_views(spark, sf_dir)["events"]
         .groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.02).alias("approx_users"))
     )
@@ -408,7 +406,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 )
 def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS — single-pass multi-grouping (Catalyst Expand)."""
-    _t(spark, sf_dir)
+    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -431,7 +429,7 @@ def rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals via ``.rollup`` (CUBE is the same machinery
     with the full power set)."""
     return (
-        _t(spark, sf_dir)["lineitem"]
+        register_views(spark, sf_dir)["lineitem"]
         .rollup("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -458,7 +456,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
     return (
-        _t(spark, sf_dir)["orders"]
+        register_views(spark, sf_dir)["orders"]
         .withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= 3)
         .select(
@@ -487,7 +485,7 @@ def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        _t(spark, sf_dir)["orders"]
+        register_views(spark, sf_dir)["orders"]
         .select(
             "o_custkey",
             "o_orderkey",
@@ -514,7 +512,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day_tse)
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day change per series via lag/lead."""
     daily = (
-        _t(spark, sf_dir)["events"]
+        register_views(spark, sf_dir)["events"]
         .groupBy(
             "event_type",
             F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("day_tse"),
@@ -544,7 +542,7 @@ def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k → TakeOrderedAndProject: per-partition heaps + driver
     merge of k rows, never a full sort at scale."""
     return (
-        _t(spark, sf_dir)["lineitem"]
+        register_views(spark, sf_dir)["lineitem"]
         .orderBy(
             F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber")
         )
@@ -563,7 +561,7 @@ SELECT s_nationkey FROM supplier
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of customer and supplier nation keys."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["customer"]
         .select(F.col("c_nationkey").alias("nationkey"))
@@ -581,7 +579,7 @@ SELECT s_nationkey FROM supplier
 """,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["customer"]
         .select(F.col("c_nationkey").alias("nationkey"))
@@ -620,7 +618,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_time_spine finding — the data inside is KBs).  At 100 TB the
     day domain stays ~2.5k rows/decade — the build side is
     constant-sized regardless of fact growth."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     ship = t["lineitem"].select(
         F.unix_timestamp(F.date_trunc("DAY", "l_shipdate"))
         .cast("bigint")
@@ -650,7 +648,7 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     `percentile_approx` (fixed-memory sketch) — exact needs the full sorted
     group."""
     return (
-        _t(spark, sf_dir)["orders"]
+        register_views(spark, sf_dir)["orders"]
         .groupBy("o_orderpriority")
         .agg(
             F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("p50"),
@@ -673,7 +671,7 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregate summation order differs between Spark and the
     oracle, so a row within an ulp of the raw mean could otherwise flip
     in/out of the result."""
-    _t(spark, sf_dir)
+    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice FROM orders

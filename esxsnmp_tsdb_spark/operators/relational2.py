@@ -11,13 +11,9 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions.skew import salted_agg
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, register_views
 
 SESSION_GAP_SEC = 1800
-
-
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
 
 
 @op(
@@ -47,9 +43,7 @@ def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization — lag-gap flag + running sum (the classic
     two-window formulation; one shuffle on path serves both windows).
     Batch twin of `stream_session`; gap == the heartbeat idea (§2.2)."""
-    from esxsnmp_tsdb_spark.functions import tsdb
-
-    obs = tsdb.obs_from_events(_t(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     w = Window.partitionBy("path").orderBy("tse", "event_id")
     # Cumsum ordered by the SAME total order as the boundary flag — a
     # tse tie at a session boundary must not reorder between engines.
@@ -91,7 +85,7 @@ def pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot to wide (explicit value list → single-pass, no extra job to
     discover columns) then unpivot back via ``stack`` — round-trips the
     long layout, proving both directions."""
-    li = _t(spark, sf_dir)["lineitem"]
+    li = register_views(spark, sf_dir)["lineitem"]
     wide = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -111,7 +105,7 @@ def approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     `percentiles`).  Rows-only: sketch output has no cross-engine oracle.
     """
     return (
-        _t(spark, sf_dir)["orders"]
+        register_views(spark, sf_dir)["orders"]
         .groupBy("o_orderpriority")
         .agg(
             F.percentile_approx("o_totalprice", 0.5, 10000).alias("p50_approx"),
@@ -137,7 +131,7 @@ def salted_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     where one reducer would otherwise own a whole key).  Result is
     identical to the direct group-by (the oracle computes it directly);
     only the task-size distribution changes."""
-    ev = _t(spark, sf_dir)["events"].select("event_type", "value")
+    ev = register_views(spark, sf_dir)["events"].select("event_type", "value")
     out = salted_agg(
         ev,
         keys=["event_type"],
@@ -174,7 +168,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes ntile's positional split deterministic under price ties.
     Same single-shuffle shape as every other window op."""
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    return _t(spark, sf_dir)["orders"].select(
+    return register_views(spark, sf_dir)["orders"].select(
         "o_orderkey",
         "o_orderpriority",
         F.ntile(4).over(w).cast("bigint").alias("quartile"),
@@ -230,7 +224,7 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a mirrored forward fill over ONE user_id shuffle (both window frames
     share the sort), then an arithmetic pick.  No inequality join, no
     explosion, no second shuffle."""
-    e = _t(spark, sf_dir)["events"].select(
+    e = register_views(spark, sf_dir)["events"].select(
         "event_id",
         "user_id",
         "event_type",
@@ -290,7 +284,7 @@ def array_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-group state is the distinct source set (bounded by domain
     cardinality); one shuffle, partial collect_set map-side."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     return docs.groupBy("lang").agg(
         F.countDistinct("source").alias("n_sources"),
         F.concat_ws(",", F.sort_array(F.collect_set("source"))).alias("sources_csv"),
@@ -323,7 +317,7 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  Distinct (order, part) first so duplicate lines don't inflate
     counts; top-{BASKET_TOP} is TakeOrdered on the counted aggregate."""
     li = (
-        _t(spark, sf_dir)["lineitem"]
+        register_views(spark, sf_dir)["lineitem"]
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -375,7 +369,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_cont parity, rounded before the strict compare so both
     engines cut every customer on the same side."""
     base = (
-        _t(spark, sf_dir)["orders"]
+        register_views(spark, sf_dir)["orders"]
         .groupBy("o_custkey")
         .agg(
             F.max(F.unix_timestamp("o_orderdate")).alias("recency_tse"),

@@ -31,10 +31,6 @@ from esxsnmp_tsdb_spark.sources import register_views
 NTILES = 10
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "window_ntile",
     oracle=f"""
@@ -63,7 +59,7 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the plan-audit invariant).  min/max per bucket avoids float
     summation entirely — the only doubles in the output are copied
     values, not accumulations."""
-    c = _t(spark, sf_dir)["customer"]
+    c = register_views(spark, sf_dir)["customer"]
     w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     d = c.select(
         "c_nationkey",
@@ -104,7 +100,7 @@ def grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank over the tiny (group, value) count table, and is the shape that
     scales: the fact table shuffles once on the composite key, and the
     rank input is |groups|·|values| rows, not facts."""
-    c = _t(spark, sf_dir)["customer"]
+    c = register_views(spark, sf_dir)["customer"]
     counts = c.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -150,7 +146,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side costs R× a dim scan (still tiny), the fact side shuffles once
     on (key, salt) — no single reducer sees more than ~1/R of any hot
     key."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     li = t["lineitem"].withColumn("salt", (F.col("l_linenumber") % SALT_R))
     orders = t["orders"].withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(SALT_R)]))
@@ -209,7 +205,7 @@ def skew_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus."""
     from esxsnmp_tsdb_spark.functions.topk import bounded_running, ranked_topk
 
-    ev = _t(spark, sf_dir)["events"]
+    ev = register_views(spark, sf_dir)["events"]
     c = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     t = c.agg(
         F.sum("n").cast("bigint").alias("total"),

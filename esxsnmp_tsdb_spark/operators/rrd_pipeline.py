@@ -45,11 +45,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
 )
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.session import local_frame
-from esxsnmp_tsdb_spark.sources import register_views
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 
 MICRO = 1_000_000
@@ -194,7 +190,7 @@ def ts_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     update_all_aggregates stored levels †) — the oracle recomputes the
     stored 1 h delta CF straight from raw, proving the composition, not
     just the stages."""
-    return ladder_full_pipeline(_obs(spark, sf_dir))
+    return ladder_full_pipeline(flat_obs(spark, sf_dir))
 
 
 @op(
@@ -228,7 +224,7 @@ def ts_flag_visibility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One partial-aggregated group-by on path; the bit tests are JVM
     bitwise expressions inside whole-stage codegen."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     flags2 = F.col("flags").bitwiseOR(
         F.when(F.col("event_id") % 7 == 0, F.lit(tsdb.ROW_HIDDEN)).otherwise(0)
     )
@@ -309,7 +305,7 @@ def stream_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine_dir = os.path.join(out, "fine")
     state_dir = os.path.join(out, "state")
 
-    obs = _obs(spark, sf_dir).select("path", "tse", "value", "event_id")
+    obs = flat_obs(spark, sf_dir).select("path", "tse", "value", "event_id")
     # Stage the source as three consecutive time slices (poller delivery
     # order; file mod-time + path order make the 1-file-per-trigger
     # stream consume them in sequence).

@@ -17,10 +17,6 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "scalar_string_funcs",
     oracle="""
@@ -35,7 +31,7 @@ FROM part
 """,
 )
 def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir)["part"].select(
+    return register_views(spark, sf_dir)["part"].select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
         F.substring("p_name", 1, 8).alias("name_prefix"),
@@ -61,7 +57,7 @@ FROM orders
 )
 def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = F.col("o_orderdate")
-    return _t(spark, sf_dir)["orders"].select(
+    return register_views(spark, sf_dir)["orders"].select(
         "o_orderkey",
         F.year(od).alias("order_year"),
         F.month(od).alias("order_month"),
@@ -87,7 +83,7 @@ FROM lineitem
 """,
 )
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir)["lineitem"].select(
+    return register_views(spark, sf_dir)["lineitem"].select(
         "l_orderkey",
         "l_linenumber",
         F.round(F.abs(F.col("l_extendedprice") - F.col("l_tax") * 1000), 4).alias(
@@ -114,7 +110,7 @@ FROM events
 def scalar_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction from the string `props` column (codegen'd path ops,
     no parse-to-struct materialization)."""
-    return _t(spark, sf_dir)["events"].select(
+    return register_views(spark, sf_dir)["events"].select(
         "event_id",
         F.get_json_object("props", "$.k").alias("k_str"),
         F.get_json_object("props", "$.k").cast("int").alias("k_int"),
@@ -140,7 +136,7 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops), all JVM-side."""
     emb = F.col("embedding")
     dbl = F.transform(emb, lambda x: x.cast("double"))
-    return _t(spark, sf_dir)["embeddings"].select(
+    return register_views(spark, sf_dir)["embeddings"].select(
         "vec_id",
         F.size(emb).cast("bigint").alias("dim"),
         F.round(F.element_at(emb, 1).cast("double"), 6).alias("first_elem"),
@@ -172,7 +168,7 @@ def scalar_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in their own right.  Spark's shiftleft/shiftright/bit_count line up
     with DuckDB's operators once popcount is cast (DuckDB TINYINT vs
     Spark int) — all map-side codegen."""
-    ev = _t(spark, sf_dir)["events"].filter(F.col("event_id") % 37 == 0)
+    ev = register_views(spark, sf_dir)["events"].filter(F.col("event_id") % 37 == 0)
     return ev.select(
         "event_id",
         F.col("event_id").bitwiseAND(255).alias("low_byte"),

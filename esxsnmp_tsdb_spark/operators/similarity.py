@@ -41,10 +41,6 @@ DOT_SQL = """list_sum(list_transform(range(1, {d} + 1),
     i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"""
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 def _dbl(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -74,7 +70,7 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans as TakeOrderedAndProject (per-partition k-row heaps + driver
     merge), so nothing shuffles the corpus and no single task sees more
     than its own partition."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
     )
@@ -193,7 +189,7 @@ def _lsh_bucket_expr(d: int):
 def _lsh_query(spark: SparkSession, sf_dir: str, probe_cond) -> DataFrame:
     """Bucket the corpus, broadcast the 1-row query, join on
     `probe_cond(bucket, qbucket)`, brute-force the survivors, top-k."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     bucketed = e.select(
         "vec_id",
         "label",
@@ -288,7 +284,7 @@ def knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join side.  float→double is exact, so every pair's cosine is
     # bit-identical; the join shuffles float64 arrays (2× bytes) but the
     # pair count, not the vector count, is what scales.
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id", "label", _dbl(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
     a = e.alias("a")
@@ -377,7 +373,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one O(d) transform per vector instead of two per (row, centroid)
     # scored pair and two per candidate — bit-identical (float→double is
     # exact).
-    e = _t(spark, sf_dir)["embeddings"].select(
+    e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id", "label", _dbl(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
     cent = e.filter(F.col("vec_id") % 50 == 0).select(
@@ -438,7 +434,7 @@ FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text + vector + labels in one frame (documents ⋈ embeddings on
     doc_id = vec_id) — the canonical multimodal training-data join."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     return (
         t["documents"]
         .join(t["embeddings"], F.col("doc_id") == F.col("vec_id"))
@@ -477,7 +473,7 @@ def embedding_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is partially combined before the one shuffle on
     (label, dim) — cardinality #labels x dim, independent of corpus
     size.  No vector is ever collected; the fold stays in codegen."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     return (
         e.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", (F.col("pos") + 1).cast("bigint").alias("dim"))
@@ -520,7 +516,7 @@ def sim_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only pass as `sim_search_topk` fanned out ×|batch|; the top-k is
     a window PARTITIONED BY query id — per-query state, never a global
     window, so corpus scale only widens the map stage."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") % BATCH_Q_MOD == 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )

@@ -73,10 +73,6 @@ def _sub_l2(a, b, m):
     )
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 _NORM_SQL = """list_transform({v}, x -> CAST(x AS DOUBLE) /
     sqrt(list_sum(list_transform({v}, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))"""
 
@@ -140,7 +136,7 @@ def vector_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k.  Per-vector encoding is independent of the cell layout, so
     the oracle's inline-encode formulation matches code for code."""
     root = build_ivf_pq_index(spark, sf_dir)
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     nrm = norm(_dbl(F.col("embedding")))
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.transform(F.col("embedding"), lambda x: x.cast("double") / nrm).alias(
@@ -200,7 +196,7 @@ def sim_search_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking tail of any kind — the result is as parallel as the scan, so
     this is the cheapest similarity op at any scale (and the kernel the
     LSH/IVF-pruned variants run per bucket)."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
     )
@@ -347,7 +343,7 @@ def sim_search_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     one oracle proves the composition end-to-end; every piece (cell
     assignment, codebooks, ADC) reuses the deterministic closed forms of
     `sim_search_ivf` and `vector_pq_adc`."""
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     nrm = norm(_dbl(F.col("embedding")))
     en = e.select(
         "vec_id",
@@ -444,7 +440,7 @@ def build_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_INDEX_READY")
     if os.path.exists(marker):
         return root
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     nrm = norm(_dbl(F.col("embedding")))
     en = e.select(
         "vec_id",
@@ -518,7 +514,7 @@ def sim_search_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast ADC table, TakeOrdered the top k.  Same oracle as the
     inline op: persistence must not change a single rank."""
     root = build_ivf_pq_index(spark, sf_dir)
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     nrm = norm(_dbl(F.col("embedding")))
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.transform(F.col("embedding"), lambda x: x.cast("double") / nrm).alias(
@@ -592,7 +588,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_INDEX_READY")
     if os.path.exists(marker):
         return root
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     bucketed = e.select(
         "vec_id",
         "label",
@@ -627,7 +623,7 @@ def sim_search_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = build_lsh_index(spark, sf_dir)
-    e = _t(spark, sf_dir)["embeddings"]
+    e = register_views(spark, sf_dir)["embeddings"]
     qrow = (
         e.filter(F.col("vec_id") == QUERY_VEC_ID)
         .select(

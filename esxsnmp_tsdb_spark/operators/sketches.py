@@ -22,18 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, register_views
 
 # |estimate − exact| ≤ exact / HLL_TOL_DIV must hold per scope (5 %:
 # default lgConfigK=12 gives ~1.6 % standard error, so 5 % is ~3σ).
 HLL_TOL_DIV = 20
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 @op(
@@ -70,7 +65,7 @@ def approx_distinct_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from `hll_union_agg` over the day sketches (the exact count beside
     it is the audit), so the merge path itself is what the oracle
     checks."""
-    base = _obs(spark, sf_dir).select(
+    base = flat_obs(spark, sf_dir).select(
         F.floor(F.col("tse") / 86400).cast("bigint").alias("day"), "path"
     )
     # One scan of obs feeds everything: the distinct (day, path) pairs
@@ -152,7 +147,7 @@ def ts_histogram_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized).  At 100 TB the day histograms persist next to the
     day partitions and a year-long distribution query reads 365 tiny
     rows per bucket instead of re-binning the corpus."""
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     b = obs.filter(F.col("flags") == 1).select(
         F.expr("tse div 86400").alias("day"),
         F.expr(

@@ -21,16 +21,11 @@ from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE, T_JAN10, T_JAN20
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 from esxsnmp_tsdb_spark.sources.compaction import write_obs
 from esxsnmp_tsdb_spark.sources.formats import read_obs, write_obs_as
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
 
 
 def _roundtrip_agg(df: DataFrame) -> DataFrame:
@@ -60,7 +55,7 @@ FROM obs GROUP BY split_part(path, '/', 2)
 
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     out = op_dir(f"obs_{fmt}")
-    write_obs_as(_obs(spark, sf_dir), fmt, out)
+    write_obs_as(flat_obs(spark, sf_dir), fmt, out)
     return _roundtrip_agg(read_obs(spark, fmt, out))
 
 
@@ -109,7 +104,7 @@ def storage_day_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-boundary arithmetic (UTC epoch-day) matches the second-level
     range exactly."""
     out = op_dir("obs_daypart")
-    write_obs(_obs(spark, sf_dir), out, mode="overwrite")
+    write_obs(flat_obs(spark, sf_dir), out, mode="overwrite")
     back = spark.read.parquet(out)
     return (
         back.filter(
@@ -150,7 +145,7 @@ def storage_retention_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     out = op_dir("obs_retention")
-    write_obs(_obs(spark, sf_dir), out, mode="overwrite")
+    write_obs(flat_obs(spark, sf_dir), out, mode="overwrite")
     cutoff_day = datetime.fromtimestamp(T_JAN10, timezone.utc).strftime("%Y-%m-%d")
     for d in os.listdir(out):
         if d.startswith("day=") and d.split("=", 1)[1] < cutoff_day:
@@ -191,7 +186,7 @@ def storage_compaction_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = op_dir("obs_compact")
     (
-        with_day(_obs(spark, sf_dir))
+        with_day(flat_obs(spark, sf_dir))
         .repartition(8)  # deliberately fragmented: ~8 files per partition
         .write.mode("overwrite")
         .partitionBy("day")

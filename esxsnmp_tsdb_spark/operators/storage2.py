@@ -45,7 +45,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
 )
 from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import BKT_OBS_TAG, flat_obs, register_views
 
 # Local projection of the 4096-bucket deployment layout (docs/CLUSTER.md):
 # one bucket per core, so a zero-exchange bucketed plan runs at the same
@@ -55,16 +55,6 @@ from esxsnmp_tsdb_spark.sources import register_views
 # locally despite the better plan).
 N_BUCKETS = 32
 ZBITS = 8  # Morton bits per dimension
-
-
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
-
-
-# Conf key recording which sf_dir the bkt_obs table was built from —
-# now owned by sources.catalog (the r12 routing side reads it there);
-# re-exported here for the stamping-side callers (bench_bucketed).
-from esxsnmp_tsdb_spark.sources import BKT_OBS_TAG  # noqa: E402
 
 
 def _bucketed_table(
@@ -101,11 +91,12 @@ def bucketed_obs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears (asserted in tests/test_storage2.py).  At 100 TB this is
     the difference between consolidating a day re-shuffling the fleet's
     ingest and consolidating it bucket-local."""
-    df = _bucketed_table(spark, _obs(spark, sf_dir), "bkt_obs", "path", "tse")
-    # Stamp what was just built so bench_bucketed.bucketed_obs can reuse
-    # the table without a rebuild per timed pass; stamped HERE (by the
-    # builder) so a direct rebuild for another sf_dir can never leave a
-    # stale tag pointing at the wrong fixture.
+    df = _bucketed_table(spark, flat_obs(spark, sf_dir), "bkt_obs", "path", "tse")
+    # Stamp what was just built so ``sources.load_obs`` routes onto it
+    # only for this sf_dir; stamped HERE (by the builder) so a rebuild
+    # for another sf_dir can never leave a stale tag pointing at the
+    # wrong fixture.  The source is always ``flat_obs``: a routed read
+    # would scan the very table the DROP above removes.
     spark.conf.set(BKT_OBS_TAG, sf_dir)
     return df
 
@@ -193,7 +184,7 @@ def storage_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-value is engine-local layout (Spark's hash feeds it) and never
     escapes: the oracle checks the VALUES straight off the fixture."""
     out = op_dir("zorder_obs")
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     zed = obs.withColumn(
         "zval",
         _morton(
@@ -249,7 +240,7 @@ def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate proves both generations surface in one scan with the
     new column NULL exactly where it predates the change."""
     out = op_dir("schema_evo")
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     old = obs.filter(F.col("tse") < T_JAN15_NOON).select("path", "tse", "value")
     new = obs.filter(F.col("tse") >= T_JAN15_NOON).select(
         "path", "tse", "value", F.col("flags").alias("quality")
@@ -327,7 +318,7 @@ def storage_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 
-    obs = _obs(spark, sf_dir)
+    obs = flat_obs(spark, sf_dir)
     base = obs.where(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20)
     ).withColumn("day", F.expr("tse div 86400"))

@@ -24,11 +24,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE, T_JAN10, T_JAN15_NOON
 from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import flat_obs
 
 N_RANGE_FILES = 16  # range-clustered output files (≈ daily-file granularity)
 
@@ -61,7 +60,7 @@ def storage_file_skipping_manifest(
     — a manifest that never skips is a bug, not a slow path."""
     out = op_dir("skip_manifest")
     data = os.path.join(out, "data")
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     (
         obs.repartitionByRange(N_RANGE_FILES, "tse")
         .sortWithinPartitions("tse")
@@ -148,7 +147,7 @@ def storage_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import shutil
 
-    obs = tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     base = obs.where(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20)
     ).withColumn("day", F.expr("tse div 86400"))
@@ -243,10 +242,7 @@ def storage_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: touched-day discovery is a distinct-aggregate over the
     subject's rows (tiny); each rewrite is one partition's scan minus
     one user; the proof scan aggregates the store once."""
-    from esxsnmp_tsdb_spark.functions import tsdb as _tsdb
-    from esxsnmp_tsdb_spark.sources import register_views as _rv
-
-    obs = _tsdb.obs_from_events(_rv(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     base = obs.where(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN20)
     ).withColumn("day", F.expr("tse div 86400"))

@@ -20,10 +20,6 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 @op(
     "text_tokenize_stats",
     oracle="""
@@ -38,7 +34,7 @@ FROM toks GROUP BY lang
 )
 def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token/vocabulary statistics per language (split → explode → agg)."""
-    toks = _t(spark, sf_dir)["documents"].select(
+    toks = register_views(spark, sf_dir)["documents"].select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
     )
     return toks.groupBy("lang").agg(
@@ -73,7 +69,7 @@ SELECT source, tok, tfidf, rn FROM (
 def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 terms per source by TF-IDF — explode + two aggregations + a
     broadcast DF join + per-source window.  No MLlib: plain log math."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
     tf = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("tok").agg(F.countDistinct("source").alias("df"))
@@ -109,7 +105,7 @@ FROM documents GROUP BY lang, source
 def lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus composition: docs + char mass per (lang, source)."""
     return (
-        _t(spark, sf_dir)["documents"]
+        register_views(spark, sf_dir)["documents"]
         .groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -149,7 +145,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     + mean word length buckets).  A real model would load per-language
     trigram profiles; the classifier shape — per-doc feature map + CASE
     decision, no shuffle — is what matters at corpus scale."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     n = F.length("text").cast("double")
     vowels = (
         F.length("text") - F.length(F.regexp_replace("text", "[aeiou]", ""))
@@ -197,7 +193,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: length / digit-ratio / charset-cleanliness
     features folded into one bounded score — the filter stage of a
     pretraining pipeline (map-only at scale)."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     n_ch = F.length("text").cast("double")
     n_tok = F.size(F.split("text", " ")).cast("double")
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
@@ -229,7 +225,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish estimate (≈4 chars per
     subword piece, the standard back-of-envelope) — the budget accountant
     of every training-data pipeline."""
-    toks = _t(spark, sf_dir)["documents"].select(
+    toks = register_views(spark, sf_dir)["documents"].select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )
     return toks.groupBy("doc_id").agg(
@@ -259,7 +255,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc signature for shard-level dedup bookkeeping."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    toks = fan_out(_t(spark, sf_dir)["documents"]).select(
+    toks = fan_out(register_views(spark, sf_dir)["documents"]).select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
     )
     hashed = toks.select("doc_id", F.expr(_hex16("tok")).alias("h"))
@@ -294,7 +290,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny relative to the corpus (Heaps' law), so at 100 TB it broadcasts
     and the scoring pass stays map-side — the token count `n` rides along
     as a 1-row broadcast cross join."""
-    toks = _t(spark, sf_dir)["documents"].select(
+    toks = register_views(spark, sf_dir)["documents"].select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
@@ -334,7 +330,7 @@ def text_stopword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios'): natural prose carries a stable stopword fraction; keyword
     soup and boilerplate don't.  Map-only explode + one per-doc aggregate;
     the stopword set is a literal IN-list, constant-folded into codegen."""
-    toks = _t(spark, sf_dir)["documents"].select(
+    toks = register_views(spark, sf_dir)["documents"].select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
     )
     is_stop = F.col("tok").isin(*STOPWORDS).cast("long")
@@ -389,7 +385,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams and drop from the join, matching the oracle."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs = fan_out(_t(spark, sf_dir)["documents"])
+    docs = fan_out(register_views(spark, sf_dir)["documents"])
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     per_doc = tf.groupBy("doc_id").agg(
@@ -476,7 +472,7 @@ def bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same plan serves real queries: nothing depends on the
     term list being small except the broadcast, and a large term set
     degrades to a shuffled join on `tok` — never to a scan per term."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     dl = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl")
     )
@@ -586,7 +582,7 @@ def term_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the same floor(x·10⁴+0.5).  One shuffle on (lang, tok) for the
     counts, one bounded per-lang window, one partial-aggregated shuffle
     on lang for the five sums — all map-side combinable at 100 TB."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     tf = (
         docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("lang", "tok")

@@ -33,10 +33,6 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}"
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 # Staged text: fixture text + two deterministic PII tokens per doc.
 _STAGED_SQL = """concat(text, ' contact user', doc_id, '@example.com from ',
                  '10.0.', doc_id % 256, '.', doc_id % 100)"""
@@ -73,7 +69,7 @@ def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubber removes exactly those.  Map-only: regex masking in
     whole-stage codegen, no shuffle, and the masked text leaves the
     executor only as an md5."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     staged = docs.select("doc_id", "source", F.expr(_STAGED_SQL).alias("t"))
     clean = F.regexp_replace(
         F.regexp_replace(F.col("t"), EMAIL_RE, "<EMAIL>"), IPV4_RE, "<IP>"
@@ -137,7 +133,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles once (the explode) and the model tables never grow with
     corpus size — at 100 TB the counts become the static side of a
     broadcast join exactly as written here."""
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     toks = docs.select("doc_id", F.split("text", " ").alias("ts"))
     bgf = (
         toks.filter(F.size("ts") >= 2)

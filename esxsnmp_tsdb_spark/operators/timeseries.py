@@ -27,13 +27,6 @@ from esxsnmp_tsdb_spark.sources import (
 )
 
 
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed loader (VERDICT r11 item 3): flat events-derived obs by
-    # default (identical call chain to pre-r12); the bucketed bkt_obs
-    # layout when sources.ROUTE_BUCKETED_CONF is opted in.
-    return load_obs(spark, sf_dir)
-
-
 def _obs_range(spark: SparkSession, sf_dir: str, begin: int, end: int) -> DataFrame:
     """Obs restricted to [begin, end) with the predicate pushed to the
     parquet scan (raw nanos column — see ``sources.load_events_range``)."""
@@ -93,7 +86,7 @@ SELECT path, tse, value FROM obs WHERE (flags & 1) != 0
 )
 def ts_flag_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drop rows without ROW_VALID (``tsdb/row.py · ROW_VALID`` †)."""
-    return tsdb.valid_only(_obs(spark, sf_dir)).select("path", "tse", "value")
+    return tsdb.valid_only(load_obs(spark, sf_dir)).select("path", "tse", "value")
 
 
 @op(
@@ -110,7 +103,7 @@ SELECT path, slot, tse, value FROM (
 )
 def ts_slot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-write-wins per (path, slot) — ``TSDBVar.insert`` overwrite †."""
-    return tsdb.slot_dedup(_obs(spark, sf_dir), STEP).select(
+    return tsdb.slot_dedup(load_obs(spark, sf_dir), STEP).select(
         "path", "slot", "tse", "value"
     )
 
@@ -138,7 +131,7 @@ FROM grid g LEFT JOIN observed o ON g.path = o.path AND g.slot = o.slot
 def ts_time_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense slot grid with empty slots materialized as invalid rows —
     ``TSDBVar.select`` returning invalid rows for never-written slots †."""
-    spine = tsdb.time_spine(_obs(spark, sf_dir), T_JAN10, T_JAN11, BUCKET)
+    spine = tsdb.time_spine(load_obs(spark, sf_dir), T_JAN10, T_JAN11, BUCKET)
     return spine.select(
         "path", "slot", F.round("average", 6).alias("average"), "n", "valid"
     )
@@ -160,7 +153,7 @@ def ts_series_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     set/var tree is recovered from the flattened path key (SURVEY.md §1.2).
     """
     return (
-        _obs(spark, sf_dir)
+        load_obs(spark, sf_dir)
         .groupBy(
             F.split_part(F.col("path"), F.lit("/"), F.lit(1)).alias("set_name"),
             F.split_part(F.col("path"), F.lit("/"), F.lit(2)).alias("var_name"),
@@ -190,7 +183,7 @@ def ts_metadata_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     row: fixed declaration (type/step/heartbeat) + maintained min/max/last.
     """
     return (
-        _obs(spark, sf_dir)
+        load_obs(spark, sf_dir)
         .groupBy("path")
         .agg(
             F.lit("Gauge32").alias("type_id"),

@@ -23,10 +23,6 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 def _rev():
     """Per-row revenue expression (built lazily: Column construction
     needs an active SparkContext, and this module imports at registry
@@ -54,7 +50,7 @@ LIMIT 10
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shipping priority: σ on both fact inputs pushes to the scans,
     customer is broadcast, top-10 is TakeOrdered on the rounded revenue."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     cust = t["customer"].filter(F.col("c_mktsegment") == "BUILDING")
     orders = t["orders"].filter(F.col("o_orderdate") < "1996-03-15")
     li = t["lineitem"].filter(F.col("l_shipdate") > "1996-03-15")
@@ -91,7 +87,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on orderkey; customer/supplier/nation/region are broadcast
     dims; the c_nationkey = s_nationkey condition rides the supplier join.
     """
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     orders = t["orders"].filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
@@ -127,7 +123,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 forecast revenue: pure σ+Σ — everything pushes to the scan; the
     canonical 'is pushdown working' query."""
-    li = _t(spark, sf_dir)["lineitem"]
+    li = register_views(spark, sf_dir)["lineitem"]
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -165,7 +161,7 @@ LIMIT 20
 def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 returned-item reporting: selective returnflag σ, then customer
     rollup and top-20 on rounded revenue."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     orders = t["orders"].filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
@@ -198,7 +194,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-09-01'
 )
 def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 promotion effect: broadcast part, conditional aggregation."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     li = t["lineitem"].filter(
         (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
     )
@@ -233,7 +229,7 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 large-volume customers: HAVING pre-aggregate as a semi-join
     filter (the IN-subquery becomes a broadcast semi-join of the small
     qualifying-order set — no re-aggregation of the full fact)."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     big = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -276,7 +272,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19 discounted revenue: disjunction of conjunctive ranges — the OR
     stays a single post-join filter; common subexpressions (the join key)
     still prune columns at both scans."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     q = F.col("l_quantity")
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & q.between(1, 20))
@@ -316,7 +312,9 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 pricing summary: the full six-aggregate group-by over the fact
     (not just the `hash_aggregate` shape) — map-side partial aggregation
     collapses the fact to #(flag,status) groups before the one shuffle."""
-    li = _t(spark, sf_dir)["lineitem"].filter(F.col("l_shipdate") <= "1996-12-01")
+    li = register_views(spark, sf_dir)["lineitem"].filter(
+        F.col("l_shipdate") <= "1996-12-01"
+    )
     disc = _rev()
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -348,7 +346,7 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     module docstring).  The EXISTS plans as a left-semi join whose
     condition carries the correlated predicate; the date sigma on orders
     pushes to the scan, so the semi-join probe side is 3 quarters small."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     orders = t["orders"].filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
@@ -396,7 +394,7 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order) plus one left-anti join (no OTHER supplier was late), both
     shuffling only (orderkey, suppkey, date) triples, never the wide fact.
     Top-k is TakeOrderedAndProject on (count, name)."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     l1 = (
         t["lineitem"]
@@ -463,7 +461,7 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 volume shipping between two nations: the nation pair disjunction
     rides the (broadcast) nation joins; the fact shuffles once on
     orderkey.  Nation names adapt to the fixture's NATION_<k> values."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     n1 = t["nation"].select(
         F.col("n_nationkey").alias("n1key"), F.col("n_name").alias("supp_nation")
     )
@@ -511,7 +509,7 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-condition filter (NOT an o-side WHERE — customers with zero
     qualifying orders must survive with count 0), then a second tiny
     aggregate over the per-customer counts."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     orders = t["orders"].filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         t["customer"]
@@ -543,7 +541,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row max, broadcast back as the filter) — Catalyst plans the scalar
     as a subquery over the same shuffle output.  Revenue is rounded
     BEFORE the max/equality so the winner is engine-stable."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     rev = (
         t["lineitem"]
         .filter(
@@ -577,7 +575,7 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates into a per-part aggregate joined back to the fact (the
     explicit formulation here — same shape Catalyst produces for the
     subquery).  Threshold rounded on both engines before the compare."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     li = t["lineitem"]
     per_part = li.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         F.round(0.2 * F.avg("l_quantity"), 4).alias("qty_thresh")
@@ -616,7 +614,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS excluded nobody).  Scalar subquery broadcast + left-anti
     join + rollup, the Q22 plan shape intact.  Threshold rounded on both
     engines."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     avg_bal = (
         t["customer"]
         .filter(F.col("c_acctbal") > 0)
@@ -664,7 +662,7 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 national market share: 8-way join where every non-fact input is
     a broadcast dim; the supplier-nation CASE rides the aggregate (one
     pass, conditional numerator / unconditional denominator)."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     n1 = t["nation"].select(
         F.col("n_nationkey").alias("n1key"), F.col("n_regionkey").alias("n1region")
     )

@@ -41,10 +41,6 @@ from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return register_views(spark, sf_dir)
-
-
 # DuckDB twin of _partsupp() below (keep in lockstep!).
 PARTSUPP_CTE = """ps0 AS (
   SELECT p_partkey AS ps_partkey,
@@ -168,7 +164,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation/region are broadcast; the min-cost equality join is exact
     because ps_supplycost is bit-identical on both engines.  Adapted:
     p_type = 'LARGE' (fixture types have no BRASS), p_mfgr derived."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     eu_ps = (
         _partsupp(t)
         .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("ps_suppkey"))
@@ -227,7 +223,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale).  The (partkey, suppkey) partsupp join keeps only
     catalog-linked lineitems — the fixture adaptation of TPC-H's
     referential guarantee.  Profit sum rounded on both engines."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     part = t["part"].filter(F.col("p_name").like("%widget%"))
     return (
         t["lineitem"]
@@ -283,7 +279,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     would empty out as |part| grows).  The scalar average is a broadcast
     1-row reuse of the same aggregate.  Rounded before compare on both
     engines so ulp-level sum order can't flip membership."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     nat = t["nation"].filter(F.col("n_name").isin("NATION_3", "NATION_7"))
     per_part = (
         _partsupp(t)
@@ -330,7 +326,7 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the orderkey shuffle join, priority split is conditional
     aggregation.  The derived dates feed only same-engine comparisons —
     never the output — so engine date-type differences can't leak."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     li = (
         _lineitem_ext(t)
         .filter(F.col("l_shipmode").isin("MAIL", "SHIP"))
@@ -374,7 +370,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-anti join against the excluded-supplier list (the fixture
     substitute for '%Complaints%': s_suppkey % 10 = 0), then distinct
     count per (brand, type, size).  All inputs are part-scale dims."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     part = t["part"].filter(
         (F.col("p_brand") != "Brand#23")
         & (F.col("p_type") != "PROMO")
@@ -427,7 +423,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is exact on both engines (no rounding needed).  The fact
     aggregate shuffles once on (partkey, suppkey); everything else is
     broadcast."""
-    t = _t(spark, sf_dir)
+    t = register_views(spark, sf_dir)
     qty = (
         t["lineitem"]
         .filter(

@@ -83,13 +83,13 @@ from esxsnmp_tsdb_spark.operators.dedup import (
     _minhash_sigs,
     _pairs_from_sigs,
     _shingled,
-    _t,
     pairs_sql,
     shingle_sql,
     sigs_sql,
 )
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
 from esxsnmp_tsdb_spark.registry import op
+from esxsnmp_tsdb_spark.sources import register_views
 
 MIX_LANGS = ("de", "en", "es", "fr")
 MIX_MIN_CHARS = 200
@@ -232,7 +232,7 @@ def pipeline_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm share of the total sampled tokens."""
     from esxsnmp_tsdb_spark.session import fan_out
 
-    docs = _t(spark, sf_dir)["documents"]
+    docs = register_views(spark, sf_dir)["documents"]
     corpus = fan_out(_mix_corpus(docs))
 
     quality = corpus.filter(

@@ -378,12 +378,7 @@ def load_all() -> None:
     if _loaded:
         return
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # Allow partial builds while modules land; anything else raises.
-            if mod.rsplit(".", 1)[-1] not in str(exc):
-                raise
+        importlib.import_module(mod)
     _loaded = True
 
 

@@ -3,6 +3,7 @@ from esxsnmp_tsdb_spark.sources.catalog import (
     OBS_COLUMNS,
     ROUTE_BUCKETED_CONF,
     TABLES,
+    flat_obs,
     load_events_range,
     load_obs,
     load_table,
@@ -14,6 +15,7 @@ __all__ = [
     "OBS_COLUMNS",
     "ROUTE_BUCKETED_CONF",
     "TABLES",
+    "flat_obs",
     "load_events_range",
     "load_obs",
     "load_table",

@@ -56,9 +56,8 @@ TS_COLS: dict[str, tuple[str, ...]] = {
 _VIEW_TAG = "spark.esxsnmp_tsdb.viewSfDir"
 
 # Conf key recording which sf_dir the bkt_obs table was built from —
-# stamped by ``storage2.bucketed_obs_table`` (which re-exports this
-# constant), read here and by ``bench_bucketed.bucketed_obs`` to skip
-# rebuilds and to refuse cross-fixture routing.
+# stamped by ``storage2.bucketed_obs_table``, read by ``load_obs`` to
+# refuse cross-fixture routing.
 BKT_OBS_TAG = "spark.esxsnmp_tsdb.bktObsSfDir"
 
 # Opt-in bucketed-obs routing.  Default OFF: the
@@ -76,14 +75,23 @@ ROUTE_BUCKETED_CONF = "spark.esxsnmp_tsdb.routeBucketedObs"
 OBS_COLUMNS = ("path", "tse", "value", "flags", "event_id")
 
 
-def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The observation table for the §2.1/§2.2 operator family.
+def flat_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The observation table derived from the events fixture (registering
+    the fixture temp views on the way).  Operators outside the routed
+    §2.1/§2.2 family read obs only through here; so does
+    ``storage2.bucketed_obs_table``, which must never read the bucketed
+    table it is about to drop and rewrite."""
+    from esxsnmp_tsdb_spark.functions import tsdb
 
-    Flat path (default): derive obs from the events fixture exactly as
-    every round before r12 did — this branch is call-for-call identical
-    to the old per-module ``_obs`` helpers, so driver-facing values and
-    plans are unchanged (pinned by the byte-exact shuffle diff,
-    docs/SHUFFLE_r12.json).
+    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+
+
+def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The observation table for the routed §2.1/§2.2 operator family
+    (``timeseries``, ``aggregator``, ``aggregator2``, ``analytics``).
+
+    Flat path (default): ``flat_obs`` — what the driver's vanilla
+    session and its DuckDB oracle read.
 
     Routed path (``ROUTE_BUCKETED_CONF`` = "true", opt-in): serve
     ``bkt_obs`` — the SURVEY §4 bucketBy(hash(path)).sortBy(path, tse)
@@ -94,8 +102,6 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table must still exist (a stale stamp after an external DROP falls
     back to flat).  Value parity flat-vs-routed is pinned for every
     routed op in tests/test_bucketed_routing.py."""
-    from esxsnmp_tsdb_spark.functions import tsdb
-
     tune_on_first_use(spark)
     if (spark.conf.get(ROUTE_BUCKETED_CONF, "false") or "").lower() == "true":
         try:
@@ -104,7 +110,7 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
             built_for = None
         if built_for == sf_dir and spark.catalog.tableExists("bkt_obs"):
             return spark.table("bkt_obs").select(*OBS_COLUMNS)
-    return tsdb.obs_from_events(register_views(spark, sf_dir)["events"])
+    return flat_obs(spark, sf_dir)
 
 
 # Per-session memo: (session -> {key: (stamp, value)}).  It holds lazy

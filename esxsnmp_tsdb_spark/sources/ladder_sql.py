@@ -86,9 +86,8 @@ def register_ladder_store(
     day partitions that changed."""
     import os
 
-    from esxsnmp_tsdb_spark.functions.tsdb import obs_from_events
     from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-    from esxsnmp_tsdb_spark.sources.catalog import register_views
+    from esxsnmp_tsdb_spark.sources.catalog import flat_obs
 
     root = op_dir(
         "ladder_store__" + sf_dir.strip("/").replace("/", "_"), fresh=False
@@ -103,7 +102,7 @@ def register_ladder_store(
             )
             out[step] = name
         return out
-    obs = obs_from_events(register_views(spark, sf_dir)["events"])
+    obs = flat_obs(spark, sf_dir)
     out = materialize_ladder(spark, obs, root, levels)
     with open(marker, "w") as fh:
         fh.write("ok\n")

@@ -6,25 +6,67 @@ Round dir from $SPARK_GRAFT_PLANS_ROUND (default r14).
 Writes plans/<round>/<key>_<suffix>.txt for each headline key (or the given
 keys).  Plan-only — nothing is executed, so it is safe to run while other
 work shares the host.
+
+       python scripts/dump_plans.py --all-json <out.json>
+Writes the "simple" plan of every registered non-``stream_*`` op to one
+JSON object (key -> plan), with per-process ids normalized, so two runs —
+or a parent and a change — compare with ``cmp``.  Building an op may run
+its eager checkpoints, so this mode does execute Spark jobs.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from esxsnmp_tsdb_spark import registry
+from esxsnmp_tsdb_spark.plans import plan_str
 from esxsnmp_tsdb_spark.session import get_session
+
+# Per-process noise in a plan string: expression ids, Connect plan ids,
+# per-session scratch dirs and the uuids in written part-file names.
+_NORMALIZE = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"esxsnmp_tsdb_work_\w+"), "esxsnmp_tsdb_work_X"),
+    (re.compile(r"part-\d+-[0-9a-f-]*"), "part-X"),
+)
+
+
+def normalized_plan(df) -> str:
+    plan = plan_str(df, "simple")
+    for pattern, repl in _NORMALIZE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def dump_all_json(out_path: str, sf_dir: str) -> None:
+    spark = get_session("dump_plans")
+    queries = registry.queries()
+    plans = {
+        key: normalized_plan(queries[key](spark, sf_dir))
+        for key in sorted(queries)
+        if not key.startswith("stream_")
+    }
+    with open(out_path, "w") as fh:
+        json.dump(plans, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    print("wrote", len(plans), "plans to", out_path)
 
 
 def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if sys.argv[1] == "--all-json":
+        dump_all_json(sys.argv[2], sf_dir)
+        return
     suffix = sys.argv[1]
     import bench
 
     keys = sys.argv[2:] or bench.HEADLINE
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
@@ -35,9 +77,7 @@ def main() -> None:
     queries = registry.queries()
     for key in keys:
         df = queries[key](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_str(df, "formatted")
         with open(os.path.join(out_dir, f"{key}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print("wrote", key)

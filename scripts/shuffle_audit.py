@@ -12,7 +12,7 @@ whose map-side combine folds the fan-out before the wire, a broadcast
 join whose build side is dimension-sized.  Run after a round's changes:
 
     python scripts/shuffle_audit.py                    # headline ops
-    python scripts/shuffle_audit.py --bucketed         # + bucketed twins
+    python scripts/shuffle_audit.py --bucketed         # + routed window family
 
 Prints one JSON line per run; the round commits it as
 docs/SHUFFLE_r{N}.json.  Execution is JVM-side only
@@ -101,8 +101,8 @@ def main() -> int:
     ap.add_argument(
         "--bucketed",
         action="store_true",
-        help="also audit the bucketed obs-layout twins next to their "
-        "flat forms (bench_bucketed.OBS_PARAMETRIC)",
+        help="also audit the registered bench.BUCKETED_KEYS ops with "
+        "sources.load_obs routed onto the bucketed obs layout",
     )
     ap.add_argument(
         "--all",
@@ -135,14 +135,19 @@ def main() -> int:
             out["ops"][key] = {"error": f"{type(e).__name__}: {e}"[:200]}
 
     if args.bucketed:
-        from esxsnmp_tsdb_spark.operators.bench_bucketed import (
-            OBS_PARAMETRIC,
-            bucketed_variant,
-        )
+        from bench import BUCKETED_KEYS
+        from esxsnmp_tsdb_spark.operators.storage2 import bucketed_obs_table
+        from esxsnmp_tsdb_spark.sources import ROUTE_BUCKETED_CONF
 
-        out["bucketed"] = {}
-        for key in OBS_PARAMETRIC:
-            out["bucketed"][key] = audit(bucketed_variant(spark, SF_DIR, key))
+        bucketed_obs_table(spark, SF_DIR)
+        spark.conf.set(ROUTE_BUCKETED_CONF, "true")
+        try:
+            out["bucketed"] = {
+                key: audit(registry.QUERIES[key](spark, SF_DIR))
+                for key in BUCKETED_KEYS
+            }
+        finally:
+            spark.conf.unset(ROUTE_BUCKETED_CONF)
 
     print(json.dumps(out))
     return 0

@@ -97,22 +97,51 @@ def test_cross_fixture_stamp_refuses_routing(spark, bkt):
         _routed(spark, "false")
 
 
-def test_consolidation_shapes_lose_their_exchanges(spark, bkt):
-    """The headline win: groupBy(path, slot) consolidation over the
-    routed layout plans with ZERO exchanges (bucket hash on path covers
-    the grouping key)."""
-    key = "ts_downsample_avg"
-    _routed(spark, "false")
-    flat_ex = plan_str(registry.QUERIES[key](spark, SF), "simple").count(
-        "Exchange"
-    )
+def test_rebuild_never_reads_the_routed_table(spark, bkt, monkeypatch):
+    """``bucketed_obs_table`` drops bkt_obs and rewrites it, so its source
+    must be the events fixture even while routing is on and the table is
+    stamped for this sf_dir — a routed read would scan the table the
+    DROP removes."""
+    from esxsnmp_tsdb_spark.operators import storage2
+
+    sources = []
+    write = storage2._bucketed_table
+
+    def spy(spark, df, *args):
+        sources.append(plan_str(df, "simple"))
+        return write(spark, df, *args)
+
+    monkeypatch.setattr(storage2, "_bucketed_table", spy)
+    assert spark.conf.get(BKT_OBS_TAG) == SF
     _routed(spark, "true")
     try:
-        routed_plan = plan_str(registry.QUERIES[key](spark, SF), "simple")
+        rebuilt = storage2.bucketed_obs_table(spark, SF).count()
     finally:
         _routed(spark, "false")
-    assert "bkt_obs" in routed_plan
-    assert routed_plan.count("Exchange") == 0 < flat_ex
+    assert len(sources) == 1
+    assert "events.parquet" in sources[0]
+    assert "bkt_obs" not in sources[0]
+    assert rebuilt == load_obs(spark, SF).count()
+
+
+def test_consolidation_shapes_lose_their_exchanges(spark, bkt):
+    """The headline win: the per-series windows and the groupBy(path,
+    slot) consolidations over the routed layout plan with ZERO exchanges
+    (bucket hash on path covers the partition/grouping key).  ts_bin_split
+    is routed too, but keeps the exchange of its explicit fan_out
+    repartition."""
+    for key in ("ts_slot_dedup", "ts_rate", "ts_downsample_avg", "ts_agg_cascade"):
+        _routed(spark, "false")
+        flat_ex = plan_str(registry.QUERIES[key](spark, SF), "simple").count(
+            "Exchange"
+        )
+        _routed(spark, "true")
+        try:
+            routed_plan = plan_str(registry.QUERIES[key](spark, SF), "simple")
+        finally:
+            _routed(spark, "false")
+        assert "bkt_obs" in routed_plan, key
+        assert routed_plan.count("Exchange") == 0 < flat_ex, key
 
 
 @pytest.mark.parametrize("key", _routed_keys())

@@ -5,6 +5,8 @@ next, then (3) the STALEST previous attestations — keys whose latest driver
 hash is oldest (`_HASH_ROUND`), oldest-first.  Without (3) the window would
 re-hash the same lowest-registration-index cohort every round."""
 
+import pytest
+
 from esxsnmp_tsdb_spark import registry
 
 
@@ -47,3 +49,18 @@ def test_window_is_full_and_fresh():
         if k in queue or k not in registry._ATTESTED:
             continue
         assert registry._LAST_HASHED[k] < latest, k
+
+
+def test_missing_operator_module_raises(monkeypatch):
+    # load_all imports every listed module; a missing module (or a
+    # missing dependency of one) must fail loudly, never silently drop
+    # that module's ops from queries()
+    registry.load_all()
+    monkeypatch.setattr(
+        registry,
+        "_OPERATOR_MODULES",
+        registry._OPERATOR_MODULES + ("esxsnmp_tsdb_spark.operators.no_such_ops",),
+    )
+    monkeypatch.setattr(registry, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError):
+        registry.load_all()

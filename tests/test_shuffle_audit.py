@@ -36,11 +36,18 @@ def test_audit_zero_for_scan_only_plan(spark):
 
 
 def test_bucketed_twin_shuffles_zero_bytes(spark):
-    # the metrics-level form of test_variant_plans_zero_exchanges: the
-    # bucketed obs layout moves NOTHING over the wire
-    from esxsnmp_tsdb_spark.operators.bench_bucketed import bucketed_variant
+    # the metrics-level form of the routed zero-exchange plan test: the
+    # registered op routed onto the bucketed obs layout moves NOTHING
+    # over the wire
+    from esxsnmp_tsdb_spark.operators.storage2 import bucketed_obs_table
+    from esxsnmp_tsdb_spark.sources import ROUTE_BUCKETED_CONF
 
-    a = audit(bucketed_variant(spark, SF, "ts_agg_cascade"))
+    bucketed_obs_table(spark, SF)
+    spark.conf.set(ROUTE_BUCKETED_CONF, "true")
+    try:
+        a = audit(registry.QUERIES["ts_agg_cascade"](spark, SF))
+    finally:
+        spark.conf.unset(ROUTE_BUCKETED_CONF)
     assert a["exchanges"] == 0
     assert a["shuffle_bytes"] == 0
     assert a["result_rows"] > 0
