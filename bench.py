@@ -36,13 +36,11 @@ HEADLINE = [
     "tpch_q3",              # §2.4 3-way join + top-k
     "tpch_q5",              # §2.4 6-way join
     "tpch_q18",             # §2.4 HAVING semi-join
-    # Round 11 (VERDICT r10 item 6): the two most expensive registered
-    # TPC-H shapes join the steal-guarded headline so the per-query
-    # guard history starts now — q9 is the widest multi-join (6 tables,
-    # part-filtered fact explosion), q21 stacks semi- + anti-join over a
-    # self-joined lineitem; both are the shapes most likely to catch a
-    # join-strategy regression first.  Safe to add: the guard seeds
-    # per-query history, so growing the set never resets it.
+    # The two most expensive registered TPC-H shapes: q9 is the widest
+    # multi-join (6 tables, part-filtered fact explosion), q21 stacks
+    # semi- + anti-join over a self-joined lineitem; both are the shapes
+    # most likely to catch a join-strategy regression first.  The guard
+    # seeds per-query history, so growing the set never resets it.
     "tpch_q9",              # §2.4 6-way join + profit rollup
     "tpch_q21",             # §2.4 semi+anti self-join stack
     "hash_join_inner",      # §2.4 fact⋈dim shuffle join
@@ -55,7 +53,7 @@ HEADLINE = [
     "sim_search_topk",      # §2.5 vector top-k
     "text_tokenize_stats",  # §2.5 explode-aggregate
     "multimodal_decode",    # §2.5 Pandas-UDF path
-    # The 5 slowest full-sweep ops (VERDICT r4 item 8): the dedup-eval /
+    # The 5 slowest full-sweep ops: the dedup-eval /
     # clustering family now rides the same steal-guarded min-of-N
     # discipline as the rest of the headline, so a reuse regression in
     # the checkpointed signature/cell stages shows up per-round.
@@ -99,7 +97,7 @@ def materialize(df) -> None:
 def read_steal_s() -> float | None:
     """Host-wide CPU steal (seconds since boot) from /proc/stat — the
     mechanical form of the host-noise evidence BASELINE.md carries in
-    prose (VERDICT r6 item 7): a bench record with high steal delta is a
+    prose: a bench record with high steal delta is a
     noisy-host record, and a future reader can verify that from the
     artifact instead of trusting the narrative."""
     try:
@@ -127,10 +125,10 @@ def main() -> None:
             "ingest_batch_append"
         }
         bench_set = sorted(k for k in queries if k not in skip)
-        # Seed-randomized sweep order (VERDICT r11 item 4): the sweep is
-        # single-pass, so with alphabetical order any late-run host steal
-        # always lands on the same ops (the `ts_*` tail), masquerading as
-        # a family regression (r11's phantom storage_* movers).  A seeded
+        # Seed-randomized sweep order: the sweep is single-pass, so with
+        # alphabetical order any late-run host steal always lands on the
+        # same ops (the `ts_*` tail), masquerading as a family
+        # regression.  A seeded
         # shuffle de-correlates op identity from run position while
         # keeping the order reproducible: the seed is recorded in the
         # artifact, and diff_sweep.py compares per-op times by KEY, so
@@ -167,7 +165,7 @@ def main() -> None:
             # from bleeding into the next measurement (one local JVM).
             spark.sparkContext._jvm.System.gc()
 
-    # Steal guard (VERDICT r3, r5 item 2): this VM sees sporadic host CPU
+    # Steal guard: this VM sees sporadic host CPU
     # steal, so a slow run must be distinguished from a slow build.  The
     # guard seeds a PER-QUERY historical best map from every prior BENCH
     # record at the same sf — not just records whose headline set matches
@@ -186,7 +184,7 @@ def main() -> None:
 
         here = os.path.dirname(os.path.abspath(__file__))
         # Driver records at the root PLUS the committed quiet-window
-        # smoke records under docs/ (VERDICT r12 item 7): the smoke
+        # smoke records under docs/: the smoke
         # floor is this host's true historical best — seeding the guard
         # from it re-pins suspects against the quiet floor instead of a
         # steal-inflated driver record.
@@ -363,7 +361,7 @@ def main() -> None:
         }
     )
     print(line)
-    # Full-sweep runs persist their per-op table (VERDICT r5 item 6) so a
+    # Full-sweep runs persist their per-op table so a
     # tail regression in an unbenched op is diffable round-over-round
     # instead of living only in BASELINE.md prose.
     if os.environ.get("SPARK_GRAFT_BENCH_ALL") == "1":

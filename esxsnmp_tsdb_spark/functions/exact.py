@@ -19,11 +19,10 @@ which matches DuckDB's ``round()`` tie behavior on .5 exactly — Spark's
 ``round`` on DOUBLE rounds half-even under the hood often enough to flip a
 last digit, which is why the division never happens in doubles at all.
 
-By round 10 this idiom had been copy-typed into ~10 analytics/text ops
-(VERDICT r10 "residual watch": one drifting copy away from a wrong-tie
-bug).  These builders generate the SQL snippet instead; the per-site
-scaling (``mul``) and the signedness choice stay at the call site, the
-arithmetic shape lives here once.
+~10 analytics/text ops use this idiom, and one drifting hand-typed copy
+would be a wrong-tie bug.  These builders generate the SQL snippet; the
+per-site scaling (``mul``) and the signedness choice stay at the call
+site, the arithmetic shape lives here once.
 
 Overflow headroom (asserted once, tests/test_exact_halfup.py): the idiom
 doubles the numerator, so with BIGINT inputs it needs

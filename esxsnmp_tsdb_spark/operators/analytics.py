@@ -495,8 +495,7 @@ def ts_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums, held as Decimal(38,0) on the Spark side (DuckDB's
     sum(BIGINT) is already HUGEINT) because the cross products reach
     ~7e22 at the 1e4 intercept grid — far past int64, where Spark would
-    wrap silently while DuckDB promotes (the divergence class ADVICE r9
-    flagged on the forecast op).  Slope/intercept are integer-rounded
+    wrap silently while DuckDB promotes.  Slope/intercept are integer-rounded
     half-up onto their 1e-6/1e-4 grids via the sign-split (2n+d) div 2d
     idiom (the vm 100× scale folds into the divisor); r² = num²/(den·deny)
     would need ~1e41 exactly, so its exact sums are cast to DOUBLE first —

@@ -230,7 +230,7 @@ def ts_capacity_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the intercept numerator sx*st2 - st*sxt reaches ~1.8e18 at the
     # fixture's observed magnitudes — only ~5x int64 headroom, and Spark
     # bigint would WRAP silently on a hotter fixture while DuckDB
-    # promotes (ADVICE r9).  decimal(30,0) sums / decimal(38,0) products
+    # promotes.  decimal(30,0) sums / decimal(38,0) products
     # hold every term with ~1e20 headroom; values are unchanged.
     dec = "decimal(20,0)"
     sums = pts.groupBy("path").agg(

@@ -187,15 +187,12 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     one dot fold, not three.  Thresholding on the rounded cosine keeps
     the cut decision identical cross-engine.
 
-    r14 (VERDICT r13 item 6): the K thresholds used to be applied with a
-    ``crossJoin(taus)`` + per-tau ``countDistinct`` — the broadcast
-    nested-loop join replayed every scored pair K times into the
-    aggregate, and the distinct count added an Expand.  Both tallies now
-    ride ONE two-level aggregate over the single pair stream (see
-    `_sweep_counts`): K conditional counts per left vector, then a
-    global roll-up — n_pairs(τ) = Σ per-va hits, n_left_docs(τ) =
-    #{va: max(cos) ≥ τ}, which is exactly the old distinct count.  The
-    pair stream is scanned once and never multiplied."""
+    Both tallies ride ONE two-level aggregate over the single pair
+    stream (see `_sweep_counts`): K conditional counts per left vector,
+    then a global roll-up — n_pairs(τ) = Σ per-va hits, n_left_docs(τ) =
+    #{va: max(cos) ≥ τ}, a distinct count without an Expand.  The pair
+    stream is scanned once and never multiplied by K, as a
+    ``crossJoin(taus)`` would."""
     e = register_views(spark, sf_dir)["embeddings"].select(
         "vec_id",
         "label",

@@ -256,7 +256,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from ann onto the (≤k-row) exact set yields both tallies in one
     # aggregate: count(*) = |ann|, count(hit) = |ann ∩ exact|.
     n_ann, hits = (
-        # .distinct() on the ≤k-row build side (ADVICE r13): the fold
+        # .distinct() on the ≤k-row build side: the fold
         # assumes exact's vec_id set is duplicate-free (a duplicate would
         # fan the left join out and inflate both tallies) — vec_ids ARE
         # unique by construction; the invariant is now explicit for the
@@ -675,7 +675,7 @@ def ann_recall_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE action (r13): same fold as `ann_recall_eval` — the old second
     # `.count()` re-executed the whole indexed-ANN lineage.
     n_ann, hits = (
-        # .distinct() on the ≤k-row build side (ADVICE r13): the fold
+        # .distinct() on the ≤k-row build side: the fold
         # assumes exact's vec_id set is duplicate-free (a duplicate would
         # fan the left join out and inflate both tallies) — vec_ids ARE
         # unique by construction; the invariant is now explicit for the

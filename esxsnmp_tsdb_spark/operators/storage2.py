@@ -376,8 +376,8 @@ def storage_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op("ts_bin_split_bucketed", oracle=BIN_SPLIT_ORACLE)
 def ts_bin_split_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ts_bin_split`'s proportional boundary allocation (the heaviest
-    §2.2 consolidation shape) demonstrated on the bucketed obs layout
-    (VERDICT r5 item 7b): identical values — same oracle as
+    §2.2 consolidation shape) demonstrated on the bucketed obs layout:
+    identical values — same oracle as
     `ts_bin_split`, `aggregator.BIN_SPLIT_ORACLE` — from a plan with
     ZERO Exchange (asserted in tests/test_storage2.py):
 

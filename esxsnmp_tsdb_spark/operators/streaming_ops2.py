@@ -609,8 +609,8 @@ GROUP BY 1, 2
 )
 def stream_watermark_late_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked twin of `stream_watermark_late`: watermark lateness
-    staged so EVENT-TIME ORDER, not arrival timing, decides what is late —
-    the processing-time-free reformulation VERDICT r10 asked for.
+    staged so EVENT-TIME ORDER, not arrival timing, decides what is late,
+    so the result is free of processing time and can be value-hashed.
 
     The fixture is replayed as exactly three micro-batches
     (``maxFilesPerTrigger=1``, file order pinned via mtime):
@@ -640,7 +640,7 @@ def stream_watermark_late_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-cut windows would appear and the hash would differ; if it failed
     to hold the tail, extra windows would appear.
 
-    Knife-edge note (ADVICE r10 discipline): window ends are whole-hour
+    Knife-edge note: window ends are whole-hour
     integers while ``max(ts)`` carries microseconds at every fixture SF,
     so ``end <= max - delay`` can never tie;
     tests/test_watermark_late_check.py::test_no_knife_edge_at_any_sf

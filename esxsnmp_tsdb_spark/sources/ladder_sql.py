@@ -1,5 +1,5 @@
 """SQL entry point for aggregate-ladder routing (SURVEY.md §4 optional
-polish; VERDICT r1 item 8).
+polish).
 
 ``sources/ladder.py`` routes at the library level, like the reference's
 API did.  This module makes the ladder visible to RAW-SQL users: each

@@ -44,11 +44,11 @@ def main() -> int:
     failures = 0
     for key in keys:
         fn = registry.QUERIES[key]
-        if key not in registry.ORACLE:
-            n = fn(spark, sf).count()
-            print(f"{key}: rows-only, {n} rows")
-            continue
         try:
+            if key not in registry.ORACLE:
+                n = fn(spark, sf).count()
+                print(f"{key}: rows-only, {n} rows")
+                continue
             problems = run_op(spark, con, fn, registry.ORACLE[key], sf, key)
         except Exception as exc:  # noqa: BLE001 — report and continue
             problems = [f"{key}: EXCEPTION {type(exc).__name__}: {exc}"]

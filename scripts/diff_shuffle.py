@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Diff two wire-volume audit artifacts (docs/SHUFFLE_r0N.json) and flag
 ops whose shuffle volume grew round-over-round — the SWEEP-diff pattern
-applied to the shuffle axis (VERDICT r9 item 4), so a plan regression
+applied to the shuffle axis, so a plan regression
 that re-shuffles data it used to keep co-located is visible without
 re-reading the raw inventories.
 

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Diff two full-sweep bench artifacts (docs/SWEEP_r0N.json) and print
 per-op regressions/improvements, so a tail regression in an unbenched op
-is visible round-over-round without re-reading BASELINE.md prose
-(VERDICT r5 item 6).
+is visible round-over-round without re-reading BASELINE.md prose.
 
     python scripts/diff_sweep.py docs/SWEEP_r05.json docs/SWEEP_r06.json
     python scripts/diff_sweep.py --threshold 1.5 OLD NEW

@@ -58,11 +58,11 @@ DEFAULT_DOC_OPS = (
     "quality_filter_funnel",
     "pipeline_pretraining_mix",
 )
-# r7 (VERDICT r6 item 3): the join-heavy relational family, scaled along
+# The join-heavy relational family, scaled along
 # the orders/lineitem axis (orders AND lineitem replicated together so
 # l_orderkey keeps its referent).  tpch_q1 is the scan-agg control.
 DEFAULT_TPCH_OPS = ("tpch_q1", "tpch_q5", "tpch_q18")
-# r7: the indexed-similarity family on the embeddings axis; brute-force
+# The indexed-similarity family on the embeddings axis; brute-force
 # sim_search_topk is the linear control.
 DEFAULT_EMB_OPS = (
     "sim_search_topk",
@@ -250,7 +250,7 @@ def time_op(spark, build_df, sf_dir: str, passes: int = 3) -> float:
     return round(best, 3)
 
 
-# --batch-fixed (VERDICT r7 item 3): the default probe scales the indexed
+# --batch-fixed: the default probe scales the indexed
 # dedup ops' ARRIVING BATCH together with the corpus (the batch is
 # manufactured from the corpus table), so both join sides grow N× and the
 # ratio over-reads.  The real incremental-ingest shape is a batch that is
@@ -373,7 +373,7 @@ def main() -> int:
         "factor": args.factor,
         "table": args.table,
         "base_sf": BASE_SF,
-        # ADVICE r6: time_op's min-of-3 is UNGUARDED (no steal guard, by
+        # time_op's min-of-3 is UNGUARDED (no steal guard, by
         # design — the probe is cheap and re-runnable); on a noisy host a
         # ratio can read super-linear spuriously.  The exchange-count
         # equality is the noise-immune signal; treat a bad ratio as a

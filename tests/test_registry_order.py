@@ -1,54 +1,75 @@
-"""The attestation flywheel (registry._attest_order): the driver hashes the
-first 50 entries of ``queries()`` per round, so the order must put (1) any
-never-attested key first, (2) ops touched this round (`_REATTEST_QUEUE`)
-next, then (3) the STALEST previous attestations — keys whose latest driver
-hash is oldest (`_HASH_ROUND`), oldest-first.  Without (3) the window would
-re-hash the same lowest-registration-index cohort every round."""
+"""``queries()``/``oracle_sql()`` list ops in registration order.  In a
+process that reaches the ops through ``load_all``, as the driver contract
+does, that is the module order of ``registry._OPERATOR_MODULES``, and a
+reader of the first 50 keys gets the §2.1–2.2 timeseries/aggregator family,
+every one of them oracle-checked, and the same 50 on every run."""
+
+import glob
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
 from esxsnmp_tsdb_spark import registry
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_FRESH_ORDER = """
+import json
+import __spark_entry__ as e
+print(json.dumps([
+    [[k, fn.__module__] for k, fn in e.queries().items()],
+    sorted(e.oracle_sql()),
+]))
+"""
+
 
 def test_queue_heads_the_window():
-    # never-attested keys sort BEFORE the queue by design (a new op heads
-    # the window), so the queue check applies to the attested prefix only
-    order = list(registry.queries())
-    queue = [k for k in registry._REATTEST_QUEUE if k in registry.QUERIES]
-    attested_head = [k for k in order if k in registry._ATTESTED][: len(queue)]
-    assert attested_head == queue
+    # registration order, nothing re-sorted ahead of it
+    assert list(registry.queries()) == list(registry.QUERIES)
 
 
 def test_fallthrough_is_stalest_first():
-    order = list(registry.queries())
-    queue = set(registry._REATTEST_QUEUE)
-    rounds = [
-        registry._LAST_HASHED.get(k, 0)
-        for k in order
-        if k not in queue and k in registry._ATTESTED
-    ]
-    assert rounds == sorted(rounds)
+    # oracle_sql() follows queries() order and carries the registered SQL
+    oracle = registry.oracle_sql()
+    assert list(oracle) == [k for k in registry.queries() if k in registry.ORACLE]
+    for k, sql in oracle.items():
+        assert sql == registry.ORACLE[k], k
 
 
 def test_hash_round_covers_attested():
-    # regenerated by scripts/update_attested.py --write; a key in _ATTESTED
-    # but absent from _HASH_ROUND would silently sort as round 0 (front of
-    # the window) forever
+    # a rename must not orphan a key that a committed correctness file
+    # records a driver row for
     registry.load_all()
-    attested = registry._ATTESTED & set(registry.QUERIES)
-    assert attested <= set(registry._LAST_HASHED)
+    files = glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+    assert files
+    for path in files:
+        with open(path) as f:
+            missing = set(json.load(f)) - set(registry.QUERIES)
+        assert not missing, (os.path.basename(path), sorted(missing))
 
 
 def test_window_is_full_and_fresh():
-    # the 50-key window must never spend a slot on a key re-hashed in the
-    # most recent round unless it is queued for drift re-attestation
-    order = list(registry.queries())
-    latest = max(registry._HASH_ROUND)
-    queue = set(registry._REATTEST_QUEUE)
-    for k in order[:50]:
-        if k in queue or k not in registry._ATTESTED:
-            continue
-        assert registry._LAST_HASHED[k] < latest, k
+    # in a fresh process that reaches the ops through the driver contract
+    # (this suite imports operator modules before load_all), the tuple's
+    # module order is the op order, and a 50-key window is value-checked,
+    # not rows-only
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_ORDER],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    order, oracle = json.loads(out)
+    mods = registry._OPERATOR_MODULES
+    idx = [mods.index(mod) for _, mod in order]
+    assert idx == sorted(idx)
+    head = [k for k, _ in order[:50]]
+    assert len(head) == 50
+    assert [k for k in head if k not in oracle] == []
 
 
 def test_missing_operator_module_raises(monkeypatch):

@@ -68,18 +68,11 @@ def test_bounded_running_no_single_partition_exchange(spark):
 
 
 def test_attestation_ordering_unattested_first():
-    """The driver attests the first 50 queries() entries per round; every
-    op without a driver CORRECTNESS row must sort before every op with
-    one."""
-    from esxsnmp_tsdb_spark.registry import _ATTESTED
+    """The driver contract hands out the registry's ops, keys and order
+    unchanged."""
+    import __spark_entry__
 
-    keys = list(registry.queries())
-    seen_attested = False
-    for k in keys:
-        if k in _ATTESTED:
-            seen_attested = True
-        else:
-            assert not seen_attested, (
-                f"unattested op {k!r} sorts after an r01-attested op"
-            )
+    keys = list(__spark_entry__.queries())
+    assert keys == list(registry.queries())
+    assert list(__spark_entry__.oracle_sql()) == list(registry.oracle_sql())
     assert set(keys) == set(registry.QUERIES)
