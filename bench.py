@@ -57,7 +57,7 @@ HEADLINE = [
     # clustering family now rides the same steal-guarded min-of-N
     # discipline as the rest of the headline, so a reuse regression in
     # the checkpointed signature/cell stages shows up per-round.
-    "dedup_connected_components",  # §2.5 pointer-jumping CC
+    "dedup_connected_components",  # §2.5 large-star/small-star CC
     "dedup_semantic_cells",        # §2.5 SemDeDup intra-cell prune
     "minhash_jaccard_estimate",    # §2.5 sketch-accuracy eval
     "dedup_cluster_size_stats",    # §2.5 CC + size rollup

@@ -297,256 +297,114 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_pairs(spark, sf_dir)
 
 
-# Edge count above which min_label_components switches to the cached
-# pre-partitioned edge layout (docstring "Edge layout").  5M sits safely
-# inside the measured winning regime (clear win at 20M, ~break-even at
-# 2M, measured loss at 0.35M); module-level so tests can lower it to
-# exercise the big-graph tier on small fixtures.
-_EDGE_REPARTITION_THRESHOLD = 5_000_000
-
-
 def min_label_components(edges: DataFrame, max_rounds: int = 20):
-    """Distributed min-label propagation WITH pointer jumping over a
-    bidirectional edge list ``(src, dst)`` (any layout — the helper
-    lays it out itself, callers need not checkpoint).
+    """Connected components of the undirected graph ``edges(src, dst)``
+    by alternating large-star and small-star (Kiveris et al., SoCC 2014;
+    GraphFrames' algorithm).  Large-star links each node's larger
+    neighbors to the least node of its closed neighborhood; small-star
+    links each node and its smaller neighbors to the least of them.
+    Both keep components connected and each edge once, as
+    ``(greatest, least)``; alternated, they reach a forest of stars
+    centred on each component's least node in O(log² n) rounds, proven.
+    Any orientation, duplicates and self-loops are valid input; a node
+    seen only in a self-loop labels itself.
 
-    Each round every node adopts the smallest label among itself and its
-    neighbors, then short-circuits to its label's label (path halving).
-    Plain propagation needs diameter rounds; the jump step makes
-    convergence O(log diameter) — pinned on a synthetic 128-hop chain in
-    tests/test_cc_convergence.py, not just claimed here.  Every round is
-    a distributed join+groupBy; the driver only runs the loop and the
-    convergence count (the standard Spark shape for iterative graph
-    algorithms), and ``localCheckpoint`` truncates lineage so plans
-    don't grow exponentially.
-
-    Edge layout (measured, TWO-TIER): the edge set is STATIC
-    across rounds and it is the big side of the per-round join.  Above
-    ``_EDGE_REPARTITION_THRESHOLD`` edges it is persisted
-    pre-``repartition``-ed on the join key — InMemoryRelation preserves
-    hash partitioning, so every round's sort-merge join exchanges only
-    the (small, changing) label side.  ``localCheckpoint`` cannot do
-    this: under AQE its LogicalRDD reports ``UnknownPartitioning`` and
-    the edge exchange re-runs every round.  Measured through this
-    helper on a synthetic chain+star graph: full-helper wall 0.64x at
-    20M edges (66s saved over 7 rounds), identical labels and round
-    counts — at 100 TB this is the difference between shuffling the
-    candidate graph once and O(log d) times.  BELOW the threshold the
-    plain checkpoint layout stays: the loop there is stage-scheduling-
-    bound and the setup shuffle never amortizes (sf0.1 fixture graph,
-    0.35M edges, min-of-3 interleaved: small tier 2.25s vs big tier
-    2.34s) — both tiers and the crossover are recorded in
-    docs/CLUSTER.md ("CC big-graph tier").
-
-    Memory discipline (at most one |E|-sized copy lives through the
-    loop): the edge lineage is computed exactly
-    ONCE (the eager ``localCheckpoint`` below), and the self-loop rows
-    live in a separate |V|-sized checkpoint unioned LAZILY onto it — so
-    the small tier holds exactly ONE |E|-sized copy (r11's layout built
-    a second flagged copy of the whole edge set).  A transient
-    ``persist`` was tried first and REJECTED by measurement: cache
-    materialization of the pairs lineage loses AQE's final-stage
-    coalescing (``canChangeCachedPlanOutputPartitioning`` is off by
-    default), leaving 65 near-empty partitions whose per-round task
-    overhead doubled the loop wall at fixture scale — the checkpoint
-    materializes the same rows AQE-sized (2 partitions at sf0.1).  In
-    the big tier the repartitioned cache is built FROM the checkpoint
-    and the checkpoint reference is dropped immediately after — its
-    blocks are freed by the ContextCleaner on GC (transiently two
-    copies, steady-state one).  The cache is
-    released in a ``finally`` so a failed round cannot leak persisted
-    partitions into the long-lived session that serves every op.
-
-    Round shape (one action per round — measured A/B in
-    docs/ROUND12_NOTES.md): each round is ONE join + ONE groupBy + the
-    pointer-jump self-join, materialized by a single action.  Three
-    folds against the r11 shape:
-
-    * **Flagged self-loops.**  The edge layout appends one
-      ``(doc, doc, is_self=true)`` row per node, so the per-round
-      neighbor-min ``join → groupBy(dst)`` yields BOTH the new label
-      (``min(label)`` over neighbors ∪ self) and the old label
-      (``max(label) FILTER (WHERE is_self)`` — exactly one self row per
-      node) in one aggregate.  r11 needed a second |V|-row join
-      (labels ⋈ neigh) per round to combine them; that join and its
-      label-side exchange are gone.
-    * **Lazy per-round checkpoint.**  The convergence count is the
-      action that materializes the round's ``localCheckpoint`` — the
-      filter's parent partitions are checkpointed as the same job
-      computes them, so the former separate eager-checkpoint job
-      disappears.
-    * **Fused first round.**  With identity seed labels
-      (``label(x) = x``), round 1's neighbor-min is just ``min(src)``
-      over the flagged edges — no label join, no seed-labels frame at
-      all.  (A two-steps-per-action variant was ALSO tried and measured
-      flat: the deeper per-job plan costs what the saved action buys.)
-
-    Returns ``(labels, rounds, converged)``: a ``(doc, label)`` frame
-    mapping every node to its component representative (min node id),
-    the number of rounds the loop ran, and whether it actually reached
-    the fixed point (``changed == 0``).  The flag exists because
-    ``rounds == max_rounds`` is ambiguous — converged-on-the-last-round
-    and truncated look identical — and a truncated run
-    returns WRONG component labels; callers must check it, not the
-    round count."""
-    # max_rounds <= 0 would skip the loop entirely and return
-    # labels=None — crash the caller here, not downstream.
+    One job per round: the round's edges are checkpointed lazily and
+    materialized by an exact fixed-point test (the edges form that star
+    forest, so the next round would return them unchanged).  The loop
+    turns AQE off and sizes ``spark.sql.shuffle.partitions`` from |E|,
+    restoring both in a ``finally``: session-wide confs, so it assumes a
+    single submitter.  Returns ``(labels, rounds, converged)``:
+    ``labels`` maps each node ``doc`` to its component's least node
+    ``label``; ``converged`` is False when ``max_rounds`` ran out, and
+    such labels are wrong."""
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    # Compute the edge lineage once into a transient cache, pick the
-    # tier from its count, lay out the single surviving copy from the
-    # cache (no recompute), then drop the transient (see "Memory
-    # discipline" above).
-    # Single |E|-sized materialization, AQE-sized partitions ("Memory
-    # discipline" above).
-    edges_ck = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_edges = edges_ck.count()
-    # Self-loop augmentation ("Round shape" above): one flagged
-    # (doc, doc) row per node folds the keep-own-label branch and the
-    # old-label carry into the per-round neighbor-min aggregate.  The
-    # slice is |V|-sized, checkpointed once, and unioned LAZILY onto the
-    # edge checkpoint — no second |E|-sized copy.
-    loops = (
-        edges_ck.select(F.col("src").alias("doc"))
-        .distinct()
-        .select(F.col("doc").alias("src"), F.col("doc").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    withloops = edges_ck.withColumn("is_self", F.lit(False)).union(
-        loops.withColumn("is_self", F.lit(True))
-    )
-    # Loop shuffle width (r14, guide §2.2): size the per-round shuffles
-    # from the MEASURED edge count — ~32 MB of ~24-byte rows per
-    # partition, floor 2 — instead of leaving each round to AQE.  AQE's
-    # per-round adaptive final-plan resolution (every
-    # `localCheckpoint(eager=False)` call under AQE executes the round's
-    # query stages one by one, re-optimizing between them) accounted for
-    # most of the loop's wall at fixture scale: measured 5-round loop
-    # 3.07-3.45 s with AQE vs 2.25-2.34 s with a fixed, size-derived
-    # width (interleaved, same session, identical labels).  The width
-    # formula is scale-adaptive — 0.35M edges → 2 partitions locally,
-    # a 1e10-edge candidate graph → ~7000 — so nothing is tuned to
-    # local[32].  Trade-off accepted: the loop gives up AQE's skew-join
-    # splitting; the per-round join is keyed by node id over ~24-byte
-    # rows, so imbalance is bounded by degree skew, which SMJ/partial
-    # aggregation already stream.
+    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    n_edges, n_null = edges.agg(
+        F.count(F.lit(1)),
+        F.count(F.when(F.col("src").isNull() | F.col("dst").isNull(), True)),
+    ).first()
+    if n_null:
+        raise ValueError(
+            f"min_label_components: {n_null} edges have a NULL endpoint"
+        )
+    # ~32 MB of ~24-byte rows per shuffle partition, floor 2.
     n_part = max(2, math.ceil(n_edges * 24 / (32 << 20)))
-    edges_cached = None
-    if n_edges >= _EDGE_REPARTITION_THRESHOLD:
-        # big-graph tier: one up-front edge shuffle buys an
-        # exchange-free big side in every loop round (see docstring);
-        # partitioned at the loop width so every round's label exchange
-        # co-partitions with the cached edges.
-        edges_cached = withloops.repartition(n_part, "src").persist()
-        edges_cached.count()
-        edges = edges_cached
-        # The repartitioned cache is now the single loop-lifetime copy;
-        # dropping the checkpoint references lets the ContextCleaner
-        # free their blocks on GC ("Memory discipline" above).
-        edges_ck = loops = withloops = None
-    else:
-        edges = withloops
-    rounds = 0
-    converged = False
-    labels = None
     spark = edges.sparkSession
-    # Conf save/restore around the loop only.  The confs are
-    # session-global, so this assumes a single submitter: the loop runs
-    # synchronously inside op construction and restores the confs
-    # (finally, also when a round raises) before the op returns, and no
-    # other query may plan on this session meanwhile.
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+    rounds, converged = 0, False
     try:
-        for _ in range(max_rounds):
+        while rounds < max_rounds and not converged:
             rounds += 1
-            # Neighbor-min AND old-label carry in one join+groupBy: the
-            # self-loop row contributes the node's own label to min()
-            # and is the single row the is_self filter picks for `old`.
-            if labels is None:
-                # Fused round 1 ("Round shape" above): identity seed
-                # labels mean label(src) == src, so the neighbor-min is
-                # min(src) directly — no join, no seed-labels frame.
-                l1 = edges.groupBy(F.col("dst").alias("doc")).agg(
-                    F.min("src").alias("label"),
-                    F.max(F.when(F.col("is_self"), F.col("src"))).alias(
-                        "old"
-                    ),
-                )
-            else:
-                l1 = (
-                    edges.join(labels, edges.src == labels.doc)
-                    .groupBy(F.col("dst").alias("doc"))
-                    .agg(
-                        F.min("label").alias("label"),
-                        F.max(
-                            F.when(F.col("is_self"), F.col("label"))
-                        ).alias("old"),
-                    )
-                )
-            # pointer jump: label <- label(label); labels are always node
-            # ids, so the self-join maps every label to its current
-            # representative.  `old` rides along so the convergence test
-            # reads the SAME checkpointed frame — no extra join per round.
-            m = l1.select(
-                F.col("doc").alias("p_doc"), F.col("label").alias("p_label")
-            )
-            # LAZY checkpoint: the convergence count below is the action
-            # that materializes it — joins, checkpoint write, and the
-            # changed-count all happen in ONE job per round ("Job shape"
-            # above).  Lineage is still truncated at declaration time.
-            l2 = (
-                l1.join(m, l1.label == m.p_doc, "left")
-                .select(
-                    "doc",
-                    "old",
-                    F.coalesce("p_label", "label").alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # eqNullSafe, not `!=`: for VALID (bidirectional) input every
-            # node has a self-loop so `old` is never NULL and this is a
-            # plain inequality.  If a caller violates the precondition
-            # (directed-only edges), dst-only nodes carry old=NULL —
-            # plain `!=` would drop them from the count (NULL predicate)
-            # and return converged=True over silently-wrong labels.
-            # Same single action as the plain count (one global
-            # aggregate materializes the checkpoint), but the NULL tally
-            # rides along so the precondition violation fails LOUD in
-            # round 1 instead of burning max_rounds of cluster work
-            # first.
-            changed, null_old = l2.agg(
-                F.count(
-                    F.when(
-                        ~F.col("label").eqNullSafe(F.col("old")), True
-                    )
-                ),
-                F.count(F.when(F.col("old").isNull(), True)),
-            ).first()
-            if null_old:
-                raise ValueError(
-                    "min_label_components requires a BIDIRECTIONAL edge "
-                    f"list; {null_old} dst-only nodes have no self-loop "
-                    "(directed-only input) — union the reversed edges "
-                    "before calling"
-                )
-            labels = l2.drop("old")
-            if changed == 0:
-                converged = True
-                break
+            edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+            converged = _non_star_nodes(edges) == 0
     finally:
-        # Restore session confs FIRST (anything planned after the loop —
-        # the caller's window — must see the session posture, not the
-        # loop's), then release the cached edge partitions even if a
-        # round failed: a mid-loop exception must not leak persisted
-        # edges into the long-lived session.
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if edges_cached is not None:
-            edges_cached.unpersist()
+    labels = edges.select(
+        F.explode(F.array("src", "dst")).alias("doc"), F.col("dst").alias("label")
+    ).distinct()
     return labels, rounds, converged
+
+
+def _large_star(edges: DataFrame) -> DataFrame:
+    """Each node ``k`` links its larger neighbors to the least of ``k``
+    and its neighbors; a node whose only neighbor is itself keeps its
+    self-loop.  Rows may repeat; ``_small_star`` drops repeats."""
+    w = Window.partitionBy("k")
+    inc = edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src").alias("k"), F.col("dst").alias("n")),
+                F.struct(F.col("dst").alias("k"), F.col("src").alias("n")),
+            )
+        )
+    ).select("k", "n", F.min("n").over(w).alias("lo"), F.max("n").over(w).alias("hi"))
+    k, n, lo, hi = (F.col(c) for c in ("k", "n", "lo", "hi"))
+    return inc.filter((n > k) | ((lo == k) & (hi == k))).select(
+        n.alias("src"), F.least(k, lo).alias("dst")
+    )
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Each node ``src`` and its smaller neighbors link to the least of
+    them.  The result holds each edge once, as ``(greatest, least)``,
+    plus the self-loops of nodes with no other neighbor."""
+    m = edges.withColumn("m", F.min("dst").over(Window.partitionBy("src")))
+    linked = m.select(
+        F.explode(F.array("src", "dst")).alias("v"),
+        "m",
+        (F.col("m") == F.col("src")).alias("lone"),
+    )
+    return (
+        linked.filter((F.col("v") != F.col("m")) | F.col("lone"))
+        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
+        .distinct()
+    )
+
+
+def _non_star_nodes(edges: DataFrame) -> int:
+    """How many nodes keep ``edges`` from being a forest of stars centred
+    on their least node: a node with two parents, or one that is both a
+    parent and a child (``src`` is the child of ``dst``)."""
+    roles = edges.select(
+        F.posexplode(F.array("src", "dst")).alias("pos", "v"),
+        (F.col("src") != F.col("dst")).alias("link"),
+    )
+    per_node = roles.groupBy("v").agg(
+        F.count(F.when(F.col("pos") == 0, True)).alias("parents"),
+        F.count(F.when((F.col("pos") == 1) & F.col("link"), True)).alias(
+            "children"
+        ),
+    )
+    return per_node.filter(
+        (F.col("parents") > 1)
+        | ((F.col("parents") > 0) & (F.col("children") > 0))
+    ).count()
 
 
 def _cc_components(spark: SparkSession, sf_dir: str, refresh: bool) -> DataFrame:
@@ -566,20 +424,17 @@ def _cc_components(spark: SparkSession, sf_dir: str, refresh: bool) -> DataFrame
     get its new stamp attached to labels of the old bytes."""
 
     def compute() -> DataFrame:
-        pairs = _minhash_pairs(spark, sf_dir)
-        # No checkpoint here: the helper lays the edges out itself.
-        edges = pairs.select(
+        pairs = _minhash_pairs(spark, sf_dir).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ).union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        labels, rounds, converged = min_label_components(edges)
+        )
+        labels, rounds, converged = min_label_components(pairs)
         if not converged:
             # Truncated labels are silently WRONG (two docs in one real
             # component can carry different labels) — refuse to serve them.
             raise RuntimeError(
                 f"connected-components did not converge in {rounds} "
-                "rounds; raise max_rounds (pointer jumping makes rounds "
-                "~ log2(graph diameter), so hitting this means a "
-                "pathological candidate graph, not normal data)"
+                "rounds; raise max_rounds (large-star/small-star needs "
+                "O(log² n) rounds, about log2 n in practice)"
             )
         return labels.select(
             F.col("doc").alias("doc_id"), F.col("label").alias("component")
@@ -619,11 +474,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     that turns pairwise near-dup hits into KEEP-one-per-cluster groups
     (component id = min doc_id in the cluster).
 
-    The propagation loop lives in `min_label_components` (shared, and
-    convergence-pinned on a synthetic 128-hop chain in
-    tests/test_cc_convergence.py): min-label rounds with pointer jumping
-    — O(log diameter), not O(diameter), which matters because an LSH
-    candidate graph over a shared-vocabulary corpus has long chains.
+    The loop lives in `min_label_components`: large-star/small-star
+    rounds, O(log² n) proven, which matters because an LSH candidate
+    graph over a shared-vocabulary corpus has long chains
+    (tests/test_cc_convergence.py pins it on randomly permuted paths).
     Oracle twin: DuckDB recursive CTE transitive closure.
 
     This op ALWAYS computes — pair generation + the full propagation

@@ -29,9 +29,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# The ``queries()`` order in a process that reaches the ops through
-# ``load_all``, as ``__spark_entry__`` does (a module another imports is
-# listed first): the first 50 keys are the oracle-checked §2.1–2.2 family.
+# The ``queries()`` order (a module another imports is listed first): the
+# first 50 keys are the oracle-checked §2.1–2.2 family.
 _OPERATOR_MODULES = (
     "esxsnmp_tsdb_spark.operators.timeseries",
     "esxsnmp_tsdb_spark.operators.aggregator",
@@ -112,10 +111,15 @@ def load_all() -> None:
 
 
 def queries() -> dict[str, QueryFn]:
+    """Every op, in ``_OPERATOR_MODULES`` order (registration order
+    within a module), whichever module the process imported first; an
+    op from an unlisted module comes last."""
     load_all()
-    return dict(QUERIES)
+    rank = {m: i for i, m in enumerate(_OPERATOR_MODULES)}
+    keys = sorted(QUERIES, key=lambda k: rank.get(QUERIES[k].__module__, len(rank)))
+    return {k: QUERIES[k] for k in keys}
 
 
 def oracle_sql() -> dict[str, str]:
-    load_all()
-    return dict(ORACLE)
+    """The oracle SQL of every op that has one, in ``queries()`` order."""
+    return {k: ORACLE[k] for k in queries() if k in ORACLE}

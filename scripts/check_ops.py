@@ -34,7 +34,7 @@ def main() -> int:
 
     from esxsnmp_tsdb_spark import registry
     from esxsnmp_tsdb_spark.session import get_session
-    from tests.oracle_harness import duck_connection, run_op
+    from tests.oracle_harness import compare, duck_connection
 
     registry.load_all()
     if prefix:
@@ -43,13 +43,14 @@ def main() -> int:
     con = duck_connection(sf)
     failures = 0
     for key in keys:
-        fn = registry.QUERIES[key]
         try:
+            fn = registry.QUERIES[key]
             if key not in registry.ORACLE:
                 n = fn(spark, sf).count()
                 print(f"{key}: rows-only, {n} rows")
                 continue
-            problems = run_op(spark, con, fn, registry.ORACLE[key], sf, key)
+            got = fn(spark, sf).toPandas()
+            problems = compare(got, con.execute(registry.ORACLE[key]).fetchdf(), key)
         except Exception as exc:  # noqa: BLE001 — report and continue
             problems = [f"{key}: EXCEPTION {type(exc).__name__}: {exc}"]
         if problems:
@@ -57,8 +58,7 @@ def main() -> int:
             for p in problems:
                 print("FAIL", p)
         else:
-            n = fn(spark, sf).count()
-            print(f"PASS {key} ({n} rows)")
+            print(f"PASS {key} ({len(got)} rows)")
     return 1 if failures else 0
 
 

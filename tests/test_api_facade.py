@@ -234,8 +234,8 @@ def test_select_flags_hidden_semantics(spark, db):
 
 
 def test_aggregate_ladder_roundtrip(spark, db):
-    """VERDICT r5 item 3: insert raw → update_all_aggregates → the stored
-    1h level equals the ts_agg_cascade computation (weighted mean =
+    """Ladder upkeep matches the operator: insert raw →
+    update_all_aggregates → the stored 1h level equals the ts_agg_cascade computation (weighted mean =
     sum/count cascaded through the 5m level) for the same window, and the
     aggregate var is reachable via the reference's
     get_var('…/TSDB_AGGREGATES/+1h') path shape."""
@@ -329,7 +329,7 @@ def test_aggregate_validation_errors(spark, db):
 
 
 def test_compact_preserves_rows_and_lww(spark, db):
-    """VERDICT r5 item 4 (façade twin of storage_compaction_integrity):
+    """Façade twin of storage_compaction_integrity:
     compaction folds the one-file-per-batch history into one file while
     keeping every select row — including LWW winners across batches —
     identical."""

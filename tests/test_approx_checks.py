@@ -1,6 +1,6 @@
-"""Round-10 tolerance twins: the approx estimators hash-checked as
-claims against their exact counterparts (VERDICT r9 item 5 — shrink the
-rows-only set to the genuinely unoracleable ops)."""
+"""Tolerance twins: the approx estimators hash-checked as claims against
+their exact counterparts, so only genuinely unoracleable ops stay
+rows-only."""
 
 from __future__ import annotations
 

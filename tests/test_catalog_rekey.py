@@ -50,8 +50,8 @@ def test_same_sf_dir_skips_reregistration(spark):
     register_views(spark, SF_A)
     # Replace one view behind register_views' back; a second call with
     # the SAME sf_dir must be a no-op (the documented idempotent-cheap
-    # contract), so the marker survives.  The restore runs in a finally
-    # (ADVICE r11): a failing assertion mid-test must not leave the
+    # contract), so the marker survives.  The restore runs in a finally:
+    # a failing assertion mid-test must not leave the
     # marker view registered to poison later SQL-path tests sharing the
     # session.
     try:
@@ -66,7 +66,7 @@ def test_same_sf_dir_skips_reregistration(spark):
         # Force re-registration of the REAL views regardless of which
         # assertion (if any) failed: flip to the other sf_dir, then back.
         # Restoration ONLY here — an assert inside the finally would
-        # mask the original in-body failure (ADVICE r12).
+        # mask the original in-body failure.
         register_views(spark, SF_B)
         register_views(spark, SF_A)
     assert "marker" not in spark.table("region").columns

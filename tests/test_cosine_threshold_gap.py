@@ -1,4 +1,5 @@
-"""dedup_embedding_cosine threshold knife-edge guard (ADVICE r10).
+"""dedup_embedding_cosine threshold knife-edge guard: no fixture pair may
+sit close enough to the cutoff for float summation order to flip it.
 
 The 0.35 cutoff was anchored at the p99.9 of the fixture within-label
 cosine distribution, so a pair COULD in principle sit close enough to the

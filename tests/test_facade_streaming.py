@@ -1,4 +1,4 @@
-"""Façade-level streaming ingest demo (VERDICT r5 item 7a): a file-stream
+"""Façade-level streaming ingest demo: a file-stream
 poller delivers consecutive time slices, a ``foreachBatch`` persister
 writes each micro-batch into a ``TSDBVar`` exactly the way the
 reference's ``TSDBPollPersister`` wrote vars († §3.2: poll → var.insert →

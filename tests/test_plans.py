@@ -310,7 +310,7 @@ def test_sqrtn_semantic_probe_reads_sqrtn_index(spark):
         f"SELECT count(*) FROM '{SF_ORACLE}/embeddings.parquet'"
     ).fetchone()[0]
     stride = max(1, math.ceil(math.sqrt(n)))
-    # Same suffix rule as build_semantic_cell_index (ADVICE r9): when the
+    # Same suffix rule as build_semantic_cell_index: when the
     # sqrt(N) stride happens to equal CELL_SEED_MOD the index reuses the
     # default (suffix-less) directory — hard-coding "__m{stride}/" would
     # fail on a ~CELL_SEED_MOD²-vector fixture despite correct behavior.
@@ -369,7 +369,7 @@ def test_pit_join_is_keyed_not_cartesian(spark):
 
 
 def test_minhash_eval_scans_signature_stage_once(spark):
-    """The dedup-eval tail (VERDICT r4 item 6): both eval ops must serve
+    """The dedup-eval tail: both eval ops must serve
     every consumer branch from checkpointed shingle/signature tables —
     a refactor that drops the localCheckpoint re-derives the shingle
     explode per join side and silently multiplies the corpus pass."""

@@ -1,8 +1,8 @@
-"""``queries()``/``oracle_sql()`` list ops in registration order.  In a
-process that reaches the ops through ``load_all``, as the driver contract
-does, that is the module order of ``registry._OPERATOR_MODULES``, and a
-reader of the first 50 keys gets the §2.1–2.2 timeseries/aggregator family,
-every one of them oracle-checked, and the same 50 on every run."""
+"""``queries()``/``oracle_sql()`` list ops in the module order of
+``registry._OPERATOR_MODULES``, registration order within a module,
+whatever the process imported first.  A reader of the first 50 keys gets
+the §2.1–2.2 timeseries/aggregator family, every one of them
+oracle-checked, and the same 50 on every run."""
 
 import glob
 import json
@@ -27,8 +27,15 @@ print(json.dumps([
 
 
 def test_queue_heads_the_window():
-    # registration order, nothing re-sorted ahead of it
-    assert list(registry.queries()) == list(registry.QUERIES)
+    # module order, then registration order within a module, even though
+    # this suite imports operator modules in its own order
+    q = registry.queries()
+    idx = [registry._OPERATOR_MODULES.index(fn.__module__) for fn in q.values()]
+    assert idx == sorted(idx)
+    assert sorted(q) == sorted(registry.QUERIES)
+    for mod in registry._OPERATOR_MODULES:
+        own = [k for k, fn in registry.QUERIES.items() if fn.__module__ == mod]
+        assert [k for k in q if q[k].__module__ == mod] == own, mod
 
 
 def test_fallthrough_is_stalest_first():
@@ -70,6 +77,24 @@ def test_window_is_full_and_fresh():
     head = [k for k, _ in order[:50]]
     assert len(head) == 50
     assert [k for k in head if k not in oracle] == []
+
+
+def test_import_history_does_not_reorder():
+    # a module imported ahead of load_all registers its ops first; the
+    # contract's order must not follow that import history
+    def order(prelude):
+        out = subprocess.run(
+            [sys.executable, "-c", prelude + _FRESH_ORDER],
+            cwd=ROOT,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        keys, oracle = json.loads(out)
+        return [k for k, _ in keys], oracle
+
+    fresh = order("")
+    assert order("import esxsnmp_tsdb_spark.operators.relational\n") == fresh
 
 
 def test_missing_operator_module_raises(monkeypatch):

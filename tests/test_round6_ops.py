@@ -543,7 +543,7 @@ def test_incident_windows_are_disjoint_and_cover(spark):
 
 
 def test_semdedup_blas_margin_invariant(spark):
-    """ADVICE r5: `dedup_semantic_cells` decides ``cos >= SEM_TAU`` on a
+    """`dedup_semantic_cells` decides ``cos >= SEM_TAU`` on a
     float64 BLAS Gram matrix whose summation order differs from the
     oracle's sequential fold — safe only while every in-cell cosine sits
     far from the threshold.  Pin that margin as a tested invariant: if a
@@ -578,7 +578,7 @@ def test_semdedup_blas_margin_invariant(spark):
 
 
 def test_assign_cells_zero_norm_deterministic(spark):
-    """ADVICE r5: a zero-norm embedding scores NULL against every
+    """A zero-norm embedding scores NULL against every
     centroid; the argmax must still assign it — deterministically to the
     smallest cid, matching the oracle's NULLS-last row_number — instead
     of leaving cid NULL."""

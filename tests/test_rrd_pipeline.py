@@ -1,8 +1,8 @@
-"""Round-5 composed-pipeline invariants (operators/rrd_pipeline.py):
-the stored 1 h level's delta CF must equal `ts_bin_split`-style
-re-aggregation of the same wrap-corrected, heartbeat-filtered deltas
-(VERDICT r4 item 3's acceptance test), plus conservation and visibility
-identities."""
+"""Composed-pipeline invariants (operators/rrd_pipeline.py): the stored
+1 h level's delta CF must equal `ts_bin_split`-style re-aggregation of
+the same wrap-corrected, heartbeat-filtered deltas (the pipeline may not
+drift from the per-op path it composes), plus conservation and
+visibility identities."""
 
 from __future__ import annotations
 

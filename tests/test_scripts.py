@@ -39,6 +39,42 @@ def test_check_ops_survives_raising_rows_only_op(spark, monkeypatch, capsys):
     assert "PASS ts_rate" in out
 
 
+def test_check_ops_runs_each_op_once_and_survives_unknown_key(
+    spark, monkeypatch, capsys
+):
+    # one toPandas per oracle-checked key serves both the compare and the
+    # printed row count, and a key nobody registered ends only its own line
+    spec = importlib.util.spec_from_file_location(
+        "check_ops", os.path.join(ROOT, "scripts", "check_ops.py")
+    )
+    check_ops = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_ops)
+    registry.load_all()
+    calls = []
+
+    def counted(key):
+        fn = registry.QUERIES[key]
+
+        def wrapper(spark, sf_dir):
+            calls.append(key)
+            return fn(spark, sf_dir)
+
+        return wrapper
+
+    for key in ("ts_rate", "scan_parquet"):
+        monkeypatch.setitem(registry.QUERIES, key, counted(key))
+    monkeypatch.setattr(session, "get_session", lambda *a, **k: spark)
+    keys = ["ts_rate", "zz_no_such_op", "scan_parquet"]
+    argv = ["check_ops.py", "--sf", SF_SMOKE, *keys]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert check_ops.main() == 1
+    out = capsys.readouterr().out
+    assert calls == ["ts_rate", "scan_parquet"]
+    assert "FAIL zz_no_such_op: EXCEPTION KeyError" in out
+    assert "PASS ts_rate" in out
+    assert "PASS scan_parquet" in out
+
+
 def _registry_refs(path: str):
     with open(path) as f:
         tree = ast.parse(f.read(), path)

@@ -111,3 +111,21 @@ def test_stream_schema_follows_rewritten_events(spark, tmp_path):
         path,
     )
     assert "extra" in events_stream(spark, str(tmp_path)).columns
+
+
+def test_sqrtn_stride_follows_rewritten_embeddings(spark, tmp_path):
+    from esxsnmp_tsdb_spark.operators.dedup2 import sqrtn_stride
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    register_views(spark, sf)
+
+    def engine_keys():
+        return {k for k in spark.conf.getAll if k.startswith("spark.esxsnmp_tsdb.")}
+
+    keys = engine_keys()
+    assert sqrtn_stride(spark, sf) == 23  # ceil(sqrt(500))
+    path = os.path.join(sf, "embeddings.parquet")
+    pq.write_table(pq.read_table(path).slice(0, 10), path)
+    assert sqrtn_stride(spark, sf) == 4  # ceil(sqrt(10))
+    assert engine_keys() == keys, "the stride memo must not live in a session conf"

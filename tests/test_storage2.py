@@ -54,7 +54,7 @@ def test_schema_evolution_backfills_nulls(spark):
 
 
 def test_bucketed_obs_consolidation_has_no_exchange(spark):
-    """VERDICT r4 item 7: the §2.2 consolidation family on the bucketed
+    """The §2.2 consolidation family on the bucketed
     obs layout (bucketBy(hash(path)).sortBy(path, tse)) must plan with
     ZERO hashpartitioning exchange — both the (path, slot) group-by
     (bucket hash on path co-locates every grouping key) and the
@@ -95,7 +95,7 @@ def test_bucketed_obs_consolidation_has_no_exchange(spark):
 
 
 def test_bin_split_bucketed_zero_exchange_and_values_match(spark):
-    """VERDICT r5 item 7b: the proportional bin-split on the bucketed obs
+    """The proportional bin-split on the bucketed obs
     layout plans with ZERO Exchange of any kind (windows read the bucket
     sort, the explode is row-local, hash(path) satisfies the (path,
     bucket) allocation group-by) — and the values are exactly

@@ -1,7 +1,7 @@
 """Pin the r14 single-pass threshold-sweep aggregate (`_sweep_counts`)
 against the shape it replaced (crossJoin(taus) + per-tau countDistinct).
 
-The rewrite (VERDICT r13 item 6) claims value identity: n_pairs(τ) as a
+The rewrite claims value identity: n_pairs(τ) as a
 per-va conditional count summed globally, n_left_docs(τ) as a count over
 per-va maxima.  These tests prove it on a constructed pair stream with
 the edge cases the fixture cannot exercise — zero input pairs (the

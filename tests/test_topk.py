@@ -1,5 +1,6 @@
-"""Unit tests for functions/topk.py — the no-global-window top-k and the
-bounded running frame (VERDICT r1 items 1/2)."""
+"""Unit tests for functions/topk.py — the top-k that never funnels its
+input through one task via a global window, and the bounded running
+frame."""
 
 from __future__ import annotations
 

@@ -1,10 +1,11 @@
 """stream_watermark_late_check: the staged-lateness hash-checked twin of
-`stream_watermark_late` (VERDICT r10 item 1).
+`stream_watermark_late`, so the streaming family is value-checked, not
+rows-only.
 
 Two properties the oracle compare can't state directly:
 
-* knife-edge freedom (ADVICE r10 discipline): the emission boundary
-  ``window.end <= max(ts) - delay`` must never tie — window ends are
+* knife-edge freedom (no value may sit on a decision boundary): the
+  emission boundary ``window.end <= max(ts) - delay`` must never tie — window ends are
   whole-hour integers, so it suffices that max(ts) carries a nonzero
   sub-hour remainder at every fixture SF;
 * the drop really happened: no emitted slot may precede the lateness cut
