@@ -62,18 +62,16 @@ HEADLINE = [
     "minhash_jaccard_estimate",    # §2.5 sketch-accuracy eval
     "dedup_cluster_size_stats",    # §2.5 CC + size rollup
     "dedup_threshold_sweep",       # §2.5 cosine threshold sweep
-    # Round 6: the composed pretraining recipe — the flagship multi-stage
+    # The composed pretraining recipe — the flagship multi-stage
     # chain (quality → exact → verified-near dedup → decontaminate →
     # budget → manifest) rides the same guarded min-of-N discipline, so
     # a reuse regression in its shared shingle/signature checkpoints
-    # shows up per-round.  Safe to add: the guard seeds per-query
-    # history, so a headline-set change no longer resets it.
+    # shows up in its own timing.  The guard seeds per-query history,
+    # so a headline-set change never resets it.
     "pipeline_pretraining_mix",    # §2.5 composed pipeline
-    # Round 9: the two registered incremental-ingest probe shapes — the
+    # The two registered incremental-ingest probe shapes — the
     # small broadcast batch against the persisted minhash index, and the
     # sqrt(N)-seeded semantic cell index (the 100 TB deployment sizing).
-    # Safe to add: the guard seeds per-query history, so growing the set
-    # never resets it; these two get history from this round forward.
     "dedup_minhash_indexed_smallbatch",  # §2.5 broadcast-batch index probe
     "dedup_semantic_indexed_sqrtn",      # §2.5 sqrt(N)-cell index probe
 ]

@@ -37,10 +37,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
 from esxsnmp_tsdb_spark.functions.exact import half_up_div_signed
 from esxsnmp_tsdb_spark.operators.aggregator import _counter
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import (
-    load_events_range,
-    load_obs,
-)
+from esxsnmp_tsdb_spark.sources import load_obs, obs_range
 
 TOP_N = 10
 Z_WIN = 12  # rolling samples for the anomaly baseline
@@ -205,9 +202,7 @@ def ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The day-window side re-reads events with the range pushed to the
     # parquet scan (row-group skipping); the path universe above must stay
     # the full table (paths silent that day still get a NULL-filled spine).
-    day_obs = tsdb.obs_from_events(
-        load_events_range(spark, sf_dir, T_JAN10, T_JAN11)
-    )
+    day_obs = obs_range(spark, sf_dir, T_JAN10, T_JAN11)
     observed = (
         tsdb.valid_only(day_obs)
         .filter((F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11))
@@ -486,8 +481,8 @@ def ts_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning primitive ("when does this link saturate"), the fit layer
     under `ts_capacity_forecast`'s projection.
 
-    Closed-form OLS over EXACT integer power sums — the idiom that fixed
-    `ts_capacity_forecast` in round 9 — not regr_* on doubles, whose
+    Closed-form OLS over EXACT integer power sums — the idiom
+    `ts_capacity_forecast` relies on — not regr_* on doubles, whose
     engine-order double summation flipped last digits at sf0.1 there.
     value is a 2-decimal gauge, so vm = round(value·100) → BIGINT is
     lossless; the time axis is centered on the fixture epoch start so

@@ -151,8 +151,8 @@ def _assign_to(e: DataFrame, cent: DataFrame) -> DataFrame:
     row_number window: partial (map-side) aggregation folds the N×K
     scored rows down to N BEFORE the exchange, so only one row per
     vector ever shuffles."""
-    # Double-casts hoisted OUT of the N×K scored expression (r13, guide
-    # §4.2): `__v` is cast once per input row and `__cv` once per
+    # Double-casts hoisted OUT of the N×K scored expression: `__v` is
+    # cast once per input row and `__cv` once per
     # centroid before the fan-out, instead of two O(d) array transforms
     # per (row, centroid).  float→double is exact — every c_cos is
     # bit-identical to the per-pair-cast form.
@@ -685,7 +685,7 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both self-join sides read the checkpointed assignment — one N×K
     # centroid scoring, not two (the ingest-persisted cell table at scale).
-    # The double-cast is hoisted INTO the checkpoint (r13, guide §4.2):
+    # The double-cast is hoisted INTO the checkpoint:
     # one O(d) transform per vector instead of two per candidate pair,
     # bit-identical values (float→double is exact).
     assigned = (

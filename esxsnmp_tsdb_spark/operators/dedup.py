@@ -649,14 +649,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     p99.9 of within-label pair cosines is ~0.35 at every sf; the max is
     ~0.47).  The original 0.6 never matched a pair in the random-vector
     fixtures, so the op's oracle attestation was trivially empty-vs-empty
-    (CORRECTNESS r2/r9: 0 rows both sides) — at 0.35 the attestation
+    (0 rows both sides) — at 0.35 the attestation
     exercises actual dot/norm/round values at every scale.
     """
     from esxsnmp_tsdb_spark.functions.vector import dot, norm
 
     # both sides of the self-join read this — checkpoint so the scan, the
     # per-vector double-cast, and the norm fold run once.  The cast is
-    # hoisted INTO the checkpoint (r13, guide §4.2 "per-task work"): it
+    # hoisted INTO the checkpoint, out of per-pair work: it
     # used to sit inside the per-pair cosine, costing two O(d) array
     # transforms per PAIR (O(Σblock²) work); here it is O(N).  The wire
     # trade is deliberate — the checkpoint holds float64 arrays (2× the
@@ -740,17 +740,15 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded) shingle set, both cheap next to recomputing them.  The
     executed plan reads documents.parquet ZERO times — every branch scans
     a checkpoint (asserted in tests/test_plans.py)."""
-    # EAGER checkpoints (r14): r13 flipped these lazy off an interleaved
-    # A/B that claimed 4.48 s → 3.84 s, but every committed full-bench
-    # record since read SLOWER than pre-change (4.88-5.21 vs 4.52),
-    # and the re-A/B at final r14 HEAD (min-of-4
-    # interleaved, one session) read eager 4.17 vs lazy 4.41.  The lazy
-    # claim never reproduced; reverted.
+    # EAGER checkpoints: every consumer branch must read the materialized
+    # shingle/signature tables, never re-derive them from raw.  Lazy
+    # checkpoints measured slower (min-of-4 interleaved at sf0.1: eager
+    # 4.17 s vs lazy 4.41 s).
     docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     sh = _shingled(docs2).localCheckpoint()
     sigs = _minhash_sigs(spark, sf_dir, sh=sh).localCheckpoint()
     pairs = _pairs_from_sigs(sigs)
-    # shuffle_hash hints (r14, guide §3.1): the probe side of the
+    # shuffle_hash hints: the probe side of the
     # band-compare and intersection joins is the candidate-EXPLODED
     # stream (|pairs| × shingles-per-doc ≈ 17M rows at sf0.1, ~34× the
     # build side), and sort-merge paid an O(n log n) sort of exactly

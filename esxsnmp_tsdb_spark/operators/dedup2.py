@@ -331,7 +331,7 @@ def semantic_index_hits(
     )
     if broadcast_batch:
         bassigned = F.broadcast(bassigned)
-    # Double-cast hoisted to the per-MEMBER projection (r13, guide §4.2):
+    # Double-cast hoisted to the per-MEMBER projection:
     # the index stores float arrays (half the bytes on disk); the cast to
     # double runs once per member row below the join instead of once per
     # (batch, member) candidate pair.  And cos is projected ONCE before

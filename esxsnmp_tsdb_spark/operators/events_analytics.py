@@ -4,9 +4,9 @@ bigrams.  These are the standard "what do users do" queries a TSDB-adjacent
 analytics engine is asked for once events carry a user dimension.
 
 Cross-engine time discipline: Spark sees `ts` at microsecond precision
-(catalog rebuild) while DuckDB reads the parquet nanos natively, so any
-ordering or comparison on raw timestamps can disagree in sub-microsecond
-digits.  Every op here therefore works on ``tse = floor-epoch-seconds``
+(a NANOS column is rebuilt by the catalog) while DuckDB reads parquet
+nanos natively, so any ordering or comparison on raw timestamps can
+disagree in sub-microsecond digits.  Every op here therefore works on ``tse = floor-epoch-seconds``
 with ``event_id`` as the tiebreak — identical on both engines (same rule
 as ``_shared.OBS_CTE``).
 

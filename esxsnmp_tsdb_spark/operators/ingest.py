@@ -20,7 +20,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import flat_obs, load_events_range, register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, obs_range
 
 
 @op(
@@ -102,15 +102,8 @@ def ts_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the bucketed layout of ``sources.compaction`` the shuffle
     disappears entirely, which is how the 100 TB nightly reconciliation
     stays one pass)."""
-    register_views(spark, sf_dir)  # keep session tuned/views consistent
-    base = tsdb.slot_dedup(
-        tsdb.obs_from_events(load_events_range(spark, sf_dir, 0, T_JAN15_NOON)),
-        STEP,
-    )
-    upd = tsdb.slot_dedup(
-        tsdb.obs_from_events(load_events_range(spark, sf_dir, T_JAN10, T_JAN20)),
-        STEP,
-    )
+    base = tsdb.slot_dedup(obs_range(spark, sf_dir, 0, T_JAN15_NOON), STEP)
+    upd = tsdb.slot_dedup(obs_range(spark, sf_dir, T_JAN10, T_JAN20), STEP)
     b = base.select("path", "slot", F.col("value").alias("b_value"))
     u = upd.select(
         F.col("path").alias("u_path"),
@@ -158,8 +151,7 @@ def api_timerange_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     Level routing mirrors the reference: the engine selects the stored
     aggregate whose step divides the request (here the 1h ladder level).
     """
-    register_views(spark, sf_dir)
-    obs = tsdb.obs_from_events(load_events_range(spark, sf_dir, T_JAN10, T_JAN20))
+    obs = obs_range(spark, sf_dir, T_JAN10, T_JAN20)
     agg = (
         tsdb.range_scan(obs, T_JAN10, T_JAN20)
         .groupBy("path", tsdb.slot_of(F.col("tse"), BUCKET).alias("slot"))
@@ -206,9 +198,7 @@ def ingest_replay_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial map-side — replayed copies of a row land in the same
     partition), not a window; at 100 TB it rides the same (path-keyed)
     shuffle the consolidation needs anyway."""
-    obs = tsdb.obs_from_events(
-        load_events_range(spark, sf_dir, T_JAN10, T_JAN15_NOON)
-    )
+    obs = obs_range(spark, sf_dir, T_JAN10, T_JAN15_NOON)
     # The dir must outlive this function (the returned DataFrame is lazy
     # and reads these files when the caller executes it) — op_dir defers
     # clearing to the next call and removes everything at process exit.

@@ -28,8 +28,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import flat_obs, register_views
-from esxsnmp_tsdb_spark.sources.catalog import load_events_range
+from esxsnmp_tsdb_spark.sources import flat_obs, obs_range
 
 TOMBSTONE_MOD = 17  # every 17th event in the change window is a delete
 
@@ -75,14 +74,12 @@ def ingest_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge itself is set-oriented and idempotent — replaying the same
     changeset yields the same table, the property a recovering CDC
     consumer needs."""
-    register_views(spark, sf_dir)
-    base = tsdb.slot_dedup(
-        tsdb.obs_from_events(load_events_range(spark, sf_dir, 0, T_JAN15_NOON)),
-        STEP,
-    ).select("path", "slot", F.col("value").alias("b_value"))
-    cobs = tsdb.obs_from_events(
-        load_events_range(spark, sf_dir, T_JAN10, T_JAN20)
-    ).withColumn("slot", F.col("tse") - F.col("tse") % STEP)
+    base = tsdb.slot_dedup(obs_range(spark, sf_dir, 0, T_JAN15_NOON), STEP).select(
+        "path", "slot", F.col("value").alias("b_value")
+    )
+    cobs = obs_range(spark, sf_dir, T_JAN10, T_JAN20).withColumn(
+        "slot", F.col("tse") - F.col("tse") % STEP
+    )
     w = Window.partitionBy("path", "slot").orderBy(
         F.col("tse").desc(), F.col("event_id").desc()
     )
@@ -148,10 +145,7 @@ def api_bulk_timerange(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same single-shuffle consolidation as every §2.2 op — request
     fan-in changes the filter, never the plan shape.  Values are emitted
     as integer microunits (`api_timerange_json`'s cross-engine trick)."""
-    register_views(spark, sf_dir)
-    obs = tsdb.obs_from_events(
-        load_events_range(spark, sf_dir, T_JAN10, T_JAN15_NOON)
-    )
+    obs = obs_range(spark, sf_dir, T_JAN10, T_JAN15_NOON)
     return (
         tsdb.range_scan(obs, T_JAN10, T_JAN15_NOON)
         .filter(F.col("path").endswith("/" + BULK_EVENT_TYPE))

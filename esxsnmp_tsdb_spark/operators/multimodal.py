@@ -48,7 +48,7 @@ def _size_bytes(conf_val: str) -> int:
 
 def _blob_fan_out(spark, sf_dir: str, df):
     """Fan the blob stream out for the Python boundary with a width the
-    INPUT VOLUME justifies (guide §2: scale-adaptive partitioning, not a
+    INPUT VOLUME justifies (scale-adaptive partitioning, not a
     constant tuned for local mode): one Arrow task per
     ``spark.sql.files.maxPartitionBytes`` of decoded blob bytes, capped
     at the session's parallelism.

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.sources import load_range, register_views
 
 
 @op("scan_parquet", oracle="SELECT r_regionkey, r_name FROM region")
@@ -38,11 +38,13 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 def projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """σ/π with pushdown: the filter and the 4-column projection both reach
     the parquet scan (verify via ``plans.explain``: PushedFilters +
-    ReadSchema show exactly these columns)."""
-    li = register_views(spark, sf_dir)["lineitem"]
-    return li.filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
+    ReadSchema show exactly these columns).  The 1996 range is bounded on
+    ``l_shipdate`` as stored (``sources.load_range``), so it pushes
+    whatever the column's timestamp encoding."""
+    y1996, y1997 = 820454400, 852076800  # 1996-01-01, 1997-01-01 UTC
+    return load_range(spark, sf_dir, "lineitem", "l_shipdate", y1996, y1997).select(
+        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
+    )
 
 
 @op(
@@ -185,7 +187,7 @@ def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The date restriction is what makes the attestation mean something:
     unrestricted "customers with no orders" is EMPTY at every fixture
     scale (every customer has orders), so the oracle row was a
-    trivially-green empty-vs-empty hash (CORRECTNESS r8: 0 rows).
+    trivially-green empty-vs-empty hash.
     Dormant-since-cutoff yields 3/8/119 rows at sf0.001/0.01/0.1 — and
     is the anti-join a marketer actually runs.  The date filter lands on
     the orders scan BEFORE the join (PushedFilters on o_orderdate), so
@@ -603,7 +605,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Previous shape (customer nationkeys minus supplier nationkeys) was
     EMPTY at sf0.01/0.1 — every nation has both — so the driver's
-    attestation never hashed a value (CORRECTNESS r8: 0 rows).  This one
+    attestation never hashed a value.  This one
     is structurally non-empty at every scale (1291/101/95 rows): ship
     dates lag order dates by up to 122 days, so the tail days can never
     appear on the right side.  Days ride the floor-epoch-bigint output

@@ -1,4 +1,4 @@
-"""§2.2/§2.3 round-5 closures — the full RRD ingest pipeline as ONE
+"""§2.2/§2.3 — the full RRD ingest pipeline as ONE
 maintained op, and ROW_HIDDEN visibility semantics.
 
 ``ts_ladder_full_pipeline`` composes the whole reference ingest path

@@ -278,7 +278,7 @@ def knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the O(Σ blockᵢ²) pairs evaluates one dot fold instead of three —
     3× less interpreted higher-order work in the hot loop, with
     bit-identical results (same fold, same data, just hoisted)."""
-    # Double-cast hoisted to the per-VECTOR projection (r13, guide §4.2):
+    # Double-cast hoisted to the per-VECTOR projection:
     # it used to run inside the per-pair dot — two O(d) array transforms
     # per pair, O(Σblock²) of them — and now runs once per vector per
     # join side.  float→double is exact, so every pair's cosine is
@@ -304,8 +304,8 @@ def knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_raw"),
         )
     )
-    # Top-1 via max_by aggregation, not a row_number window (r13, guide
-    # §2.3 "aggregate before you shuffle"): the window shuffled every
+    # Top-1 via max_by aggregation, not a row_number window (aggregate
+    # before the shuffle): the window shuffled every
     # PAIR row (O(Σblockᵢ²)) to sort it; the groupBy partial-aggregates
     # map-side, so at most one row per (vec_id, input partition) reaches
     # the exchange.  Ordering key (cos_raw DESC, neighbor_id ASC) is
@@ -369,7 +369,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus per probe — this op is the query-side plan.  Cell scoring
     and assignment are all zip_with/aggregate folds in codegen; the
     centroid set (10 rows) broadcasts."""
-    # Double-cast hoisted to the per-vector projection (r13, guide §4.2):
+    # Double-cast hoisted to the per-vector projection:
     # one O(d) transform per vector instead of two per (row, centroid)
     # scored pair and two per candidate — bit-identical (float→double is
     # exact).
@@ -393,8 +393,8 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("nrm") * F.col("cnrm"))
         ).alias("c_cos"),
     )
-    # Argmax via max_by aggregation, not a row_number window (r13, guide
-    # §2.3): the window shuffled all N×K scored rows — each carrying the
+    # Argmax via max_by aggregation, not a row_number window: the
+    # window shuffled all N×K scored rows — each carrying the
     # 64-double vector — to sort them; the groupBy partial-aggregates
     # map-side so only one row per vector reaches the exchange (the same
     # shape curation8._assign_to already uses).  Ties to the smaller cid

@@ -250,7 +250,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     search + one ANN search."""
     exact = sim_search_topk(spark, sf_dir).select("vec_id")
     ann = sim_search_ann_lsh(spark, sf_dir).select("vec_id")
-    # ONE action (r13, guide §1.2 "don't compute things twice"): the old
+    # ONE action, so nothing is computed twice: the old
     # shape ran `exact⋈ann.count()` then `ann.count()` — two jobs, and
     # the second re-executed the whole ANN search lineage.  A left join
     # from ann onto the (≤k-row) exact set yields both tallies in one
@@ -672,7 +672,7 @@ def ann_recall_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost: two k-row results joined."""
     exact = sim_search_topk(spark, sf_dir).select("vec_id")
     ann = sim_search_ivf_pq_indexed(spark, sf_dir).select("vec_id")
-    # ONE action (r13): same fold as `ann_recall_eval` — the old second
+    # ONE action: same fold as `ann_recall_eval` — the old second
     # `.count()` re-executed the whole indexed-ANN lineage.
     n_ann, hits = (
         # .distinct() on the ≤k-row build side: the fold

@@ -124,8 +124,8 @@ def _stage_ordered_slices(slices, src: str) -> None:
     order is semantically free.  Only CROSS-slice order is
     load-bearing, and that stays pinned by the mtimes.
 
-    ``sortWithinPartitions(*columns)`` after the repartition (ADVICE
-    r12): round-robin repartition makes the single file's ROW ORDER
+    ``sortWithinPartitions(*columns)`` after the repartition:
+    round-robin repartition makes the single file's ROW ORDER
     depend on reducer fetch order — run-to-run nondeterministic.  The
     current consumers don't care, but a future order-sensitive reader
     of the staged parquet would inherit a latent flake; a full-row sort

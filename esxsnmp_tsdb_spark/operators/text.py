@@ -563,7 +563,7 @@ def term_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Term counting is the standard explode + partial-aggregated count;
     ranks are a per-language window (bounded by vocab, never global).
     The fit is closed-form OLS over EXACT integer power sums — the idiom
-    that fixed `ts_capacity_forecast` in round 9 — not regr_* on doubles,
+    `ts_capacity_forecast` relies on — not regr_* on doubles,
     whose engine-order double summation is one partition-order change
     away from a last-digit flip.  The log axes aren't grid-valued, so
     they're quantized first: lm/rm = floor(ln(·)·10⁶ + 0.5) — one IEEE

@@ -20,18 +20,7 @@ from esxsnmp_tsdb_spark.operators._shared import (
     T_JAN20,
 )
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import (
-    load_events_range,
-    load_obs,
-    register_views,
-)
-
-
-def _obs_range(spark: SparkSession, sf_dir: str, begin: int, end: int) -> DataFrame:
-    """Obs restricted to [begin, end) with the predicate pushed to the
-    parquet scan (raw nanos column — see ``sources.load_events_range``)."""
-    register_views(spark, sf_dir)  # keep session tuning + views consistent
-    return tsdb.obs_from_events(load_events_range(spark, sf_dir, begin, end))
+from esxsnmp_tsdb_spark.sources import load_obs, obs_range
 
 
 @op(
@@ -45,14 +34,14 @@ FROM obs WHERE tse >= {T_JAN10} AND tse < {T_JAN20}
 def ts_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``TSDBVar.select(begin, end)`` † — time-range scan.
 
-    Scale: the range predicate is applied to the raw nano-long column
-    (``sources.load_events_range``) so it reaches the parquet scan as
+    Scale: the range predicate is applied to ``ts`` as stored
+    (``sources.obs_range``) so it reaches the parquet scan as
     PushedFilters — min/max row-group skipping now, partition pruning on
     the production date-partitioned layout (the reference's YYYYMMDD
     chunk mapper, SURVEY.md §4).  The semantic tse filter stays as a
     cheap residual."""
     return tsdb.range_scan(
-        _obs_range(spark, sf_dir, T_JAN10, T_JAN20), T_JAN10, T_JAN20
+        obs_range(spark, sf_dir, T_JAN10, T_JAN20), T_JAN10, T_JAN20
     ).select("path", "tse", "value", "flags")
 
 
@@ -67,11 +56,11 @@ FROM obs WHERE tse - tse % {STEP} = {T_JAN15_NOON - T_JAN15_NOON % STEP}
 def ts_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``TSDBVar.get(ts)`` † — the row(s) in the slot containing T.
 
-    The slot is an exact [slot, slot+step) range on raw ts, so the O(1)
+    The slot is an exact [slot, slot+step) range on stored ts, so the O(1)
     positional chunk read becomes a pushed two-sided range predicate —
     one row group touched, not one file scanned."""
     slot = T_JAN15_NOON - T_JAN15_NOON % STEP
-    obs = _obs_range(spark, sf_dir, slot, slot + STEP)
+    obs = obs_range(spark, sf_dir, slot, slot + STEP)
     return obs.filter(tsdb.slot_of(F.col("tse"), STEP) == slot).select(
         "path", "tse", "value"
     )
@@ -211,10 +200,10 @@ SELECT path, tse AS last_tse, value AS last_value FROM (
 def ts_last_known(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``TSDBVar.get_last`` † — last valid value at-or-before T per series
     (the as-of lookup; the generalized as-of JOIN is `asof_join` in §2.4).
-    The ≤T bound pushes to the scan (`tse <= T ⇔ raw ts < (T+1)·10⁹`).
+    The ≤T bound pushes to the scan (`tse <= T ⇔ ts < T+1 s`).
     """
     obs = tsdb.valid_only(
-        _obs_range(spark, sf_dir, 0, T_JAN15_NOON + 1)
+        obs_range(spark, sf_dir, 0, T_JAN15_NOON + 1)
     ).filter(F.col("tse") <= T_JAN15_NOON)
     w = Window.partitionBy("path").orderBy(F.col("tse").desc(), F.col("event_id").desc())
     return (

@@ -58,7 +58,7 @@ fan out to multiple consumers ACROSS jobs (the exact survivors, the
 shingle table, the near/clean survivors); the signature table and the
 4-row per-lang sample aggregate deliberately are NOT — their consumers
 share one job each, where parallel lineage replay beats a serialized
-materialization (r14); at 100 TB
+materialization; at 100 TB
 those checkpoints become persisted inter-stage tables, and the funnel
 counts read them instead of re-deriving lineage.  The manifest's
 total-token normalizer is a 1-row broadcast (BroadcastNestedLoopJoin,
@@ -266,7 +266,7 @@ def pipeline_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingled(
         exact_kept.select("doc_id", "text"), k=JACCARD_K
     ).localCheckpoint()
-    # NO checkpoint on sigs here (r14): unlike minhash_jaccard_estimate
+    # NO checkpoint on sigs here: unlike minhash_jaccard_estimate
     # (4 sig consumers), this op's signature table feeds ONLY the pair
     # self-join — both sides of ONE job.  The eager checkpoint serialized
     # a ~0.9 s signature job in front of the near-dedup job; inlining the
@@ -337,7 +337,7 @@ def pipeline_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _cnt(df: DataFrame, name: str) -> DataFrame:
         return df.groupBy("lang").agg(F.count(F.lit(1)).alias(name))
 
-    # NO checkpoint on c_s (r14): its two consumers (the broadcast join
+    # NO checkpoint on c_s: its two consumers (the broadcast join
     # leg and the 1-row total) are both ≤4-row aggregates over the
     # ALREADY-checkpointed `clean` — recomputing the tiny window twice
     # inside the one final job is cheaper than a dedicated

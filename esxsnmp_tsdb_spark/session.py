@@ -37,9 +37,11 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Fixture parquet carries TIMESTAMP(NANOS) which vanilla Spark rejects;
-    # read as long and let the catalog layer rebuild TimestampType columns
-    # (sources/catalog.py · TS_COLS).
+    # Parquet TIMESTAMP(NANOS), which vanilla Spark rejects, reads as a
+    # nano-precision long; the catalog finds such columns in the footer
+    # and rebuilds them as timestamps (sources/catalog.py ·
+    # fixture_schema).  The fixtures here store MICROS, which needs none
+    # of this; NANOS copies are tested too.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Fixture files are single small parquet files; at cluster scale the
     # sources layer partitions by date(slot) + bucket by hash(path).

@@ -6,7 +6,9 @@ from esxsnmp_tsdb_spark.sources.catalog import (
     flat_obs,
     load_events_range,
     load_obs,
+    load_range,
     load_table,
+    obs_range,
     register_views,
 )
 
@@ -18,6 +20,8 @@ __all__ = [
     "flat_obs",
     "load_events_range",
     "load_obs",
+    "load_range",
     "load_table",
+    "obs_range",
     "register_views",
 ]

@@ -16,12 +16,17 @@ against any scale factor.
 
 from __future__ import annotations
 
+import json
 import os
 import stat
 import weakref
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from esxsnmp_tsdb_spark.session import TUNED, tune
 
@@ -40,17 +45,8 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Columns stored as parquet TIMESTAMP(NANOS): Spark reads them as
-# nano-precision longs (spark.sql.legacy.parquet.nanosAsLong) and the
-# catalog rebuilds TimestampType (microsecond) columns here, so every
-# operator sees proper timestamps.  DuckDB reads the same columns natively;
-# sub-microsecond digits exist in the fixtures, so oracles must compare at
-# second/date granularity (floor-epoch), never raw timestamps.
-TS_COLS: dict[str, tuple[str, ...]] = {
-    "events": ("ts",),
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-}
+# Footer key under which Spark stores a written table's Spark schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 # Key used to remember which sf_dir a session's views point at.
 _VIEW_TAG = "spark.esxsnmp_tsdb.viewSfDir"
@@ -182,25 +178,52 @@ def _table_stamp(sf_dir: str, name: str) -> tuple[int, int, int]:
     return (size, newest, count)
 
 
+def fixture_schema(sf_dir: str, name: str) -> tuple[T.StructType, tuple[str, ...]]:
+    """``<name>.parquet``'s Spark read schema, taken from its parquet
+    footer on the driver (no schema-inference job), and the columns it
+    stores as TIMESTAMP(NANOS).  Types map as Spark's inference maps
+    them: MICROS not adjusted to UTC (the fixtures) is TIMESTAMP_NTZ,
+    NANOS is a nano-long (``nanosAsLong``) for ``with_timestamps`` to
+    rebuild, and a Spark-written footer's own Spark schema wins (it
+    alone says INT96 means TIMESTAMP)."""
+    arrow = ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").schema
+    written_by_spark = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if written_by_spark is not None:
+        return T.StructType.fromJson(json.loads(written_by_spark)), ()
+    nanos = tuple(
+        f.name
+        for f in arrow
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
+    arrow = pa.schema(
+        [f.with_type(pa.int64()) if f.name in nanos else f for f in arrow]
+    )
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True), nanos
+
+
+def with_timestamps(df: DataFrame, nanos: tuple[str, ...]) -> DataFrame:
+    """Rebuild the nano-long columns ``fixture_schema`` reported as
+    (microsecond) timestamps; every other column is left as read."""
+    for col in nanos:
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``<name>.parquet`` as a DataFrame, with TIMESTAMP(NANOS) columns
-    rebuilt as timestamps.  The constructed plan is memoized per session
-    and fixture stamp: ``spark.read.parquet`` resolves the footer and
-    file listing through py4j on every call, and ``register_views``
-    makes ten such calls per query.  Only plans are memoized; every
-    execution still scans the parquet bytes."""
+    """``<name>.parquet`` as a DataFrame, read with its footer schema and
+    NANOS columns rebuilt as timestamps.  The constructed plan is
+    memoized per session and fixture stamp: building a DataFrame is a
+    py4j round trip, and ``register_views`` makes ten such calls per
+    query.  Only plans are memoized; every execution still scans the
+    parquet bytes."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     tune_on_first_use(spark)
 
     def read() -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for col in TS_COLS.get(name, ()):
-            if col in df.columns and dict(df.dtypes)[col] == "bigint":
-                df = df.withColumn(
-                    col, F.timestamp_micros(F.expr(f"{col} div 1000"))
-                )
-        return df
+        schema, nanos = fixture_schema(sf_dir, name)
+        df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+        return with_timestamps(df, nanos)
 
     return session_memo(
         spark,
@@ -210,37 +233,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
+def load_range(
+    spark: SparkSession, sf_dir: str, name: str, col: str, begin: int, end: int
+) -> DataFrame:
+    """``<name>`` restricted to ``begin <= floor-epoch(col) < end``, with
+    the bounds compared to the column as stored, *before* the timestamp
+    rebuild.
+
+    Filtering a rebuilt column wraps it in ``timestamp_micros(col div
+    1000)`` — an expression the parquet reader cannot push, so every row
+    group is read.  In the stored domain the bounds are literals: a
+    NANOS long against ``b·10⁹``, a timestamp against the foldable
+    ``timestamp_seconds(b)``; for integral bounds both are exact.  The
+    scan then shows ``PushedFilters: [GreaterThanOrEqual(col,…),
+    LessThan(col,…)]`` — min/max row-group skipping, the 100 TB analog of
+    the reference's YYYYMMDD chunk mapper working *within* a day file."""
+    tune_on_first_use(spark)
+    schema, nanos = fixture_schema(sf_dir, name)
+    if col in nanos:
+        lo, hi = begin * 1_000_000_000, end * 1_000_000_000
+    else:
+        lo, hi = (
+            F.timestamp_seconds(F.lit(t)).cast(schema[col].dataType)
+            for t in (begin, end)
+        )
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    return with_timestamps(df.filter((F.col(col) >= lo) & (F.col(col) < hi)), nanos)
+
+
 def load_events_range(
     spark: SparkSession, sf_dir: str, begin: int, end: int
 ) -> DataFrame:
-    """`events` restricted to ``begin <= floor-epoch(ts) < end``, with the
-    predicate applied to the RAW nano-long column *before* the timestamp
-    rebuild.
+    """`events` restricted to ``begin <= floor-epoch(ts) < end``
+    (``load_range`` on ``ts``)."""
+    return load_range(spark, sf_dir, "events", "ts", begin, end)
 
-    Filtering the converted column wraps the comparison in
-    ``unix_timestamp(timestamp_micros(ts div 1000))`` — an expression the
-    parquet reader cannot push, so every row group is read.  On the raw
-    long, ``tse >= b  ⇔  ts >= b·10⁹`` exactly (positive epochs), and the
-    scan shows ``PushedFilters: [GreaterThanOrEqual(ts,…), LessThan(ts,…)]``
-    — min/max row-group skipping, the 100 TB analog of the reference's
-    YYYYMMDD chunk mapper working *within* a day file."""
-    tune_on_first_use(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes)["ts"] == "bigint":
-        df = df.filter(
-            (F.col("ts") >= begin * 1_000_000_000)
-            & (F.col("ts") < end * 1_000_000_000)
-        ).withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:  # already proper timestamps (non-nanos source)
-        # Compare against foldable timestamp literals (NOT unix_timestamp(ts),
-        # which wraps the column and kills pushdown): floor-epoch(ts) >= b
-        # ⇔ ts >= b exactly for integral b, so the scan still shows
-        # PushedFilters on ts and skips row groups by min/max.
-        ts_type = dict(df.dtypes)["ts"]
-        lo = F.timestamp_seconds(F.lit(begin)).cast(ts_type)
-        hi = F.timestamp_seconds(F.lit(end)).cast(ts_type)
-        df = df.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-    return df
+
+def obs_range(spark: SparkSession, sf_dir: str, begin: int, end: int) -> DataFrame:
+    """The observation table restricted to ``begin <= tse < end``, with
+    the range pushed to the events scan (``load_events_range``)."""
+    from esxsnmp_tsdb_spark.functions import tsdb
+
+    return tsdb.obs_from_events(load_events_range(spark, sf_dir, begin, end))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -18,30 +18,14 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from esxsnmp_tsdb_spark.sources.catalog import (
-    _table_stamp,
-    session_memo,
+    fixture_schema,
     tune_on_first_use,
+    with_timestamps,
 )
 
 _SINK_IDS = itertools.count()
-
-
-def _raw_schema(spark: SparkSession, sf_dir: str, table: str) -> T.StructType:
-    """The streaming file source needs an explicit schema; take it from a
-    batch read of the same file so the stream always matches the fixture's
-    actual physical types (TIMESTAMP(NANOS)-as-long under the legacy flag
-    in older fixture generations, native timestamp[us] in current ones).
-    Memoized per session and stamped with the file, so a fixture rewritten
-    in place is read again."""
-    return session_memo(
-        spark,
-        ("raw_schema", os.path.abspath(sf_dir), table),
-        _table_stamp(sf_dir, table),
-        lambda: spark.read.parquet(f"{sf_dir}/{table}.parquet").schema,
-    )
 
 
 def _stream_dir(sf_dir: str, table: str) -> str:
@@ -58,18 +42,19 @@ def _stream_dir(sf_dir: str, table: str) -> str:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` as a micro-batched stream with a proper timestamp column —
-    the streaming twin of ``sources.catalog.load_table('events')``."""
+    the streaming twin of ``sources.catalog.load_table('events')``.  The
+    file source needs an explicit schema; the footer's is read at every
+    call, so a fixture rewritten in place is streamed as it now is.
+    Event-time ops need TimestampType, so ``ts`` is cast to it whatever
+    its stored encoding."""
     tune_on_first_use(spark)
+    schema, nanos = fixture_schema(sf_dir, "events")
     raw = (
-        spark.readStream.schema(_raw_schema(spark, sf_dir, "events"))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(_stream_dir(sf_dir, "events"))
     )
-    if dict(raw.dtypes)["ts"] == "bigint":  # legacy nanos-as-long fixture
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:  # native parquet timestamp (ntz) — event-time ops need TimestampType
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return with_timestamps(raw, nanos).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def run_to_memory(

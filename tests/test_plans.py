@@ -20,32 +20,34 @@ registry.load_all()
 Q = registry.QUERIES
 
 
-def test_projection_filter_pushdown(spark):
-    df = Q["projection_filter"](spark, SF_ORACLE)
-    # Filter reaches the parquet scan...
-    assert "l_shipdate" in pushed_filters(df)
+def test_projection_filter_pushdown(spark, sf_encodings):
+    df = Q["projection_filter"](spark, sf_encodings)
+    # The year range reaches the parquet scan on l_shipdate as stored...
+    pf = pushed_filters(df)
+    assert "GreaterThanOrEqual(l_shipdate" in pf and "LessThan(l_shipdate" in pf, pf
     # ...and the scan reads only the projected+filter columns, not all 11.
     rs = read_schema(df)
     assert "l_extendedprice" in rs
     assert "l_returnflag" not in rs and "l_discount" not in rs
 
 
-def test_range_scan_filter_pushdown(spark):
-    df = Q["ts_range_scan"](spark, SF_ORACLE)
+def test_range_scan_filter_pushdown(spark, sf_encodings):
+    df = Q["ts_range_scan"](spark, sf_encodings)
     # The epoch-range predicate MUST land on the parquet scan as pushed
-    # filters on the raw nanos-long ts column (row-group min/max skipping —
-    # the chunk-mapper analog).  A filter wrapped in unix_timestamp() would
-    # leave PushedFilters empty; load_events_range exists to prevent that.
+    # filters on ts as stored — a timestamp or a NANOS long — for
+    # row-group min/max skipping (the chunk-mapper analog).  A filter on
+    # the rebuilt or unix_timestamp()-wrapped column would leave
+    # PushedFilters without the range; sources.load_range prevents that.
     pf = pushed_filters(df)
     assert "GreaterThanOrEqual(ts" in pf and "LessThan(ts" in pf, pf
     assert "props" not in read_schema(df)  # unused column pruned
 
 
-def test_point_lookup_and_last_known_pushdown(spark):
-    # The O(1) slot read and the as-of lookup both carry raw-ts range
+def test_point_lookup_and_last_known_pushdown(spark, sf_encodings):
+    # The O(1) slot read and the as-of lookup both carry ts range
     # predicates into the scan (row-group skipping at scale).
-    assert "LessThan(ts" in pushed_filters(Q["ts_point_lookup"](spark, SF_ORACLE))
-    assert "LessThan(ts" in pushed_filters(Q["ts_last_known"](spark, SF_ORACLE))
+    assert "LessThan(ts" in pushed_filters(Q["ts_point_lookup"](spark, sf_encodings))
+    assert "LessThan(ts" in pushed_filters(Q["ts_last_known"](spark, sf_encodings))
 
 
 def test_broadcast_join_is_broadcast(spark):
