@@ -1,12 +1,9 @@
 """Per-session working directories for ops that WRITE datasets.
 
-Storage/ingest/streaming ops used to ``tempfile.mkdtemp()`` a fresh
-directory per call and never remove it; with bench.py invoking each
-benched op three times (plan-hygiene pass + two timed repeats), repeated
-bench/test runs accumulated unbounded /tmp copies of the obs dataset.
-
-Instead, every write-op gets ONE stable directory per op key under a
-single session root:
+Every directory the engine writes — op outputs, persisted indexes,
+streaming checkpoints and source staging — lives under ONE session root,
+so repeated bench/test runs never accumulate copies in the temp dir.
+Every write-op gets ONE stable directory per op key under that root:
 
 * the same path is returned on every call, so repeated invocations
   overwrite (or, for append-mode ops, explicitly clear) rather than
@@ -61,3 +58,15 @@ def op_dir(name: str, fresh: bool = True) -> str:
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     return d
+
+
+def fixture_dir(name: str, sf_dir: str, suffix: str = "") -> str:
+    """``op_dir`` ``<name>__<sf_dir, / as _><suffix>``, cleared, for an
+    index its builder rebuilds on a ``sources.catalog.fixture_memo`` miss."""
+    return op_dir(f"{name}__" + sf_dir.strip("/").replace("/", "_") + suffix)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new, empty directory under the session root — for a streaming
+    checkpoint, which must start empty on every query."""
+    return tempfile.mkdtemp(prefix=prefix, dir=session_root())

@@ -22,7 +22,6 @@ coarse cell) before comparing.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,7 +29,7 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions.vector import cosine
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
-from esxsnmp_tsdb_spark.sources.catalog import _table_stamp, session_memo
+from esxsnmp_tsdb_spark.sources.catalog import fixture_memo
 
 N_BANDS = 4  # one-minhash-per-band LSH
 SHINGLE_K = 3
@@ -220,13 +219,11 @@ MINHASH_PAIRS_SQL = f"""{NEAR_CTE}, {SHINGLE_SQL},
 {pairs_sql('sigs')}"""
 
 
-def _minhash_sigs(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
-    """Per-(doc, band) MinHash signatures — Spark twin of the `sigs` CTE.
-
-    Pass a pre-built (ideally checkpointed) ``sh`` shingle table to share
-    ONE shingle pass across the signature stage and other consumers.
+def _minhash_sigs(sh: DataFrame) -> DataFrame:
+    """Per-(doc, band) MinHash signatures of the ``(doc_id, shingle)``
+    table ``sh`` (`_shingled`) — Spark twin of the `sigs` CTE.  A
+    checkpointed ``sh`` shares ONE shingle pass across the signature
+    stage and other consumers.
 
     One md5 per shingle, sliced into {N_BANDS} disjoint 32-bit windows,
     plays the {N_BANDS} independent permutations — {N_BANDS}× fewer hash
@@ -235,9 +232,6 @@ def _minhash_sigs(
     band minima ride ONE partial aggregation as {N_BANDS} agg columns).
     The signature narrows from a 32-char string to a bigint, shrinking
     both the shuffle and the band-bucket join keys."""
-    if sh is None:
-        docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
-        sh = _shingled(docs2)
     hashed = sh.select("doc_id", F.md5("shingle").alias("h"))
     band_min = [
         F.min(
@@ -276,7 +270,8 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The signature table feeds both sides of the band-bucket self-join, so
     it is localCheckpoint-ed: one shingle+md5+min pass, not two."""
-    return _pairs_from_sigs(_minhash_sigs(spark, sf_dir).localCheckpoint())
+    docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
+    return _pairs_from_sigs(_minhash_sigs(_shingled(docs2)).localCheckpoint())
 
 
 @op(
@@ -407,21 +402,21 @@ def _non_star_nodes(edges: DataFrame) -> int:
     ).count()
 
 
-def _cc_components(spark: SparkSession, sf_dir: str, refresh: bool) -> DataFrame:
+def _cc_components(
+    spark: SparkSession, sf_dir: str, refresh: bool = False
+) -> DataFrame:
     """The converged ``(doc_id, component)`` frame for ``sf_dir``'s
-    MinHash near-dup graph, memoized per session under
-    ``("cc_components", abspath(sf_dir))`` and stamped with the
-    ``documents`` fixture stamp.
+    MinHash near-dup graph, memoized per session by ``fixture_memo``
+    under ``("cc_components", abspath(sf_dir))``, stamped with
+    ``documents``.
 
     The labels are a pure function of the corpus (component id = min
     doc_id, independent of layout, partitioning and round count), and
     the frame the loop returns is already checkpoint-backed, so reusing
     it within the session is semantics-free.  ``refresh=True`` (the CC
     op) always computes and overwrites the entry, so the op's repeats
-    time the real operator; ``refresh=False`` (the derived impact
-    report) serves the entry when the stamp still matches.  The stamp is
-    taken BEFORE the compute: a corpus regenerated mid-compute must not
-    get its new stamp attached to labels of the old bytes."""
+    time the real operator; the derived impact report leaves it off
+    and is served the entry while the stamp still matches."""
 
     def compute() -> DataFrame:
         pairs = _minhash_pairs(spark, sf_dir).select(
@@ -440,12 +435,8 @@ def _cc_components(spark: SparkSession, sf_dir: str, refresh: bool) -> DataFrame
             F.col("doc").alias("doc_id"), F.col("label").alias("component")
         )
 
-    return session_memo(
-        spark,
-        ("cc_components", os.path.abspath(sf_dir)),
-        _table_stamp(sf_dir, "documents"),
-        compute,
-        refresh=refresh,
+    return fixture_memo(
+        spark, "cc_components", sf_dir, ("documents",), compute, refresh
     )
 
 
@@ -746,7 +737,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.17 s vs lazy 4.41 s).
     docs2 = _docs_with_near_copies(register_views(spark, sf_dir)["documents"])
     sh = _shingled(docs2).localCheckpoint()
-    sigs = _minhash_sigs(spark, sf_dir, sh=sh).localCheckpoint()
+    sigs = _minhash_sigs(sh).localCheckpoint()
     pairs = _pairs_from_sigs(sigs)
     # shuffle_hash hints: the probe side of the
     # band-compare and intersection joins is the candidate-EXPLODED
@@ -842,7 +833,7 @@ def dedup_cluster_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation to print the histogram of a clustering they just
     computed.  Cold (stats first, or stale stamp) it computes end to
     end and memoizes the labels."""
-    comp = _cc_components(spark, sf_dir, refresh=False)
+    comp = _cc_components(spark, sf_dir)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
     return sizes.groupBy("csize").agg(
         F.count(F.lit(1)).alias("n_clusters"),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.functions.vector import dot, norm
-from esxsnmp_tsdb_spark.operators._workdirs import op_dir
+from esxsnmp_tsdb_spark.operators._workdirs import fixture_dir, op_dir
 from esxsnmp_tsdb_spark.operators.curation8 import (
     CELL_SEED_MOD,
     DOT_SQL,
@@ -38,7 +38,6 @@ from esxsnmp_tsdb_spark.operators.curation8 import (
     assign_cte,
 )
 from esxsnmp_tsdb_spark.operators.dedup import (
-    N_BANDS,
     NEAR_BATCH_SQL,
     SHINGLE_K,
     _minhash_sigs,
@@ -51,7 +50,7 @@ from esxsnmp_tsdb_spark.operators.dedup import (
 from esxsnmp_tsdb_spark.operators.similarity import BATCH_Q_MOD
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
-from esxsnmp_tsdb_spark.sources.catalog import _table_stamp, session_memo
+from esxsnmp_tsdb_spark.sources.catalog import fixture_memo
 
 
 # The manufactured "arriving batch", as a reusable CTE — the SAME
@@ -65,27 +64,25 @@ BATCH_CTE = f"""batch AS (
 # --- MinHash signature index --------------------------------------------
 
 def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session per corpus) the ingest-persisted MinHash
-    signature index for the STANDING corpus (original documents, no
-    manufactured copies): (doc_id, sig) written PARTITIONED BY band —
-    |docs|×{N_BANDS} bigint rows, the whole shingle+hash corpus pass
-    paid once at ingest.  A band-partitioned layout keeps each probe
-    join reading only the partitions its band keys touch."""
-    root = op_dir(
-        "minhash_index__" + sf_dir.strip("/").replace("/", "_"), fresh=False
-    )
-    marker = os.path.join(root, "_built")
-    sig_dir = os.path.join(root, "sigs")
-    if not os.path.exists(marker):
+    """The ingest-persisted MinHash signature index for the STANDING
+    corpus (original documents, no manufactured copies): (doc_id, sig)
+    written PARTITIONED BY band — |docs|×{N_BANDS} bigint rows, the
+    whole shingle+hash corpus pass paid once per ``documents`` stamp
+    (``fixture_memo``).  A band-partitioned layout keeps each probe join
+    reading only the partitions its band keys touch."""
+
+    def build() -> str:
+        root = fixture_dir("minhash_index", sf_dir)
         corpus = register_views(spark, sf_dir)["documents"].select("doc_id", "text")
-        sigs = _minhash_sigs(spark, sf_dir, sh=_shingled(corpus))
         # (16 band dirs × writer tasks is a healthy file count at every
         # scale — unlike the per-cell members write below, which needs the
         # explicit repartition to avoid tasks × cells slivers)
-        sigs.write.mode("overwrite").partitionBy("band").parquet(sig_dir)
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return root
+        _minhash_sigs(_shingled(corpus)).write.mode("overwrite").partitionBy(
+            "band"
+        ).parquet(os.path.join(root, "sigs"))
+        return root
+
+    return fixture_memo(spark, "minhash_index", sf_dir, ("documents",), build)
 
 
 @op(
@@ -144,7 +141,7 @@ def minhash_index_hits(
         else register_views(spark, sf_dir)["documents"]
     )
     batch = _near_batch(src)
-    bat_sigs = _minhash_sigs(spark, sf_dir, sh=_shingled(batch)).select(
+    bat_sigs = _minhash_sigs(_shingled(batch)).select(
         F.col("doc_id").alias("new_id"), "band", "sig"
     )
     if broadcast_batch:
@@ -203,27 +200,23 @@ def dedup_minhash_indexed_smallbatch(spark: SparkSession, sf_dir: str) -> DataFr
 def build_semantic_cell_index(
     spark: SparkSession, sf_dir: str, seed_mod: int | None = None
 ) -> str:
-    """Build (once per session per corpus) the ingest-persisted semantic
-    dedup index for the STANDING corpus (original embeddings): the
-    coarse centroids (catalog-sized, `centroids/`) and every corpus
-    vector with its cell assignment, written PARTITIONED BY cid
-    (`members/`) — the layout `dedup_semantic_cells`' docstring promises
-    at ingest time, shared geometry via `curation8._assign_cells`.
+    """The ingest-persisted semantic dedup index for the STANDING corpus
+    (original embeddings): the coarse centroids (catalog-sized,
+    `centroids/`) and every corpus vector with its cell assignment,
+    written PARTITIONED BY cid (`members/`) — the layout
+    `dedup_semantic_cells`' docstring promises at ingest time, shared
+    geometry via `curation8._assign_cells`.  Built once per
+    ``embeddings`` stamp (``fixture_memo``).
 
     ``seed_mod`` overrides the cell-seeding stride (default
     `curation8.CELL_SEED_MOD`, the oracle-static convention).  A growing
     corpus should pass ``CELL_SEED_MOD × √(growth)`` so the cell count
     follows the √N deployment rule (docs/CLUSTER.md); each stride gets
     its own index directory."""
-    from esxsnmp_tsdb_spark.operators.curation8 import CELL_SEED_MOD
-
     suffix = "" if seed_mod in (None, CELL_SEED_MOD) else f"__m{seed_mod}"
-    root = op_dir(
-        "semcell_index__" + sf_dir.strip("/").replace("/", "_") + suffix,
-        fresh=False,
-    )
-    marker = os.path.join(root, "_built")
-    if not os.path.exists(marker):
+
+    def build() -> str:
+        root = fixture_dir("semcell_index", sf_dir, suffix)
         e = register_views(spark, sf_dir)["embeddings"].select(
             "vec_id", "embedding", norm(_dbl(F.col("embedding"))).alias("nrm")
         )
@@ -244,9 +237,11 @@ def build_semantic_cell_index(
         ).repartition(F.col("cid")).write.mode("overwrite").partitionBy(
             "cid"
         ).parquet(os.path.join(root, "members"))
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return root
+        return root
+
+    return fixture_memo(
+        spark, "semcell_index" + suffix, sf_dir, ("embeddings",), build
+    )
 
 
 @op(
@@ -374,12 +369,7 @@ def sqrtn_stride(spark: SparkSession, sf_dir: str) -> int:
         n = register_views(spark, sf_dir)["embeddings"].count()
         return max(1, math.ceil(math.sqrt(n)))
 
-    return session_memo(
-        spark,
-        ("sqrtn_stride", os.path.abspath(sf_dir)),
-        _table_stamp(sf_dir, "embeddings"),
-        census,
-    )
+    return fixture_memo(spark, "sqrtn_stride", sf_dir, ("embeddings",), census)
 
 
 @op(
@@ -507,7 +497,7 @@ def stream_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two consumers (hits write + index append) — checkpoint so the
         # shingle+md5+min pass runs once per micro-batch
         bsigs = (
-            _minhash_sigs(spark, sf_dir, sh=_shingled(bdf))
+            _minhash_sigs(_shingled(bdf))
             .select(F.col("doc_id").alias("new_id"), "band", "sig")
             .localCheckpoint()
         )

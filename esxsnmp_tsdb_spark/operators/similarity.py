@@ -14,8 +14,6 @@ hash buckets first; label-blocked kNN never materializes the corpus².
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,7 +21,7 @@ from esxsnmp_tsdb_spark.functions.topk import ranked_topk
 from esxsnmp_tsdb_spark.functions.vector import cosine, dot, norm
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
-from esxsnmp_tsdb_spark.sources.catalog import _table_stamp, session_memo
+from esxsnmp_tsdb_spark.sources.catalog import fixture_memo
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -141,12 +139,7 @@ def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
         )
         return row[0] if row else 0
 
-    return session_memo(
-        spark,
-        ("emb_dim", os.path.abspath(sf_dir)),
-        _table_stamp(sf_dir, "embeddings"),
-        probe,
-    )
+    return fixture_memo(spark, "emb_dim", sf_dir, ("embeddings",), probe)
 
 
 def _lsh_bucket_expr(d: int):

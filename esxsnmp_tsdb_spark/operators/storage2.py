@@ -45,7 +45,8 @@ from esxsnmp_tsdb_spark.operators._shared import (
 )
 from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.sources import BKT_OBS_TAG, flat_obs, register_views
+from esxsnmp_tsdb_spark.sources import flat_obs, register_views
+from esxsnmp_tsdb_spark.sources.catalog import record_bkt_obs
 
 # Local projection of the 4096-bucket deployment layout (docs/CLUSTER.md):
 # one bucket per core, so a zero-exchange bucketed plan runs at the same
@@ -91,14 +92,16 @@ def bucketed_obs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears (asserted in tests/test_storage2.py).  At 100 TB this is
     the difference between consolidating a day re-shuffling the fleet's
     ingest and consolidating it bucket-local."""
-    df = _bucketed_table(spark, flat_obs(spark, sf_dir), "bkt_obs", "path", "tse")
-    # Stamp what was just built so ``sources.load_obs`` routes onto it
-    # only for this sf_dir; stamped HERE (by the builder) so a rebuild
-    # for another sf_dir can never leave a stale tag pointing at the
-    # wrong fixture.  The source is always ``flat_obs``: a routed read
-    # would scan the very table the DROP above removes.
-    spark.conf.set(BKT_OBS_TAG, sf_dir)
-    return df
+    # Recorded so ``sources.load_obs`` routes onto it only for this
+    # sf_dir and events stamp.  The source is always ``flat_obs``: a
+    # routed read would scan the very table the DROP removes.
+    return record_bkt_obs(
+        spark,
+        sf_dir,
+        lambda: _bucketed_table(
+            spark, flat_obs(spark, sf_dir), "bkt_obs", "path", "tse"
+        ),
+    )
 
 
 @op(
@@ -264,7 +267,6 @@ def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SNAP_DAY0 = T_JAN10 // 86400  # first day of the snapshot window
-SNAP_DAYS = 10                # window length (days)
 SNAP_CHANGED = SNAP_DAY0 + 5  # the day the second snapshot rewrites
 
 

@@ -25,6 +25,7 @@ from esxsnmp_tsdb_spark.operators.analytics5 import (
 )
 from esxsnmp_tsdb_spark.operators.analytics5 import CAP10 as _CAP10
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
+from esxsnmp_tsdb_spark.operators._workdirs import op_dir, scratch_dir
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.session import local_frame
 from esxsnmp_tsdb_spark.streaming import events_stream, run_to_memory
@@ -255,8 +256,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace primitive, so day grain is the honest floor here."""
     import os
 
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-
     out = op_dir("stream_cdc_store")
     store = os.path.join(out, "t")
     ev = events_stream(spark, sf_dir)
@@ -306,11 +305,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    import tempfile
-
     q = (
         chg.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_"))
+        .option("checkpointLocation", scratch_dir("cdc_ckpt_"))
         .start()
     )
     try:
@@ -358,7 +355,6 @@ def stream_ladder_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stream_ladder_maintenance` already proves without a policy."""
     import os
 
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
     from esxsnmp_tsdb_spark.streaming.maintenance import (
         maintain_levels,
         read_level,
@@ -430,9 +426,6 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     target; same LWW semantics, same oracle as `stream_cdc_apply` — the
     layout changes the physics, not the answer."""
     import os
-    import tempfile
-
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 
     out = op_dir("stream_cdc_bucketed_store")
     store = os.path.join(out, "t")
@@ -494,7 +487,7 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         chg.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cdcb_ckpt_"))
+        .option("checkpointLocation", scratch_dir("cdcb_ckpt_"))
         .start()
     )
     try:
@@ -649,7 +642,6 @@ def stream_watermark_late_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
     from esxsnmp_tsdb_spark.sources.catalog import load_table
 
     root = op_dir("wm_late_check")

@@ -274,7 +274,7 @@ def pipeline_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside that job (idle-core work at this stage width), removing a
     # sequential link.  A/B at sf0.1: won every interleaved rep, values
     # identical (exceptAll 0 both ways).
-    sigs = _minhash_sigs(spark, sf_dir, sh=sh)
+    sigs = _minhash_sigs(sh)
     pairs = _pairs_from_sigs(sigs)
 
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

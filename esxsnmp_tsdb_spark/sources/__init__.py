@@ -1,5 +1,4 @@
 from esxsnmp_tsdb_spark.sources.catalog import (
-    BKT_OBS_TAG,
     OBS_COLUMNS,
     ROUTE_BUCKETED_CONF,
     TABLES,
@@ -13,7 +12,6 @@ from esxsnmp_tsdb_spark.sources.catalog import (
 )
 
 __all__ = [
-    "BKT_OBS_TAG",
     "OBS_COLUMNS",
     "ROUTE_BUCKETED_CONF",
     "TABLES",

@@ -10,8 +10,11 @@ Scale posture: each fixture table is one parquet file locally (a
 Spark-written directory table is read and stamped the same way); the 100 TB
 layout for the observation table is ``partitionBy(date(slot))`` + bucket by
 ``hash(path)`` (SURVEY.md §4).  ``register_views`` is idempotent and cheap —
-it re-registers when ``sf_dir`` changes so queries() callables can be invoked
-against any scale factor.
+it re-registers when ``sf_dir`` changes or a table is rewritten, so
+queries() callables can be invoked against any scale factor.
+Whatever is derived from a fixture and kept for reuse lives in one
+per-session memo stamped with the fixture's files (``fixture_memo``), so
+nothing outlives a rewrite and no session conf is written.
 """
 
 from __future__ import annotations
@@ -43,18 +46,8 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Footer key under which Spark stores a written table's Spark schema.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-# Key used to remember which sf_dir a session's views point at.
-_VIEW_TAG = "spark.esxsnmp_tsdb.viewSfDir"
-
-# Conf key recording which sf_dir the bkt_obs table was built from —
-# stamped by ``storage2.bucketed_obs_table``, read by ``load_obs`` to
-# refuse cross-fixture routing.
-BKT_OBS_TAG = "spark.esxsnmp_tsdb.bktObsSfDir"
 
 # Opt-in bucketed-obs routing.  Default OFF: the
 # driver's vanilla session must see the flat-parquet path (its oracle
@@ -93,38 +86,46 @@ def load_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bkt_obs`` — the SURVEY §4 bucketBy(hash(path)).sortBy(path, tse)
     layout materialized by ``storage2.bucketed_obs_table`` — so
     per-series window/consolidation plans consume the bucket layout with
-    ZERO exchanges.  Routing refuses silently-wrong reads twice over:
-    the stamp must match ``sf_dir`` (no cross-fixture serves) and the
-    table must still exist (a stale stamp after an external DROP falls
-    back to flat).  Value parity flat-vs-routed is pinned for every
-    routed op in tests/test_bucketed_routing.py."""
+    ZERO exchanges.  Routing refuses silently-wrong reads: the session's
+    ``bkt_obs`` entry (``record_bkt_obs``; only read here) must name this
+    ``sf_dir`` and its current ``events`` stamp, and the table must still
+    exist (an external DROP falls back to flat).  Value parity
+    flat-vs-routed is pinned for every routed op in
+    tests/test_bucketed_routing.py."""
     tune_on_first_use(spark)
-    if (spark.conf.get(ROUTE_BUCKETED_CONF, "false") or "").lower() == "true":
-        try:
-            built_for = spark.conf.get(BKT_OBS_TAG)
-        except Exception:
-            built_for = None
-        if built_for == sf_dir and spark.catalog.tableExists("bkt_obs"):
-            return spark.table("bkt_obs").select(*OBS_COLUMNS)
+    if (
+        (spark.conf.get(ROUTE_BUCKETED_CONF, "false") or "").lower() == "true"
+        and _named_memo(spark, "bkt_obs", sf_dir, ("events",), None) is not None
+        and spark.catalog.tableExists("bkt_obs")
+    ):
+        return spark.table("bkt_obs").select(*OBS_COLUMNS)
     return flat_obs(spark, sf_dir)
+
+
+def record_bkt_obs(spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    """``build()`` the ``bkt_obs`` table from ``sf_dir``'s events and
+    record it as the session's one ``bkt_obs`` entry, so ``load_obs``
+    routes onto it for this fixture, as it is now, only."""
+    return _named_memo(spark, "bkt_obs", sf_dir, ("events",), build, refresh=True)
 
 
 # Per-session memo: (session -> {key: (stamp, value)}).  It holds lazy
 # plans and small driver-side results (fixture DataFrames, the embedding
-# width, the converged CC labels), never table data of its own.  Keys are
-# tuples naming the entry and its abspath(sf_dir); stamps are
-# `_table_stamp` results taken BEFORE the value is computed, so a fixture
-# rewritten mid-compute is refused on the next lookup, never stamped onto
-# results of the old bytes.  Weak session keys scope entries to the
-# owning session, so a new/driver session never sees another session's
-# values.  The entry under ``session.TUNED`` marks a tuned session.
+# width, the converged CC labels, the directories of persisted indexes),
+# never table data of its own.  Everything derived from a fixture goes
+# through ``fixture_memo`` (or ``_named_memo``), which own the key and
+# stamp convention.  Weak session keys scope entries to the owning
+# session, so a new/driver session never sees another session's values.
+# The entry under ``session.TUNED`` marks a tuned session.
 _MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-def session_memo(spark: SparkSession, key: tuple, stamp, compute, refresh=False):
+def session_memo(spark: SparkSession, key, stamp, compute, refresh: bool = False):
     """``compute()``, memoized per (session, key) and guarded by
     ``stamp``: a hit is served only when its stamp equals ``stamp``.
-    ``refresh=True`` always computes and overwrites the entry."""
+    ``refresh=True`` always computes and overwrites the entry;
+    ``compute=None`` only looks: a miss returns None and records
+    nothing."""
     try:
         if spark not in _MEMO and _MEMO:
             # Memoized DataFrames hold strong refs back to their session,
@@ -141,9 +142,42 @@ def session_memo(spark: SparkSession, key: tuple, stamp, compute, refresh=False)
     hit = entries.get(key)
     if not refresh and hit is not None and hit[0] == stamp:
         return hit[1]
+    if compute is None:
+        return None
     value = compute()
     entries[key] = (stamp, value)
     return value
+
+
+def _stamp(sf_dir: str, tables) -> tuple:
+    """The ``_table_stamp`` of every table in ``tables``, concatenated."""
+    return sum((_table_stamp(sf_dir, t) for t in tables), ())
+
+
+def fixture_memo(
+    spark: SparkSession, name: str, sf_dir: str, tables, compute, refresh: bool = False
+):
+    """``compute()`` for a result derived from ``sf_dir``'s fixture
+    ``tables``, memoized per session under ``(name, abspath(sf_dir))``
+    and stamped with the ``_table_stamp`` of every table it reads.  The
+    stamp is taken BEFORE the compute, so a fixture rewritten
+    mid-compute is refused on the next lookup, never stamped onto a
+    result of the old bytes.  A result with files of its own (an index)
+    rebuilds them on a stamp miss."""
+    key = (name, os.path.abspath(sf_dir))
+    return session_memo(spark, key, _stamp(sf_dir, tables), compute, refresh)
+
+
+def _named_memo(
+    spark: SparkSession, name: str, sf_dir: str, tables, compute, refresh: bool = False
+):
+    """``fixture_memo`` for a session-global name — the fixture temp
+    views, the ``bkt_obs`` table — which points at one fixture at a
+    time: ONE entry keyed by the name alone, whose stamp leads with
+    ``abspath(sf_dir)``, so building the name for another fixture
+    replaces it."""
+    stamp = (os.path.abspath(sf_dir),) + _stamp(sf_dir, tables)
+    return session_memo(spark, (name,), stamp, compute, refresh)
 
 
 def tune_on_first_use(spark: SparkSession) -> None:
@@ -225,12 +259,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
         return with_timestamps(df, nanos)
 
-    return session_memo(
-        spark,
-        ("table", os.path.abspath(sf_dir), name),
-        _table_stamp(sf_dir, name),
-        read,
-    )
+    return fixture_memo(spark, f"table:{name}", sf_dir, (name,), read)
 
 
 def load_range(
@@ -280,16 +309,16 @@ def obs_range(spark: SparkSession, sf_dir: str, begin: int, end: int) -> DataFra
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every fixture table as a temp view.
 
-    Returns the name → DataFrame mapping.  Re-registration is skipped when
-    the session's views already point at ``sf_dir``.
+    Returns the name → DataFrame mapping.  Registration is skipped while
+    the session's views already hold ``sf_dir``'s tables as they are
+    now; another ``sf_dir``, or any table rewritten since (a part file
+    added to a directory table included), registers them again.
     """
-    dfs = {name: load_table(spark, sf_dir, name) for name in TABLES}
-    try:
-        current = spark.conf.get(_VIEW_TAG)
-    except Exception:
-        current = None
-    if current != sf_dir:
+
+    def register() -> dict[str, DataFrame]:
+        dfs = {name: load_table(spark, sf_dir, name) for name in TABLES}
         for name, df in dfs.items():
             df.createOrReplaceTempView(name)
-        spark.conf.set(_VIEW_TAG, sf_dir)
-    return dfs
+        return dfs
+
+    return dict(_named_memo(spark, "views", sf_dir, TABLES, register))

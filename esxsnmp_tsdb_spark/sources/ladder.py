@@ -25,9 +25,6 @@ from esxsnmp_tsdb_spark.functions.tsdb import slot_of
 
 DEFAULT_LEVELS = (300, 3600, 86400)
 
-# Consolidation-function column produced per level.
-CF_COLS = ("average", "total", "vmin", "vmax", "last", "n")
-
 # Consolidation functions a timerange request may name (`cf=` query arg).
 TIMERANGE_CFS = ("average", "delta", "min", "max", "last")
 

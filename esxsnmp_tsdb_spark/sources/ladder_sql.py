@@ -75,37 +75,29 @@ def register_ladder_store(
     sf_dir: str,
     levels: tuple[int, ...] = DEFAULT_LEVELS,
 ) -> dict[int, str]:
-    """Session-persistent ladder store for a corpus: build + write the
-    day-partitioned level tables ONCE per session per ``sf_dir`` (a
-    ready-marker skips rebuilds), re-registering the ``obs_agg_<step>``
-    views on every call so one long-lived session can serve multiple
-    corpora (the driver's sf0.01 pass and the bench's sf0.1 pass
-    coexist).  This is the serving-layer twin of the reference's
+    """Session-persistent ladder store for a corpus: the day-partitioned
+    level tables, built once per ``events`` stamp
+    (``catalog.fixture_memo``), with the ``obs_agg_<step>`` views
+    re-registered on every call so one long-lived session can serve
+    multiple corpora (the driver's sf0.01 pass and the bench's sf0.1
+    pass coexist).  This is the serving-layer twin of the reference's
     pre-computed Aggregate vars: queries hit these tables, maintenance
     (`ts_ladder_backfill` / streaming ladder upkeep) refreshes only the
     day partitions that changed."""
-    import os
+    from esxsnmp_tsdb_spark.operators._workdirs import fixture_dir
+    from esxsnmp_tsdb_spark.sources.catalog import fixture_memo, flat_obs
 
-    from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-    from esxsnmp_tsdb_spark.sources.catalog import flat_obs
+    def build() -> str:
+        root = fixture_dir("ladder_store", sf_dir)
+        materialize_ladder(spark, flat_obs(spark, sf_dir), root, levels)
+        return root
 
-    root = op_dir(
-        "ladder_store__" + sf_dir.strip("/").replace("/", "_"), fresh=False
-    )
-    marker = os.path.join(root, "_STORE_READY")
-    if os.path.exists(marker):
-        out = {}
-        for step in levels:
-            name = view_name(step)
-            spark.read.parquet(f"{root}/agg_{step}").createOrReplaceTempView(
-                name
-            )
-            out[step] = name
-        return out
-    obs = flat_obs(spark, sf_dir)
-    out = materialize_ladder(spark, obs, root, levels)
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
+    root = fixture_memo(spark, "ladder_store", sf_dir, ("events",), build)
+    out = {}
+    for step in levels:
+        name = view_name(step)
+        spark.read.parquet(f"{root}/agg_{step}").createOrReplaceTempView(name)
+        out[step] = name
     return out
 
 

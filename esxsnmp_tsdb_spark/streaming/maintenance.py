@@ -115,11 +115,11 @@ def maintain_levels(
         finally:
             batch_df.unpersist()
 
-    import tempfile
+    from esxsnmp_tsdb_spark.operators._workdirs import scratch_dir
 
     return (
         obs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ladder_ckpt_"))
+        .option("checkpointLocation", scratch_dir("ladder_ckpt_"))
         .start()
     )
 

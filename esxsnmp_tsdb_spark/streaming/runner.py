@@ -14,11 +14,11 @@ from __future__ import annotations
 import hashlib
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esxsnmp_tsdb_spark.operators._workdirs import scratch_dir, session_root
 from esxsnmp_tsdb_spark.sources.catalog import (
     fixture_schema,
     tune_on_first_use,
@@ -29,10 +29,10 @@ _SINK_IDS = itertools.count()
 
 
 def _stream_dir(sf_dir: str, table: str) -> str:
-    """The streaming file source requires a *directory*; stage one holding
-    a symlink to the (read-only) fixture file."""
+    """The streaming file source requires a *directory*; stage one under
+    the session root holding a symlink to the (read-only) fixture file."""
     tag = hashlib.md5(f"{sf_dir}/{table}".encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"esxsnmp_stream_src_{tag}")
+    d = os.path.join(session_root(), f"stream_src_{tag}")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(link):
@@ -63,7 +63,7 @@ def run_to_memory(
     """Run a streaming DataFrame to completion into a memory sink; return
     the sink table as a batch DataFrame."""
     name = f"stream_sink_{next(_SINK_IDS)}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = scratch_dir("ckpt_")
     q = (
         result.writeStream.outputMode(output_mode)
         .format("memory")

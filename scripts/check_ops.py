@@ -1,12 +1,15 @@
 #!/usr/bin/env python
-"""Ad-hoc oracle check for a list of op keys (or a key prefix).
+"""Oracle check for a list of op keys, a key prefix, or every op.
 
     python scripts/check_ops.py [--sf DIR] key1 key2 ...
     python scripts/check_ops.py --prefix ts_ --sf /root/testdata/sf0.01
+    python scripts/check_ops.py --sf /root/testdata/sf0.01   # every op
 
 Runs the registered Spark query and DuckDB oracle side by side through
 tests/oracle_harness.py's driver-equivalent compare and prints pass/fail
-per key.  Exits nonzero on any failure.
+per key.  With no keys and no ``--prefix`` it checks every registered op
+(``--prefix ""`` too).  Exits nonzero on any failure, and when the
+selection is empty.
 """
 
 from __future__ import annotations
@@ -37,8 +40,13 @@ def main() -> int:
     from tests.oracle_harness import compare, duck_connection
 
     registry.load_all()
-    if prefix:
-        keys += [k for k in registry.QUERIES if k.startswith(prefix)]
+    if prefix is not None:
+        keys += [k for k in registry.queries() if k.startswith(prefix)]
+    elif not keys:
+        keys = list(registry.queries())
+    if not keys:
+        print(f"FAIL no op matches --prefix {prefix!r}")
+        return 1
     spark = get_session()
     con = duck_connection(sf)
     failures = 0

@@ -37,6 +37,20 @@ _NORMALIZE = (
 )
 
 
+# Spark cuts scan metadata (PushedFilters, DataFilters, Location) at this
+# many characters, before the ids above are normalized: under the default
+# 100, one filter cuts at a different character when its ids differ in
+# length.  Uncut, a plan prints the same whatever its ids.
+_METADATA_LIMIT = ("spark.sql.maxMetadataStringLength", str(1 << 20))
+
+
+def plan_session():
+    """The script's session, with scan metadata printed uncut."""
+    spark = get_session("dump_plans")
+    spark.conf.set(*_METADATA_LIMIT)
+    return spark
+
+
 def normalized_plan(df) -> str:
     plan = plan_str(df, "simple")
     for pattern, repl in _NORMALIZE:
@@ -45,7 +59,7 @@ def normalized_plan(df) -> str:
 
 
 def dump_all_json(out_path: str, sf_dir: str) -> None:
-    spark = get_session("dump_plans")
+    spark = plan_session()
     queries = registry.queries()
     plans = {
         key: normalized_plan(queries[key](spark, sf_dir))
@@ -73,7 +87,7 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_session("dump_plans")
+    spark = plan_session()
     queries = registry.queries()
     for key in keys:
         df = queries[key](spark, sf_dir)

@@ -15,11 +15,7 @@ import pytest
 from esxsnmp_tsdb_spark import registry
 from esxsnmp_tsdb_spark.plans import plan_str
 from esxsnmp_tsdb_spark.session import get_session
-from esxsnmp_tsdb_spark.sources import (
-    BKT_OBS_TAG,
-    ROUTE_BUCKETED_CONF,
-    load_obs,
-)
+from esxsnmp_tsdb_spark.sources import ROUTE_BUCKETED_CONF, load_obs
 
 SF = "/root/testdata/sf0.001"
 
@@ -87,13 +83,13 @@ def test_flag_on_reads_bucketed_table(spark, bkt):
 
 def test_cross_fixture_stamp_refuses_routing(spark, bkt):
     _routed(spark, "true")
-    stamp = spark.conf.get(BKT_OBS_TAG)
     try:
-        spark.conf.set(BKT_OBS_TAG, "/root/testdata/sf0.01")
-        plan = plan_str(load_obs(spark, SF), "simple")
-        assert "bkt_obs" not in plan  # stale stamp -> flat fallback
+        # bkt_obs was built for SF; a load for another fixture is flat
+        plan = plan_str(load_obs(spark, "/root/testdata/sf0.01"), "simple")
+        assert "bkt_obs" not in plan  # other fixture -> flat fallback
+        assert "sf0.01/events.parquet" in plan
+        assert "bkt_obs" in plan_str(load_obs(spark, SF), "simple")
     finally:
-        spark.conf.set(BKT_OBS_TAG, stamp)
         _routed(spark, "false")
 
 
@@ -112,9 +108,9 @@ def test_rebuild_never_reads_the_routed_table(spark, bkt, monkeypatch):
         return write(spark, df, *args)
 
     monkeypatch.setattr(storage2, "_bucketed_table", spy)
-    assert spark.conf.get(BKT_OBS_TAG) == SF
     _routed(spark, "true")
     try:
+        assert "bkt_obs" in plan_str(load_obs(spark, SF), "simple")
         rebuilt = storage2.bucketed_obs_table(spark, SF).count()
     finally:
         _routed(spark, "false")

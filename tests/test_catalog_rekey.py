@@ -1,7 +1,8 @@
 """Cross-sf view re-keying: one session serving queries at DIFFERENT
 fixture scales must re-point its temp views when ``sf_dir`` changes and
 skip re-registration when it does not (sources/catalog.py ·
-register_views, tagged via the ``spark.esxsnmp_tsdb.viewSfDir`` conf).
+register_views, whose one ``"views"`` memo entry records the ``sf_dir``
+and table stamps the views were registered from).
 
 The driver runs every op through one SparkSession; the verify recipe
 (.claude/skills/verify/SKILL.md) probes this by hand — "call the same
@@ -15,7 +16,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from esxsnmp_tsdb_spark.sources.catalog import _VIEW_TAG, register_views
+from esxsnmp_tsdb_spark.sources.catalog import register_views
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -43,7 +44,7 @@ def test_views_follow_sf_dir_and_back(spark, table):
     )
     register_views(spark, SF_A)  # and back again
     assert _view_count(spark, table) == want_a
-    assert spark.conf.get(_VIEW_TAG) == SF_A
+    assert spark.conf.get("spark.esxsnmp_tsdb.viewSfDir", None) is None
 
 
 def test_same_sf_dir_skips_reregistration(spark):

@@ -9,6 +9,8 @@ import importlib.util
 import os
 import sys
 
+import pytest
+
 from esxsnmp_tsdb_spark import registry, session
 from tests.conftest import SF_SMOKE
 
@@ -73,6 +75,58 @@ def test_check_ops_runs_each_op_once_and_survives_unknown_key(
     assert "FAIL zz_no_such_op: EXCEPTION KeyError" in out
     assert "PASS ts_rate" in out
     assert "PASS scan_parquet" in out
+
+
+def _script(name: str):
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(ROOT, "scripts", f"{name}.py")
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize(
+    "selection, want",
+    [
+        ([], ["ts_rate", "scan_parquet"]),  # no keys: every op
+        (["--prefix", ""], ["ts_rate", "scan_parquet"]),
+        (["--prefix", "scan_"], ["scan_parquet"]),
+        (["--prefix", "zz_no_such_prefix"], []),
+    ],
+)
+def test_check_ops_selection(spark, monkeypatch, capsys, selection, want):
+    # every registered op unless keys or a prefix narrow it, and an empty
+    # selection is a failure rather than a sweep that checked nothing
+    check_ops = _script("check_ops")
+    registry.load_all()
+    ops = {k: registry.QUERIES[k] for k in ("ts_rate", "scan_parquet")}
+    monkeypatch.setattr(registry, "queries", lambda: dict(ops))
+    monkeypatch.setattr(session, "get_session", lambda *a, **k: spark)
+    argv = ["check_ops.py", "--sf", SF_SMOKE, *selection]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert check_ops.main() == (0 if want else 1)
+    out = capsys.readouterr().out
+    passed = [ln.split()[1] for ln in out.splitlines() if ln.startswith("PASS")]
+    assert passed == want
+    if not want:
+        assert "FAIL no op matches" in out
+
+
+def test_dump_plans_prints_scan_filters_uncut(spark, monkeypatch):
+    # Spark cuts scan metadata at maxMetadataStringLength before the ids
+    # are normalized; the script's session prints it whole
+    dump_plans = _script("dump_plans")
+    monkeypatch.setattr(dump_plans, "get_session", lambda *a, **k: spark)
+    key = "spark.sql.maxMetadataStringLength"
+    before = spark.conf.get(key)
+    try:
+        plan = dump_plans.normalized_plan(
+            registry.QUERIES["projection_filter"](dump_plans.plan_session(), SF_SMOKE)
+        )
+    finally:
+        spark.conf.set(key, before)
+    assert "LessThan(l_shipdate,1997-01-01T00:00)]" in plan, plan
 
 
 def _registry_refs(path: str):
