@@ -53,7 +53,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions.tsdb import ROW_HIDDEN, ROW_VALID, slot_of
+from esxsnmp_tsdb_spark.functions.tsdb import (
+    CF_COLUMN,
+    ROW_HIDDEN,
+    ROW_VALID,
+    slot_of,
+)
 from esxsnmp_tsdb_spark.session import local_frame
 
 METADATA_FILE = "TSDB_METADATA"
@@ -664,15 +669,11 @@ class TSDBVar(_Node):
         no Exchange, as every read of the var's single partition."""
         if step is None:
             return self.select(begin, end)
-        from esxsnmp_tsdb_spark.sources.ladder import (
-            TIMERANGE_CFS,
-            pick_level,
-            serve_level,
-        )
+        from esxsnmp_tsdb_spark.sources.ladder import pick_level, serve_level
 
         # Validate cf even when the window is empty: a bad cf is a
         # caller bug and must not depend on the window being non-empty.
-        if cf not in TIMERANGE_CFS:
+        if cf not in CF_COLUMN:
             raise ValueError(f"unknown consolidation function {cf!r}")
         if end <= begin:  # empty request stays empty, like select's
             return local_frame(
@@ -695,11 +696,12 @@ class TSDBVar(_Node):
         stored = pick_level(tuple(sorted({*built, self.step})), step)
         if stored == self.step:
             # Raw level: every LWW valid row is a 1-sample consolidation
-            # at the var's own step.
+            # at the var's own step; a NULL value is an unknown sample
+            # (n = 0), as in `functions/tsdb.consolidation_partial`.
             v = F.col("value")
             rows = self._lww(self._rows())
             cols = [v.alias(c) for c in ("average", "total", "vmin", "vmax", "last")]
-            cols.append(F.lit(1).cast("long").alias("n"))
+            cols.append(v.isNotNull().cast("long").alias("n"))
         else:
             rows = built[stored]._rows()
             cols = ["average", "total", "vmin", "vmax", "last", "n"]

@@ -12,7 +12,9 @@ Reference parity notes (anchors are † public-repo hints, SURVEY.md §0):
   wrap + heartbeat invalidation, RRD-style consolidation (average, delta,
   min, max, last) and proportional allocation of a delta across bucket
   boundaries → :func:`deltas`, :func:`wrap_correct`, :func:`downsample`,
-  :func:`bin_split`.
+  :func:`bin_split`; the consolidation state itself is one mergeable
+  partial (:func:`consolidation_partial`, :func:`merge_partial`,
+  :func:`finish_partial`, :data:`CF_COLUMN`).
 
 Every function is a pure ``DataFrame -> DataFrame`` transform over the long
 "obs" layout (SURVEY.md §1.2)::
@@ -197,6 +199,76 @@ def delta_consolidate(
     )
 
 
+# The consolidation functions a request may name (``cf=``) and the
+# finished column that answers each — the reference's Aggregate row
+# (average, delta, min, max, last).
+CF_COLUMN = {
+    "average": "average",
+    "delta": "total",
+    "min": "vmin",
+    "max": "vmax",
+    "last": "last",
+}
+
+
+def consolidation_partial(
+    obs: DataFrame, step: int, value_col: str = "value", by: tuple[str, ...] = ()
+) -> DataFrame:
+    """The one mergeable RRD consolidation state, per (path, slot, *by)
+    at ``step``: ``sv`` (Σ value), ``n`` (non-NULL values), ``vmin``,
+    ``vmax`` and ``_last = max(struct(tse, event_id, value))``.
+
+    A NULL value is an unknown sample: sum, min, max and ``n`` skip it,
+    while ``_last`` still holds the latest row's value, NULL or not.
+    Every field merges by sum, min or max, so partials combine in any
+    order and grouping (:func:`merge_partial`); the ladder, its stored
+    levels, their streaming upkeep and the hot-path salting all hold
+    this state and nothing else."""
+    v = F.col(value_col)
+    slot = slot_of(F.col("tse"), step).alias("slot")
+    return obs.groupBy("path", slot, *by).agg(
+        F.sum(v).alias("sv"),
+        F.count(v).alias("n"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+        F.max(F.struct("tse", "event_id", v.alias("value"))).alias("_last"),
+    )
+
+
+def merge_partial(
+    partials: DataFrame, step: int, by: tuple[str, ...] = ()
+) -> DataFrame:
+    """Merge partials to ``step`` per (path, slot, *by): the same step
+    folds new partials into stored ones, a coarser step cascades a level
+    from the next finer one (``update_all_aggregates`` †)."""
+    return partials.groupBy(
+        "path", slot_of(F.col("slot"), step).alias("slot"), *by
+    ).agg(
+        F.sum("sv").alias("sv"),
+        F.sum("n").alias("n"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+        F.max("_last").alias("_last"),
+    )
+
+
+def finish_partial(partials: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Partials → ``(path, slot, *by, average, total, vmin, vmax, last,
+    n)``.  ``average`` is ``try_divide(sv, n)``: NULL for a slot of NULL
+    values (n = 0), where a plain divide raises under ANSI."""
+    return partials.select(
+        "path",
+        "slot",
+        *by,
+        F.try_divide(F.col("sv"), F.col("n")).alias("average"),
+        F.col("sv").alias("total"),
+        "vmin",
+        "vmax",
+        F.col("_last.value").alias("last"),
+        "n",
+    )
+
+
 def downsample(
     obs: DataFrame,
     step: int,
@@ -205,63 +277,35 @@ def downsample(
     n_salts: int = 16,
 ) -> DataFrame:
     """RRD consolidation to a coarser step (Aggregator base-agg path †):
-    one bucketed group-by producing all five consolidation functions
-    (average, delta-as-sum, min, max, last) plus the row count.
-
-    ``last`` is ``max_by(value, (tse, event_id))`` — the latest reading in
-    the bucket, deterministic via the ingest tiebreak.
+    :func:`consolidation_partial` then :func:`finish_partial` — all five
+    consolidation functions (average, delta-as-sum, min, max, last) plus
+    the non-NULL count ``n``.  ``last`` is the value of the latest
+    (tse, event_id) row in the bucket, deterministic via the ingest
+    tiebreak.
 
     ``hot_paths`` is the skew opt-in (SURVEY.md §4 'salting recipe for
-    hot series'): the NAMED hot series aggregate in two phases on a
-    salted key — partials on (path, slot, salt) bound any task at
-    ~1/n_salts of the hot series' slot, a final merge combines the
-    ≤ n_salts partials — while every other series takes the direct
-    single-shuffle path.  All five CFs are algebraic (``last`` rides a
-    max over the (tse, event_id, value) struct), so the salted result is
-    IDENTICAL to the direct one (tests/test_tsdb_functions.py asserts
-    equality and the two-phase plan)."""
-    slotted = obs.withColumn("slot", slot_of(F.col("tse"), step))
-
-    def direct(df: DataFrame) -> DataFrame:
-        return df.groupBy("path", "slot").agg(
-            F.avg(value_col).alias("average"),
-            F.sum(value_col).alias("total"),
-            F.min(value_col).alias("vmin"),
-            F.max(value_col).alias("vmax"),
-            F.expr(f"max_by({value_col}, struct(tse, event_id))").alias("last"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
+    hot series'): the NAMED hot series take their partials on a salted
+    key (path, slot, salt), which bounds any task at ~1/n_salts of the
+    hot series' slot, and merge the ≤ n_salts partials per slot; every
+    other series takes the direct single-shuffle path.  The partial is
+    mergeable, so the salted result is IDENTICAL to the direct one
+    (tests/test_tsdb_functions.py asserts equality and the two-phase
+    plan)."""
     if not hot_paths:
-        return direct(slotted)
-    hot_list = list(hot_paths)
+        return finish_partial(consolidation_partial(obs, step, value_col))
+    hot = F.col("path").isin(list(hot_paths))
     # Deterministic salt (hash of the ingest key, not rand()): results
     # stay reproducible and oracle-checkable.
-    partial = (
-        slotted.filter(F.col("path").isin(hot_list))
-        .withColumn(
+    salted = consolidation_partial(
+        obs.filter(hot).withColumn(
             "_salt", F.pmod(F.xxhash64("tse", "event_id"), F.lit(n_salts))
-        )
-        .groupBy("path", "slot", "_salt")
-        .agg(
-            F.sum(value_col).alias("_sv"),
-            F.min(value_col).alias("_mn"),
-            F.max(value_col).alias("_mx"),
-            F.max(F.struct("tse", "event_id", value_col)).alias("_lasts"),
-            F.count(F.lit(1)).alias("_n"),
-        )
+        ),
+        step,
+        value_col,
+        by=("_salt",),
     )
-    hot_out = partial.groupBy("path", "slot").agg(
-        (F.sum("_sv") / F.sum("_n")).alias("average"),
-        F.sum("_sv").alias("total"),
-        F.min("_mn").alias("vmin"),
-        F.max("_mx").alias("vmax"),
-        F.max("_lasts").getField(value_col).alias("last"),
-        F.sum("_n").alias("n"),
-    )
-    return direct(slotted.filter(~F.col("path").isin(hot_list))).unionByName(
-        hot_out
-    )
+    cold = consolidation_partial(obs.filter(~hot), step, value_col)
+    return finish_partial(cold.unionByName(merge_partial(salted, step)))
 
 
 def time_spine(

@@ -370,28 +370,14 @@ FROM fine GROUP BY 1, 2
 )
 def ts_agg_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coarse aggregates computed from the next-finer level, not raw
-    (``TSDBVar.update_all_aggregates`` †): 5m (sum,count,min,max) → 1h.
-    Weighted mean = sum(sums)/sum(counts) keeps cascade(fine) ≡ direct.
+    (``TSDBVar.update_all_aggregates`` †): the 5m consolidation partial
+    merged to 1h, then finished.  Weighted mean = sum(sums)/sum(counts)
+    keeps cascade(fine) ≡ direct.  Nothing reads ``last``, so Catalyst
+    prunes its state from both aggregates.
     """
-    obs = load_obs(spark, sf_dir)
-    fine = (
-        obs.withColumn("slot", tsdb.slot_of(F.col("tse"), FINE))
-        .groupBy("path", "slot")
-        .agg(
-            F.sum("value").alias("sv"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    return (
-        fine.groupBy("path", tsdb.slot_of(F.col("slot"), BUCKET).alias("slot"))
-        .agg(
-            F.round(F.sum("sv") / F.sum("n"), 6).alias("average"),
-            F.min("mn").alias("vmin"),
-            F.max("mx").alias("vmax"),
-            F.sum("n").cast("bigint").alias("n"),
-        )
+    fine = tsdb.consolidation_partial(load_obs(spark, sf_dir), FINE)
+    return tsdb.finish_partial(tsdb.merge_partial(fine, BUCKET)).select(
+        "path", "slot", F.round("average", 6).alias("average"), "vmin", "vmax", "n"
     )
 
 

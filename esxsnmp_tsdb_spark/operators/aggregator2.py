@@ -153,7 +153,8 @@ GROUP BY 1, 2
 )
 def ts_ladder_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch repair of one aggregate-ladder level for a day range: the
-    partials for the damaged days are recomputed from raws and written
+    partials for the damaged days are recomputed from raws, in the one
+    stored-level format (`sources.ladder_sql.stored_level`), and written
     with dynamic partition overwrite — only the repaired day partitions
     are replaced, the rest of the level is untouched (the O(days-
     repaired) property that makes backfill affordable on a 100 TB
@@ -165,23 +166,21 @@ def ts_ladder_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-    from esxsnmp_tsdb_spark.streaming.maintenance import batch_partials
+    from esxsnmp_tsdb_spark.sources.ladder_sql import stored_level, write_days
 
     out = os.path.join(op_dir("ladder_backfill"), f"level={BUCKET}")
     obs = load_obs(spark, sf_dir).filter(
         (F.col("tse") >= T_JAN10) & (F.col("tse") < T_JAN11)
     )
-    (
-        batch_partials(obs, BUCKET)
-        .repartition("day")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(out)
-    )
+    write_days(stored_level(tsdb.consolidation_partial(obs, BUCKET)), out)
     back = spark.read.parquet(out)
     return back.select(
-        "path", "slot", F.round("sv", 6).alias("sv"), "n", "mn", "mx"
+        "path",
+        "slot",
+        F.round("sv", 6).alias("sv"),
+        "n",
+        F.col("vmin").alias("mn"),
+        F.col("vmax").alias("mx"),
     )
 
 

@@ -471,10 +471,7 @@ def stream_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     unaffected by a retry of the current epoch.  Batch-twin oracle: the
     hit set equals the one-shot SQL where a batch row's probe targets
     are the corpus plus strictly-earlier parts."""
-    from esxsnmp_tsdb_spark.operators.streaming_ops3 import (
-        _drive,
-        _stage_ordered_slices,
-    )
+    from esxsnmp_tsdb_spark.streaming import drive, stage_ordered_slices
 
     root = build_minhash_index(spark, sf_dir)
     out = op_dir("stream_dedup_indexed")
@@ -485,7 +482,7 @@ def stream_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = _near_batch(register_views(spark, sf_dir)["documents"])
     # delivery order is load-bearing (later batches probe earlier ones'
     # appended signatures) — the shared stager pins increasing mtimes
-    _stage_ordered_slices(
+    stage_ordered_slices(
         [batch.filter(F.col("doc_id") % 3 == part) for part in range(3)], src
     )
 
@@ -530,5 +527,5 @@ def stream_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/part=*")
     )
-    _drive(stream, probe_and_append, os.path.join(out, "ckpt"))
+    drive(stream, probe_and_append, os.path.join(out, "ckpt"))
     return spark.read.parquet(hits_dir).select("new_id", "match_id")

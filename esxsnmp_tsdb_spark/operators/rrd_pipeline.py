@@ -295,10 +295,7 @@ def stream_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from esxsnmp_tsdb_spark.operators._shared import T_JAN10, T_JAN20
     from esxsnmp_tsdb_spark.operators._workdirs import op_dir
-    from esxsnmp_tsdb_spark.operators.streaming_ops3 import (
-        _drive,
-        _stage_ordered_slices,
-    )
+    from esxsnmp_tsdb_spark.streaming import drive, stage_ordered_slices
 
     out = op_dir("ladder_full_stream")
     src = os.path.join(out, "src")
@@ -321,7 +318,7 @@ def stream_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delivery order is load-bearing (the carry pairs each slice's first
     # row with the previous slice's last) — the shared stager pins
     # strictly increasing mtimes
-    _stage_ordered_slices(slices, src)
+    stage_ordered_slices(slices, src)
 
     from pyspark.sql import Window
 
@@ -392,7 +389,7 @@ def stream_ladder_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/part=*")
     )
-    _drive(stream, fold, os.path.join(out, "ckpt"))
+    drive(stream, fold, os.path.join(out, "ckpt"))
 
     fine = (
         spark.read.parquet(fine_dir)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from esxsnmp_tsdb_spark.functions.tsdb import obs_from_events
 from esxsnmp_tsdb_spark.operators._shared import OBS_CTE
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.sources import register_views
@@ -431,17 +432,9 @@ def stream_ladder_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = op_dir("ladder_op")
-    ev = events_stream(spark, sf_dir)
-    obs = ev.select(
-        F.concat_ws("/", "user_id", "event_type").alias("path"),
-        F.unix_timestamp("ts").alias("tse"),
-        F.col("value").cast("double").alias("value"),
+    maintain_levels(
+        obs_from_events(events_stream(spark, sf_dir)), out, levels=(3600,)
     )
-    q = maintain_levels(obs, out, levels=(3600,))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     lvl = read_level(spark, out, 3600)
     return lvl.select(
         "path",

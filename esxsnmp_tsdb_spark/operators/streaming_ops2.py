@@ -25,10 +25,11 @@ from esxsnmp_tsdb_spark.operators.analytics5 import (
 )
 from esxsnmp_tsdb_spark.operators.analytics5 import CAP10 as _CAP10
 from esxsnmp_tsdb_spark.functions.exact import half_up_div
+from esxsnmp_tsdb_spark.functions.tsdb import obs_from_events
 from esxsnmp_tsdb_spark.operators._workdirs import op_dir, scratch_dir
 from esxsnmp_tsdb_spark.registry import op
 from esxsnmp_tsdb_spark.session import local_frame
-from esxsnmp_tsdb_spark.streaming import events_stream, run_to_memory
+from esxsnmp_tsdb_spark.streaming import drive, events_stream, run_to_memory
 
 TOPK_WINDOW_SEC = 6 * 3600
 TOPK_K = 3
@@ -305,15 +306,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    q = (
-        chg.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", scratch_dir("cdc_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(chg, apply_batch, scratch_dir("cdc_ckpt_"))
     back = spark.read.parquet(store)
     return back.filter(F.col("op") == "U").select(
         "path", "slot", F.round("value", 6).alias("value")
@@ -361,19 +354,12 @@ def stream_ladder_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = op_dir("ladder_retention_op")
-    ev = events_stream(spark, sf_dir)
-    obs = ev.select(
-        F.concat_ws("/", "user_id", "event_type").alias("path"),
-        F.unix_timestamp("ts").alias("tse"),
-        F.col("value").cast("double").alias("value"),
+    maintain_levels(
+        obs_from_events(events_stream(spark, sf_dir)),
+        out,
+        levels=(3600,),
+        retention_cutoff=RETENTION_CUTOFF_DAY,
     )
-    q = maintain_levels(
-        obs, out, levels=(3600,), retention_cutoff=RETENTION_CUTOFF_DAY
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # the store must not even contain a pre-cutoff day directory
     level_dir = os.path.join(out, "level=3600")
     assert not any(
@@ -485,15 +471,7 @@ def stream_cdc_apply_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    q = (
-        chg.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", scratch_dir("cdcb_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(chg, apply_batch, scratch_dir("cdcb_ckpt_"))
     back = spark.read.parquet(store)
     return back.filter(F.col("op") == "U").select(
         "path", "slot", F.round("value", 6).alias("value")

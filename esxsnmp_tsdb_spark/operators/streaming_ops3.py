@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.operators._workdirs import op_dir
 from esxsnmp_tsdb_spark.registry import op
-from esxsnmp_tsdb_spark.streaming import events_stream
+from esxsnmp_tsdb_spark.streaming import drive, events_stream
 
 
 @op(
@@ -61,20 +61,10 @@ def stream_replay_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"epoch={epoch_id}")
         )
 
-    def run_once() -> None:
-        q = (
-            rows.writeStream.foreachBatch(write_epoch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once()
+    drive(rows, write_epoch, ckpt)
     n_first = spark.read.parquet(store).count()
-    run_once()  # replay: committed offsets → no new epochs, no duplicates
+    # replay: committed offsets → no new epochs, no duplicates
+    drive(rows, write_epoch, ckpt)
     back = spark.read.parquet(store)
     n_second = back.count()
     assert n_first == n_second, (
@@ -102,61 +92,6 @@ def _stage_three_parts(base: DataFrame, src: str) -> None:
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(src, f"part={part}")
         )
-
-
-def _stage_ordered_slices(slices, src: str) -> None:
-    """Stage each slice DataFrame as ``src/part=<i>`` with STRICTLY
-    INCREASING mtimes.  FileStreamSource delivers files in mod-time
-    order; sequential writes make that non-decreasing, but a coarse-
-    timestamp filesystem could tie two slices and flip them — fatal
-    whenever later micro-batches depend on earlier ones' outputs (carry
-    state in the RRD pipeline twin, appended index epochs in
-    stream_dedup_indexed).  Pinning the mtimes makes epoch i ≡ slice i
-    deterministic; order-insensitive stagings keep `_stage_three_parts`.
-
-    ``repartition(1)``, NOT ``coalesce(1)``: coalesce folds the whole
-    upstream scan+filter into the single writer task, so staging a
-    slice runs one-threaded end-to-end — at the scaling probe's 100x
-    point that one-task read was 48% of the measured pipeline growth
-    (docs/SCALING_r12.json).  repartition keeps the scan parallel and
-    shuffles into the single writer; both consumers re-sort within the
-    batch (windows over (tse, event_id), set-joins), so in-file row
-    order is semantically free.  Only CROSS-slice order is
-    load-bearing, and that stays pinned by the mtimes.
-
-    ``sortWithinPartitions(*columns)`` after the repartition:
-    round-robin repartition makes the single file's ROW ORDER
-    depend on reducer fetch order — run-to-run nondeterministic.  The
-    current consumers don't care, but a future order-sensitive reader
-    of the staged parquet would inherit a latent flake; a full-row sort
-    of one already-shuffled partition pins staged bytes for free."""
-    import time
-
-    for i, df in enumerate(slices):
-        df.repartition(1).sortWithinPartitions(*df.columns).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(src, f"part={i}"))
-    base_t = int(time.time())
-    for i in range(len(slices)):
-        pdir = os.path.join(src, f"part={i}")
-        for name in os.listdir(pdir):
-            os.utime(os.path.join(pdir, name), (base_t + 60 * i,) * 2)
-
-
-def _drive(stream: DataFrame, fn, ckpt: str) -> None:
-    """Run a foreachBatch query over ``stream`` to completion.
-
-    The checkpoint lives under the op's `op_dir` (cleared per call,
-    removed at exit) — a mkdtemp checkpoint would accumulate in /tmp."""
-    q = (
-        stream.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 @op(
@@ -244,7 +179,7 @@ def stream_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = bsk
         merged.write.mode("overwrite").parquet(state)
 
-    _drive(stream, merge_batch, os.path.join(out, "ckpt"))
+    drive(stream, merge_batch, os.path.join(out, "ckpt"))
 
     sk = spark.read.parquet(state)
     streamed = sk.select(
@@ -377,7 +312,7 @@ def stream_histogram_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"epoch={epoch_id}")
         )
 
-    _drive(stream, write_epoch_partial, os.path.join(out, "ckpt"))
+    drive(stream, write_epoch_partial, os.path.join(out, "ckpt"))
 
     st = (
         spark.read.parquet(state)

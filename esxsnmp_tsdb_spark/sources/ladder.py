@@ -9,11 +9,16 @@ so — exactly like the reference — the engine routes explicitly:
     ladder = build_ladder(obs, levels=(300, 3600, 86400))
     df = timerange(ladder, begin, end, step=7200, cf="average")
 
-Each ladder level is computed FROM THE NEXT FINER level (sum/count carried
-so averages re-weight exactly), which is what makes maintenance at 100 TB
-incremental: a new day of raw data touches one day-partition per level,
-never historical raws.  Conservation invariants are unit-tested
-(cascade == direct, tests/test_ladder.py).
+Every level holds the one consolidation partial of
+``functions/tsdb.py`` (``consolidation_partial``: Σvalue, non-NULL count,
+min, max and the latest ``(tse, event_id, value)``): the finest level is
+the partial of raw obs, each coarser one is ``merge_partial`` of the next
+finer level — never raw — and ``finish_partial`` turns a level into its
+consolidation columns.  Because the partial merges, maintenance at 100 TB
+is incremental: a new day of raw data touches one day-partition per
+level, never historical raws (the stored form is ``sources/ladder_sql.py``,
+its upkeep ``streaming/maintenance.py``).  Conservation invariants are
+unit-tested (cascade == direct, tests/test_ladder.py).
 """
 
 from __future__ import annotations
@@ -21,49 +26,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions.tsdb import slot_of
+from esxsnmp_tsdb_spark.functions.tsdb import (
+    CF_COLUMN,
+    consolidation_partial,
+    finish_partial,
+    merge_partial,
+)
 
 DEFAULT_LEVELS = (300, 3600, 86400)
 
-# Consolidation functions a timerange request may name (`cf=` query arg).
-TIMERANGE_CFS = ("average", "delta", "min", "max", "last")
 
-
-def _base_level(obs: DataFrame, step: int) -> DataFrame:
-    return (
-        obs.withColumn("slot", slot_of(F.col("tse"), step))
-        .groupBy("path", "slot")
-        .agg(
-            F.sum("value").alias("sv"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            F.expr("max_by(value, struct(tse, event_id))").alias("last"),
-            F.max(F.struct("tse", "event_id")).alias("_lastkey"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-def _cascade(finer: DataFrame, step: int) -> DataFrame:
-    """Next level from the previous one — never from raw (†)."""
-    return (
-        finer.groupBy("path", slot_of(F.col("slot"), step).alias("slot"))
-        .agg(
-            F.sum("sv").alias("sv"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.expr("max_by(last, _lastkey)").alias("last"),
-            F.max("_lastkey").alias("_lastkey"),
-            F.sum("n").alias("n"),
-        )
-    )
-
-
-def build_ladder(
+def ladder_partials(
     obs: DataFrame, levels: tuple[int, ...] = DEFAULT_LEVELS
 ) -> dict[int, DataFrame]:
-    """step → consolidated DataFrame(path, slot, average, total, vmin,
-    vmax, last, n), each level cascaded from the previous.
+    """step → consolidation partial, each level merged from the previous.
 
     Levels must be ascending and each a multiple of the previous (the
     reference enforced the same through its chunk/step configuration).
@@ -71,24 +47,19 @@ def build_ladder(
     for a, b in zip(levels, levels[1:]):
         if b % a != 0:
             raise ValueError(f"level {b} is not a multiple of finer level {a}")
-    ladder: dict[int, DataFrame] = {}
-    current = _base_level(obs, levels[0])
-    ladder[levels[0]] = current
-    for step in levels[1:]:
-        current = _cascade(current, step)
-        ladder[step] = current
+    ladder = {levels[0]: consolidation_partial(obs, levels[0])}
+    for finer, step in zip(levels, levels[1:]):
+        ladder[step] = merge_partial(ladder[finer], step)
+    return ladder
+
+
+def build_ladder(
+    obs: DataFrame, levels: tuple[int, ...] = DEFAULT_LEVELS
+) -> dict[int, DataFrame]:
+    """step → consolidated DataFrame(path, slot, average, total, vmin,
+    vmax, last, n): :func:`ladder_partials`, finished."""
     return {
-        step: df.select(
-            "path",
-            "slot",
-            (F.col("sv") / F.col("n")).alias("average"),
-            F.col("sv").alias("total"),
-            "vmin",
-            "vmax",
-            "last",
-            "n",
-        )
-        for step, df in ladder.items()
+        step: finish_partial(df) for step, df in ladder_partials(obs, levels).items()
     }
 
 
@@ -123,7 +94,7 @@ def timerange(
     should align begin/end to ``step`` (a slot straddling ``end`` reflects
     its full contents, not a partial re-read of raw data).
     """
-    if cf not in TIMERANGE_CFS:
+    if cf not in CF_COLUMN:
         raise ValueError(f"unknown consolidation function {cf!r}")
     stored = pick_level(tuple(sorted(ladder)), step)
     return serve_level(ladder[stored], stored, begin, end, step, cf)
@@ -142,27 +113,17 @@ def serve_level(
     re-consolidate to ``step`` if coarser, returning ``cf``'s column as
     ``value``.  For callers that pick the level themselves."""
     df = level.filter((F.col("slot") >= begin) & (F.col("slot") < end))
-    if stored == step:
-        out = df
-    else:
-        out = (
-            df.withColumn("rslot", slot_of(F.col("slot"), step))
-            .groupBy("path", "rslot")
-            .agg(
-                (F.sum("total") / F.sum("n")).alias("average"),
-                F.sum("total").alias("total"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-                F.expr("max_by(last, slot)").alias("last"),
-                F.sum("n").alias("n"),
-            )
-            .withColumnRenamed("rslot", "slot")
+    if stored != step:
+        # A finished slot re-enters the partial with its own slot as the
+        # key that orders its `last` among the slots it merges with.
+        last = F.struct(
+            F.col("slot").alias("tse"),
+            F.lit(0).cast("long").alias("event_id"),
+            F.col("last").alias("value"),
         )
-    col = {
-        "average": "average",
-        "delta": "total",
-        "min": "vmin",
-        "max": "vmax",
-        "last": "last",
-    }[cf]
-    return out.select("path", "slot", F.col(col).alias("value"), "n")
+        partial = df.select(
+            "path", "slot", F.col("total").alias("sv"), "n", "vmin", "vmax",
+            last.alias("_last"),
+        )
+        df = finish_partial(merge_partial(partial, step))
+    return df.select("path", "slot", F.col(CF_COLUMN[cf]).alias("value"), "n")

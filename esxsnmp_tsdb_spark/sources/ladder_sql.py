@@ -1,5 +1,5 @@
 """SQL entry point for aggregate-ladder routing (SURVEY.md §4 optional
-polish).
+polish), and the one stored form of a ladder level.
 
 ``sources/ladder.py`` routes at the library level, like the reference's
 API did.  This module makes the ladder visible to RAW-SQL users: each
@@ -11,10 +11,14 @@ routed ladder table only — never raw obs, never a finer level — which is
 the whole point: a 1h-step query over a year touches the 1h table
 (~1/120th of the 30s level, ~1/3600th of raw).
 
-At 100 TB each level table is date-partitioned (slot is epoch seconds;
-partition on ``floor(slot/86400)``) so the ``slot >= begin AND slot <
-end`` predicate is partition pruning; the fixtures are small enough that
-plain parquet + row-group pruning shows the same plan shape.
+A stored level is the consolidation partial of ``functions/tsdb.py``
+plus its ``day`` partition column (:func:`stored_level`), so the batch
+build here, ``ts_ladder_backfill``'s repair and the streaming upkeep
+(``streaming/maintenance.upsert_level``) write, merge into and read one
+format.  The ``obs_agg_<step>`` view is ``finish_partial`` over it and
+keeps ``day``: slot is epoch seconds and the level partitions on its
+calendar day, so the ``slot >= begin AND slot < end`` predicate with its
+derived day bounds is partition pruning.
 """
 
 from __future__ import annotations
@@ -22,23 +26,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esxsnmp_tsdb_spark.functions.tsdb import CF_COLUMN, finish_partial
 from esxsnmp_tsdb_spark.sources.ladder import (
     DEFAULT_LEVELS,
-    build_ladder,
+    ladder_partials,
     pick_level,
 )
-
-_CF_COL = {
-    "average": "average",
-    "delta": "total",
-    "min": "vmin",
-    "max": "vmax",
-    "last": "last",
-}
 
 
 def view_name(step: int) -> str:
     return f"obs_agg_{step}"
+
+
+def stored_level(partials: DataFrame) -> DataFrame:
+    """A level as stored: its partials plus the ``day`` of each slot."""
+    return partials.withColumn(
+        "day", F.to_date(F.timestamp_seconds(F.col("slot")))
+    )
+
+
+def write_days(stored: DataFrame, level_path: str) -> None:
+    """Write a stored level, replacing only the day partitions it covers
+    (a per-write overwrite option; the session's mode is left as is)."""
+    (
+        stored.repartition("day")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(level_path)
+    )
+
+
+def register_level(spark: SparkSession, level_path: str, step: int) -> str:
+    """Register the stored level at ``level_path`` as view
+    ``obs_agg_<step>``: its partials finished, ``day`` kept."""
+    name = view_name(step)
+    level = finish_partial(spark.read.parquet(level_path), by=("day",))
+    level.createOrReplaceTempView(name)
+    return name
 
 
 def materialize_ladder(
@@ -47,26 +72,23 @@ def materialize_ladder(
     warehouse_dir: str,
     levels: tuple[int, ...] = DEFAULT_LEVELS,
 ) -> dict[int, str]:
-    """Write every ladder level to ``<warehouse_dir>/agg_<step>`` and
-    register it as view ``obs_agg_<step>``; returns step → view name.
+    """Write every ladder level's partials to ``<warehouse_dir>/agg_<step>``
+    and register it as view ``obs_agg_<step>``; returns step → view name.
 
-    Incremental maintenance of these tables is
-    ``streaming/maintenance.py``'s job; this is the initial build +
-    registration (each level cascades from the previous — raw is read
-    exactly once regardless of ladder depth)."""
+    This is the initial build (each level cascades from the previous —
+    raw is read exactly once regardless of ladder depth); a late batch
+    merges into a level with ``streaming/maintenance.upsert_level``."""
     out: dict[int, str] = {}
-    for step, df in build_ladder(obs, levels).items():
+    for step, partials in ladder_partials(obs, levels).items():
         path = f"{warehouse_dir}/agg_{step}"
         (
-            df.withColumn("day", F.to_date(F.timestamp_seconds(F.col("slot"))))
+            stored_level(partials)
             .repartition("day")
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(path)
         )
-        name = view_name(step)
-        spark.read.parquet(path).createOrReplaceTempView(name)
-        out[step] = name
+        out[step] = register_level(spark, path, step)
     return out
 
 
@@ -76,29 +98,26 @@ def register_ladder_store(
     levels: tuple[int, ...] = DEFAULT_LEVELS,
 ) -> dict[int, str]:
     """Session-persistent ladder store for a corpus: the day-partitioned
-    level tables, built once per ``events`` stamp
+    level tables, built once per ``events`` stamp and level set
     (``catalog.fixture_memo``), with the ``obs_agg_<step>`` views
     re-registered on every call so one long-lived session can serve
     multiple corpora (the driver's sf0.01 pass and the bench's sf0.1
     pass coexist).  This is the serving-layer twin of the reference's
-    pre-computed Aggregate vars: queries hit these tables, maintenance
-    (`ts_ladder_backfill` / streaming ladder upkeep) refreshes only the
-    day partitions that changed."""
+    pre-computed Aggregate vars: queries hit these tables, and
+    maintenance (``ts_ladder_backfill``'s repair, the streaming upkeep's
+    ``upsert_level``) rewrites only the day partitions that changed."""
     from esxsnmp_tsdb_spark.operators._workdirs import fixture_dir
     from esxsnmp_tsdb_spark.sources.catalog import fixture_memo, flat_obs
 
+    tag = "__" + "_".join(map(str, levels))
+
     def build() -> str:
-        root = fixture_dir("ladder_store", sf_dir)
+        root = fixture_dir("ladder_store", sf_dir, tag)
         materialize_ladder(spark, flat_obs(spark, sf_dir), root, levels)
         return root
 
-    root = fixture_memo(spark, "ladder_store", sf_dir, ("events",), build)
-    out = {}
-    for step in levels:
-        name = view_name(step)
-        spark.read.parquet(f"{root}/agg_{step}").createOrReplaceTempView(name)
-        out[step] = name
-    return out
+    root = fixture_memo(spark, "ladder_store" + tag, sf_dir, ("events",), build)
+    return {step: register_level(spark, f"{root}/agg_{step}", step) for step in levels}
 
 
 def route_sql(
@@ -112,10 +131,10 @@ def route_sql(
     routed ladder view — the coarsest stored level dividing ``step``.
     Re-consolidates in SQL when the request is coarser than stored
     (sum/count carried per level, so averages re-weight exactly)."""
-    if cf not in _CF_COL:
+    if cf not in CF_COLUMN:
         raise ValueError(f"unknown consolidation function {cf!r}")
     stored = pick_level(tuple(sorted(levels)), step)
-    col = _CF_COL[cf]
+    col = CF_COLUMN[cf]
     # The derived day predicate rides along so the store's day layout
     # partition-prunes (slot-range alone only row-group-prunes).
     rng = (
@@ -132,7 +151,7 @@ WHERE {rng}
     return f"""
 SELECT path, rslot AS slot, {col} AS value, n FROM (
   SELECT path, slot - slot % {step} AS rslot,
-         sum(total) / sum(n) AS average,
+         try_divide(sum(total), sum(n)) AS average,
          sum(total) AS total,
          min(vmin) AS vmin,
          max(vmax) AS vmax,

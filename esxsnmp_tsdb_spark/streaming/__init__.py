@@ -1,3 +1,8 @@
-from esxsnmp_tsdb_spark.streaming.runner import events_stream, run_to_memory
+from esxsnmp_tsdb_spark.streaming.runner import (
+    drive,
+    events_stream,
+    run_to_memory,
+    stage_ordered_slices,
+)
 
-__all__ = ["events_stream", "run_to_memory"]
+__all__ = ["drive", "events_stream", "run_to_memory", "stage_ordered_slices"]

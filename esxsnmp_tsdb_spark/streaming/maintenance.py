@@ -3,13 +3,17 @@ reference updates its Aggregate vars AT INGEST TIME (``TSDBVar.
 update_all_aggregates`` † per insert batch); here the same contract is a
 ``foreachBatch`` upsert of mergeable partials.
 
-Each level stores PARTIALS (sv=Σvalue, n, mn, mx per (path, slot, day)) —
-partials are algebraic, so merging a micro-batch is: aggregate the batch,
-union with the stored partials for the touched days, re-combine, and
-dynamic-partition-overwrite only those days.  Historical raws are never
-re-read — the property that makes ladder maintenance viable at 100 TB.
-(With Delta on the classpath the union+overwrite becomes MERGE INTO; the
-partial-aggregate math is identical.)
+A level is stored as ``sources/ladder_sql.stored_level``: the one
+consolidation partial of ``functions/tsdb.py`` (Σvalue, non-NULL count,
+min, max, latest ``(tse, event_id, value)``) per (path, slot), partitioned
+by day — the format ``materialize_ladder`` builds and
+``ts_ladder_backfill`` repairs.  Merging a micro-batch is: the batch's
+partials, unioned with the stored partials of the days it touches,
+merged at the same step (``merge_partial``), and written back with
+dynamic partition overwrite of only those days.  Historical raws are
+never re-read — the property that makes ladder maintenance viable at
+100 TB.  (With Delta on the classpath the union+overwrite becomes MERGE
+INTO; the partial-aggregate math is identical.)
 """
 
 from __future__ import annotations
@@ -19,38 +23,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esxsnmp_tsdb_spark.functions.tsdb import slot_of
-
-PARTIAL_COLS = ("path", "slot", "day", "sv", "n", "mn", "mx")
-
-
-def batch_partials(obs: DataFrame, step: int) -> DataFrame:
-    return (
-        obs.withColumn("slot", slot_of(F.col("tse"), step))
-        .withColumn("day", F.to_date(F.timestamp_seconds(F.col("slot"))))
-        .groupBy("path", "slot", "day")
-        .agg(
-            F.sum("value").alias("sv"),
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-    )
-
-
-def merge_partials(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Combine two partial sets (algebraic merge — order-free)."""
-    return (
-        existing.select(*PARTIAL_COLS)
-        .unionAll(incoming.select(*PARTIAL_COLS))
-        .groupBy("path", "slot", "day")
-        .agg(
-            F.sum("sv").alias("sv"),
-            F.sum("n").alias("n"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-    )
+from esxsnmp_tsdb_spark.functions.tsdb import (
+    consolidation_partial,
+    finish_partial,
+    merge_partial,
+)
+from esxsnmp_tsdb_spark.operators._workdirs import scratch_dir
+from esxsnmp_tsdb_spark.sources.ladder_sql import stored_level, write_days
+from esxsnmp_tsdb_spark.streaming.runner import drive
 
 
 def upsert_level(
@@ -71,22 +51,14 @@ def upsert_level(
     single stale sample would recreate ``day=<expired>`` with partials
     for only that sample, silently wrong forever after
     (tests/test_maintenance.py stages exactly this)."""
-    inc = batch_partials(batch_obs, step)
+    inc = stored_level(consolidation_partial(batch_obs, step))
     if retention_cutoff is not None:
         inc = inc.filter(F.col("day") >= F.lit(retention_cutoff).cast("date"))
     if os.path.exists(level_path):
         days = [r.day for r in inc.select("day").distinct().collect()]
         existing = spark.read.parquet(level_path).filter(F.col("day").isin(days))
-        merged = merge_partials(existing, inc)
-    else:
-        merged = inc
-    (
-        merged.repartition("day")
-        .write.mode("overwrite" if os.path.exists(level_path) else "append")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(level_path)
-    )
+        inc = merge_partial(existing.unionByName(inc), step, by=("day",))
+    write_days(inc, level_path)
 
 
 def maintain_levels(
@@ -94,11 +66,12 @@ def maintain_levels(
     out_root: str,
     levels: tuple[int, ...] = (300, 3600),
     retention_cutoff: str | None = None,
-) -> "object":
-    """Attach ladder maintenance to an obs stream; returns the started
-    query (caller drives it, e.g. ``processAllAvailable``).
-    ``retention_cutoff`` is forwarded to :func:`upsert_level` so the loop
-    cannot resurrect expired day partitions from late arrivals."""
+) -> None:
+    """Run ladder maintenance over an obs stream to completion: every
+    micro-batch is upserted into ``<out_root>/level=<step>`` for each
+    level.  ``retention_cutoff`` is forwarded to :func:`upsert_level` so
+    the loop cannot resurrect expired day partitions from late
+    arrivals."""
     spark = obs_stream.sparkSession
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -115,23 +88,10 @@ def maintain_levels(
         finally:
             batch_df.unpersist()
 
-    from esxsnmp_tsdb_spark.operators._workdirs import scratch_dir
-
-    return (
-        obs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", scratch_dir("ladder_ckpt_"))
-        .start()
-    )
+    drive(obs_stream, on_batch, scratch_dir("ladder_ckpt_"))
 
 
 def read_level(spark: SparkSession, out_root: str, step: int) -> DataFrame:
-    """Stored partials → consolidated view (average/min/max/n per slot)."""
-    p = spark.read.parquet(f"{out_root}/level={step}")
-    return p.select(
-        "path",
-        "slot",
-        (F.col("sv") / F.col("n")).alias("average"),
-        F.col("mn").alias("vmin"),
-        F.col("mx").alias("vmax"),
-        "n",
-    )
+    """A stored level, finished: (path, slot, average, total, vmin,
+    vmax, last, n)."""
+    return finish_partial(spark.read.parquet(f"{out_root}/level={step}"))

@@ -3,10 +3,11 @@ source, results landed in a memory sink synchronously (SURVEY.md §2.6 —
 the reference's 'streaming' is the poller ingest loop †; here it is a real
 ``readStream`` micro-batch pipeline).
 
-``run_to_memory`` drives the query to completion with
-``processAllAvailable`` — the file source delivers the fixture as
-micro-batches, the final no-data batch advances the watermark so
-append-mode windows can close deterministically.
+``run_to_memory`` (memory sink) and ``drive`` (``foreachBatch`` sink)
+are the only ways a query is run: started, driven to completion with
+``processAllAvailable`` and stopped — the file source delivers the
+fixture as micro-batches, the final no-data batch advances the watermark
+so append-mode windows can close deterministically.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import hashlib
 import itertools
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +59,58 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_timestamps(raw, nanos).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def stage_ordered_slices(slices, src: str) -> None:
+    """Stage each slice DataFrame as ``src/part=<i>`` with STRICTLY
+    INCREASING mtimes.  FileStreamSource delivers files in mod-time
+    order; sequential writes make that non-decreasing, but a coarse-
+    timestamp filesystem could tie two slices and flip them — fatal
+    whenever later micro-batches depend on earlier ones' outputs (carry
+    state in the RRD pipeline twin, appended index epochs in
+    stream_dedup_indexed).  Pinning the mtimes makes epoch i ≡ slice i
+    deterministic.
+
+    ``repartition(1)``, NOT ``coalesce(1)``: coalesce folds the whole
+    upstream scan+filter into the single writer task, so staging a
+    slice runs one-threaded end-to-end — at the scaling probe's 100x
+    point that one-task read was 48% of the measured pipeline growth
+    (docs/SCALING_r12.json).  repartition keeps the scan parallel and
+    shuffles into the single writer; the consumers re-sort within the
+    batch (windows over (tse, event_id), set-joins), so in-file row
+    order is semantically free.  Only CROSS-slice order is
+    load-bearing, and that stays pinned by the mtimes.
+
+    ``sortWithinPartitions(*columns)`` after the repartition:
+    round-robin repartition makes the single file's ROW ORDER
+    depend on reducer fetch order — run-to-run nondeterministic.  A
+    full-row sort of one already-shuffled partition pins the staged
+    bytes for free, so no order-sensitive reader inherits a flake."""
+    for i, df in enumerate(slices):
+        df.repartition(1).sortWithinPartitions(*df.columns).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(src, f"part={i}"))
+    base_t = int(time.time())
+    for i in range(len(slices)):
+        pdir = os.path.join(src, f"part={i}")
+        for name in os.listdir(pdir):
+            os.utime(os.path.join(pdir, name), (base_t + 60 * i,) * 2)
+
+
+def _run(writer) -> None:
+    """Start a stream writer's query, drive it to completion, stop it."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def drive(stream: DataFrame, fn, ckpt: str) -> None:
+    """Run a ``foreachBatch(fn)`` query over ``stream`` to completion,
+    checkpointing at ``ckpt`` (which must start empty unless the query
+    is meant to resume, as a replay is)."""
+    _run(stream.writeStream.foreachBatch(fn).option("checkpointLocation", ckpt))
+
+
 def run_to_memory(
     result: DataFrame, output_mode: str, spark: SparkSession
 ) -> DataFrame:
@@ -64,15 +118,10 @@ def run_to_memory(
     the sink table as a batch DataFrame."""
     name = f"stream_sink_{next(_SINK_IDS)}"
     ckpt = scratch_dir("ckpt_")
-    q = (
+    _run(
         result.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
         .option("checkpointLocation", ckpt)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)

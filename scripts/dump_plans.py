@@ -10,8 +10,13 @@ work shares the host.
        python scripts/dump_plans.py --all-json <out.json>
 Writes the "simple" plan of every registered non-``stream_*`` op to one
 JSON object (key -> plan), with per-process ids normalized, so two runs —
-or a parent and a change — compare with ``cmp``.  Building an op may run
+or a parent and a change — compare key by key.  Building an op may run
 its eager checkpoints, so this mode does execute Spark jobs.
+
+       python scripts/dump_plans.py --diff <A.json> <B.json>
+Prints each op key whose plan differs between two ``--all-json`` files
+(a key in one file only prints with the file that has it) and exits 1,
+or exits 0 when every plan is identical.  Starts no Spark session.
 """
 
 from __future__ import annotations
@@ -72,7 +77,28 @@ def dump_all_json(out_path: str, sf_dir: str) -> None:
     print("wrote", len(plans), "plans to", out_path)
 
 
+def diff_json(a_path: str, b_path: str) -> int:
+    """Print each key whose plan differs between two ``--all-json``
+    files; 1 if any does, else 0."""
+    with open(a_path) as fa, open(b_path) as fb:
+        a, b = json.load(fa), json.load(fb)
+    changed = 0
+    for key in sorted(a.keys() | b.keys()):
+        if key not in b:
+            print(key, f"(only in {a_path})")
+        elif key not in a:
+            print(key, f"(only in {b_path})")
+        elif a[key] != b[key]:
+            print(key)
+        else:
+            continue
+        changed += 1
+    return 1 if changed else 0
+
+
 def main() -> None:
+    if sys.argv[1] == "--diff":
+        sys.exit(diff_json(sys.argv[2], sys.argv[3]))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if sys.argv[1] == "--all-json":
         dump_all_json(sys.argv[2], sf_dir)

@@ -14,11 +14,8 @@ from pyspark.sql import functions as F
 
 from esxsnmp_tsdb_spark.api import TSDB
 from esxsnmp_tsdb_spark.functions.tsdb import obs_from_events
-from esxsnmp_tsdb_spark.operators.streaming_ops3 import (
-    _drive,
-    _stage_ordered_slices,
-)
 from esxsnmp_tsdb_spark.sources import register_views
+from esxsnmp_tsdb_spark.streaming import drive, stage_ordered_slices
 from tests.conftest import SF_SMOKE
 
 
@@ -31,7 +28,7 @@ def test_poller_stream_maintains_facade_aggregate(spark, tmp_path):
     c2 = t_lo + 2 * (t_hi - t_lo) // 3
 
     src = str(tmp_path / "src")
-    _stage_ordered_slices(
+    stage_ordered_slices(
         [
             rows.filter(F.col("tse") < c1),
             rows.filter((F.col("tse") >= c1) & (F.col("tse") < c2)),
@@ -64,7 +61,7 @@ def test_poller_stream_maintains_facade_aggregate(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/part=*")
     )
-    _drive(stream, persist, str(tmp_path / "ckpt"))
+    drive(stream, persist, str(tmp_path / "ckpt"))
     assert len(epochs) == 3 and all(n > 0 for n in epochs)
 
     # driver-side model of the one-shot ladder over everything delivered:

@@ -197,3 +197,21 @@ def test_ladder_route_sql_op_prunes_day_partitions(spark):
     assert "events.parquet" not in plan  # ...and never raw
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "day" in m.group(1), plan
+
+
+def test_ladder_store_serves_requested_levels(spark):
+    """The store is built per level set: a ``(600,)`` call after a
+    default-levels call serves ``obs_agg_600`` as ``build_ladder`` does."""
+    from esxsnmp_tsdb_spark.sources import flat_obs
+    from esxsnmp_tsdb_spark.sources.ladder_sql import register_ladder_store
+    from tests.conftest import SF_SMOKE
+
+    register_ladder_store(spark, SF_SMOKE)
+    assert register_ladder_store(spark, SF_SMOKE, (600,)) == {600: "obs_agg_600"}
+    got = {(r.path, r.slot): r for r in spark.table("obs_agg_600").collect()}
+    want = build_ladder(flat_obs(spark, SF_SMOKE), (600,))[600]
+    want = {(r.path, r.slot): r for r in want.collect()}
+    assert got and set(got) == set(want)
+    for k, w in want.items():
+        for c in ("average", "total", "vmin", "vmax", "last", "n"):
+            assert got[k][c] == pytest.approx(w[c]), (k, c)

@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 from esxsnmp_tsdb_spark.functions import tsdb
 from esxsnmp_tsdb_spark.sources import register_views
 from esxsnmp_tsdb_spark.streaming import events_stream
-from esxsnmp_tsdb_spark.streaming.maintenance import (
-    maintain_levels,
-    merge_partials,
-    batch_partials,
-    read_level,
-)
+from esxsnmp_tsdb_spark.streaming.maintenance import maintain_levels, read_level
 from esxsnmp_tsdb_spark.session import local_frame
 
 SF = "/root/testdata/sf0.001"
@@ -26,17 +21,8 @@ SF = "/root/testdata/sf0.001"
 
 def test_streaming_maintenance_equals_batch(spark):
     out = tempfile.mkdtemp(prefix="ladder_out_")
-    ev = events_stream(spark, SF)
-    obs = ev.select(
-        F.concat_ws("/", "user_id", "event_type").alias("path"),
-        F.unix_timestamp("ts").alias("tse"),
-        F.col("value").cast("double").alias("value"),
-    )
-    q = maintain_levels(obs, out, levels=(3600,))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    obs = tsdb.obs_from_events(events_stream(spark, SF))
+    maintain_levels(obs, out, levels=(3600,))  # runs to completion
 
     maintained = read_level(spark, out, 3600)
     batch_obs = tsdb.obs_from_events(register_views(spark, SF)["events"])
@@ -53,20 +39,35 @@ def test_streaming_maintenance_equals_batch(spark):
 
 
 def test_merge_partials_is_algebraic(spark):
+    """Partials of a 3-way split, merged in two different groupings at
+    the same step, finish to the direct consolidation — all six columns,
+    ``last`` included."""
     rows = [("s", t, float(t % 13), 1, i) for i, t in enumerate(range(0, 5000, 37))]
     df = local_frame(
         spark, rows, "path string, tse long, value double, flags int, event_id long"
     )
-    half1 = batch_partials(df.filter(F.col("event_id") % 2 == 0), 300)
-    half2 = batch_partials(df.filter(F.col("event_id") % 2 == 1), 300)
-    merged = merge_partials(half1, half2)
-    direct = batch_partials(df, 300)
-    a = {(r.path, r.slot): (r.sv, r.n, r.mn, r.mx) for r in merged.collect()}
-    b = {(r.path, r.slot): (r.sv, r.n, r.mn, r.mx) for r in direct.collect()}
-    assert set(a) == set(b)
-    for k in b:
-        assert a[k][0] == pytest.approx(b[k][0])
-        assert a[k][1:] == b[k][1:]
+    parts = [
+        tsdb.consolidation_partial(df.filter(F.col("event_id") % 3 == k), 300)
+        for k in range(3)
+    ]
+    left = tsdb.merge_partial(
+        tsdb.merge_partial(parts[0].unionByName(parts[1]), 300).unionByName(
+            parts[2]
+        ),
+        300,
+    )
+    right = tsdb.merge_partial(
+        parts[2].unionByName(parts[1]).unionByName(parts[0]), 300
+    )
+    direct = tsdb.downsample(df, 300)
+    cols = ("average", "total", "vmin", "vmax", "last", "n")
+    want = {(r.path, r.slot): r for r in direct.collect()}
+    for merged in (left, right):
+        got = {(r.path, r.slot): r for r in tsdb.finish_partial(merged).collect()}
+        assert set(got) == set(want)
+        for k in want:
+            for c in cols:
+                assert got[k][c] == pytest.approx(want[k][c]), (k, c)
 
 
 def test_expire_late_arrival_backfill_converges(spark):

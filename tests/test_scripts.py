@@ -129,6 +129,21 @@ def test_dump_plans_prints_scan_filters_uncut(spark, monkeypatch):
     assert "LessThan(l_shipdate,1997-01-01T00:00)]" in plan, plan
 
 
+def test_dump_plans_diff_prints_changed_keys(tmp_path, capsys):
+    # --diff names every key whose plan differs, and only those
+    import json
+
+    dump_plans = _script("dump_plans")
+    a, b = tmp_path / "a.json", tmp_path / "b.json"
+    a.write_text(json.dumps({"same": "P", "changed": "P1", "gone": "P"}))
+    b.write_text(json.dumps({"same": "P", "changed": "P2", "new": "P"}))
+    assert dump_plans.diff_json(str(a), str(b)) == 1
+    out = capsys.readouterr().out.splitlines()
+    assert out == ["changed", f"gone (only in {a})", f"new (only in {b})"]
+    assert dump_plans.diff_json(str(a), str(a)) == 0
+    assert capsys.readouterr().out == ""
+
+
 def _registry_refs(path: str):
     with open(path) as f:
         tree = ast.parse(f.read(), path)
