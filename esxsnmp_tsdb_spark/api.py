@@ -20,8 +20,8 @@ discoverability wrapper, not a second engine:
   † TSDBVar.insert positional overwrite) replays deterministically through
   ``row_number`` — same semantics as operators/ingest.py `ts_merge_upsert`;
 - ``select(begin, end)`` materializes never-written slots as invalid rows
-  (flags=0, value NULL) on a dense spine († TSDBVar.select yielding
-  invalid rows) — `sequence`-explode, the `ts_time_spine` pattern;
+  (flags=0, value NULL) on a dense ``range`` spine († TSDBVar.select
+  yielding invalid rows) — the `ts_time_spine` pattern;
 - ``get`` / ``get_last`` are the `ts_point_lookup` / `ts_last_known`
   semantics against the var's own step.
 
@@ -44,14 +44,22 @@ plans were as fast or faster than the shuffled ones for ``select``, raw
 on the 12-file var was about 0.15 s slower.  Bulk and multi-series
 analytics stay on the engine's long-table layout (sources/catalog.py);
 nothing in the operator registry depends on this module.
+
+A small var's call time is mostly driver time: each DataFrame step is
+analyzed on the JVM and each Column operator is a JVM round trip, so a
+read is a few steps over SQL-text expressions, and the ladder's levels
+are written concurrently.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from esxsnmp_tsdb_spark.functions.tsdb import (
     CF_COLUMN,
@@ -88,16 +96,20 @@ def parse_agg_spec(spec: int | str) -> int:
     return step
 
 
-def _flag_mask(mask: int):
-    """Column predicate for ``select(flags=mask)``: any requested bit
-    set, and hidden rows excluded unless ROW_HIDDEN is itself requested —
-    so ``mask=ROW_VALID`` is exactly the displayable predicate
+def _flag_mask(mask: int) -> str:
+    """SQL predicate for ``select(flags=mask)``: any requested bit set,
+    and hidden rows excluded unless ROW_HIDDEN is itself requested — so
+    ``mask=ROW_VALID`` is exactly the displayable predicate
     ``flags & 0b11 == 0b01`` (`ts_flag_visibility`'s bit test †) and
     ``mask=ROW_VALID | ROW_HIDDEN`` opts hidden rows back in."""
-    keep = F.col("flags").bitwiseAND(F.lit(mask)) != 0
+    keep = f"(flags & {mask}) != 0"
     if not mask & ROW_HIDDEN:
-        keep = keep & (F.col("flags").bitwiseAND(F.lit(ROW_HIDDEN)) == 0)
+        keep += f" AND (flags & {ROW_HIDDEN}) = 0"
     return keep
+
+
+# ROW_VALID set, hidden or not: the rows maintenance and get_last see
+_VALID = f"(flags & {ROW_VALID}) != 0"
 
 
 def _slot(tse: int, step: int) -> int:
@@ -400,7 +412,12 @@ class TSDBVar(_Node):
         the cheap cascade aggregations — not the raw scan + LWW window
         per level.  The checkpointed scan reports no partitioning, so it
         is coalesced back to the var's one partition: one checkpoint job,
-        then one single-task job per level, with no Exchange."""
+        then one single-task job per level, with no Exchange, the levels
+        written concurrently, one thread per level.  Every thread is
+        joined before the lock is released, and the finest failing
+        level's error is raised only then.  A crash mid-upkeep can leave
+        any subset of levels rewritten; each level is a whole overwrite,
+        so the next upkeep repairs them all."""
         from esxsnmp_tsdb_spark.sources.compaction import recover_swap
         from esxsnmp_tsdb_spark.sources.ladder import build_ladder
 
@@ -412,38 +429,41 @@ class TSDBVar(_Node):
                 return
             steps = tuple(parse_agg_spec(n) for n in names)
             obs = (
-                self._lww(self._rows())
-                .filter(F.col("flags").bitwiseAND(F.lit(ROW_VALID)) != 0)
-                .select(
-                    F.lit(self.path).alias("path"),
-                    "tse",
-                    "value",
-                    # post-LWW a slot holds one row, so tse alone orders
-                    # the "last" consolidation; the tiebreak key is moot
-                    F.lit(0).cast("long").alias("event_id"),
-                )
+                self._lww(self._rows(), _VALID)
+                # post-LWW a slot holds one row, so tse alone orders the
+                # "last" consolidation; the event_id tiebreak is moot
+                .select(F.lit(self.path).alias("path"),
+                        *map(F.expr, ("tse", "value", "0L AS event_id")))
                 .localCheckpoint(eager=True)
                 .coalesce(1)
             )
             ladder = build_ladder(obs, levels=steps)
-            for name, step in zip(names, steps):
-                agg = self.get_aggregate(name)
+
+            # Lock-free work only: _heal and _data_files take the lock
+            # this thread holds, so a worker calling them would deadlock.
+            def write(agg: TSDBVar, out: DataFrame) -> None:
                 recover_swap(agg._data)  # clear stale swap debris too
-                out = ladder[step].select(
-                    F.col("slot").cast("long"),
-                    F.lit(ROW_VALID).alias("flags"),
-                    F.col("average").cast("double"),
-                    F.col("total").cast("double"),
-                    F.col("vmin").cast("double"),
-                    F.col("vmax").cast("double"),
-                    F.col("last").cast("double"),
-                    F.col("n").cast("long"),
-                )
                 out.write.mode("overwrite").parquet(agg._data)
-                agg.metadata["LAST_UPDATE"] = self.metadata.get(
-                    "LAST_UPDATE", "0"
-                )
+                agg.metadata["LAST_UPDATE"] = self.metadata.get("LAST_UPDATE", "0")
                 agg.save_metadata()
+
+            levels = [
+                (self.get_aggregate(name), ladder[step].selectExpr(
+                    "slot", f"{ROW_VALID} AS flags", "average", "total",
+                    "vmin", "vmax", "last", "n",
+                ))
+                for name, step in zip(names, steps)
+            ]
+            # One wrapper per thread: each carries its own clone of the
+            # caller's local properties (job group) and the session's
+            # tags; threads sharing a clone would share its SQL execution id.
+            with ThreadPoolExecutor(len(levels)) as pool:
+                done = [
+                    pool.submit(inheritable_thread_target(self.spark)(write), *lv)
+                    for lv in levels
+                ]
+            for level in done:  # the pool has joined every thread
+                level.result()
 
     def insert_batch(self, rows) -> None:
         """Append one ingest batch; every row gets its own LAST_SEQ
@@ -541,34 +561,21 @@ class TSDBVar(_Node):
             return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(self._data).coalesce(1)
 
-    def _spine_join(self, lo: int, hi: int, present: DataFrame) -> DataFrame:
-        """Every slot in ``[lo, hi]`` left-joined to the stored ``present``
-        rows on ``slot``.  The spine is one range slice and ``present`` is
-        one partition, so a shuffled hash join needs no Exchange — left to
-        size-based planning, ``present`` would be broadcast."""
-        spine = self.spark.range(0, 1, 1, 1).select(
-            F.explode(
-                F.sequence(
-                    F.lit(lo).cast("long"),
-                    F.lit(hi).cast("long"),
-                    F.lit(self.step).cast("long"),
-                )
-            ).alias("slot")
-        )
-        return spine.join(present.hint("shuffle_hash"), "slot", "left")
+    @functools.cached_property
+    def _lww_cols(self) -> tuple:
+        """The LWW projection's Columns, built once per handle: a Column
+        chain costs a JVM round trip per operator, a reused one none."""
+        slot = slot_of(F.expr("tse"), self.step)
+        w = Window.partitionBy(slot).orderBy(F.desc("ingest_seq"), F.desc("tse"))
+        return (*map(F.expr, ("tse", "flags", "value")), slot.alias("slot"),
+                F.row_number().over(w).alias("_rn"))
 
-    def _lww(self, df: DataFrame) -> DataFrame:
-        """Last-write-wins per slot: later ingest_seq, then later tse."""
-        slot = slot_of(F.col("tse"), self.step)
-        w = Window.partitionBy(slot).orderBy(
-            F.desc("ingest_seq"), F.desc("tse")
-        )
-        return (
-            df.withColumn("slot", slot)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "ingest_seq")
-        )
+    def _lww(self, df: DataFrame, keep: str) -> DataFrame:
+        """Last-write-wins per slot (later ingest_seq, then later tse),
+        then the winners that satisfy ``keep``: one projection carrying
+        the ``row_number`` window, then one filter.  Adds ``slot``; drops
+        ``ingest_seq`` and leaves the ``_rn`` rank column."""
+        return df.select(*self._lww_cols).filter(f"_rn = 1 AND {keep}")
 
     def select(
         self, begin: int, end: int, flags: int | None = None
@@ -602,19 +609,13 @@ class TSDBVar(_Node):
         # cannot delimit it); the surrounding tse range is a conservative
         # superset that still pushes down to the parquet scan.
         present = self._lww(
-            self._rows().filter(
-                (F.col("tse") > lo - step) & (F.col("tse") < hi + step)
-            )
-        ).filter((F.col("slot") >= lo) & (F.col("slot") <= hi))
-        out = self._spine_join(lo, hi, present).select(
-            F.coalesce("tse", "slot").alias("tse"),
-            F.coalesce("flags", F.lit(0)).alias("flags"),
-            "value",
-            "slot",
+            self._rows().filter(f"tse > {lo - step} AND tse < {hi + step}"),
+            f"slot BETWEEN {lo} AND {hi}",
         )
-        if flags is not None:
-            out = out.filter(_flag_mask(flags))
-        return out.orderBy("slot")
+        return self._spine_join(
+            lo, hi, present, flags, "coalesce(tse, id) AS tse",
+            "coalesce(flags, 0) AS flags", "value", "id AS slot",
+        )
 
     def _select_agg(self, begin: int, end: int, flags: int | None) -> DataFrame:
         """Aggregate-var select: one Aggregate row per stored slot in
@@ -624,18 +625,25 @@ class TSDBVar(_Node):
         if end <= begin:
             return local_frame(self.spark, [], _AGG_SCHEMA)
         lo, hi = _slot(begin, step), _slot(end - 1, step)
-        present = self._rows().filter(
-            (F.col("slot") >= lo) & (F.col("slot") <= hi)
+        present = self._rows().filter(f"slot BETWEEN {lo} AND {hi}")
+        return self._spine_join(
+            lo, hi, present, flags, "id AS slot", "coalesce(flags, 0) AS flags",
+            "average", "total", "vmin", "vmax", "last", "n",
         )
-        out = self._spine_join(lo, hi, present).select(
-            "slot",
-            F.coalesce("flags", F.lit(0)).alias("flags"),
-            "average",
-            "total",
-            "vmin",
-            "vmax",
-            "last",
-            "n",
+
+    def _spine_join(
+        self, lo: int, hi: int, present: DataFrame, flags: int | None, *cols: str
+    ) -> DataFrame:
+        """Every slot in ``[lo, hi]`` (``id``) left-joined to the stored
+        ``present`` rows on ``slot``, projected to ``cols``, masked by
+        ``flags``, ordered by slot.  The spine is one range slice and
+        ``present`` one partition, so a shuffled hash join needs no
+        Exchange — left to size-based planning, ``present`` would be
+        broadcast."""
+        out = (
+            self.spark.range(lo, hi + 1, self.step, 1)
+            .join(present.hint("shuffle_hash"), F.expr("id = slot"), "left")
+            .selectExpr(*cols)
         )
         if flags is not None:
             out = out.filter(_flag_mask(flags))
@@ -698,16 +706,15 @@ class TSDBVar(_Node):
             # Raw level: every LWW valid row is a 1-sample consolidation
             # at the var's own step; a NULL value is an unknown sample
             # (n = 0), as in `functions/tsdb.consolidation_partial`.
-            v = F.col("value")
-            rows = self._lww(self._rows())
-            cols = [v.alias(c) for c in ("average", "total", "vmin", "vmax", "last")]
-            cols.append(v.isNotNull().cast("long").alias("n"))
+            rows = self._lww(self._rows(), _VALID)
+            cols = [f"value AS {c}" for c in ("average", "total", "vmin", "vmax", "last")]
+            cols.append("CAST(value IS NOT NULL AS BIGINT) AS n")
         else:
-            rows = built[stored]._rows()
+            rows = built[stored]._rows().filter(_VALID)
             cols = ["average", "total", "vmin", "vmax", "last", "n"]
-        level = rows.filter(
-            F.col("flags").bitwiseAND(F.lit(ROW_VALID)) != 0
-        ).select(F.lit(self.path).alias("path"), "slot", *cols)
+        level = rows.select(
+            F.lit(self.path).alias("path"), *map(F.expr, ["slot", *cols])
+        )
         lo = _slot(begin, step)
         hi_excl = _slot(end - 1, step) + step
         return serve_level(level, stored, lo, hi_excl, step, cf)
@@ -720,24 +727,13 @@ class TSDBVar(_Node):
     def get_last(self):
         """Latest valid row († TSDBVar.get_last)."""
         if self.is_aggregate:
-            rows = (
-                self._rows()
-                .filter(F.col("flags").bitwiseAND(ROW_VALID) != 0)
-                .orderBy(F.desc("slot"))
-                .limit(1)
-                .collect()
-            )
+            rows = self._rows().filter(_VALID)
         else:
-            rows = (
-                self._lww(self._rows())
-                .filter(F.col("flags").bitwiseAND(ROW_VALID) != 0)
-                .orderBy(F.desc("slot"))
-                .limit(1)
-                .collect()
-            )
-        if not rows:
+            rows = self._lww(self._rows(), _VALID).drop("_rn")
+        last = rows.orderBy(F.desc("slot")).limit(1).collect()
+        if not last:
             raise KeyError(f"var {self.path!r} has no valid rows")
-        return rows[0]
+        return last[0]
 
     def file_count(self) -> int:
         """Parquet data files currently backing this var (one per insert

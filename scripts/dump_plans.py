@@ -10,13 +10,18 @@ work shares the host.
        python scripts/dump_plans.py --all-json <out.json>
 Writes the "simple" plan of every registered non-``stream_*`` op to one
 JSON object (key -> plan), with per-process ids normalized, so two runs —
-or a parent and a change — compare key by key.  Building an op may run
-its eager checkpoints, so this mode does execute Spark jobs.
+or a parent and a change — compare key by key.  The object also records
+the session's ``spark.sql.shuffle.partitions`` under that key: every
+``hashpartitioning(…, N)`` in a plan carries it, and it follows
+``$SPARK_GRAFT_CPUS``.  Building an op may run its eager checkpoints, so
+this mode does execute Spark jobs.
 
        python scripts/dump_plans.py --diff <A.json> <B.json>
 Prints each op key whose plan differs between two ``--all-json`` files
 (a key in one file only prints with the file that has it) and exits 1,
-or exits 0 when every plan is identical.  Starts no Spark session.
+or exits 0 when every plan is identical.  Exits 2, naming both counts
+and comparing no plan, when the two files record different shuffle
+partition counts.  Starts no Spark session.
 """
 
 from __future__ import annotations
@@ -63,6 +68,10 @@ def normalized_plan(df) -> str:
     return plan
 
 
+# Recorded beside the op keys, which never contain a dot.
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
 def dump_all_json(out_path: str, sf_dir: str) -> None:
     spark = plan_session()
     queries = registry.queries()
@@ -71,17 +80,30 @@ def dump_all_json(out_path: str, sf_dir: str) -> None:
         for key in sorted(queries)
         if not key.startswith("stream_")
     }
+    n = len(plans)
+    plans[_PARTITIONS] = spark.conf.get(_PARTITIONS)
     with open(out_path, "w") as fh:
         json.dump(plans, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    print("wrote", len(plans), "plans to", out_path)
+    print("wrote", n, "plans to", out_path)
 
 
 def diff_json(a_path: str, b_path: str) -> int:
     """Print each key whose plan differs between two ``--all-json``
-    files; 1 if any does, else 0."""
+    files; 1 if any does, else 0.  2 when the files record different
+    shuffle partition counts: their plans would differ in every
+    Exchange, so none is compared.  A file written before the count was
+    recorded compares as before."""
     with open(a_path) as fa, open(b_path) as fb:
         a, b = json.load(fa), json.load(fb)
+    na, nb = a.pop(_PARTITIONS, None), b.pop(_PARTITIONS, None)
+    if None not in (na, nb) and na != nb:
+        print(
+            f"{_PARTITIONS} differs: {na} in {a_path}, {nb} in {b_path}; "
+            "dump both at one SPARK_GRAFT_CPUS",
+            file=sys.stderr,
+        )
+        return 2
     changed = 0
     for key in sorted(a.keys() | b.keys()):
         if key not in b:

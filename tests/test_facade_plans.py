@@ -4,7 +4,9 @@ Pins, on a var shaped like the benchmark's (30 s step, a ``+5m``/``+1h``/
 ``+1d`` ladder, two hourly batches), the jobs each call submits and the
 absence of any Exchange in the plans it executes: the reads each run one
 job, ``update_all_aggregates`` one checkpoint job plus one per level, and
-``compact`` of a small var one job."""
+``compact`` of a small var one job.  The level jobs run concurrently, one
+thread per level; they are counted under the caller's job group, so the
+count also proves each thread inherits it."""
 
 from __future__ import annotations
 

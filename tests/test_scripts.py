@@ -144,6 +144,40 @@ def test_dump_plans_diff_prints_changed_keys(tmp_path, capsys):
     assert capsys.readouterr().out == ""
 
 
+def test_dump_plans_records_and_checks_shuffle_partitions(
+    spark, tmp_path, monkeypatch, capsys
+):
+    # every hashpartitioning(…, N) carries the session's partition count,
+    # so dumps taken at two counts differ in every shuffled plan
+    import json
+
+    dump_plans = _script("dump_plans")
+    monkeypatch.setattr(dump_plans, "get_session", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        dump_plans.registry, "queries", lambda: {"one": lambda s, sf: s.range(3)}
+    )
+    key = "spark.sql.maxMetadataStringLength"
+    before = spark.conf.get(key)
+    a = tmp_path / "a.json"
+    try:
+        dump_plans.dump_all_json(str(a), SF_SMOKE)
+    finally:
+        spark.conf.set(key, before)
+    dumped = json.loads(a.read_text())
+    assert sorted(dumped) == ["one", "spark.sql.shuffle.partitions"]
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert dumped["spark.sql.shuffle.partitions"] == n
+    capsys.readouterr()
+    assert dump_plans.diff_json(str(a), str(a)) == 0
+    assert capsys.readouterr().out == ""
+
+    b = tmp_path / "b.json"
+    b.write_text(json.dumps({**dumped, "spark.sql.shuffle.partitions": n + "0"}))
+    assert dump_plans.diff_json(str(a), str(b)) == 2
+    err = capsys.readouterr().err
+    assert f"{n} in {a}" in err and f"{n}0 in {b}" in err
+
+
 def _registry_refs(path: str):
     with open(path) as f:
         tree = ast.parse(f.read(), path)
